@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship main-content extraction pipeline on
 the sf0.001 testdata (events reshaped to the transcripts schema →
-salted repartition → Arrow-batched mapInPandas extraction).
+salted repartition → Arrow-native mapInArrow extraction).
 
 ``queries()`` / ``oracle_sql()`` expose the operator registry in
 ``htrtf_spark.queries`` — one entry per implemented operator family from

@@ -1,69 +1,44 @@
 """SQL-callable extraction functions.
 
 Registers the engine's per-turn semantics as named Spark SQL functions
-(Arrow-batched pandas UDFs — same zero-per-row-Python rule as the
-pipeline), so `spark.sql` users get the exact stage semantics without
-touching the Python API:
+(Arrow UDFs over ``pyarrow.Array`` — same zero-per-row-Python rule as
+the pipeline), so `spark.sql` users get the exact stage semantics
+without touching the Python API:
 
     SELECT conv_id, turn_idx, htrtf_extract_text(text) FROM transcripts
 
-Each UDF delegates to the same vectorized implementation the pipeline
-runs (htrtf_spark.operators.extraction) — single source of truth, so
-SQL results are byte-identical to the mapInPandas stage and therefore to
-the reference-semantics oracle (the analog of the reference exposing its
+Each UDF is a public function of the Arrow kernel the pipeline runs
+(htrtf_spark.operators.extraction) — single source of truth, so SQL
+results are byte-identical to the mapInArrow stage and therefore to the
+reference-semantics oracle (the analog of the reference exposing its
 decode pipeline as callable library functions in Modules/utils.py /
-Modules/tasks.py:176-178).
+Modules/tasks.py:176-178):
+
+- ``htrtf_extract_text``: full per-turn extraction (mode detect → decode
+  → normalize); NULL text maps to NULL.
+- ``htrtf_clean_text``: charset projection + whitespace canonicalization
+  only (the plain-mode normalize step, P3/P4/F4 semantics).
+- ``htrtf_ctc_collapse``: greedy CTC collapse of a raw frame string
+  (merge repeats → drop blanks → word-sep '|' → space), without the
+  mode marker.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import SparkSession
 
-
-def extract_text_series(text: pd.Series) -> pd.Series:
-    """Full per-turn extraction (mode detect → decode → normalize);
-    NULL-safe (null text maps to NULL extracted_text via reject path)."""
-    from htrtf_spark.operators.extraction import extract_pandas
-
-    pdf = pd.DataFrame(
-        {
-            "conv_id": "sql",
-            "turn_idx": pd.array(range(len(text)), dtype="int32"),
-            "role": "user",
-            "text": text.reset_index(drop=True),
-        }
-    )
-    out = extract_pandas(pdf)["extracted_text"]
-    out.index = text.index
-    return out
-
-
-def clean_text_series(text: pd.Series) -> pd.Series:
-    """Charset projection + whitespace canonicalization only (the plain-
-    mode normalize step, P3/P4/F4 semantics)."""
-    from htrtf_spark.operators.extraction import _finish
-
-    return _finish(text)
-
-
-def ctc_collapse_series(frames: pd.Series) -> pd.Series:
-    """Greedy CTC collapse of a raw frame string (merge repeats → drop
-    blanks → word-sep '|' → space), without the mode marker."""
-    from htrtf_spark.operators.extraction import _ctc_collapse_one
-
-    return pd.Series(
-        [None if s is None else _ctc_collapse_one(s) for s in frames],
-        index=frames.index,
-        dtype="object",
-    )
+from htrtf_spark.operators.extraction import ctc_collapse, extract_text, finish
 
 
 def register_sql_functions(spark: SparkSession) -> None:
     """Idempotently register all htrtf_* SQL functions on the session.
-    (pandas_udf construction needs an active session, hence lazy.)"""
-    from pyspark.sql.functions import pandas_udf
+    (arrow_udf construction needs an active session, hence lazy.)"""
+    from pyspark.sql.functions import arrow_udf
 
-    spark.udf.register("htrtf_extract_text", pandas_udf(extract_text_series, "string"))
-    spark.udf.register("htrtf_clean_text", pandas_udf(clean_text_series, "string"))
-    spark.udf.register("htrtf_ctc_collapse", pandas_udf(ctc_collapse_series, "string"))
+    for name, fn in (
+        ("htrtf_extract_text", extract_text),
+        ("htrtf_clean_text", finish),
+        ("htrtf_ctc_collapse", ctc_collapse),
+    ):
+        # the pa.Array -> pa.Array type hints make it a scalar Arrow UDF
+        spark.udf.register(name, arrow_udf(fn, "string"))

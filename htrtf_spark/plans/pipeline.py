@@ -2,9 +2,10 @@
 
 Spark lifecycle (SURVEY.md §3.3), restructured for scale after profiling:
 
-  scan ──► mapInPandas extraction (NARROW — pipelined with the scan, no
-           shuffle touches the raw payload) ──► per-conversation stages
-           (window rank / salted aggregates) on the EXTRACTED rows.
+  scan ──► mapInArrow extraction (NARROW — pipelined with the scan, no
+           shuffle touches the raw payload; Arrow batches go straight
+           into the kernel, no pandas conversion) ──► per-conversation
+           stages (window rank / salted aggregates) on the EXTRACTED rows.
 
 Why extraction is narrow: the stage is stateless per-row, so partitioning
 is irrelevant to its correctness and any pre-shuffle of the raw text is
@@ -24,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from htrtf_spark.operators.extraction import EXTRACTED_DDL, extract_map_in_pandas
+from htrtf_spark.operators.extraction import EXTRACTED_DDL, extract_map_in_arrow
 from htrtf_spark.schema import check_input_schema
 
 
@@ -52,7 +53,7 @@ def extract_turns(
         from htrtf_spark.plans.ordering import salted_repartition
 
         cols = salted_repartition(cols, num_partitions, salt_factor)
-    return cols.mapInPandas(extract_map_in_pandas, schema=EXTRACTED_DDL)
+    return cols.mapInArrow(extract_map_in_arrow, schema=EXTRACTED_DDL)
 
 
 def extract_turns_with_spans(
@@ -61,16 +62,17 @@ def extract_turns_with_spans(
     """Extraction + kept-content provenance spans (span_starts/span_ends:
     offsets into the original text of the regions each turn's content
     came from — the north rule's "extracted text/spans"). Same narrow
-    plan as extract_turns; the span bookkeeping is paid only here."""
+    plan and Arrow kernel as extract_turns; the span bookkeeping is paid
+    only here."""
     from htrtf_spark.operators.extraction import (
         EXTRACTED_SPANS_DDL,
-        extract_spans_map_in_pandas,
+        extract_spans_map_in_arrow,
     )
 
     if check_schema:
         check_input_schema(df)
     cols = df.select("conv_id", "turn_idx", "role", "text")
-    return cols.mapInPandas(extract_spans_map_in_pandas, schema=EXTRACTED_SPANS_DDL)
+    return cols.mapInArrow(extract_spans_map_in_arrow, schema=EXTRACTED_SPANS_DDL)
 
 
 def ordered_extract(df: DataFrame, check_schema: bool = True) -> DataFrame:

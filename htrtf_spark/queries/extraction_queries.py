@@ -1,5 +1,5 @@
 """Driver-gate queries that exercise the actual extraction engine — the
-mapInPandas stages themselves — cross-checked against DuckDB SQL that
+Arrow/pandas stages themselves — cross-checked against DuckDB SQL that
 re-states the spec independently. This is the strongest correctness
 evidence: the vectorized Python stage must agree with a pure-SQL
 restatement of the same semantics on real parquet inputs.
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from htrtf_spark import charset as cs
 from htrtf_spark.operators.ctc import CTC_DECODED_DDL, roundtrip_map_in_pandas
-from htrtf_spark.operators.extraction import EXTRACTED_DDL, extract_map_in_pandas
 from htrtf_spark.plans.pipeline import extract_turns, extraction_metrics
 from htrtf_spark.queries.util import t
 from htrtf_spark.sources.transcripts import events_as_transcripts
@@ -41,7 +40,7 @@ def q31_extract_documents(spark, sf_dir):
         F.lit("user").alias("role"),
         F.col("text"),
     )
-    return pseudo.mapInPandas(extract_map_in_pandas, schema=EXTRACTED_DDL)
+    return extract_turns(pseudo, check_schema=False)
 
 
 _Q31_SQL = f"""
@@ -179,7 +178,7 @@ WHERE doc_id % 10 = 0
 # --------------------------------------------------------------------- q59
 # The registered SQL-function surface (htrtf_extract_text) must agree
 # with the same DuckDB restatement — proves the spark.sql API path, not
-# just the mapInPandas path.
+# just the mapInArrow path.
 
 
 def q59_sql_function_extract(spark, sf_dir):
@@ -213,8 +212,8 @@ QUERIES = {
 # ("genuinely non-SQL-expressible"); this restates every mode in DuckDB
 # — CTC merge-repeats via an index lambda, DOM line classification via
 # list comprehensions, IAM/Washington stream decodes, the mode
-# classifier with an explicit whitespace class (RE2 \S is ASCII-only,
-# unlike Python's — the IAM pattern must spell the set out). The synth
+# classifier — with charset's RE2 spellings wherever RE2 would read a
+# Python pattern differently (\b, (?i)). The synth
 # input is deterministic, so the query fn materializes it to a FIXED
 # parquet path the oracle reads directly (the driver registers only the
 # ten testdata views; DuckDB can read any path literal).
@@ -237,11 +236,11 @@ def _extract_sql_cte() -> str:
     table — the SQL twin of oracle.extract_turn, mode by mode."""
     ws = _sql_q(_ws_class())
     tag_detect = _sql_q(cs.TAG_DETECT_PATTERN)
-    boiler = _sql_q(cs.BOILERPLATE_PATTERN)
-    anchor = _sql_q(cs.ANCHOR_SPAN_PATTERN)
+    boiler = _sql_q(cs.BOILERPLATE_RE2)
+    anchor = _sql_q(cs.ANCHOR_SPAN_RE2)
     tag_strip = _sql_q(cs.TAG_STRIP_PATTERN)
     wash = _sql_q(cs.WASH_STREAM_PATTERN)
-    iam = f"^\\|[^{ws}]*\\|$"  # Python \S == NOT(isspace set), spelled out
+    iam = _sql_q(cs.IAM_STREAM_PATTERN)
     marker = _sql_q(cs.CTC_MARKER)
     mlen = len(cs.CTC_MARKER)
     blank = cs.BLANK_CHAR
@@ -484,10 +483,10 @@ def q81_extract_dom_spans(spark, sf_dir):
 
 def _q81_sql() -> str:
     # quote-escape only: DuckDB string literals are standard SQL (no
-    # backslash escapes), so regex '\\b' etc. pass through verbatim.
+    # backslash escapes), so regex escapes pass through verbatim.
     ws = cs.WS_CHARS.replace("'", "''")
-    boiler = cs.BOILERPLATE_PATTERN.replace("'", "''")
-    anchor = cs.ANCHOR_SPAN_PATTERN.replace("'", "''")
+    boiler = cs.BOILERPLATE_RE2.replace("'", "''")
+    anchor = cs.ANCHOR_SPAN_RE2.replace("'", "''")
     tag_strip = cs.TAG_STRIP_PATTERN.replace("'", "''")
     tag_detect = cs.TAG_DETECT_PATTERN.replace("'", "''")
     return f"""

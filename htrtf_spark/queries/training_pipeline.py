@@ -1,6 +1,6 @@
 """The flagship COMPOSITION gate: the full training-data pipeline —
 extraction → quality filter → exact dedup (keep-first) — chained as the
-real operators (the same mapInPandas extraction stage, token/quality
+real operators (the same mapInArrow extraction stage, token/quality
 aggregation, and window dedup the library ships), with the entire
 composition restated in SQL for the oracle. This is the "what the
 engine is for" query: a user turns raw text into a deduplicated,
@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from htrtf_spark.operators.extraction import EXTRACTED_DDL, extract_map_in_pandas
 from htrtf_spark.queries.util import clean_sql, t
 
 # thresholds chosen so the gate EXERCISES the filter on the driver
@@ -26,14 +25,15 @@ MAX_STOP_RATIO_BP = 8000
 
 def _extract_clean(docs, id_col: str, text_col: str):
     """Shared first stage of the composed pipelines: documents run
-    through the SAME mapInPandas extraction stage the library ships
+    through extract_turns, the SAME extraction stage the library ships
     (each document as a one-turn pseudo-conversation), rejected rows
     dropped — yields (_id, clean_text). Narrow; Catalyst fuses it into
     the scan."""
     from htrtf_spark.plans.ordering import fan_out
+    from htrtf_spark.plans.pipeline import extract_turns
 
     # a single-split source (one-row-group parquet locally) would
-    # serialize the mapInPandas stage AND every downstream consumer of
+    # serialize the extraction stage AND every downstream consumer of
     # the persisted extraction onto one core; no-op on parallel scans
     pseudo = fan_out(docs, id_col).select(
         F.col(id_col).alias("_id"),
@@ -42,9 +42,7 @@ def _extract_clean(docs, id_col: str, text_col: str):
         F.lit("user").alias("role"),
         F.col(text_col).alias("text"),
     )
-    extracted = pseudo.select("conv_id", "turn_idx", "role", "text").mapInPandas(
-        extract_map_in_pandas, schema=EXTRACTED_DDL
-    ).withColumn(
+    extracted = extract_turns(pseudo, check_schema=False).withColumn(
         "_id", F.split_part(F.col("conv_id"), F.lit("-"), F.lit(2)).cast("long")
     )
     return extracted.filter(F.col("reject_reason").isNull()).select(
@@ -134,7 +132,7 @@ def training_corpus_stripped(
     chain, and the strip join — so by default the extracted corpus is
     persisted (MEMORY_AND_DISK, registered with the dedup cache
     registry for release_caches()) instead of re-running the
-    mapInPandas stage once per consumer (review r6; the memory notes'
+    extraction stage once per consumer (review r6; the memory notes'
     recompute-heavy-narrow-transform antipattern). At warehouse scale
     the production form materializes extraction to a table first
     (jobs/build_training_set.py) and ``persist=False`` composes over

@@ -1,9 +1,9 @@
 """SparkSession factory tuned for the extraction workload.
 
 Local-mode defaults mirror what we'd set cluster-side: AQE on (runtime
-coalesce + skew handling), Arrow on (every heavy stage is
-mapInPandas/pandas_udf), UTC session TZ (oracle comparison), shuffle
-partitions ≈ cores (not 200).
+coalesce + skew handling), Arrow on (every heavy stage is an Arrow
+batch stage: mapInArrow/mapInPandas or an Arrow/pandas UDF), UTC
+session TZ (oracle comparison), shuffle partitions ≈ cores (not 200).
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ an unbounded transcripts feed, plus watermarked event-time rollups.
 The reference is batch-only (SURVEY.md §2.12); this is the "if the
 transcript feed were unbounded" path the survey sketches: tumbling
 windows ≈ F.window(ts, ...), the extraction stage itself is stateless so
-it runs unchanged under readStream (mapInPandas is supported on
+it runs unchanged under readStream (mapInArrow is supported on
 streaming DataFrames).
 """
 
@@ -12,26 +12,23 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from htrtf_spark.operators.extraction import extract_pandas
+from htrtf_spark.operators.extraction import EXTRACTED_DDL, extract_batch
 from htrtf_spark.schema import TRANSCRIPTS_SCHEMA
-
-from htrtf_spark.operators.extraction import EXTRACTED_DDL
 
 EXTRACTED_TS_DDL = EXTRACTED_DDL + ", ts timestamp"  # derived: batch/stream drift-proof
 
 
-def _extract_keep_ts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _extract_keep_ts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Extraction stage that carries the event-time column through (needed
     by downstream watermarks; row order within the batch is preserved so
     positional reattachment is exact)."""
-    for pdf in batches:
-        out = extract_pandas(pdf)
-        out["ts"] = pdf["ts"].values
-        yield out
+    for batch in batches:
+        out = extract_batch(batch)
+        yield out.append_column("ts", batch.column("ts"))
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -43,7 +40,7 @@ def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
 def stream_extract(stream_df: DataFrame) -> DataFrame:
     """Unbounded extraction: identical semantics to the batch stage."""
     cols = stream_df.select("conv_id", "turn_idx", "role", "text", "ts")
-    return cols.mapInPandas(_extract_keep_ts, schema=EXTRACTED_TS_DDL)
+    return cols.mapInArrow(_extract_keep_ts, schema=EXTRACTED_TS_DDL)
 
 
 def stream_metrics(

@@ -200,7 +200,7 @@ def rebaseline_stream_extraction(
     meta = current_metadata(source_loc)
     cur = meta["current-snapshot-id"]
     cur_seq = int(_find_snapshot(meta, cur)["sequence-number"])
-    # stream_extract is a plain select + mapInPandas — bound to a batch
+    # stream_extract is a plain select + mapInArrow — bound to a batch
     # DataFrame it runs the IDENTICAL stage the stream runs, so the
     # rebaselined rows are byte-identical to what streaming emits
     out = stream_extract(

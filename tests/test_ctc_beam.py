@@ -132,9 +132,9 @@ def test_beam_decode_stage_matches_clean(spark):
             beam_decode_map_in_pandas, schema=CTC_DECODED_DDL
         ).collect()
     }
-    import pandas as pd
+    import pyarrow as pa
 
-    from htrtf_spark.functions import clean_text_series
+    from htrtf_spark.operators.extraction import finish
 
-    want = clean_text_series(pd.Series([t for _, t in rows])).tolist()
+    want = finish(pa.array([t for _, t in rows])).to_pylist()
     assert out == {i: w for (i, _), w in zip(rows, want)}

@@ -79,6 +79,17 @@ def test_handpicked_edge_cases():
         "-a",
         "trailing pipe |",
         "| leading pipe",
+        # RE2 traps: \b must be Python's (Unicode) word boundary and (?i)
+        # Python's case folding
+        "<navé menu",  # é is a word char: not boilerplate
+        "<asİde>x",  # (?i) i matches İ: boilerplate
+        "<SCRİPT>",  # boilerplate
+        "<aé>zz</a>",  # not an anchor: link density 0
+        "<nav\u0301>",  # combining mark is not a word char: boilerplate
+        "<b>k</b>\n<navé menu",  # the <navé line is kept
+        "<SCRİPT>x",  # dropped, x with it
+        "<nav\u0301>x",  # dropped, x with it
+        "<a\u00a0href='/'>link text</a> t",  # nbsp ends the tag name: a link
     ]
     pdf = pd.DataFrame(
         {
@@ -100,8 +111,9 @@ def test_handpicked_edge_cases():
             st.none(),
             st.text(max_size=120),
             st.text(
-                alphabet="ab_|<>-/ \t\n" + cs.CTC_MARKER, max_size=60
-            ),  # adversarial: markers, pipes, dashes, tags, blanks
+                alphabet="ab_|<>-/ \t\n" + cs.CTC_MARKER + "İıſKé\u0301<nav<a ",
+                max_size=60,
+            ),  # adversarial: markers, pipes, dashes, tags, blanks, RE2 traps
             st.builds(lambda s: cs.CTC_MARKER + s, st.text(max_size=60)),
         ),
         min_size=1,

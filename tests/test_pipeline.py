@@ -52,6 +52,13 @@ def test_partitioning_invariance(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_extraction_stage_is_map_in_arrow(spark):
+    """The extraction stage crosses the Arrow boundary without pandas."""
+    df = spark.createDataFrame(synth.synth_pandas(n_convs=2, seed=1), TRANSCRIPTS_SCHEMA)
+    plan = extract_turns(df)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
+
+
 def test_synth_spark_matches_pandas(spark):
     """Distributed generation == single-process generation, row for row."""
     n = 12

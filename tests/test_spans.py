@@ -4,7 +4,7 @@ content they claim (self-consistency invariants)."""
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,14 +13,21 @@ from htrtf_spark import oracle, synth
 from htrtf_spark.operators import extraction
 
 
-def _frame(texts):
-    return pd.DataFrame(
+def _batch(texts) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pydict(
         {
             "conv_id": ["c"] * len(texts),
-            "turn_idx": pd.array(range(len(texts)), dtype="int32"),
+            "turn_idx": pa.array(range(len(texts)), pa.int32()),
             "role": ["user"] * len(texts),
-            "text": pd.Series(texts, dtype="object"),
+            "text": pa.array(texts, pa.string()),
         }
+    )
+
+
+def _synth_batch(n_convs: int, seed: int) -> pa.RecordBatch:
+    pdf = synth.synth_pandas(n_convs=n_convs, seed=seed)
+    return pa.RecordBatch.from_pandas(
+        pdf[["conv_id", "turn_idx", "role", "text"]], preserve_index=False
     )
 
 
@@ -32,27 +39,28 @@ def _gold_spans(texts):
     return out
 
 
-def _assert_span_parity(pdf):
-    fast = extraction.extract_spans_pandas(pdf)
-    gold = _gold_spans(pdf["text"].tolist())
+def _assert_span_parity(batch):
+    fast = extraction.extract_spans_batch(batch)
+    texts = batch.column("text").to_pylist()
+    starts = fast.column("span_starts").to_pylist()
+    ends = fast.column("span_ends").to_pylist()
+    gold = _gold_spans(texts)
     for i, sp in enumerate(gold):
-        gs = fast["span_starts"].iloc[i]
-        ge = fast["span_ends"].iloc[i]
+        gs, ge = starts[i], ends[i]
         if sp is None:
             assert gs is None and ge is None, i
         else:
             got = list(zip([] if gs is None else gs, [] if ge is None else ge))
-            assert got == sp, (i, pdf["text"].iloc[i], got, sp)
+            assert got == sp, (i, texts[i], got, sp)
 
 
 def test_span_parity_synth():
-    pdf = synth.synth_pandas(n_convs=80, seed=42)
-    _assert_span_parity(pdf)
+    _assert_span_parity(_synth_batch(n_convs=80, seed=42))
 
 
 def test_span_parity_edges():
     _assert_span_parity(
-        _frame(
+        _batch(
             [
                 None,
                 "",
@@ -82,17 +90,16 @@ def test_span_self_consistency():
         "[CTC]aabb__cc",
         "|w1|w2|",
     ]
-    pdf = _frame(texts)
-    fast = extraction.extract_spans_pandas(pdf)
-    for i, t in enumerate(texts):
-        starts, ends = fast["span_starts"].iloc[i], fast["span_ends"].iloc[i]
+    fast = extraction.extract_spans_batch(_batch(texts))
+    all_starts = fast.column("span_starts").to_pylist()
+    all_ends = fast.column("span_ends").to_pylist()
+    for t, starts, ends in zip(texts, all_starts, all_ends):
         for a, b in zip(starts, ends):
             assert 0 <= a < b <= len(t)
     # DOM row: slices are exactly the kept lines
     dom_i = 1
     slices = [
-        texts[dom_i][a:b]
-        for a, b in zip(fast["span_starts"].iloc[dom_i], fast["span_ends"].iloc[dom_i])
+        texts[dom_i][a:b] for a, b in zip(all_starts[dom_i], all_ends[dom_i])
     ]
     assert slices == ["<p>first</p>", "<p>second line</p>"]
 
@@ -111,7 +118,7 @@ def test_span_self_consistency():
     )
 )
 def test_span_fuzz_parity(texts):
-    _assert_span_parity(_frame(texts))
+    _assert_span_parity(_batch(texts))
 
 
 def test_spans_through_spark(spark):

@@ -44,6 +44,11 @@ CASES = [
     "-",                                       # not wash (single dash)
     "a-",                                      # not wash (trailing dash)
     "| |",                                # IAM?: nbsp is ws → plain
+    "<asİde>x",                                # (?i) folds İ: boilerplate
+    "<SCRİPT>x",                               # boilerplate
+    "<aé>zz</a>",                              # \b is Unicode: no anchor
+    "<b>k</b>\n<navé menu",                    # \b: <navé is kept
+    "<nav\u0301>x",                            # combining mark: boilerplate
 ]
 
 

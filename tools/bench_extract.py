@@ -4,7 +4,7 @@
         tools/bench_extract.py <input_parquet> [timed_reps]
 
 Reads a transcripts parquet, runs the full extraction plan (salted
-repartition → mapInPandas → noop materialization), prints ONE JSON line:
+repartition → mapInArrow → noop materialization), prints ONE JSON line:
     {"master": ..., "turns": N, "wall_sec": s, "turns_per_sec": t}
 
 Timing excludes session startup and Python-worker spin-up (a warmup

@@ -29,8 +29,10 @@ def main() -> int:
     from htrtf_spark.session import get_spark
     from tools.run_scaling import ensure_input
 
-    spark = get_spark(app_name="parity_sample", master="local[32]")
-    tdf = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(ensure_input(n_convs))
+    # ensure_input stops the session it generates with, so it runs first
+    path = ensure_input(n_convs)
+    spark = get_spark(app_name="parity_sample")
+    tdf = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
     total = tdf.count()
 
     sample_hash = tdf.select("conv_id").distinct().filter(
