@@ -52,10 +52,8 @@ must fit one machine. Exact-check window buffering is bounded by
 ``max_gram_freq`` rows per key (heavier classes take the windowless
 aggregated check), per-row arrays are bounded by ``chunk_chars``, and
 heavy detection is free: phase 1's exact class counts are the
-detector (the pre-r7 sampled detection pass is gone — its
-``heavy_detect_sample`` knob is retained as an accepted no-op). The
-cap's effect is observable through ``repeated_gram_stats`` (the
-``stop_shingle_stats`` sibling).
+detector. The cap's effect is observable through
+``repeated_gram_stats`` (the ``stop_shingle_stats`` sibling).
 
 Policy note: ``strip_repeated_spans`` removes EVERY duplicated span,
 including the "first" occurrence — a keep-one-copy variant is
@@ -163,16 +161,6 @@ def _windows(
     )
 
 
-# Retained knob (r6 compat): detection used to COUNT a 1-in-N position
-# sample in a separate pass; since r7 the counting pass IS phase 1 (an
-# exact map-side-combined groupBy on the 8-byte fingerprint), so
-# detection is exact and free and this knob no longer changes the plan.
-# It is accepted (and validated) so existing callers keep working; its
-# documented contract — output identical for any value — holds
-# trivially.
-DEFAULT_HEAVY_SAMPLE = 64
-
-
 def _exact_hits_small(rows: DataFrame) -> DataFrame:
     """Exact >= 2 check for the (small) heavy route WITHOUT a window:
     map-side-combined gram counts, semi-joined back. Hash-collision
@@ -212,7 +200,6 @@ def repeated_substring_spans(
     prefilter_hash: bool = True,
     max_gram_freq: int | None = DEFAULT_MAX_GRAM_FREQ,
     chunk_chars: int = DEFAULT_CHUNK_CHARS,
-    heavy_detect_sample: int = DEFAULT_HEAVY_SAMPLE,
 ) -> DataFrame:
     """Maximal duplicated character spans, as
     (id, span_start, span_end, span_len) with [span_start, span_end)
@@ -222,11 +209,9 @@ def repeated_substring_spans(
     ``max_gram_freq`` routes boilerplate classes around the per-key
     exact-check windows (output provably identical; bounds window
     buffering to the cap — routing reads phase 1's exact counts, no
-    detection pass). ``heavy_detect_sample`` is retained for
-    compatibility and no longer changes the plan (its contract — output
-    identical for any value — holds trivially). ``chunk_chars`` bounds
-    per-row generated arrays (output independent of it; tune only if L
-    approaches the chunk size).
+    detection pass). ``chunk_chars`` bounds per-row generated arrays
+    (output independent of it; tune only if L approaches the chunk
+    size).
 
     NOT fully lazy (same as the pre-r7 detection ``head()``): building
     the result runs phase 1 eagerly — the class-count job both
@@ -240,10 +225,6 @@ def repeated_substring_spans(
     if max_gram_freq is not None and int(max_gram_freq) < 1:
         raise ValueError(
             f"max_gram_freq must be >= 1 or None, got {max_gram_freq}"
-        )
-    if int(heavy_detect_sample) < 1:
-        raise ValueError(
-            f"heavy_detect_sample must be >= 1, got {heavy_detect_sample}"
         )
     if int(chunk_chars) < 1:
         raise ValueError(f"chunk_chars must be >= 1, got {chunk_chars}")

@@ -121,23 +121,22 @@ def completed_buckets(out_dir: str, spark: SparkSession | None = None) -> set[in
     }
 
 
-def _publish_manifest_row(spark: SparkSession, out_dir: str, row: dict) -> None:
-    """Atomic publish through the out_dir's FileSystem: local temp parquet
-    → copyFromLocalFile to a dot-tmp name → rename to final."""
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    _mkdirs(spark, mdir)
-    final = os.path.join(mdir, _manifest_name(row["bucket"]))
-    tmp_remote = os.path.join(mdir, "." + _manifest_name(row["bucket"]) + ".tmp")
+def _publish_manifest_row(spark: SparkSession, mdir: str, row: dict) -> None:
+    """Atomic publish into the existing manifest dir ``mdir`` through its
+    FileSystem: local temp parquet → copyFromLocalFile to a dot-tmp name
+    → rename to final."""
+    name = _manifest_name(row["bucket"])
+    fs, jfinal, jvm = _fs(spark, os.path.join(mdir, name))
+    Path = jvm.org.apache.hadoop.fs.Path
+    jtmp = Path(os.path.join(mdir, "." + name + ".tmp"))
     with tempfile.NamedTemporaryFile(suffix=".parquet", delete=False) as f:
         local = f.name
     try:
         pq.write_table(pa.Table.from_pylist([row]), local)
-        fs, jtmp, jvm = _fs(spark, tmp_remote)
-        fs.copyFromLocalFile(
-            True, True, jvm.org.apache.hadoop.fs.Path("file:" + local), jtmp
-        )
-        _delete(spark, final)
-        _rename(spark, tmp_remote, final)
+        fs.copyFromLocalFile(True, True, Path("file:" + local), jtmp)
+        fs.delete(jfinal, False)  # no-op unless a stale final exists
+        if not fs.rename(jtmp, jfinal):
+            raise IOError(f"rename failed: {jtmp} -> {jfinal}")
     finally:
         if os.path.exists(local):
             os.unlink(local)
@@ -225,21 +224,28 @@ def run_extraction_checkpointed(
     }
     total_rows = sum(n for n, _ in stats.values()) or 1
 
-    _mkdirs(spark, os.path.join(out_dir, DATA_DIR))
+    data = os.path.join(out_dir, DATA_DIR)
+    mdir = os.path.join(out_dir, MANIFEST_DIR)
+    _mkdirs(spark, data)
+    _mkdirs(spark, mdir)
+    # one listing each, not an exists() per bucket: the loop below only
+    # adds the data dirs of buckets it has already passed
+    staged = set(_list_names(spark, staging))
+    in_data = set(_list_names(spark, data))
     ran: list[int] = []
     for b in pending:
-        sdir = os.path.join(staging, f"_bucket={b}")
-        ddir = os.path.join(out_dir, DATA_DIR, f"bucket={b}")
-        if _exists(spark, sdir):
-            _delete(spark, ddir)  # partial dir from a crashed commit
-            _rename(spark, sdir, ddir)
+        if f"_bucket={b}" in staged:
+            ddir = os.path.join(data, f"bucket={b}")
+            if f"bucket={b}" in in_data:
+                _delete(spark, ddir)  # partial dir from a crashed commit
+            _rename(spark, os.path.join(staging, f"_bucket={b}"), ddir)
         n, rej = stats.get(b, (0, 0))
         # wall is attributed to buckets proportionally to their rows (the
         # pass is shared); turns_per_sec is therefore the pass aggregate
         share_ms = max(int(pass_wall_ms * n / total_rows), 1)
         _publish_manifest_row(
             spark,
-            out_dir,
+            mdir,
             {
                 "bucket": b,
                 "n_buckets": n_buckets,

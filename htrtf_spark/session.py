@@ -4,6 +4,14 @@ Local-mode defaults mirror what we'd set cluster-side: AQE on (runtime
 coalesce + skew handling), Arrow on (every heavy stage is an Arrow
 batch stage: mapInArrow/mapInPandas or an Arrow/pandas UDF), UTC
 session TZ (oracle comparison), shuffle partitions ≈ cores (not 200).
+
+Python workers are reused across tasks (``spark.python.worker.reuse``,
+on by default), so a worker pays interpreter start and imports once, and
+what is left per task is PySpark's per-task setup. That setup is why the
+package installs its zipimporter shim (``htrtf_spark/__init__.py``): on
+CPython < 3.13 it would otherwise re-read every zip archive on the
+worker's path before each task, a fixed ~0.25 s that a small task (an
+incremental tick) pays in full.
 """
 
 from __future__ import annotations

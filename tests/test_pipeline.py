@@ -59,6 +59,46 @@ def test_extraction_stage_is_map_in_arrow(spark):
     assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
+def test_reused_worker_skips_zip_directory_reads(spark):
+    """A Python worker that has run extraction no longer re-reads its
+    zip archives (pyspark.zip, py4j, the spark-core jar) on the
+    per-task ``importlib.invalidate_caches()``: the package's zipimporter
+    shim is in place. Counted, not timed."""
+    df = spark.createDataFrame(synth.synth_pandas(n_convs=8, seed=3), TRANSCRIPTS_SCHEMA)
+    assert extract_turns(df.repartition(4)).count() > 0
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        reads = [0]
+        orig = zipimport._read_directory
+
+        def counted(path):
+            reads[0] += 1
+            return orig(path)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = orig
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"reads": [reads[0]], "htrtf": ["htrtf_spark" in sys.modules]}
+        )
+
+    rows = spark.range(0, 4, 1, 4).mapInArrow(probe, "reads long, htrtf boolean").collect()
+    # a worker the pool started after the extraction job never ran htrtf
+    # code, so only workers that loaded the package are held to 0 reads
+    ran = [r["reads"] for r in rows if r["htrtf"]]
+    assert ran and ran == [0] * len(ran), rows
+
+
 def test_synth_spark_matches_pandas(spark):
     """Distributed generation == single-process generation, row for row."""
     n = 12

@@ -222,21 +222,15 @@ def test_heavy_gram_cap_output_identity(spark):
     assert want == sorted(_brute_spans(docs, Lx))
     for prefilter in (True, False):
         for cap in (1, 3, 100_000):
-            # sample=1: exact detection; 2: sampled (flags fire on this
-            # corpus); 10**6: detection misses everything (pure window
-            # path) — output must be identical in EVERY regime, because
-            # detection is routing-only
-            for sample in (1, 2, 10**6):
-                got = sorted(
-                    map(tuple, repeated_substring_spans(
-                        df, "doc_id", "text", Lx,
-                        prefilter_hash=prefilter, max_gram_freq=cap,
-                        heavy_detect_sample=sample,
-                    ).collect())
-                )
-                assert got == want, (
-                    f"prefilter={prefilter} cap={cap} sample={sample}"
-                )
+            # output must be identical in EVERY regime, because the cap
+            # is routing-only
+            got = sorted(
+                map(tuple, repeated_substring_spans(
+                    df, "doc_id", "text", Lx,
+                    prefilter_hash=prefilter, max_gram_freq=cap,
+                ).collect())
+            )
+            assert got == want, f"prefilter={prefilter} cap={cap}"
 
 
 def test_chunked_windows_output_identity(spark):
@@ -299,5 +293,3 @@ def test_cap_validation(spark):
         repeated_substring_spans(df, max_gram_freq=0)
     with pytest.raises(ValueError):
         repeated_substring_spans(df, chunk_chars=0)
-    with pytest.raises(ValueError):
-        repeated_substring_spans(df, heavy_detect_sample=0)
