@@ -4,15 +4,21 @@ htrtf_spark.queries.dedup and call into these.)
 
 Families:
 - exact:            md5-fingerprint hash-groupBy (one shuffle)
-- n-gram Jaccard:   shingle inverted-index self-join (no cross product)
+- n-gram Jaccard:   shingle posting lists → ordered id pairs (no cross
+                    product)
 - MinHash + LSH:    engine-portable string minhash → bands → bucket join
 - SimHash:          64-bit hash sign-aggregation, hamming-bucket pairing
 
-Scale notes: at 10^9+ documents the inverted-index join needs a stop-
-shingle cut (drop shingles with document frequency above a cap — they
-produce quadratic fan-out and carry no discriminative signal); LSH keeps
-candidate generation linear in (docs × bands). Both are plain shuffles
-Catalyst/AQE handles; no driver-side state anywhere.
+Scale notes: at 10^9+ documents the posting-list pair expansion needs a
+stop-shingle cut (drop shingles with document frequency above a cap —
+they produce quadratic fan-out and carry no discriminative signal); LSH
+keeps candidate generation linear in (docs × bands). Both are plain
+shuffles Catalyst/AQE handles; no driver-side state anywhere.
+
+Every operator here is lazy: building its plan runs no Spark job. The
+stop list is a df-count aggregation removed by a broadcast left anti
+join inside the caller's action (``_capped``), never collected at plan
+build.
 """
 
 from __future__ import annotations
@@ -25,13 +31,9 @@ DEFAULT_MINHASHES = 8
 DEFAULT_BAND_WIDTH = 2
 # Stop-shingle document-frequency cap, ON by default: a shingle present in
 # more than this many documents is boilerplate, carries no near-dup signal,
-# and fans out quadratically in the inverted-index join (df² pairs per
-# shingle). Callers must pass max_doc_freq=None explicitly to disable.
+# and fans out quadratically in the posting-list pair expansion (df²
+# pairs per shingle). Callers must pass max_doc_freq=None explicitly to disable.
 DEFAULT_MAX_DOC_FREQ = 1000
-
-# stop lists up to this size are inlined as a NOT-IN literal; beyond it
-# the broadcast anti join takes over (same semantics, no plan blow-up)
-STOP_LIST_INLINE_MAX = 10_000
 
 # Caches these operators create outlive the returned (lazy) DataFrame —
 # the caller's terminal action is what reads them, so the operator
@@ -86,14 +88,9 @@ def shingle_table(
 ) -> DataFrame:
     """(id, ng) exploded distinct shingles; stop-shingles whose document
     frequency exceeds ``max_doc_freq`` are dropped (the web-scale fan-out
-    guard — ON by default, pass None to disable explicitly).
-
-    Scale shape: the DROP list (df > cap) is small by construction —
-    only boilerplate shingles clear a high-df bar — so it is removed as
-    an inlined NOT-IN literal (≤ STOP_LIST_INLINE_MAX entries) or, past
-    that bound, a broadcast LEFT ANTI join. (Semi-joining the keep-list
-    would shuffle/broadcast nearly the whole shingle vocabulary.)
-    """
+    guard — ON by default, pass None to disable explicitly). Lazy: the
+    stop list is removed inside the caller's action (see ``_capped``);
+    the explode runs once for the df count and once for the probe."""
     from htrtf_spark.plans.ordering import fan_out
 
     # the ngram transform + explode is the CPU-dense narrow stage of
@@ -102,31 +99,39 @@ def shingle_table(
     g = fan_out(df, id_col).select(
         F.col(id_col).alias("id"), F.explode(word_ngrams(text_col, n)).alias("ng")
     )
-    if max_doc_freq is not None:
-        g = _stop_filter(g, max_doc_freq)
-    return g
+    return _capped(g, max_doc_freq)
 
 
-def _stop_filter(g: DataFrame, max_doc_freq: int) -> DataFrame:
-    """Drop stop shingles from a posting table (ONE implementation,
-    shared by shingle_table and _cap_cached). The stop list is SMALL by
-    construction (only boilerplate shingles clear a high-df bar):
-    collect it eagerly and inline it as a NOT-IN literal — one action,
-    no anti-join build side, no second compute of the ngram transform.
-    Past the inline bound (possible at web scale with a low cap) the
-    broadcast anti join takes over, its build side being that same
-    bounded-small frame."""
-    stop_df = (
+def _stop_list(g: DataFrame, max_doc_freq: int) -> DataFrame:
+    """(ng) of every shingle in posting table ``g`` whose document
+    frequency exceeds ``max_doc_freq``. Small by construction: only
+    boilerplate clears a high-df bar."""
+    return (
         g.groupBy("ng").agg(F.count("*").alias("df_"))
         .filter(F.col("df_") > max_doc_freq)
         .select("ng")
     )
-    head = stop_df.head(STOP_LIST_INLINE_MAX + 1)
-    if len(head) > STOP_LIST_INLINE_MAX:
-        return g.join(F.broadcast(stop_df), "ng", "left_anti")
-    if head:
-        return g.filter(~F.col("ng").isin([r["ng"] for r in head]))
-    return g
+
+
+def _apply_stop_list(g: DataFrame, stop_list: DataFrame) -> DataFrame:
+    """Drop a GIVEN stop list from a posting table — broadcast anti join
+    (the list is bounded-small; see _stop_list). Semi-joining the
+    keep-list instead would broadcast nearly the whole vocabulary. Keeps
+    ``g``'s column order (the USING join would move ``ng`` first)."""
+    return g.join(F.broadcast(stop_list.select("ng")), "ng", "left_anti").select(
+        *g.columns
+    )
+
+
+def _capped(g: DataFrame, max_doc_freq: int | None) -> DataFrame:
+    """The stop-shingle cap — its ONE implementation: drop from posting
+    table ``g`` the shingles whose df in ``g`` exceeds the cap, as a
+    lazy broadcast anti join that runs inside the caller's action.
+    ``g`` feeds both the df count and the probe: callers whose ``g`` is
+    expensive cache it first."""
+    if max_doc_freq is None:
+        return g
+    return _apply_stop_list(g, _stop_list(g, max_doc_freq))
 
 
 def stop_shingle_stats(
@@ -150,28 +155,6 @@ def stop_shingle_stats(
     )
 
 
-def _cap_cached(raw: DataFrame, max_doc_freq: int | None) -> DataFrame:
-    """Apply the stop-shingle cap to an ALREADY-CACHED raw posting
-    table, then SWAP the cache: the stop-list action populates the raw
-    cache, the capped result is materialized into its own cache (one
-    cheap in-memory pass), and the raw cache — which still contains the
-    quadratic-fanout stop postings the cap exists to drop — is released.
-    Net: one ngram explode, and the only lingering cache is the CAPPED
-    table — registered for release_caches(). Returns a cached
-    DataFrame; callers must not re-cache."""
-    if max_doc_freq is None:
-        return _register_cache(raw)
-    capped = _stop_filter(raw, max_doc_freq)
-    if capped is raw:
-        # no stop shingles at this scale: raw IS the capped table —
-        # swapping would unpersist the one cache we need
-        return _register_cache(raw)
-    capped = capped.cache()
-    capped.count()  # populate from the (still-cached) raw table
-    raw.unpersist()
-    return _register_cache(capped)
-
-
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Hash-groupBy exact dedup: (fp, rep_id, n_copies)."""
     return (
@@ -181,33 +164,23 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = DEFAULT_NGRAM,
-    min_jaccard_bp: int = 5000,
-    max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
-) -> DataFrame:
-    """Near-dup pairs (id_a, id_b, jaccard_bp) via inverted-index join.
-    The stop-shingle cap is active by default (DEFAULT_MAX_DOC_FREQ);
-    pass ``max_doc_freq=None`` to opt out explicitly."""
-    # one caller-owned cache of the RAW posting table; the stop-list agg
-    # populates it and the capped filter reads it — one explode total
-    raw = shingle_table(df, id_col, text_col, n, max_doc_freq=None).cache()
-    grams = _cap_cached(raw, max_doc_freq)
-    # per-doc size table (one row per DOCUMENT — tiny) feeds BOTH join
-    # sides (sz_a, sz_b): persist or the groupBy over the posting cache
-    # runs twice (r7)
-    sizes = _register_cache(
-        grams.groupBy("id").agg(F.count("*").alias("sz")).persist()
+def _min_hashes(grams: DataFrame, k: int) -> DataFrame:
+    """(id, mh0..mh{k-1}) engine-portable MinHash of a posting table:
+    h_i(S) = lexicographic MIN of md5(i || ':' || shingle)."""
+    return grams.groupBy("id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("ng")))).alias(f"mh{i}")
+            for i in range(k)
+        ]
     )
-    a, b = grams.alias("a"), grams.alias("b")
-    inter = (
-        a.join(b, (F.col("a.ng") == F.col("b.ng")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+
+
+def _verified(inter: DataFrame, sizes: DataFrame, min_jaccard_bp: int) -> DataFrame:
+    """Jaccard verify tail: (id_a, id_b, inter) pair intersections plus
+    per-document shingle counts (id, sz) → (id_a, id_b, jaccard_bp) at
+    or above ``min_jaccard_bp``. ``sizes`` (one row per DOCUMENT) feeds
+    both join sides, so it is persisted — or its groupBy runs twice."""
+    sizes = _register_cache(sizes.persist())
     sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     jac = F.round(
@@ -220,7 +193,7 @@ def jaccard_pairs(
     )
 
 
-def jaccard_pairs_postings(
+def jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
@@ -228,41 +201,31 @@ def jaccard_pairs_postings(
     min_jaccard_bp: int = 5000,
     max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
 ) -> DataFrame:
-    """Same output as ``jaccard_pairs``, via posting-list pair expansion:
-    group shingles once, emit each posting list's ordered id pairs with a
-    JVM-side nested transform, then count per pair. One fewer shuffle
-    than the self-join (no ng-keyed join build side), and the quadratic
-    blow-up is bounded per list — which is why it must be paired with a
-    stop-shingle cap at web scale (df_cap² × n_stop_shingles is the
-    worst-case row count either way)."""
-    # cap applied ON the posting lists (df == size(ids)), riding the
-    # groupBy the pair expansion needs anyway — no separate df-count
-    # shuffle or anti join, one fewer pass than the self-join form
+    """Near-dup pairs (id_a, id_b, jaccard_bp) via posting-list pair
+    expansion: group shingles once, emit each posting list's ordered id
+    pairs with a JVM-side nested transform, then count per pair. The
+    quadratic blow-up is bounded per list, which is why the stop-shingle
+    cap is active by default (DEFAULT_MAX_DOC_FREQ; pass
+    ``max_doc_freq=None`` to opt out explicitly): df_cap² ×
+    n_kept_shingles is the worst-case row count."""
     grams = shingle_table(df, id_col, text_col, n, max_doc_freq=None)
-    if max_doc_freq is None:
-        # grams feeds BOTH the posting groupBy and the sizes groupBy —
-        # cache or the word-ngram transform runs twice (measured 6×)
-        grams = _register_cache(grams.cache())
     posting = grams.groupBy("ng").agg(
         F.array_sort(F.collect_list("id")).alias("ids")
     )
     if max_doc_freq is not None:
-        # posting feeds both the pair expansion and the capped sizes
-        posting = _register_cache(
-            posting.filter(F.size("ids") <= max_doc_freq).cache()
-        )
-        # sizes must count CAPPED shingles per doc (Jaccard over the
-        # same capped space as the self-join form)
-        sizes = (
-            posting.select(F.explode("ids").alias("id"))
-            .groupBy("id")
-            .agg(F.count("*").alias("sz"))
-        )
-    else:
-        sizes = grams.groupBy("id").agg(F.count("*").alias("sz"))
-    # one row per DOCUMENT, consumed by both join sides (sz_a, sz_b) —
-    # persist or the explode+groupBy over the posting cache runs twice
-    sizes = _register_cache(sizes.persist())
+        # the cap rides the posting-list groupBy (df == size(ids)) — no
+        # separate df-count shuffle or anti join
+        posting = posting.filter(F.size("ids") <= max_doc_freq)
+    # posting feeds both the pair expansion and the sizes — cache or the
+    # word-ngram transform and its groupBy run twice
+    posting = _register_cache(posting.cache())
+    # sizes count the KEPT shingles per doc (Jaccard over the capped
+    # space)
+    sizes = (
+        posting.select(F.explode("ids").alias("id"))
+        .groupBy("id")
+        .agg(F.count("*").alias("sz"))
+    )
     ids = F.col("ids")
     pairs = F.flatten(
         F.transform(
@@ -278,16 +241,7 @@ def jaccard_pairs_postings(
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    jac = F.round(
-        F.col("inter") * F.lit(10000.0) / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-    ).cast("long")
-    return (
-        inter.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard_bp"))
-        .filter(F.col("jaccard_bp") >= min_jaccard_bp)
-    )
+    return _verified(inter, sizes, min_jaccard_bp)
 
 
 def corpus_stop_list(
@@ -300,18 +254,9 @@ def corpus_stop_list(
     index and apply the SAME list to every probe batch: a per-side cap
     computed from each batch's own frequencies makes identical documents
     band differently between index and probe (systematic recall loss)."""
-    g = shingle_table(df, id_col, text_col, n, max_doc_freq=None)
-    return (
-        g.groupBy("ng").agg(F.count("*").alias("df_"))
-        .filter(F.col("df_") > max_doc_freq)
-        .select("ng")
+    return _stop_list(
+        shingle_table(df, id_col, text_col, n, max_doc_freq=None), max_doc_freq
     )
-
-
-def _apply_stop_list(g: DataFrame, stop_list: DataFrame) -> DataFrame:
-    """Drop a GIVEN stop list from a posting table — broadcast anti join
-    (the list is bounded-small; see corpus_stop_list)."""
-    return g.join(F.broadcast(stop_list.select("ng")), "ng", "left_anti")
 
 
 def minhash_signatures(
@@ -320,35 +265,23 @@ def minhash_signatures(
     max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
     stop_list: DataFrame | None = None,
 ) -> DataFrame:
-    """Engine-portable MinHash: h_i(S) = lexicographic MIN of
-    md5(i || ':' || shingle). Documents with no (kept) shingles are
-    absent. The stop-shingle cap is active by default so signatures are
-    computed over discriminative shingles only. Same cached-raw pattern
-    as jaccard_pairs: the stop-list action populates one cache of the
-    raw posting table and the capped swap reads it — ONE ngram explode
-    total (an uncached _stop_filter would run the explode+shuffle twice:
-    once for the eager stop-list head(), again on the downstream
-    action).
+    """Engine-portable MinHash (id, mh0..mh{k-1}): h_i(S) = lexicographic
+    MIN of md5(i || ':' || shingle). Documents with no (kept) shingles
+    are absent. The stop-shingle cap is active by default so signatures
+    are computed over discriminative shingles only. With the cap, the
+    raw posting table is cached: it feeds both the stop-list df count
+    and the anti-join probe, so the ngram explode runs once.
 
     ``stop_list`` (a DataFrame of ``ng``) overrides the self-computed
     cap: the given shingles are dropped instead — the shared-stop-list
     form probe batches must use so their signatures band identically to
     a corpus index built with that list."""
+    grams = shingle_table(df, id_col, text_col, n, max_doc_freq=None)
     if stop_list is not None:
-        grams = _apply_stop_list(
-            shingle_table(df, id_col, text_col, n, max_doc_freq=None), stop_list
-        )
-    elif max_doc_freq is None:
-        # single consumer, no stop-list action — nothing to cache
-        grams = shingle_table(df, id_col, text_col, n, max_doc_freq=None)
-    else:
-        raw = shingle_table(df, id_col, text_col, n, max_doc_freq=None).cache()
-        grams = _cap_cached(raw, max_doc_freq)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("ng")))).alias(f"mh{i}")
-        for i in range(k)
-    ]
-    return grams.groupBy("id").agg(*aggs)
+        grams = _apply_stop_list(grams, stop_list)
+    elif max_doc_freq is not None:
+        grams = _capped(_register_cache(grams.cache()), max_doc_freq)
+    return _min_hashes(grams, k)
 
 
 def band_signatures(
@@ -579,29 +512,26 @@ def minhash_lsh_pairs(
     max_doc_freq: int | None = DEFAULT_MAX_DOC_FREQ,
 ) -> DataFrame:
     """LSH candidates, optionally verified with true Jaccard (both
-    phases computed over cap-filtered shingles). ONE cached raw shingle
-    table feeds the stop-list agg, the signature agg, the per-doc sizes,
-    and both verify join sides — one explode, one caller-owned cache."""
-    raw = shingle_table(df, id_col, text_col, n, max_doc_freq=None).cache()
-    grams = _cap_cached(raw, max_doc_freq)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("ng")))).alias(f"mh{i}")
-        for i in range(k)
-    ]
+    phases computed over cap-filtered shingles). One explode: with the
+    cap, the RAW posting table is cached — it feeds the stop-list df
+    count and the anti-join probe. With verification, the CAPPED table
+    is cached too — it feeds the signature agg, the per-doc sizes and
+    both verify join sides (uncached, each persisted consumer would
+    rebuild the stop-list broadcast)."""
+    grams = shingle_table(df, id_col, text_col, n, max_doc_freq=None)
+    if max_doc_freq is not None:
+        grams = _capped(_register_cache(grams.cache()), max_doc_freq)
+    if min_jaccard_bp is not None:
+        grams = _register_cache(grams.cache())
     # persist the signature table (k hashes per DOCUMENT — tiny next to
     # the posting table): the band self-join and its distinct would
     # otherwise carry two copies of the signature aggregation over the
     # full posting cache (one per join side — exchange reuse is not
     # guaranteed once AQE re-plans the sides independently)
-    sig = _register_cache(grams.groupBy("id").agg(*aggs).persist())
+    sig = _register_cache(_min_hashes(grams, k).persist())
     cand = lsh_candidates(sig, k, band_width)
     if min_jaccard_bp is None:
         return cand
-    # one row per DOCUMENT, consumed by both join sides (sz_a, sz_b) —
-    # persist or the groupBy over the posting cache runs twice
-    sizes = _register_cache(
-        grams.groupBy("id").agg(F.count("*").alias("sz")).persist()
-    )
     ga = grams.select(F.col("id").alias("id_a"), "ng")
     gb = grams.select(F.col("id").alias("id_b"), "ng")
     inter = (
@@ -609,16 +539,8 @@ def minhash_lsh_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    jac = F.round(
-        F.col("inter") * F.lit(10000.0) / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-    ).cast("long")
-    return (
-        inter.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard_bp"))
-        .filter(F.col("jaccard_bp") >= min_jaccard_bp)
-    )
+    sizes = grams.groupBy("id").agg(F.count("*").alias("sz"))
+    return _verified(inter, sizes, min_jaccard_bp)
 
 
 # ---------------------------------------------------------------- SimHash
@@ -816,31 +738,18 @@ def benchmark_contamination(
     once, never shuffled on text. The stop-shingle cap (corpus document
     frequencies) drops boilerplate shingles that would otherwise flag
     everything; it is applied to BOTH sides (the symmetric-cap rule)."""
-    raw = shingle_table(corpus_df, id_col, text_col, n, max_doc_freq=None)
+    corpus_g = shingle_table(corpus_df, id_col, text_col, n, max_doc_freq=None)
+    bench_g = shingle_table(
+        bench_df, bench_id_col, bench_text_col, n, max_doc_freq=None
+    )
     if max_doc_freq is not None:
-        # cached-raw pattern (see minhash_signatures): ONE cache of the
-        # corpus posting table feeds the stop-list agg, the capped
-        # corpus side AND the bench-side stop filter — deriving the
-        # stop list from corpus_df again would run the biggest explode
-        # in the job twice. (No _cap_cached swap here: its unpersist of
-        # raw would strand the stop list's lineage for the bench side.)
-        raw = _register_cache(raw.cache())
-        stop = (
-            raw.groupBy("ng").agg(F.count("*").alias("df_"))
-            .filter(F.col("df_") > max_doc_freq)
-            .select("ng")
-        )
-        corpus_g = _apply_stop_list(raw, stop)
-        bench_g = _apply_stop_list(
-            shingle_table(bench_df, bench_id_col, bench_text_col, n,
-                          max_doc_freq=None),
-            stop,
-        )
-    else:
-        corpus_g = raw
-        bench_g = shingle_table(
-            bench_df, bench_id_col, bench_text_col, n, max_doc_freq=None
-        )
+        # ONE cache of the corpus posting table feeds the stop-list agg,
+        # the capped corpus side AND the bench-side stop filter —
+        # deriving the stop list from corpus_df again would run the
+        # biggest explode in the job twice
+        corpus_g = _register_cache(corpus_g.cache())
+        bench_g = _apply_stop_list(bench_g, _stop_list(corpus_g, max_doc_freq))
+    corpus_g = _capped(corpus_g, max_doc_freq)
     bench_g = bench_g.select(F.col("id").alias("bench_id"), "ng")
     return (
         corpus_g.join(F.broadcast(bench_g), "ng")

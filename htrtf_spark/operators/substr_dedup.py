@@ -26,8 +26,9 @@ a fixed-window fingerprint shuffle instead of a monolithic suffix sort:
    repeated 10^6-10^9 times across a web corpus — would buffer their
    entire occurrence set inside ONE exact-check window task (the
    classic straggler); they take the windowless aggregated exact check
-   instead. Output is provably identical with the cap on or off
-   (pytest-asserted), only the plan shape changes;
+   instead. The cap only routes: output is identical at every cap
+   (pytest-asserted against a brute-force scan), only the plan shape
+   changes;
 3. per document, hit windows whose [pos, pos+L) intervals overlap or
    touch merge into MAXIMAL DISJOINT spans (interval merge: a new span
    starts when pos - previous_pos > L — plain gaps-and-islands on
@@ -35,15 +36,12 @@ a fixed-window fingerprint shuffle instead of a monolithic suffix sort:
    positions skip fewer than L characters, e.g. hits at 0 and 2).
 
 A naive single-phase plan would shuffle L bytes per input character —
-the wide gram next to every position. ``prefilter_hash=True`` (default)
-keeps the wide rows out of the exchanges: phase 1 aggregates 8-byte
-xxhash64 fingerprints only, and only the surviving candidate windows
-(a few % of positions in the common corpus) are re-checked against the
-real grams; a same-hash different-gram collision is discarded by the
-exact phase (false negatives are impossible — equal grams hash equal).
-``prefilter_hash=False`` counts the real gram directly — collision-
-proof counts, so repeated-class membership alone decides hits with no
-re-check. Output is identical either way (pytest-asserted).
+the wide gram next to every position. Phase 1 keeps the wide rows out
+of the exchanges: it aggregates 8-byte xxhash64 fingerprints only, and
+only the surviving candidate windows (a few % of positions in the
+common corpus) are re-checked against the real grams; a same-hash
+different-gram collision is discarded by the exact phase (false
+negatives are impossible — equal grams hash equal).
 
 At 100 TB: windows are O(total chars) rows but the plan is narrow map
 stages + map-side-combined aggregations + AQE-sized shuffles — no
@@ -65,8 +63,9 @@ coarser granularities (exact_duplicates / strip_duplicated_lines),
 where occurrences are well-defined.
 
 Reference analog: the reference has no substring dedup; this fills the
-corpus-hygiene tier between exact-document (operators/dedup.py:170) and
-near-duplicate (operators/dedup.py:306) dedup.
+corpus-hygiene tier between exact-document
+(operators/dedup.exact_duplicates) and near-duplicate
+(operators/dedup.minhash_lsh_pairs) dedup.
 """
 
 from __future__ import annotations
@@ -88,7 +87,6 @@ DEFAULT_CHUNK_CHARS = 65536
 # takes the windowless aggregated exact check instead of the per-key
 # window, bounding window-task buffering to cap rows per key. Counts
 # are exact (phase 1's groupBy), so routing needs no detection pass.
-# Pass max_gram_freq=None to disable explicitly (output identical).
 DEFAULT_MAX_GRAM_FREQ = 100_000
 
 # Repeated-class sets up to this many rows are broadcast for the
@@ -99,11 +97,8 @@ DEFAULT_MAX_GRAM_FREQ = 100_000
 # bytes the single-phase plan would have moved. Sizing counts the
 # BUILT relation, not the raw payload: a BroadcastHashJoin build runs
 # ~50-70 B/row over the 16 B (hash, count) class, so 2M classes is a
-# ~100-150 MB build per executor — heavy but workable; the gram-keyed
-# (no-prefilter) variant carries L-char strings per class, so its
-# bound is lower.
+# ~100-150 MB build per executor — heavy but workable.
 DUP_CLASS_BROADCAST_MAX = 2_000_000
-DUP_GRAM_BROADCAST_MAX = 500_000
 
 
 def _windows(
@@ -197,8 +192,7 @@ def repeated_substring_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = DEFAULT_MIN_LEN,
-    prefilter_hash: bool = True,
-    max_gram_freq: int | None = DEFAULT_MAX_GRAM_FREQ,
+    max_gram_freq: int = DEFAULT_MAX_GRAM_FREQ,
     chunk_chars: int = DEFAULT_CHUNK_CHARS,
 ) -> DataFrame:
     """Maximal duplicated character spans, as
@@ -207,7 +201,7 @@ def repeated_substring_spans(
     docstring for semantics and the scale shape.
 
     ``max_gram_freq`` routes boilerplate classes around the per-key
-    exact-check windows (output provably identical; bounds window
+    exact-check windows (output identical at every cap; bounds window
     buffering to the cap — routing reads phase 1's exact counts, no
     detection pass). ``chunk_chars`` bounds per-row generated arrays
     (output independent of it; tune only if L approaches the chunk
@@ -222,10 +216,9 @@ def repeated_substring_spans(
     L = int(min_len)
     if L < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
-    if max_gram_freq is not None and int(max_gram_freq) < 1:
-        raise ValueError(
-            f"max_gram_freq must be >= 1 or None, got {max_gram_freq}"
-        )
+    cap = int(max_gram_freq)
+    if cap < 1:
+        raise ValueError(f"max_gram_freq must be >= 1, got {max_gram_freq}")
     if int(chunk_chars) < 1:
         raise ValueError(f"chunk_chars must be >= 1, got {chunk_chars}")
     from htrtf_spark.plans.ordering import fan_out
@@ -236,75 +229,47 @@ def repeated_substring_spans(
     docs = fan_out(df, id_col)
     grams = _windows(docs, id_col, text_col, L, chunk=int(chunk_chars))
 
-    if prefilter_hash:
-        # phase 1: EXACT per-fingerprint counts via map-side-combined
-        # groupBy over ONLY the 8-byte hash (16 bytes/row shuffled vs
-        # the full (id, pos, gram) row a window would move — guide
-        # §2.3; a fingerprint repeated 10^9 times partially aggregates
-        # to ~one row per task, so there is no per-key buffering and no
-        # straggler anywhere in this phase). The counts are exact, so
-        # the former sampled heavy-DETECTION pass is subsumed: classes
-        # above the cap are routed by the same ``_n`` the phase already
-        # computed.
-        from htrtf_spark.operators.dedup import _register_cache
+    # phase 1: EXACT per-fingerprint counts via map-side-combined
+    # groupBy over ONLY the 8-byte hash (16 bytes/row shuffled vs the
+    # full (id, pos, gram) row a window would move — guide §2.3; a
+    # fingerprint repeated 10^9 times partially aggregates to ~one row
+    # per task, so there is no per-key buffering and no straggler
+    # anywhere in this phase). The counts are exact, so the former
+    # sampled heavy-DETECTION pass is subsumed: classes above the cap
+    # are routed by the same ``_n`` the phase already computed.
+    from htrtf_spark.operators.dedup import _register_cache
 
-        counts = (
-            grams.select(F.xxhash64("g").alias("_h"))
-            .groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
-        )
-        # reattach: candidate windows are the rows whose fingerprint
-        # class repeats. The class set is cached (tiny — 16 B/class)
-        # and counted ONCE to pick the regime at plan time: broadcast
-        # (the common corpus — a few % duplicated — leaving the wide
-        # window table entirely unshuffled) or, past the bound, a
-        # shuffle join on _h that AQE skew-splits (a window could not
-        # be split this way). Relying on AQE's runtime SMJ→BHJ
-        # conversion instead would materialize the wide shuffle before
-        # converting — the exact cost this phase exists to avoid.
-        dup = _register_cache(counts.persist())
-        small = dup.count() <= DUP_CLASS_BROADCAST_MAX
-        cand = grams.withColumn("_h", F.xxhash64("g")).join(
-            F.broadcast(dup) if small else dup, "_h"
-        )
-        if max_gram_freq is not None:
-            cap = int(max_gram_freq)
-            # light classes (2 <= n <= cap): exact >= 2 re-check over
-            # the REAL gram (collision-proof) — per-key window
-            # buffering is bounded by the cap by construction.
-            light = cand.filter(F.col("_n") <= cap).drop("_h", "_n")
-            # heavy classes (n > cap): boilerplate — exact check
-            # WITHOUT a window (_exact_hits_small: map-side-combined
-            # gram counts + broadcast semi join), so no window task
-            # ever buffers an unbounded occurrence set.
-            heavy = cand.filter(F.col("_n") > cap).drop("_h", "_n")
-            hits = _window_hits(light, "g").select("id", "pos").unionByName(
-                _exact_hits_small(heavy)
-            )
-        else:
-            hits = _window_hits(
-                cand.drop("_h", "_n"), "g"
-            ).select("id", "pos")
-    else:
-        # no hash prefilter: count the REAL gram directly — counts are
-        # collision-proof, so every position of a repeated class is a
-        # hit by definition and no re-check (window OR cap split) is
-        # needed at all; the cap knob is routing-only and the exact
-        # groupBy already has no per-key buffering.
-        from htrtf_spark.operators.dedup import _register_cache
-
-        counts = (
-            grams.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
-            .select("g")
-        )
-        dup = _register_cache(counts.persist())
-        small = dup.count() <= DUP_GRAM_BROADCAST_MAX
-        hits = grams.join(
-            F.broadcast(dup) if small else dup, "g", "left_semi"
-        ).select("id", "pos")
+    counts = (
+        grams.select(F.xxhash64("g").alias("_h"))
+        .groupBy("_h")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") >= 2)
+    )
+    # reattach: candidate windows are the rows whose fingerprint class
+    # repeats. The class set is cached (tiny — 16 B/class) and counted
+    # ONCE to pick the regime at plan time: broadcast (the common
+    # corpus — a few % duplicated — leaving the wide window table
+    # entirely unshuffled) or, past the bound, a shuffle join on _h that
+    # AQE skew-splits (a window could not be split this way). Relying on
+    # AQE's runtime SMJ→BHJ conversion instead would materialize the
+    # wide shuffle before converting — the exact cost this phase exists
+    # to avoid.
+    dup = _register_cache(counts.persist())
+    small = dup.count() <= DUP_CLASS_BROADCAST_MAX
+    cand = grams.withColumn("_h", F.xxhash64("g")).join(
+        F.broadcast(dup) if small else dup, "_h"
+    )
+    # light classes (2 <= n <= cap): exact >= 2 re-check over the REAL
+    # gram (collision-proof) — per-key window buffering is bounded by
+    # the cap by construction.
+    light = cand.filter(F.col("_n") <= cap).drop("_h", "_n")
+    # heavy classes (n > cap): boilerplate — exact check WITHOUT a
+    # window (_exact_hits_small: map-side-combined gram counts + semi
+    # join), so no window task ever buffers an unbounded occurrence set.
+    heavy = cand.filter(F.col("_n") > cap).drop("_h", "_n")
+    hits = _window_hits(light, "g").select("id", "pos").unionByName(
+        _exact_hits_small(heavy)
+    )
 
     # interval merge, not consecutive-position islands: hit intervals
     # [pos, pos+L) overlap-or-touch exactly when the position gap is

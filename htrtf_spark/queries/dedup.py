@@ -62,10 +62,9 @@ FROM documents GROUP BY md5(text)
 
 
 def q25_trigram_jaccard_pairs(spark, sf_dir):
-    # postings form: cap rides the posting-list groupBy (no df-count
-    # shuffle/anti join) — output-identical to jaccard_pairs (pytest
-    # equality) and one fewer shuffle, so it is the production default
-    return D.jaccard_pairs_postings(
+    # posting-list pair expansion; the stop-shingle cap rides the
+    # posting-list groupBy (no df-count shuffle or anti join)
+    return D.jaccard_pairs(
         t(spark, sf_dir, "documents"), "doc_id", "text",
         min_jaccard_bp=JACCARD_BP_MIN,
     )

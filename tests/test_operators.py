@@ -24,6 +24,48 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+# Pure-python restatement of the near-dup spec: word trigram shingles,
+# the stop-shingle cap, Jaccard basis points and md5 MinHash banding.
+def _py_shingles(text: str) -> set[str]:
+    ws = [w for w in text.split(" ") if w]
+    return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
+
+
+def _py_capped(texts: dict[int, str], cap: int | None) -> dict[int, set[str]]:
+    """Each document's shingles minus the stop list (df > cap); documents
+    left with no shingle are absent, as in the posting table."""
+    from collections import Counter
+
+    sh = {d: _py_shingles(t) for d, t in texts.items()}
+    freq = Counter(g for s in sh.values() for g in s)
+    kept = {
+        d: {g for g in s if cap is None or freq[g] <= cap} for d, s in sh.items()
+    }
+    return {d: s for d, s in kept.items() if s}
+
+
+def _py_bands(ngs: set[str]) -> set[tuple[int, str]]:
+    import hashlib
+
+    if not ngs:
+        return set()
+    sig = [
+        min(hashlib.md5(f"{i}:{g}".encode()).hexdigest() for g in ngs)
+        for i in range(dedup.DEFAULT_MINHASHES)
+    ]
+    w = dedup.DEFAULT_BAND_WIDTH
+    return {
+        (b, hashlib.md5("|".join(sig[w * b : w * b + w]).encode()).hexdigest())
+        for b in range(dedup.DEFAULT_MINHASHES // w)
+    }
+
+
+def _py_jaccard_bp(a: set[str], b: set[str]) -> int:
+    """round-half-up(10000 · |a ∩ b| / |a ∪ b|) in integer arithmetic."""
+    inter, union = len(a & b), len(a | b)
+    return (inter * 20000 + union) // (2 * union)
+
+
 def test_exact_duplicates(spark, docs):
     out = {r["fp"]: (r["rep_id"], r["n_copies"]) for r in dedup.exact_duplicates(docs, "doc_id", "text").collect()}
     # 0 and 3 share a fingerprint
@@ -215,21 +257,96 @@ def test_block_matmul_near_pairs(spark):
     assert all(a < b for a, b in got)
 
 
-def test_jaccard_postings_equals_join_form(spark, docs):
-    """The posting-list pair-expansion formulation is output-identical to
-    the inverted-index self-join (one fewer shuffle; same stop-shingle
-    bound applies at scale)."""
-    a = {
-        (r["id_a"], r["id_b"]): r["jaccard_bp"]
-        for r in dedup.jaccard_pairs(docs, "doc_id", "text", min_jaccard_bp=1).collect()
+def test_binding_cap_matches_python_restatement(spark, docs):
+    """At a BINDING stop-shingle cap (max_doc_freq=2 drops the trigrams
+    docs 0, 1 and 3 share), jaccard_pairs and minhash_lsh_pairs in both
+    modes equal the pure-python restatement: shingles minus the stop
+    list, Jaccard basis points, md5 MinHash banding."""
+    cap = 2
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    kept = _py_capped(texts, cap)
+    assert kept != _py_capped(texts, None)  # the cap binds
+    overlap = {
+        (a, b): _py_jaccard_bp(kept[a], kept[b])
+        for a in kept for b in kept if a < b and kept[a] & kept[b]
     }
-    b = {
-        (r["id_a"], r["id_b"]): r["jaccard_bp"]
-        for r in dedup.jaccard_pairs_postings(
-            docs, "doc_id", "text", min_jaccard_bp=1
-        ).collect()
+    want_jac = {p: bp for p, bp in overlap.items() if bp >= 1}
+    bands = {d: _py_bands(s) for d, s in kept.items()}
+    want_cand = {
+        (a, b) for a in kept for b in kept if a < b and bands[a] & bands[b]
     }
-    assert a == b and len(a) > 0
+    want_ver = {p: bp for p, bp in want_jac.items() if p in want_cand}
+    assert (0, 1) not in want_jac and want_jac[(0, 3)] == 10000
+
+    def pairs(df, col=None):
+        rows = df.collect()
+        if col is None:
+            return {(r["id_a"], r["id_b"]) for r in rows}
+        return {(r["id_a"], r["id_b"]): r[col] for r in rows}
+
+    try:
+        assert pairs(
+            dedup.jaccard_pairs(
+                docs, "doc_id", "text", min_jaccard_bp=1, max_doc_freq=cap
+            ), "jaccard_bp",
+        ) == want_jac
+        assert pairs(
+            dedup.minhash_lsh_pairs(
+                docs, "doc_id", "text", min_jaccard_bp=None, max_doc_freq=cap
+            )
+        ) == want_cand
+        assert pairs(
+            dedup.minhash_lsh_pairs(
+                docs, "doc_id", "text", min_jaccard_bp=1, max_doc_freq=cap
+            ), "jaccard_bp",
+        ) == want_ver
+    finally:
+        dedup.release_caches()
+
+
+def test_dedup_plans_build_without_jobs(spark, docs):
+    """Building a near-dup plan launches no Spark job: the stop-shingle
+    cap is a lazy broadcast anti join that runs inside the terminal
+    action, never a stop list collected while the plan is built."""
+    sc = spark.sparkContext
+    corpus = docs.filter("doc_id < 3")
+    new = docs.filter("doc_id >= 3")
+    bench = spark.createDataFrame(
+        [(100, "the quick brown fox jumps")], "bench_id long, text string"
+    )
+    builders = {
+        "jaccard_pairs": lambda: dedup.jaccard_pairs(docs, "doc_id", "text"),
+        "minhash_signatures": lambda: dedup.minhash_signatures(
+            docs, "doc_id", "text", max_doc_freq=2
+        ),
+        "minhash_lsh_pairs (candidates)": lambda: dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text", min_jaccard_bp=None
+        ),
+        "minhash_lsh_pairs (verified)": lambda: dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text"
+        ),
+        "shingle_table": lambda: dedup.shingle_table(
+            docs, "doc_id", "text", max_doc_freq=2
+        ),
+        "incremental_dedup_flags": lambda: dedup.incremental_dedup_flags(
+            new, corpus, "doc_id", "text"
+        ),
+        "benchmark_contamination": lambda: dedup.benchmark_contamination(
+            docs, bench, id_col="doc_id", bench_id_col="bench_id",
+            max_doc_freq=2,
+        ),
+    }
+    launched = {}
+    try:
+        for name, build in builders.items():
+            group = f"dedup-build-{len(launched)}"
+            sc.setJobGroup(group, name)
+            build()
+            launched[name] = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        dedup.release_caches()
+    assert launched == {name: [] for name in builders}
 
 
 def test_block_matmul_topk_exact_across_partitions(spark):
@@ -324,6 +441,7 @@ def test_stop_shingle_cap_default(spark, docs):
 
     # binding cap: "the quick brown" has df=3 (docs 0,1,3) → dropped at cap 2
     g = dedup.shingle_table(docs, "doc_id", "text", max_doc_freq=2)
+    assert g.columns == ["id", "ng"]  # the anti join keeps the column order
     assert g.filter("ng = 'the quick brown'").count() == 0
     assert g.count() > 0  # discriminative shingles survive
 
@@ -483,24 +601,7 @@ def test_incremental_dedup_flags(spark, docs):
     }
 
     def bands(text):
-        ws = [w for w in text.split(" ") if w]
-        ngs = (
-            {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
-            if len(ws) >= 3
-            else set()
-        )
-        if not ngs:
-            return set()
-        sig = [
-            min(
-                hashlib.md5(f"{i}:{g}".encode()).hexdigest() for g in ngs
-            )
-            for i in range(dedup.DEFAULT_MINHASHES)
-        ]
-        return {
-            (b, hashlib.md5("|".join(sig[2 * b : 2 * b + 2]).encode()).hexdigest())
-            for b in range(dedup.DEFAULT_MINHASHES // dedup.DEFAULT_BAND_WIDTH)
-        }
+        return _py_bands(_py_shingles(text))
 
     corpus_bands = set().union(*(bands(t) for t in corpus_rows.values()))
     corpus_fps = {hashlib.md5(t.encode()).hexdigest() for t in corpus_rows.values()}

@@ -1,6 +1,6 @@
 """Exact repeated-substring dedup (operators/substr_dedup.py): planted
-repeats spanning document boundaries, a brute-force oracle, hash
-prefilter equivalence, and apply-side reconstruction."""
+repeats spanning document boundaries, a brute-force oracle, cap and
+chunk output identity, and apply-side reconstruction."""
 
 from __future__ import annotations
 
@@ -78,16 +78,6 @@ def test_spans_match_brute_force(spark):
     assert any(d == 2 for d, *_ in got)          # within-doc repeat found
     assert {d for d, *_ in got} >= {0, 1, 4}     # cross-doc boilerplate
     assert not any(d in (3, 5) for d, *_ in got)  # clean/short untouched
-
-
-def test_prefilter_hash_equivalence(spark):
-    docs = _mk_docs()
-    df = spark.createDataFrame(
-        list(docs.items()), "doc_id long, text string"
-    )
-    a = repeated_substring_spans(df, "doc_id", "text", L, prefilter_hash=True)
-    b = repeated_substring_spans(df, "doc_id", "text", L, prefilter_hash=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_strip_repeated_spans_reconstruction(spark):
@@ -192,10 +182,10 @@ def test_near_offset_hits_merge_into_one_disjoint_span(spark):
 
 def test_heavy_gram_cap_output_identity(spark):
     """VERDICT r5 #1: grams above max_gram_freq route around the
-    per-key window (groupBy count + broadcast/inline membership) —
-    output must be IDENTICAL with the cap on, off, tiny, and under
-    both prefilter regimes, on an adversarial corpus where one gram
-    dominates (boilerplate repeated far above the cap)."""
+    per-key window (groupBy count + semi-join membership) — output
+    must equal the brute-force scan at every cap, tiny or above every
+    count, on an adversarial corpus where one gram dominates
+    (boilerplate repeated far above the cap)."""
     Lx = 12
     boiler = "BOILERPLATE!"  # exactly L chars -> one gram per planting
     assert len(boiler) == Lx
@@ -213,24 +203,16 @@ def test_heavy_gram_cap_output_identity(spark):
     docs[101] = rare + " filler " + rare  # 2 occurrences: a hit, not heavy
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
 
-    want = sorted(
-        map(tuple, repeated_substring_spans(
-            df, "doc_id", "text", Lx, prefilter_hash=False,
-            max_gram_freq=None,
-        ).collect())
-    )
-    assert want == sorted(_brute_spans(docs, Lx))
-    for prefilter in (True, False):
-        for cap in (1, 3, 100_000):
-            # output must be identical in EVERY regime, because the cap
-            # is routing-only
-            got = sorted(
-                map(tuple, repeated_substring_spans(
-                    df, "doc_id", "text", Lx,
-                    prefilter_hash=prefilter, max_gram_freq=cap,
-                ).collect())
-            )
-            assert got == want, f"prefilter={prefilter} cap={cap}"
+    want = sorted(_brute_spans(docs, Lx))
+    for cap in (1, 3, 100_000):
+        # output must be identical in EVERY regime, because the cap is
+        # routing-only
+        got = sorted(
+            map(tuple, repeated_substring_spans(
+                df, "doc_id", "text", Lx, max_gram_freq=cap,
+            ).collect())
+        )
+        assert got == want, f"cap={cap}"
 
 
 def test_chunked_windows_output_identity(spark):
