@@ -10,13 +10,16 @@ Design: work splits into ``n_buckets`` deterministic buckets by
 buckets, so each bucket's output is independent and idempotent. A run is:
 
   1. ONE extraction pass over the pending buckets only, written
-     ``partitionBy(_bucket)`` into ``<out>/_staging/`` (the input is
-     scanned once per resume attempt, never once per bucket — at 100 TB
-     a per-bucket rescan would read n_buckets x corpus);
+     ``partitionBy(_bucket)`` into ``<out>/_staging/`` by exactly one
+     write task per bucket (the input is scanned once per resume
+     attempt, never once per bucket — at 100 TB a per-bucket rescan
+     would read n_buckets x corpus);
   2. per pending bucket, an atomic COMMIT: FileSystem.rename of the
      staged directory to ``<out>/data/bucket=<b>/`` followed by the
      manifest row publish (write-temp-rename, so a crash can never leave
-     a half manifest — SURVEY.md §7.4 risk 5).
+     a half manifest — SURVEY.md §7.4 risk 5). The lineage counts come
+     from the staged files' parquet footers (row counts and the
+     ``reject_reason`` null counts), so the commit runs no Spark job.
 
 Resume = list manifest, recompute only missing buckets. A kill during
 staging commits nothing (the staging dir is discarded on restart); a
@@ -27,10 +30,11 @@ different bucket count against a partial manifest is REFUSED — the two
 partitionings are incompatible and mixing them would silently duplicate
 and drop conversations.
 
-All filesystem metadata operations go through the Hadoop FileSystem API
-of ``out_dir``'s scheme (local, HDFS, s3a, ...), so the same job works
-under ``spark-submit --master <cluster>`` with a remote --output; only
-``prune_checkpoints`` is a local-filesystem utility.
+All filesystem operations, footer reads included, go through one Hadoop
+FileSystem handle per run for ``out_dir``'s scheme (local, HDFS, s3a,
+...), so the same job works under ``spark-submit --master <cluster>``
+with a remote --output; only ``prune_checkpoints`` is a local-filesystem
+utility.
 """
 
 from __future__ import annotations
@@ -63,57 +67,63 @@ class KilledForTest(RuntimeError):
 
 
 # ---------------------------------------------------------------- FS layer
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
+def _hadoop_fs(spark: SparkSession, path: str):
+    """The FileSystem of ``path``'s scheme and the Hadoop ``Path`` class.
+    Resolve them once per run: a ``spark._jvm.<class>`` lookup makes a
+    py4j round trip per package segment (2-4 ms, ~10x a FS call)."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, jp, _ = _fs(spark, path)
-    return bool(fs.exists(jp))
+def _names(fs, jpath) -> set[str]:
+    if not fs.exists(jpath):
+        return set()
+    return {st.getPath().getName() for st in fs.listStatus(jpath)}
 
 
-def _delete(spark: SparkSession, path: str) -> None:
-    fs, jp, _ = _fs(spark, path)
-    if fs.exists(jp):
-        fs.delete(jp, True)
-
-
-def _mkdirs(spark: SparkSession, path: str) -> None:
-    fs, jp, _ = _fs(spark, path)
-    fs.mkdirs(jp)
-
-
-def _rename(spark: SparkSession, src: str, dst: str) -> None:
-    fs, jsrc, jvm = _fs(spark, src)
-    if not fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)):
-        raise IOError(f"rename failed: {src} -> {dst}")
-
-
-def _list_names(spark: SparkSession, path: str) -> list[str]:
-    fs, jp, _ = _fs(spark, path)
-    if not fs.exists(jp):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(jp)]
-
-
-def _active_spark(spark: SparkSession | None) -> SparkSession | None:
-    return spark or SparkSession.getActiveSession()
+def _staged_counts(fs, Path, staging: str) -> dict[int, tuple[int, int]]:
+    """Per staged bucket, (rows, rejected rows) from its parquet footers:
+    row-group ``num_rows`` and the ``reject_reason`` null count. Raises
+    if a footer lacks that null count."""
+    counts = {}
+    # hidden names (".crc" checksums, "_SUCCESS" markers) are not data
+    for st in fs.globStatus(Path(os.path.join(staging, "_bucket=*", "[!._]*"))):
+        path, size = st.getPath(), st.getLen()
+        stream = fs.open(path)
+        try:
+            stream.seek(size - 8)
+            tail = stream.readNBytes(8)  # footer length + "PAR1"
+            n = int.from_bytes(tail[:4], "little")
+            stream.seek(size - 8 - n)
+            footer = stream.readNBytes(n)
+        finally:
+            stream.close()
+        md = pq.read_metadata(pa.BufferReader(b"PAR1" + footer + tail))
+        b = int(path.getParent().getName()[len("_bucket=") :])
+        rows, rejected = counts.get(b, (0, 0))
+        col = md.schema.names.index("reject_reason")
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            stats = rg.column(col).statistics
+            if stats is None or not stats.has_null_count:
+                raise ValueError(f"{path}: no reject_reason null count")
+            rows += rg.num_rows
+            rejected += rg.num_rows - stats.null_count
+        counts[b] = (rows, rejected)
+    return counts
 
 
 # ---------------------------------------------------------------- manifest
-def _manifest_name(bucket: int) -> str:
-    return f"bucket-{bucket:05d}.parquet"
-
-
 def completed_buckets(out_dir: str, spark: SparkSession | None = None) -> set[int]:
-    spark = _active_spark(spark)
+    spark = spark or SparkSession.getActiveSession()
     mdir = os.path.join(out_dir, MANIFEST_DIR)
-    if spark is not None:
-        names = _list_names(spark, mdir)
-    else:  # no session: local-filesystem fallback
-        names = os.listdir(mdir) if os.path.isdir(mdir) else []
+    if spark is None:  # no session: local-filesystem fallback
+        return _completed(os.listdir(mdir) if os.path.isdir(mdir) else [])
+    fs, Path = _hadoop_fs(spark, mdir)
+    return _completed(_names(fs, Path(mdir)))
+
+
+def _completed(names) -> set[int]:
     return {
         int(n[len("bucket-") : -len(".parquet")])
         for n in names
@@ -121,13 +131,12 @@ def completed_buckets(out_dir: str, spark: SparkSession | None = None) -> set[in
     }
 
 
-def _publish_manifest_row(spark: SparkSession, mdir: str, row: dict) -> None:
+def _publish_manifest_row(fs, Path, mdir: str, row: dict) -> None:
     """Atomic publish into the existing manifest dir ``mdir`` through its
     FileSystem: local temp parquet → copyFromLocalFile to a dot-tmp name
     → rename to final."""
-    name = _manifest_name(row["bucket"])
-    fs, jfinal, jvm = _fs(spark, os.path.join(mdir, name))
-    Path = jvm.org.apache.hadoop.fs.Path
+    name = f"bucket-{row['bucket']:05d}.parquet"
+    jfinal = Path(os.path.join(mdir, name))
     jtmp = Path(os.path.join(mdir, "." + name + ".tmp"))
     with tempfile.NamedTemporaryFile(suffix=".parquet", delete=False) as f:
         local = f.name
@@ -144,7 +153,8 @@ def _publish_manifest_row(spark: SparkSession, mdir: str, row: dict) -> None:
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     mdir = os.path.join(out_dir, MANIFEST_DIR)
-    if not _exists(spark, mdir):
+    fs, Path = _hadoop_fs(spark, mdir)
+    if not fs.exists(Path(mdir)):
         return spark.createDataFrame([], _MANIFEST_SCHEMA)
     return spark.read.parquet(os.path.join(mdir, "*.parquet"))
 
@@ -170,15 +180,14 @@ def run_extraction_checkpointed(
     different ``n_buckets``. ``fail_after_buckets`` injects a crash in
     the commit loop for the resume test.
     """
-    done = completed_buckets(out_dir, spark)
+    fs, Path = _hadoop_fs(spark, out_dir)
+    staging, data, mdir = (
+        os.path.join(out_dir, d) for d in (STAGING_DIR, DATA_DIR, MANIFEST_DIR)
+    )
+    done = _completed(_names(fs, Path(mdir)))
     if done:
-        seen = {
-            r["n_buckets"]
-            for r in read_manifest(spark, out_dir)
-            .select("n_buckets")
-            .distinct()
-            .collect()
-        }
+        rows = spark.read.parquet(os.path.join(mdir, "*.parquet")).select("n_buckets")
+        seen = {r["n_buckets"] for r in rows.distinct().collect()}
         if seen and seen != {n_buckets}:
             raise ValueError(
                 f"manifest at {out_dir} was written with n_buckets={sorted(seen)}; "
@@ -190,8 +199,7 @@ def run_extraction_checkpointed(
     if not pending:
         return []
 
-    staging = os.path.join(out_dir, STAGING_DIR)
-    _delete(spark, staging)  # discard any half-staged previous attempt
+    fs.delete(Path(staging), True)  # discard any half-staged previous attempt
 
     src = transcripts.withColumn("_bucket", _bucket_col(n_buckets))
     if len(pending) < n_buckets:
@@ -200,52 +208,41 @@ def run_extraction_checkpointed(
     extracted = extract_turns(src.drop("_bucket"), num_partitions=num_partitions)
     # the bucket id is a pure function of conv_id — recomputable on the
     # extracted rows, so extraction itself stays a narrow 4-column stage.
-    # One hash shuffle on the (smaller) extracted rows aligns tasks with
-    # buckets before the partitioned write: without it, partitionBy emits
+    # One shuffle on the (smaller) extracted rows sends bucket b to write
+    # task b before the partitioned write: without it, partitionBy emits
     # input_tasks x n_buckets files (4k even at bench scale, unbounded at
-    # cluster scale).
-    staged = extracted.withColumn("_bucket", _bucket_col(n_buckets)).repartition(
-        n_buckets, F.col("_bucket")
+    # cluster scale). By id, not by hash: murmur3 would leave some tasks
+    # empty and give others two buckets.
+    staged = extracted.withColumn("_bucket", _bucket_col(n_buckets)).repartitionById(
+        n_buckets, "_bucket"
     )
     staged.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
     pass_wall_ms = max(int((time.monotonic() - t0) * 1000), 1)
 
-    # lineage counts from what was actually committed to staging
-    # (validates the write); one cheap pass over the extracted rows
-    stats = {
-        int(r["_bucket"]): (int(r["n"]), int(r["rej"] or 0))
-        for r in spark.read.parquet(staging)
-        .groupBy("_bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("reject_reason").isNotNull().cast("long")).alias("rej"),
-        )
-        .collect()
-    }
+    # lineage counts from the footers of what was actually staged
+    # (validates the write) — no second pass over the rows
+    stats = _staged_counts(fs, Path, staging)
     total_rows = sum(n for n, _ in stats.values()) or 1
 
-    data = os.path.join(out_dir, DATA_DIR)
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    _mkdirs(spark, data)
-    _mkdirs(spark, mdir)
-    # one listing each, not an exists() per bucket: the loop below only
-    # adds the data dirs of buckets it has already passed
-    staged = set(_list_names(spark, staging))
-    in_data = set(_list_names(spark, data))
+    fs.mkdirs(Path(data))
+    fs.mkdirs(Path(mdir))
+    # one listing, not an exists() per bucket: the loop below only adds
+    # the data dirs of buckets it has already passed
+    in_data = _names(fs, Path(data))
     ran: list[int] = []
     for b in pending:
-        if f"_bucket={b}" in staged:
-            ddir = os.path.join(data, f"bucket={b}")
+        if b in stats:
+            jdata = Path(os.path.join(data, f"bucket={b}"))
             if f"bucket={b}" in in_data:
-                _delete(spark, ddir)  # partial dir from a crashed commit
-            _rename(spark, os.path.join(staging, f"_bucket={b}"), ddir)
+                fs.delete(jdata, True)  # partial dir from a crashed commit
+            if not fs.rename(Path(os.path.join(staging, f"_bucket={b}")), jdata):
+                raise IOError(f"rename failed: bucket {b} -> {jdata}")
         n, rej = stats.get(b, (0, 0))
         # wall is attributed to buckets proportionally to their rows (the
         # pass is shared); turns_per_sec is therefore the pass aggregate
         share_ms = max(int(pass_wall_ms * n / total_rows), 1)
         _publish_manifest_row(
-            spark,
-            mdir,
+            fs, Path, mdir,
             {
                 "bucket": b,
                 "n_buckets": n_buckets,
@@ -260,7 +257,7 @@ def run_extraction_checkpointed(
         ran.append(b)
         if fail_after_buckets is not None and len(ran) >= fail_after_buckets:
             raise KilledForTest(f"injected failure after {len(ran)} buckets")
-    _delete(spark, staging)
+    fs.delete(Path(staging), True)
     return ran
 
 

@@ -3,6 +3,8 @@ uninterrupted run; lineage manifest complete and conserving."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
 
@@ -12,6 +14,7 @@ from htrtf_spark.plans.pipeline import extract_turns
 from htrtf_spark.schema import TRANSCRIPTS_SCHEMA
 
 N_BUCKETS = 6
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _sorted(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -76,6 +79,110 @@ def test_manifest_lineage_conservation(spark, tmp_path):
     assert (man["turns_per_sec"] >= 0).all()
 
 
+def test_manifest_counts_match_output(spark, tmp_path):
+    """The footer-derived lineage counts equal a count over the committed
+    rows, bucket by bucket, on an input that has rejects."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        synth.synth_pandas(n_convs=30, seed=5), schema=TRANSCRIPTS_SCHEMA
+    )
+    out_dir = str(tmp_path / "ck4")
+    ckpt.run_extraction_checkpointed(spark, df, out_dir, n_buckets=N_BUCKETS)
+    man = {
+        r["bucket"]: (r["rows_in"], r["rows_rejected"])
+        for r in ckpt.read_manifest(spark, out_dir).collect()
+    }
+    got = {
+        r["bucket"]: (r["n"], r["rej"])
+        for r in ckpt.read_output(spark, out_dir)
+        .groupBy("bucket")
+        .agg(F.count("*").alias("n"), F.count("reject_reason").alias("rej"))
+        .collect()
+    }
+    assert sum(rej for _, rej in got.values()) > 0
+    assert man == {b: got.get(b, (0, 0)) for b in range(N_BUCKETS)}
+
+
+def _record_staging_write(monkeypatch, spark):
+    """Wrap the parquet writer: remember the staged DataFrame, and run
+    everything after the staging write under job group "after-staging"."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real, staged = DataFrameWriter.parquet, []
+
+    def parquet(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if path.endswith(ckpt.STAGING_DIR):
+            staged.append(self._df)
+            spark.sparkContext.setJobGroup("after-staging", "checkpoint commit")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return staged
+
+
+def test_commit_launches_no_spark_job(spark, tmp_path, monkeypatch):
+    """A fresh run's commit (counts, renames, manifest) is metadata-only:
+    no Spark job starts after the staging write returns."""
+    df = spark.createDataFrame(
+        synth.synth_pandas(n_convs=10, seed=2), schema=TRANSCRIPTS_SCHEMA
+    )
+    sc = spark.sparkContext
+    staged = _record_staging_write(monkeypatch, spark)
+    try:
+        ckpt.run_extraction_checkpointed(
+            spark, df, str(tmp_path / "ck5"), n_buckets=N_BUCKETS
+        )
+        after = list(sc.statusTracker().getJobIdsForGroup("after-staging"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(staged) == 1
+    assert after == []
+
+
+def test_one_write_task_per_bucket(spark, tmp_path, monkeypatch):
+    """Write task b holds exactly bucket b: no task is empty while
+    another writes two buckets."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        synth.synth_pandas(n_convs=20, seed=4), schema=TRANSCRIPTS_SCHEMA
+    )
+    staged = _record_staging_write(monkeypatch, spark)
+    ckpt.run_extraction_checkpointed(
+        spark, df, str(tmp_path / "ck6"), n_buckets=N_BUCKETS
+    )
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    (frame,) = staged
+    pairs = {
+        (r["p"], r["_bucket"])
+        for r in frame.select(F.spark_partition_id().alias("p"), "_bucket")
+        .distinct()
+        .collect()
+    }
+    assert len(pairs) > 1
+    assert all(p == b for p, b in pairs)
+
+
+def test_footer_without_null_count_raises(spark, tmp_path):
+    """A staged file whose footer has no reject_reason null count makes
+    the count fail; it is never guessed or recounted by a scan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    bucket_dir = tmp_path / ckpt.STAGING_DIR / "_bucket=0"
+    bucket_dir.mkdir(parents=True)
+    table = pa.table({"conv_id": ["a", "b"], "reject_reason": [None, "empty"]})
+    pq.write_table(table, bucket_dir / "part-00000.parquet", write_statistics=False)
+    staging = str(tmp_path / ckpt.STAGING_DIR)
+    fs, HPath = ckpt._hadoop_fs(spark, staging)
+    with pytest.raises(ValueError, match="reject_reason null count"):
+        ckpt._staged_counts(fs, HPath, staging)
+
+    pq.write_table(table, bucket_dir / "part-00000.parquet")
+    assert ckpt._staged_counts(fs, HPath, staging) == {0: (2, 1)}
+
+
 def test_resume_refuses_bucket_count_change(spark, tmp_path):
     """Resuming a partial manifest with a different n_buckets would mix
     two incompatible partitionings — must be refused, not corrupted."""
@@ -124,11 +231,11 @@ def test_job_cli_day_range_over_iceberg(spark, tmp_path):
 
     out = str(tmp_path / "out")
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo"
+    env["PYTHONPATH"] = str(ROOT)
     env.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
     res = subprocess.run(
         [
-            sys.executable, "/root/repo/jobs/run_extraction.py",
+            sys.executable, str(ROOT / "jobs" / "run_extraction.py"),
             "--iceberg-table", loc,
             "--day-range", "2024-01-01:2024-01-02",
             "--output", out, "--buckets", "2",

@@ -6,12 +6,15 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from htrtf_spark.sources.avro_io import avro_read, avro_write
 from htrtf_spark.sources import iceberg as I
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def test_avro_roundtrip(tmp_path):
@@ -2404,7 +2407,7 @@ def test_wap_ingest_job(spark, tmp_path):
     with the branch kept for inspection (or dropped on request)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from jobs.run_wap_ingest import wap_ingest
 
     from pyspark.sql import functions as F

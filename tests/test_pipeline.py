@@ -4,6 +4,8 @@ distributed synthesis."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
 
 from htrtf_spark import oracle, synth
@@ -12,6 +14,7 @@ from htrtf_spark.plans.pipeline import extract_turns, extraction_metrics
 from htrtf_spark.schema import TRANSCRIPTS_SCHEMA
 
 N_CONVS = 60
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def _sorted_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -171,7 +174,7 @@ def test_build_training_set_job(spark, tmp_path):
     and a recomputable kept-set."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from jobs.build_training_set import build_training_set
 
     from htrtf_spark import synth
@@ -220,7 +223,7 @@ def test_build_training_set_with_sampling_and_packing(spark, tmp_path):
     kept, and pack_tokens adds a consistent sequence assignment."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from jobs.build_training_set import build_training_set
 
     from htrtf_spark import synth
@@ -484,7 +487,7 @@ def test_build_training_set_mixture_ticks(spark, tmp_path):
     summary."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from jobs.build_training_set import build_training_set
 
     from htrtf_spark import synth
@@ -541,7 +544,7 @@ def test_build_training_set_link_density_guard(spark, tmp_path):
     drop; prose with an occasional link survives; off by default."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from jobs.build_training_set import build_training_set
 
     from pyspark.sql import functions as F
@@ -586,7 +589,7 @@ def test_build_training_set_review_guards(spark, tmp_path):
 
     import pytest
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from jobs.build_training_set import build_training_set
 
     from pyspark.sql import functions as F

@@ -14,8 +14,8 @@ from htrtf_spark.queries.extraction_queries import _Q34_INPUT
 
 
 def _q34_sql_with_seeded_input(con, sql: str, tmp_path) -> str:
-    """The q34 oracle reads the parquet its Spark query materializes to
-    a fixed /tmp path (the SQL text is frozen). On a clean /tmp the
+    """The q34 and q35 oracles read the parquet that q34's Spark query
+    materializes to a fixed /tmp path (the SQL text is frozen). On a clean /tmp the
     artifact does not exist yet, so the parse-only test would fail on
     I/O, not SQL. Seed an EMPTY parquet with the input schema into a
     TEST-LOCAL temp dir and point this test's COPY of the SQL at it —
@@ -30,7 +30,6 @@ def _q34_sql_with_seeded_input(con, sql: str, tmp_path) -> str:
         "CAST(NULL AS VARCHAR) AS role, CAST(NULL AS VARCHAR) AS text "
         f"WHERE false) TO '{seed_dir}/seed.parquet' (FORMAT PARQUET)"
     )
-    assert _Q34_INPUT in sql
     return sql.replace(_Q34_INPUT, seed_dir)
 
 TABLES = {
@@ -74,6 +73,6 @@ def test_oracle_sql_parses_in_duckdb(name, tmp_path):
     for tbl, ddl in TABLES.items():
         con.execute(f"CREATE TABLE {tbl} ({ddl})")
     sql = oracle_sqls()[name]
-    if name == "q34_extract_synthetic":
+    if _Q34_INPUT in sql:  # q34 and q35 both read q34's artifact
         sql = _q34_sql_with_seeded_input(con, sql, tmp_path)
     con.execute(sql).fetchall()  # empty tables → just parse/run
