@@ -92,6 +92,7 @@ def extract_increment_once(
         ExpiredSnapshotError,
         _ancestors,
         _find_snapshot,
+        _retracts,
         append_iceberg_table,
         current_metadata,
         overwrite_iceberg_table,
@@ -156,19 +157,12 @@ def extract_increment_once(
             cur_seq = int(_find_snapshot(src_meta, cur)["sequence-number"])
             for sn in _ancestors(src_meta, cur):
                 s_seq = int(sn["sequence-number"])
-                if not (last_seq < s_seq <= cur_seq):
-                    continue
-                summ = sn.get("summary", {})
-                op = summ.get("operation")
-                if op in ("delete", "overwrite") or (
-                    op == "replace"
-                    and summ.get("replace-kind") == "overwrite"
-                ):
+                if last_seq < s_seq <= cur_seq and _retracts(sn):
                     return _rebaseline(
                         cur,
-                        f"retracting snapshot (operation={op}, "
-                        f"sequence {s_seq}) in window and "
-                        "rebaseline_on_delete is set",
+                        "retracting snapshot (operation="
+                        f"{sn['summary']['operation']}, sequence {s_seq}) "
+                        "in window and rebaseline_on_delete is set",
                     )
 
     # read the window pinned to `cur`: a source append racing this tick

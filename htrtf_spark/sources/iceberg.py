@@ -28,6 +28,21 @@ Data files are parquet written by Spark itself (one directory per
 commit), so the write path stays distributed; only the metadata commit
 is driver-side — which is true of Iceberg everywhere.
 
+Commit protocol (the spec's optimistic concurrency): a commit builds
+metadata version N+1 from version N and publishes it with a
+fail-if-exists link (``_publish_metadata``). A writer that loses the
+race gets ``CommitConflict`` and re-applies its change to the fresh
+metadata. Three loops do that, and no other code catches the conflict:
+``_retry_metadata_update`` re-runs a metadata-only change (properties,
+schema, refs, rollback, expiry, manifest rewrite) and its guards
+against the fresh metadata; ``_commit_retrying`` re-commits data or
+delete files that are already written (append, upsert, deletes);
+``_replace_retrying`` redoes the whole write of a replace commit
+(overwrite, compaction), whose rows depend on the state it replaces.
+
+Scans read the metadata once: ``_scan`` pins one snapshot and takes
+the schema, the data files and the delete files from that one read.
+
 Identity partitioning + partition evolution: ``partition_by`` columns
 write Hive-layout data files (Spark ``partitionBy`` — the write stays
 distributed), the per-file partition tuple is recorded in the manifest
@@ -263,9 +278,6 @@ def _bucket_value(value, n: int, ice_type: str) -> int | None:
     else:
         raise ValueError(f"bucket transform unsupported for {ice_type}")
     return (_murmur3_32(data) & 0x7FFFFFFF) % n
-
-
-_EPOCH_DATE = None  # lazy (datetime import kept local)
 
 
 def _day_value(value) -> int | None:
@@ -685,6 +697,25 @@ def _publish_metadata(location: str, meta: dict, version: int) -> None:
         os.unlink(tmp)
     with open(_version_hint(location), "w") as fh:
         fh.write(str(version))
+
+
+def _retry_metadata_update(location: str, mutate) -> object:
+    """Refresh → mutate → publish with retry-on-conflict: the one
+    commit loop for every metadata-only change. ``mutate(meta)`` returns
+    (new_meta, result) — new_meta None commits nothing — or raises to
+    abort; it is re-invoked against FRESH metadata after every lost
+    race, so its decisions and guards can never be stale."""
+    while True:
+        meta = current_metadata(location)
+        new_meta, result = mutate(meta)
+        if new_meta is None:
+            return result  # nothing to do — commit nothing
+        new_meta["last-updated-ms"] = int(time.time() * 1000)
+        try:
+            _publish_metadata(location, new_meta, meta["_version"] + 1)
+            return result
+        except CommitConflict:
+            continue
 
 
 # ----------------------------------------------------------------- write
@@ -1304,6 +1335,78 @@ def _commit_retrying(location, ice_schema, entries, meta, spec_fn, **kw) -> int:
             meta = current_metadata(location)
 
 
+def _replace_retrying(
+    location: str,
+    rows,
+    partition_by: list[str] | None,
+    kind: str,
+    properties: dict[str, str] | None = None,
+) -> int:
+    """Commit a replace snapshot (its manifest list carries only the new
+    files) of ``rows(meta, ice_schema)``, written under the current
+    schema. A racing commit restarts the WHOLE read→write→commit cycle
+    against refreshed metadata, never just the metadata: the rows were
+    computed from the state being replaced, so a blind retry would erase
+    the interleaved commit (the spec's replace-commit validation)."""
+    while True:
+        meta = current_metadata(location)
+        ice_schema = _schema_by_id(meta, meta["current-schema-id"])
+        df = rows(meta, ice_schema)
+        spec = _resolve_commit_spec(meta, ice_schema, partition_by)
+        files = _write_data_files(
+            df, location, seq=meta["last-sequence-number"] + 1,
+            spec_fields=spec["fields"], ice_schema=ice_schema,
+        )
+        try:
+            return _commit(
+                location, ice_schema, files, prev_meta=meta, spec=spec,
+                carry_prior_manifests=False, properties=properties,
+                operation="replace", summary_extra={"replace-kind": kind},
+            )
+        except CommitConflict:
+            continue
+
+
+def _check_schema(df: DataFrame, ice_schema: dict, op: str) -> None:
+    """``df`` must carry the table schema's names and types (nullability
+    aside) — the precondition of every write into an existing table."""
+
+    def nullable(fields):
+        return T.StructType(
+            [T.StructField(f.name, f.dataType, True) for f in fields]
+        )
+
+    want = nullable(_spark_schema(ice_schema).fields)
+    got = nullable(df.schema.fields)
+    if got != want:
+        raise ValueError(
+            f"{op} schema mismatch: table={want.simpleString()} "
+            f"df={got.simpleString()}"
+        )
+
+
+def _resolve_commit_spec(
+    meta: dict, ice_schema: dict, partition_by: list[str] | None
+) -> dict:
+    """The spec a commit writes under: the table default when
+    ``partition_by`` is None, else the existing spec with the same
+    (name, transform) list, else a freshly registered spec (evolution)."""
+    specs = {sp["spec-id"]: sp for sp in meta["partition-specs"]}
+    if partition_by is None:
+        return specs[meta["default-spec-id"]]
+    match = [
+        sp for sp in specs.values()
+        if [(f["name"], f["transform"]) for f in sp["fields"]]
+        == [
+            (_parse_partition_term(c)[3], _parse_partition_term(c)[1])
+            for c in partition_by
+        ]
+    ]
+    return match[0] if match else _make_spec(
+        ice_schema, list(partition_by), spec_id=max(specs) + 1
+    )
+
+
 def write_iceberg_table(
     df: DataFrame,
     location: str,
@@ -1333,16 +1436,13 @@ def set_table_properties(location: str, properties: dict[str, str]) -> None:
     """Metadata-only property merge, committed as a new metadata version
     (fail-if-exists commit point; refresh-and-retry on a racing
     writer)."""
-    while True:
-        meta = current_metadata(location)
+
+    def mutate(meta):
         new_meta = dict(meta)
         new_meta["properties"] = {**meta.get("properties", {}), **properties}
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        try:
-            _publish_metadata(location, new_meta, meta["_version"] + 1)
-            return
-        except CommitConflict:
-            continue
+        return new_meta, None
+
+    _retry_metadata_update(location, mutate)
 
 
 def append_iceberg_table(
@@ -1377,51 +1477,22 @@ def append_iceberg_table(
                 "the branch is published; set them at fast_forward time"
             )
     ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-    want = _spark_schema(ice_schema)
-    got = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in df.schema.fields]
-    )
-    want_n = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in want.fields]
-    )
-    if got != want_n:
-        raise ValueError(
-            f"append schema mismatch: table={want_n.simpleString()} "
-            f"df={got.simpleString()}"
-        )
-    def _resolve_spec(m: dict) -> dict:
-        specs = {s["spec-id"]: s for s in m["partition-specs"]}
-        if partition_by is None:
-            return specs[m["default-spec-id"]]
-        match = [
-            s for s in specs.values()
-            if [(f["name"], f["transform"]) for f in s["fields"]]
-            == [
-                (_parse_partition_term(c)[3], _parse_partition_term(c)[1])
-                for c in partition_by
-            ]
-        ]
-        return match[0] if match else _make_spec(
-            ice_schema, list(partition_by), spec_id=max(specs) + 1
-        )
+    _check_schema(df, ice_schema, "append")
 
-    spec = _resolve_spec(meta)
+    def spec_fn(m: dict) -> dict:
+        return _resolve_commit_spec(m, ice_schema, partition_by)
+
     files = _write_data_files(
         df, location, seq=meta["last-sequence-number"] + 1,
-        spec_fields=spec["fields"], ice_schema=ice_schema,
+        spec_fields=spec_fn(meta)["fields"], ice_schema=ice_schema,
     )
     # the distributed data write happens ONCE; only the driver-side
     # metadata commit retries on a racing writer (refresh + rebuild —
     # properties still ride the same atomic commit as the data)
-    while True:
-        try:
-            return _commit(
-                location, ice_schema, files, prev_meta=meta,
-                spec=_resolve_spec(meta), properties=properties,
-                branch=branch,
-            )
-        except CommitConflict:
-            meta = current_metadata(location)
+    return _commit_retrying(
+        location, ice_schema, files, meta, spec_fn,
+        properties=properties, branch=branch,
+    )
 
 
 def evolve_iceberg_schema(location: str, new_schema: T.StructType) -> int:
@@ -1432,62 +1503,67 @@ def evolve_iceberg_schema(location: str, new_schema: T.StructType) -> int:
     new columns get fresh field-ids and must be nullable (old data files
     have no values for them — reads surface NULL). Registers the schema
     under the next schema-id and makes it current; no data is touched.
-    Returns the new schema-id."""
-    meta = current_metadata(location)
-    cur = _schema_by_id(meta, meta["current-schema-id"])
-    by_name = {f["name"]: f for f in cur["fields"]}
-    new_names = [f.name for f in new_schema.fields]
-    missing = [n for n in by_name if n not in new_names]
-    if missing:
-        raise ValueError(
-            f"schema evolution is add-only: dropped columns {missing}"
-        )
-    next_id = meta["last-column-id"]
-    fields = []
-    for f in new_schema.fields:
-        ice_t = _SPARK_TO_ICE.get(f.dataType)
-        if ice_t is None:
-            raise ValueError(f"unsupported Iceberg column type: {f.dataType}")
-        if f.name in by_name:
-            if by_name[f.name]["type"] != ice_t:
-                raise ValueError(
-                    f"schema evolution is add-only: column {f.name!r} "
-                    f"changed type {by_name[f.name]['type']} → {ice_t}"
-                )
-            fields.append(dict(by_name[f.name]))
-        else:
-            if not f.nullable:
-                raise ValueError(
-                    f"new column {f.name!r} must be nullable (old data "
-                    "files have no values for it)"
-                )
-            next_id += 1
-            fields.append(
-                {"id": next_id, "name": f.name, "required": False, "type": ice_t}
+    The checks run against the metadata the commit builds on, so a
+    column a racing writer added first makes this call refuse rather
+    than drop it. Returns the new schema-id."""
+
+    def build(meta: dict, cur: dict) -> tuple[list[dict], int]:
+        by_name = {f["name"]: f for f in cur["fields"]}
+        new_names = [f.name for f in new_schema.fields]
+        missing = [n for n in by_name if n not in new_names]
+        if missing:
+            raise ValueError(
+                f"schema evolution is add-only: dropped columns {missing}"
             )
-    return _commit_schema(location, meta, fields, next_id)
+        next_id = meta["last-column-id"]
+        fields = []
+        for f in new_schema.fields:
+            ice_t = _SPARK_TO_ICE.get(f.dataType)
+            if ice_t is None:
+                raise ValueError(f"unsupported Iceberg column type: {f.dataType}")
+            if f.name in by_name:
+                if by_name[f.name]["type"] != ice_t:
+                    raise ValueError(
+                        f"schema evolution is add-only: column {f.name!r} "
+                        f"changed type {by_name[f.name]['type']} → {ice_t}"
+                    )
+                fields.append(dict(by_name[f.name]))
+            else:
+                if not f.nullable:
+                    raise ValueError(
+                        f"new column {f.name!r} must be nullable (old data "
+                        "files have no values for it)"
+                    )
+                next_id += 1
+                fields.append(
+                    {"id": next_id, "name": f.name, "required": False, "type": ice_t}
+                )
+        return fields, next_id
+
+    return _commit_schema(location, build)
 
 
-def _commit_schema(
-    location: str, meta: dict, fields: list[dict], last_column_id: int
-) -> int:
-    """Register ``fields`` as the next schema and make it current —
-    fail-if-exists commit point with refresh-and-retry."""
-    while True:
+def _commit_schema(location: str, build) -> int:
+    """Register the fields ``build(meta, current_schema)`` returns as
+    the next schema and make it current. ``build`` returns
+    (fields, last_column_id) and raises to refuse; it runs inside the
+    commit loop, so after a lost race the new fields and every guard are
+    recomputed from the fresh metadata (a racing writer's columns and
+    field ids are never overwritten)."""
+
+    def mutate(meta):
+        fields, last_column_id = build(
+            meta, _schema_by_id(meta, meta["current-schema-id"])
+        )
         schema_id = max(s["schema-id"] for s in meta["schemas"]) + 1
         new_ice = {"type": "struct", "schema-id": schema_id, "fields": fields}
         new_meta = dict(meta)
         new_meta["schemas"] = meta["schemas"] + [new_ice]
         new_meta["current-schema-id"] = schema_id
-        new_meta["last-column-id"] = max(
-            meta["last-column-id"], last_column_id
-        )
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        try:
-            _publish_metadata(location, new_meta, meta["_version"] + 1)
-            return schema_id
-        except CommitConflict:
-            meta = current_metadata(location)
+        new_meta["last-column-id"] = max(meta["last-column-id"], last_column_id)
+        return new_meta, schema_id
+
+    return _retry_metadata_update(location, mutate)
 
 
 def rename_iceberg_column(location: str, old: str, new: str) -> int:
@@ -1497,18 +1573,20 @@ def rename_iceberg_column(location: str, old: str, new: str) -> int:
     their data under the new name with no rewrite; time travel to an
     older snapshot surfaces the old name (snapshot schema-id). Returns
     the new schema-id."""
-    meta = current_metadata(location)
-    cur = _schema_by_id(meta, meta["current-schema-id"])
-    names = {f["name"] for f in cur["fields"]}
-    if old not in names:
-        raise ValueError(f"no such column: {old!r}")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
-    fields = [
-        dict(f, name=new) if f["name"] == old else dict(f)
-        for f in cur["fields"]
-    ]
-    return _commit_schema(location, meta, fields, meta["last-column-id"])
+
+    def build(meta: dict, cur: dict) -> tuple[list[dict], int]:
+        names = {f["name"] for f in cur["fields"]}
+        if old not in names:
+            raise ValueError(f"no such column: {old!r}")
+        if new in names:
+            raise ValueError(f"column {new!r} already exists")
+        fields = [
+            dict(f, name=new) if f["name"] == old else dict(f)
+            for f in cur["fields"]
+        ]
+        return fields, meta["last-column-id"]
+
+    return _commit_schema(location, build)
 
 
 def drop_iceberg_column(location: str, name: str) -> int:
@@ -1519,38 +1597,41 @@ def drop_iceberg_column(location: str, name: str) -> int:
     refused (the spec forbids dropping partition sources). Re-adding
     the same name later creates a FRESH field id, so old values are
     not resurrected (id-based resolution). Returns the new schema-id."""
-    meta = current_metadata(location)
-    cur = _schema_by_id(meta, meta["current-schema-id"])
-    by_name = {f["name"]: f for f in cur["fields"]}
-    if name not in by_name:
-        raise ValueError(f"no such column: {name!r}")
-    fid = by_name[name]["id"]
-    for spec in meta["partition-specs"]:
-        if any(pf["source-id"] == fid for pf in spec["fields"]):
-            raise ValueError(
-                f"column {name!r} is a partition source (spec-id "
-                f"{spec['spec-id']}) and cannot be dropped"
-            )
-    # mirror the partition-source guard for equality deletes: a live
-    # EQUALITY_DELETES file that keys on this field id must stay
-    # resolvable (read_iceberg_table applies deletes by field id on
-    # every read); dropping the column would make every read — current,
-    # time-travel, files_df — fail, and re-adding the name would mint a
-    # FRESH id, leaving the table unrecoverable. Refuse instead; the
-    # caller can compact (rewrites data, drops applied deletes) first.
-    if meta.get("current-snapshot-id") is not None:
-        for d in live_delete_files(location):
-            if d["content"] == 2 and fid in (d.get("equality_ids") or []):
+
+    def build(meta: dict, cur: dict) -> tuple[list[dict], int]:
+        by_name = {f["name"]: f for f in cur["fields"]}
+        if name not in by_name:
+            raise ValueError(f"no such column: {name!r}")
+        fid = by_name[name]["id"]
+        for spec in meta["partition-specs"]:
+            if any(pf["source-id"] == fid for pf in spec["fields"]):
                 raise ValueError(
-                    f"column {name!r} (field id {fid}) is referenced by a "
-                    f"live equality-delete file ({d['file_path']}) and "
-                    "cannot be dropped; compact the table first to apply "
-                    "and retire the deletes"
+                    f"column {name!r} is a partition source (spec-id "
+                    f"{spec['spec-id']}) and cannot be dropped"
                 )
-    fields = [dict(f) for f in cur["fields"] if f["name"] != name]
-    if not fields:
-        raise ValueError("cannot drop the last column")
-    return _commit_schema(location, meta, fields, meta["last-column-id"])
+        # mirror the partition-source guard for equality deletes: a live
+        # EQUALITY_DELETES file that keys on this field id must stay
+        # resolvable (read_iceberg_table applies deletes by field id on
+        # every read); dropping the column would make every read —
+        # current, time-travel, files_df — fail, and re-adding the name
+        # would mint a FRESH id, leaving the table unrecoverable. Refuse
+        # instead; the caller can compact (rewrites data, drops applied
+        # deletes) first.
+        if meta.get("current-snapshot-id") is not None:
+            for d in _manifest_files(_snapshot_or_current(meta), 1):
+                if d["content"] == 2 and fid in (d.get("equality_ids") or []):
+                    raise ValueError(
+                        f"column {name!r} (field id {fid}) is referenced by "
+                        f"a live equality-delete file ({d['file_path']}) "
+                        "and cannot be dropped; compact the table first to "
+                        "apply and retire the deletes"
+                    )
+        fields = [dict(f) for f in cur["fields"] if f["name"] != name]
+        if not fields:
+            raise ValueError("cannot drop the last column")
+        return fields, meta["last-column-id"]
+
+    return _commit_schema(location, build)
 
 
 def delete_iceberg_rows(
@@ -1588,28 +1669,38 @@ def _write_equality_delete_files(
     if missing:
         raise ValueError(f"equality columns not in table schema: {missing}")
     eq_ids = [by_name[c]["id"] for c in equality_cols]
+    return _write_delete_files(
+        keys_df.select(*equality_cols), location, meta, eq_ids
+    )
 
+
+def _write_delete_files(
+    rows: DataFrame, location: str, meta: dict, equality_ids: list[int] | None
+) -> list[dict]:
+    """Distributed write of the distinct ``rows`` as one commit's delete
+    files; returns their data_file records: EQUALITY_DELETES (content=2)
+    keyed on ``equality_ids``, or POSITION_DELETES (content=1) when
+    ``equality_ids`` is None."""
     import pyarrow.parquet as pq
 
+    prefix = "posdelete" if equality_ids is None else "delete"
     seq = meta["last-sequence-number"] + 1
     del_dir = os.path.join(
-        location, "data", f"delete-{seq:05d}-{uuid.uuid4().hex[:8]}"
+        location, "data", f"{prefix}-{seq:05d}-{uuid.uuid4().hex[:8]}"
     )
-    keys_df.select(*equality_cols).distinct().write.mode("error").parquet(del_dir)
-    entries = []
-    for p in sorted(glob.glob(os.path.join(del_dir, "*.parquet"))):
-        entries.append(
-            {
-                "content": 2,  # EQUALITY_DELETES
-                "file_path": os.path.abspath(p),
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": pq.ParquetFile(p).metadata.num_rows,
-                "file_size_in_bytes": os.path.getsize(p),
-                "equality_ids": eq_ids,
-            }
-        )
-    return entries
+    rows.distinct().write.mode("error").parquet(del_dir)
+    return [
+        {
+            "content": 1 if equality_ids is None else 2,
+            "file_path": os.path.abspath(p),
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": pq.ParquetFile(p).metadata.num_rows,
+            "file_size_in_bytes": os.path.getsize(p),
+            "equality_ids": equality_ids,
+        }
+        for p in sorted(glob.glob(os.path.join(del_dir, "*.parquet")))
+    ]
 
 
 def delete_iceberg_positions(pos_df: DataFrame, location: str) -> int:
@@ -1622,34 +1713,12 @@ def delete_iceberg_positions(pos_df: DataFrame, location: str) -> int:
     predicate."""
     meta = current_metadata(location)
     ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-
-    import pyarrow.parquet as pq
-
-    seq = meta["last-sequence-number"] + 1
-    del_dir = os.path.join(
-        location, "data", f"posdelete-{seq:05d}-{uuid.uuid4().hex[:8]}"
-    )
-    (
+    entries = _write_delete_files(
         pos_df.selectExpr(
             "CAST(file_path AS STRING) AS file_path", "CAST(pos AS LONG) AS pos"
-        )
-        .distinct()
-        .write.mode("error")
-        .parquet(del_dir)
+        ),
+        location, meta, None,
     )
-    entries = []
-    for p in sorted(glob.glob(os.path.join(del_dir, "*.parquet"))):
-        entries.append(
-            {
-                "content": 1,  # POSITION_DELETES
-                "file_path": os.path.abspath(p),
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": pq.ParquetFile(p).metadata.num_rows,
-                "file_size_in_bytes": os.path.getsize(p),
-                "equality_ids": None,
-            }
-        )
     return _commit_retrying(
         location, ice_schema, entries, meta, _empty_spec, manifest_content=1
     )
@@ -1668,58 +1737,11 @@ def find_positions(
     group (Hive-layout files don't store them), so predicates may
     reference partition columns. Feed the result to
     ``delete_iceberg_positions``."""
-    from pyspark.sql import functions as F
-
-    meta = current_metadata(location)
-    ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-    schema = _spark_schema(ice_schema)
-    by_name = {f.name: f for f in schema.fields}
-    ice_by_id = {f["id"]: f for f in ice_schema["fields"]}
-    target_ids = [f["id"] for f in ice_schema["fields"]]
-
-    groups: dict[tuple, list[str]] = {}
-    for rec in live_data_files(location):
-        vals = []
-        for pfield in rec["_spec_fields"]:
-            if pfield["transform"] != "identity":
-                continue
-            s = ice_by_id.get(pfield["source-id"])
-            if s is not None:
-                vals.append((s["name"], rec["partition"].get(pfield["name"])))
-        by_fid = {f["id"]: f["name"] for f in rec["_write_fields"]}
-        wkey = tuple((fid, by_fid.get(fid)) for fid in target_ids)
-        groups.setdefault((tuple(vals), wkey), []).append(rec["file_path"])
-    if not groups:
-        return spark.createDataFrame([], "file_path string, pos long")
-    parts = []
-    for (vals, wkey), paths in groups.items():
-        part_cols = [c for c, _v in vals]
-        wmap = dict(wkey)
-        # field-id column resolution, as in read_iceberg_table
-        read_fields, rename = [], []
-        for ice_f, sp_f in zip(ice_schema["fields"], schema.fields):
-            if sp_f.name in part_cols:
-                continue
-            wname = wmap.get(ice_f["id"])
-            if wname is None:
-                rename.append(F.lit(None).cast(sp_f.dataType).alias(sp_f.name))
-            else:
-                read_fields.append(T.StructField(wname, sp_f.dataType, True))
-                rename.append(F.col(wname).alias(sp_f.name))
-        df = spark.read.schema(T.StructType(read_fields)).parquet(*paths).select(
-            *rename,
-            F.regexp_replace(
-                F.col("_metadata.file_path"), _STRIP_SCHEME, ""
-            ).alias("file_path"),
-            F.col("_metadata.row_index").alias("pos"),
-        )
-        for c, v in vals:
-            df = df.withColumn(c, F.lit(v).cast(by_name[c].dataType))
-        parts.append(df)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.filter(predicate).select("file_path", "pos")
+    return (
+        _scan(spark, current_metadata(location), positions=True)
+        .filter(predicate)
+        .select("file_path", "pos")
+    )
 
 
 def upsert_iceberg_table(
@@ -1736,62 +1758,25 @@ def upsert_iceberg_table(
     Returns the snapshot id."""
     meta = current_metadata(location)
     ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-    want = _spark_schema(ice_schema)
-    got = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in df.schema.fields]
-    )
-    want_n = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in want.fields]
-    )
-    if got != want_n:
-        raise ValueError(
-            f"upsert schema mismatch: table={want_n.simpleString()} "
-            f"df={got.simpleString()}"
-        )
+    _check_schema(df, ice_schema, "upsert")
     del_entries = _write_equality_delete_files(
         df.select(*key_cols), location, meta, ice_schema, key_cols
     )
-    specs = {s["spec-id"]: s for s in meta["partition-specs"]}
-    data_spec = specs[meta["default-spec-id"]]
+    data_spec = _resolve_commit_spec(meta, ice_schema, None)
     files = _write_data_files(
         df, location, seq=meta["last-sequence-number"] + 1,
         spec_fields=data_spec["fields"], ice_schema=ice_schema,
     )
-    while True:
-        try:
-            return _commit(
-                location, ice_schema, files, prev_meta=meta,
-                spec=data_spec,
-                extra_manifests=[(del_entries, 1, _empty_spec(meta))],
-            )
-        except CommitConflict:
-            meta = current_metadata(location)
-
-
-# ----------------------------------------------------------- maintenance
-def _resolve_commit_spec(
-    meta: dict, ice_schema: dict, partition_by: list[str] | None
-) -> dict:
-    """The spec a replace-style commit writes under: the table default
-    when ``partition_by`` is None, else the existing spec with the same
-    (name, transform) list, else a freshly registered spec (evolution).
-    ONE implementation for compaction and overwrite."""
-    specs = {sp["spec-id"]: sp for sp in meta["partition-specs"]}
-    if partition_by is None:
-        return specs[meta["default-spec-id"]]
-    match = [
-        sp for sp in specs.values()
-        if [(f["name"], f["transform"]) for f in sp["fields"]]
-        == [
-            (_parse_partition_term(c)[3], _parse_partition_term(c)[1])
-            for c in partition_by
-        ]
-    ]
-    return match[0] if match else _make_spec(
-        ice_schema, list(partition_by), spec_id=max(specs) + 1
+    # the DELETES manifest leads: its (empty) spec is re-resolved from
+    # the refreshed metadata on every retry, while the data files keep
+    # the spec they were written under
+    return _commit_retrying(
+        location, ice_schema, del_entries, meta, _empty_spec,
+        manifest_content=1, extra_manifests=[(files, 0, data_spec)],
     )
 
 
+# ----------------------------------------------------------- maintenance
 def overwrite_iceberg_table(
     df: DataFrame,
     location: str,
@@ -1805,40 +1790,16 @@ def overwrite_iceberg_table(
     racing commit forces a redo of the data write against refreshed
     metadata, so nothing committed in between is silently erased —
     though its EFFECT is then overwritten, which is what OVERWRITE
-    means."""
-    meta = current_metadata(location)
-    while True:
-        # schema is re-resolved INSIDE the retry loop: a racing
-        # schema-evolution commit refreshes meta on CommitConflict, and
-        # the redo must validate + stamp against the NEW schema-id, not
-        # the one read before the conflict (compaction's rule)
-        ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-        want = _spark_schema(ice_schema)
-        got = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in df.schema.fields]
-        )
-        want_n = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in want.fields]
-        )
-        if got != want_n:
-            raise ValueError(
-                f"overwrite schema mismatch: table={want_n.simpleString()} "
-                f"df={got.simpleString()}"
-            )
-        spec = _resolve_commit_spec(meta, ice_schema, partition_by)
-        files = _write_data_files(
-            df, location, seq=meta["last-sequence-number"] + 1,
-            spec_fields=spec["fields"], ice_schema=ice_schema,
-        )
-        try:
-            return _commit(
-                location, ice_schema, files, prev_meta=meta, spec=spec,
-                carry_prior_manifests=False, properties=properties,
-                operation="replace",
-                summary_extra={"replace-kind": "overwrite"},
-            )
-        except CommitConflict:
-            meta = current_metadata(location)
+    means. The schema is validated on every attempt, against the
+    schema the attempt writes under."""
+
+    def rows(_meta: dict, ice_schema: dict) -> DataFrame:
+        _check_schema(df, ice_schema, "overwrite")
+        return df
+
+    return _replace_retrying(
+        location, rows, partition_by, "overwrite", properties=properties
+    )
 
 
 def compact_iceberg_table(
@@ -1863,24 +1824,10 @@ def compact_iceberg_table(
     restarts against refreshed metadata (equivalent to native Iceberg's
     RewriteDataFiles validate-or-abort plus the caller's retry); the
     interleaved commit's effect survives."""
-    while True:
-        meta = current_metadata(location)
-        ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-        current = read_iceberg_table(spark, location)
-
-        spec = _resolve_commit_spec(meta, ice_schema, partition_by)
-        files = _write_data_files(
-            current, location, seq=meta["last-sequence-number"] + 1,
-            spec_fields=spec["fields"], ice_schema=ice_schema,
-        )
-        try:
-            return _commit(
-                location, ice_schema, files, prev_meta=meta, spec=spec,
-                carry_prior_manifests=False, operation="replace",
-                summary_extra={"replace-kind": "compact"},
-            )
-        except CommitConflict:
-            continue  # racing commit landed: redo read + rewrite, not just metadata
+    return _replace_retrying(
+        location, lambda meta, _ice: _scan(spark, meta), partition_by,
+        "compact",
+    )
 
 
 def _merge_manifest_summaries(
@@ -1982,11 +1929,11 @@ def rewrite_manifests(
     (Modules/utils.py:309-350 batch bookkeeping); this is the same
     dont-let-bookkeeping-grow-linearly rule applied to table metadata.
     """
-    while True:
-        meta = current_metadata(location)
+
+    def mutate(meta):
         cur_id = meta.get("current-snapshot-id")
         if cur_id is None:
-            return None
+            return None, None
         snap = _find_snapshot(meta, cur_id)
         _, _, manifests = avro_read(snap["manifest-list"])
 
@@ -2017,7 +1964,7 @@ def rewrite_manifests(
             if g["entries"]
         )
         if len(manifests) <= n_merged:
-            return None  # already consolidated; a rewrite would only churn
+            return None, None  # already consolidated; a rewrite would only churn
 
         seq = meta["last-sequence-number"] + 1
         snapshot_id = seq
@@ -2102,7 +2049,6 @@ def rewrite_manifests(
         }
         new_meta = dict(meta)
         new_meta["last-sequence-number"] = seq
-        new_meta["last-updated-ms"] = now_ms
         new_meta["current-snapshot-id"] = snapshot_id
         new_meta["snapshots"] = meta["snapshots"] + [snapshot]
         new_meta["snapshot-log"] = meta["snapshot-log"] + [
@@ -2116,11 +2062,10 @@ def rewrite_manifests(
                 ),
             }
         ]
-        try:
-            _publish_metadata(location, new_meta, meta["_version"] + 1)
-            return snapshot_id
-        except CommitConflict:
-            continue  # racing commit: its manifest must be in the merge too
+        return new_meta, snapshot_id
+
+    # a racing commit re-runs mutate: its manifest must be in the merge too
+    return _retry_metadata_update(location, mutate)
 
 
 def maintain_iceberg_table(
@@ -2168,14 +2113,15 @@ def maintain_iceberg_table(
     if meta.get("current-snapshot-id") is None:
         return report
 
-    n_deletes = len(live_delete_files(location))
+    snap = _snapshot_or_current(meta)
+    n_deletes = len(_manifest_files(snap, 1))
     compact = bool(
         compact_min_delete_files is not None
         and n_deletes >= compact_min_delete_files
         and n_deletes > 0
     )
     if not compact and compact_max_avg_file_bytes is not None:
-        data = live_data_files(location)
+        data = _manifest_files(snap, 0)
         # >1 files: compaction can only help by REDUCING file count; a
         # single small file would trigger a full-table rewrite on every
         # pass forever (the trigger could never self-clear)
@@ -2188,7 +2134,6 @@ def maintain_iceberg_table(
         compact_iceberg_table(spark, location)
         report["compacted"] = True
     else:
-        snap = _find_snapshot(meta, meta["current-snapshot-id"])
         _, _, manifests = avro_read(snap["manifest-list"])
         if len(manifests) > rewrite_min_manifests:
             report["rewrote_manifests"] = rewrite_manifests(location)
@@ -2201,6 +2146,22 @@ def maintain_iceberg_table(
             remove_orphan_files(location, grace_seconds=orphan_grace_seconds)
         )
     return report
+
+
+def _referenced(snapshots: list[dict]) -> tuple[set[str], set[str]]:
+    """(manifest paths, data and delete file paths) referenced by the
+    snapshots' manifest lists. Manifests are immutable, so each is read
+    once however many snapshots carry it forward."""
+    manifests, files = set(), set()
+    for s in snapshots:
+        _, _, mans = avro_read(s["manifest-list"])
+        for m in mans:
+            if m["manifest_path"] in manifests:
+                continue
+            manifests.add(m["manifest_path"])
+            _, _, entries = avro_read(m["manifest_path"])
+            files.update(e["data_file"]["file_path"] for e in entries)
+    return manifests, files
 
 
 def expire_snapshots(location: str, keep_last: int = 1) -> list[int]:
@@ -2217,25 +2178,13 @@ def expire_snapshots(location: str, keep_last: int = 1) -> list[int]:
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
 
-    def _referenced(snapshots):
-        manifests, data = set(), set()
-        for s in snapshots:
-            _, _, mans = avro_read(s["manifest-list"])
-            for m in mans:
-                manifests.add(m["manifest_path"])
-                _, _, entries = avro_read(m["manifest_path"])
-                for e in entries:
-                    data.add(e["data_file"]["file_path"])
-        return manifests, data
-
     # publish-FIRST protocol (review r6): keep/drop is recomputed from
     # fresh metadata on EVERY attempt — a tag/branch created between
     # attempts re-protects its snapshots — and no file is deleted until
     # the metadata commit has WON. A crash after the commit leaves
     # orphan files (remove_orphan_files territory), never a published
     # ref pointing at deleted data.
-    while True:
-        meta = current_metadata(location)
+    def mutate(meta):
         chain = _ancestors(meta, meta.get("current-snapshot-id"))
         keep_ids = {s["snapshot-id"] for s in chain[:keep_last]} or {
             # no resolvable current snapshot: newest-by-sequence
@@ -2262,7 +2211,7 @@ def expire_snapshots(location: str, keep_last: int = 1) -> list[int]:
             s for s in meta["snapshots"] if s["snapshot-id"] not in keep_ids
         ]
         if not drop:
-            return []
+            return None, ([], [])
         dropped_ids = {s["snapshot-id"] for s in drop}
         new_meta = dict(meta)
         new_meta["snapshots"] = keep
@@ -2270,13 +2219,9 @@ def expire_snapshots(location: str, keep_last: int = 1) -> list[int]:
             e for e in meta["snapshot-log"]
             if e["snapshot-id"] not in dropped_ids
         ]
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        try:
-            _publish_metadata(location, new_meta, meta["_version"] + 1)
-            break
-        except CommitConflict:
-            continue
+        return new_meta, (keep, drop)
 
+    keep, drop = _retry_metadata_update(location, mutate)
     keep_man, keep_data = _referenced(keep)
     drop_man, drop_data = _referenced(drop)
     for path in sorted(drop_man - keep_man) + sorted(drop_data - keep_data):
@@ -2300,16 +2245,12 @@ def remove_orphan_files(
     default-3-day contract as the native procedure; tests pass 0).
     Metadata JSON/version files are never touched. Returns the removed
     paths."""
-    meta = current_metadata(location)
-    referenced: set[str] = set()
-    for s in meta["snapshots"]:
-        referenced.add(os.path.abspath(s["manifest-list"]))
-        _, _, mans = avro_read(s["manifest-list"])
-        for m in mans:
-            referenced.add(os.path.abspath(m["manifest_path"]))
-            _, _, entries = avro_read(m["manifest_path"])
-            for e in entries:
-                referenced.add(os.path.abspath(e["data_file"]["file_path"]))
+    snapshots = current_metadata(location)["snapshots"]
+    manifests, files = _referenced(snapshots)
+    referenced = {
+        os.path.abspath(p)
+        for p in manifests | files | {s["manifest-list"] for s in snapshots}
+    }
 
     cutoff = time.time() - grace_seconds
     removed: list[str] = []
@@ -2358,21 +2299,17 @@ def rollback_to_snapshot(location: str, snapshot_id: int) -> None:
     remain time-travelable until expire_snapshots. Appends after a
     rollback build on the rolled-back state (fresh, still-monotonic
     sequence numbers)."""
-    while True:
-        meta = current_metadata(location)
+
+    def mutate(meta):
         _find_snapshot(meta, snapshot_id)  # must exist
         new_meta = dict(meta)
         new_meta["current-snapshot-id"] = snapshot_id
-        now_ms = int(time.time() * 1000)
         new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"snapshot-id": snapshot_id, "timestamp-ms": now_ms}
+            {"snapshot-id": snapshot_id, "timestamp-ms": int(time.time() * 1000)}
         ]
-        new_meta["last-updated-ms"] = now_ms
-        try:
-            _publish_metadata(location, new_meta, meta["_version"] + 1)
-            return
-        except CommitConflict:
-            continue
+        return new_meta, None
+
+    _retry_metadata_update(location, mutate)
 
 
 # ------------------------------------------------------------------ read
@@ -2396,6 +2333,13 @@ def _find_snapshot(meta: dict, snapshot_id: int) -> dict:
     raise KeyError(f"snapshot {snapshot_id} not found")
 
 
+def _snapshot_or_current(meta: dict, snapshot_id: int | None = None) -> dict:
+    """Snapshot ``snapshot_id``, or the current one when it is None."""
+    if snapshot_id is None:
+        snapshot_id = meta["current-snapshot-id"]
+    return _find_snapshot(meta, snapshot_id)
+
+
 def _ancestors(meta: dict, snapshot_id: int | None) -> list[dict]:
     """The snapshot and its ancestor chain (parent-snapshot-id walk),
     newest first. This is the table's LIVE BRANCH when started from
@@ -2416,6 +2360,42 @@ def _ancestors(meta: dict, snapshot_id: int | None) -> list[dict]:
         out.append(s)
         sid = s.get("parent-snapshot-id")
     return out
+
+
+def _retracts(snapshot: dict) -> bool:
+    """True for a snapshot that removes rows a consumer may already hold:
+    a delete, an upsert (operation overwrite) or an INSERT OVERWRITE
+    (replace-kind overwrite). Compaction and manifest rewrites replace
+    files without changing rows."""
+    summ = snapshot.get("summary", {})
+    op = summ.get("operation")
+    return op in ("delete", "overwrite") or (
+        op == "replace" and summ.get("replace-kind") == "overwrite"
+    )
+
+
+def _appended_files(meta: dict, from_seq: int, upper: dict) -> list[dict]:
+    """The incremental-append window: the data files each snapshot on
+    ``upper``'s ANCESTOR chain with ``from_seq < sequence <= upper's``
+    itself added, oldest snapshot first, read from that snapshot's OWN
+    manifest list. Selecting by sequence number alone would, after
+    rollback_to_snapshot, surface abandoned-branch appends that are not
+    in the table's live state. REPLACE snapshots (compaction, INSERT
+    OVERWRITE, rewrite_manifests) are skipped: they rewrite rows already
+    surfaced, and reading each append from its own list keeps the
+    appends a later compaction rewrote away."""
+    to_seq = int(upper["sequence-number"])
+    window = sorted(
+        _ancestors(meta, upper["snapshot-id"]),
+        key=lambda x: x["sequence-number"],
+    )
+    return [
+        rec
+        for sn in window
+        if from_seq < int(sn["sequence-number"]) <= to_seq
+        and sn.get("summary", {}).get("operation") != "replace"
+        for rec in _manifest_files(sn, 0, added_only=True)
+    ]
 
 
 def read_iceberg_increment(
@@ -2442,7 +2422,9 @@ def read_iceberg_increment(
     snapshot's files come from that snapshot's OWN manifest list - so
     a compaction between ticks neither re-surfaces the whole rewritten
     table NOR hides appends it rewrote away (the Iceberg
-    incremental-append-scan rule). Retention must exceed consumer lag."""
+    incremental-append-scan rule). Retention must exceed consumer lag.
+    The window, the schema and the deletes come from one metadata
+    read."""
     meta = current_metadata(location)
     try:
         from_seq = _find_snapshot(meta, from_snapshot_id)["sequence-number"]
@@ -2457,16 +2439,7 @@ def read_iceberg_increment(
             "the incremental window cannot be reconstructed — "
             "re-baseline with a full read of the current snapshot"
         ) from None
-    to_snap = (
-        _find_snapshot(meta, to_snapshot_id)
-        if to_snapshot_id is not None
-        else _find_snapshot(meta, meta["current-snapshot-id"])
-    )
-    to_seq = int(to_snap["sequence-number"])
-    # the window is the upper snapshot's ANCESTOR chain intersected with
-    # the sequence range — selecting by sequence number alone would,
-    # after rollback_to_snapshot, surface abandoned-branch appends that
-    # are not in the table's live state
+    to_snap = _snapshot_or_current(meta, to_snapshot_id)
     ancestry = _ancestors(meta, to_snap["snapshot-id"])
     if from_snapshot_id not in {s["snapshot-id"] for s in ancestry}:
         raise ExpiredSnapshotError(
@@ -2476,20 +2449,12 @@ def read_iceberg_increment(
             "abandoned branch cannot be reconciled incrementally; "
             "re-baseline with a full read of the current snapshot"
         )
-    records: list[dict] = []
-    for sn in sorted(ancestry, key=lambda x: x["sequence-number"]):
-        seq = int(sn["sequence-number"])
-        if not (from_seq < seq <= to_seq):
-            continue
-        if sn.get("summary", {}).get("operation") == "replace":
-            continue  # rewritten old rows, not new data
-        records.extend(added_data_files(location, sn))
-    return read_iceberg_table(
-        spark, location, snapshot_id=to_snapshot_id,
+    return _scan(
+        spark, meta, to_snapshot_id,
         partition_filter=partition_filter,
         range_filter=range_filter,
         null_filter=null_filter,
-        _file_records=records,
+        records=_appended_files(meta, int(from_seq), to_snap),
     )
 
 
@@ -2529,13 +2494,10 @@ def files_df(
     the decoded column stats (lower/upper bounds and null counts by
     COLUMN NAME) as JSON strings. Reads manifests only."""
     meta = current_metadata(location)
-    sid = snapshot_id
-    if sid is None:
-        sid = meta["current-snapshot-id"]
-    schema_id = _find_snapshot(meta, sid).get(
-        "schema-id", meta["current-schema-id"]
+    snap = _snapshot_or_current(meta, snapshot_id)
+    ice_schema = _schema_by_id(
+        meta, snap.get("schema-id", meta["current-schema-id"])
     )
-    ice_schema = _schema_by_id(meta, schema_id)
     by_id = {f["id"]: f for f in ice_schema["fields"]}
 
     def _stats_json(rec: dict, key: str) -> str:
@@ -2553,9 +2515,7 @@ def files_df(
         return json.dumps(out, sort_keys=True)
 
     rows = []
-    for rec in live_data_files(location, snapshot_id) + live_delete_files(
-        location, snapshot_id
-    ):
+    for rec in _manifest_files(snap, 0) + _manifest_files(snap, 1):
         rows.append(
             (
                 int(rec["content"]),
@@ -2584,6 +2544,51 @@ def snapshot_ids(location: str) -> list[int]:
     return [s["snapshot-id"] for s in current_metadata(location)["snapshots"]]
 
 
+def _manifest_files(
+    snapshot: dict, content: int, skip_manifest=None, added_only: bool = False
+) -> list[dict]:
+    """File records of one manifest content kind (0 data, 1 deletes)
+    that are live in a snapshot's manifest list, each annotated from its
+    manifest: ``_spec_fields`` (its partition spec), ``_spec_cols`` (that
+    spec's identity columns), ``_write_fields`` (its write-time schema)
+    and ``_seq`` (the entry's sequence number). ``added_only`` keeps just
+    the entries the snapshot itself added. ``skip_manifest(row)`` skips a
+    manifest-list row before its manifest file is opened."""
+    snap_seq = int(snapshot["sequence-number"])
+    _, _, manifests = avro_read(snapshot["manifest-list"])
+    files: list[dict] = []
+    for m in manifests:
+        if m.get("content", 0) != content:
+            continue
+        if added_only and int(m.get("sequence_number", snap_seq)) != snap_seq:
+            continue  # carried-forward manifest from an older commit
+        if skip_manifest is not None and skip_manifest(m):
+            continue  # summary-proven: nothing in it can match
+        _, mmeta, entries = avro_read(m["manifest_path"])
+        spec_fields = json.loads(mmeta.get("partition-spec", "[]"))
+        write_fields = json.loads(mmeta.get("schema", "{}")).get("fields", [])
+        # identity partition columns are real table columns (dropped from
+        # the Hive-layout files, re-materialized on read); transform
+        # fields (day/bucket) are metadata-only — their SOURCE column
+        # stays in the data files
+        spec_cols = [
+            f["name"] for f in spec_fields if f["transform"] == "identity"
+        ]
+        for e in entries:
+            if e["status"] == _DELETED or (
+                added_only
+                and (e["status"] != _ADDED or e["sequence_number"] != snap_seq)
+            ):
+                continue
+            rec = dict(e["data_file"])
+            rec["_spec_cols"] = spec_cols
+            rec["_spec_fields"] = spec_fields
+            rec["_write_fields"] = write_fields
+            rec["_seq"] = e["sequence_number"]
+            files.append(rec)
+    return files
+
+
 def live_data_files(
     location: str,
     snapshot_id: int | None = None,
@@ -2599,34 +2604,9 @@ def live_data_files(
     between listing thousands of manifests and opening the 3 whose
     partition range can match."""
     meta = current_metadata(location)
-    sid = snapshot_id if snapshot_id is not None else meta["current-snapshot-id"]
-    snap = _find_snapshot(meta, sid)
-    _, _, manifests = avro_read(snap["manifest-list"])
-    files: list[dict] = []
-    for m in manifests:
-        if m.get("content", 0) != 0:
-            continue  # delete manifests are listed by live_delete_files
-        if skip_manifest is not None and skip_manifest(m):
-            continue  # summary-proven: nothing in it can match
-        _, mmeta, entries = avro_read(m["manifest_path"])
-        spec_fields = json.loads(mmeta.get("partition-spec", "[]"))
-        write_fields = json.loads(mmeta.get("schema", "{}")).get("fields", [])
-        # identity partition columns are real table columns (dropped from
-        # the Hive-layout files, re-materialized on read); transform
-        # fields (day/bucket) are metadata-only — their SOURCE column
-        # stays in the data files
-        spec_cols = [
-            f["name"] for f in spec_fields if f["transform"] == "identity"
-        ]
-        for e in entries:
-            if e["status"] != _DELETED:
-                rec = dict(e["data_file"])
-                rec["_spec_cols"] = spec_cols
-                rec["_spec_fields"] = spec_fields
-                rec["_write_fields"] = write_fields
-                rec["_seq"] = e["sequence_number"]
-                files.append(rec)
-    return files
+    return _manifest_files(
+        _snapshot_or_current(meta, snapshot_id), 0, skip_manifest
+    )
 
 
 def added_data_files(location: str, snapshot: dict) -> list[dict]:
@@ -2636,30 +2616,7 @@ def added_data_files(location: str, snapshot: dict) -> list[dict]:
     still sees files that a LATER replace (compaction) rewrote away,
     so an incremental window spanning a compaction surfaces every
     appended row exactly once."""
-    snap_seq = int(snapshot["sequence-number"])
-    _, _, manifests = avro_read(snapshot["manifest-list"])
-    files: list[dict] = []
-    for m in manifests:
-        if m.get("content", 0) != 0:
-            continue
-        if int(m.get("sequence_number", snap_seq)) != snap_seq:
-            continue  # carried-forward manifest from an older commit
-        _, mmeta, entries = avro_read(m["manifest_path"])
-        spec_fields = json.loads(mmeta.get("partition-spec", "[]"))
-        write_fields = json.loads(mmeta.get("schema", "{}")).get("fields", [])
-        spec_cols = [
-            f["name"] for f in spec_fields if f["transform"] == "identity"
-        ]
-        for e in entries:
-            if e["status"] != _ADDED or e["sequence_number"] != snap_seq:
-                continue
-            rec = dict(e["data_file"])
-            rec["_spec_cols"] = spec_cols
-            rec["_spec_fields"] = spec_fields
-            rec["_write_fields"] = write_fields
-            rec["_seq"] = e["sequence_number"]
-            files.append(rec)
-    return files
+    return _manifest_files(snapshot, 0, added_only=True)
 
 
 def live_delete_files(location: str, snapshot_id: int | None = None) -> list[dict]:
@@ -2668,35 +2625,50 @@ def live_delete_files(location: str, snapshot_id: int | None = None) -> list[dic
     field-ids) and POSITION_DELETES (content=1) — each with its
     sequence number."""
     meta = current_metadata(location)
-    sid = snapshot_id if snapshot_id is not None else meta["current-snapshot-id"]
-    snap = _find_snapshot(meta, sid)
     ice_schema = _schema_by_id(meta, meta["current-schema-id"])
     by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
-    _, _, manifests = avro_read(snap["manifest-list"])
-    out: list[dict] = []
-    for m in manifests:
-        if m.get("content", 0) != 1:
-            continue
-        _, mmeta, entries = avro_read(m["manifest_path"])
-        write_fields = json.loads(mmeta.get("schema", "{}")).get("fields", [])
-        for e in entries:
-            if e["status"] == _DELETED:
-                continue
-            rec = dict(e["data_file"])
-            rec["_seq"] = e["sequence_number"]
-            rec["_write_fields"] = write_fields
-            if rec["content"] == 2:
-                # resolve names from the delete file's own WRITE-time
-                # schema first (always has its key fields), current
-                # schema second — never KeyError on a since-renamed or
-                # (historically) dropped field
-                wmap = {f["id"]: f["name"] for f in write_fields}
-                rec["_eq_cols"] = [
-                    by_id.get(i, wmap.get(i, f"_fid_{i}"))
-                    for i in rec["equality_ids"] or []
-                ]
-            out.append(rec)
+    out = _manifest_files(_snapshot_or_current(meta, snapshot_id), 1)
+    for rec in out:
+        if rec["content"] == 2:
+            # resolve names from the delete file's own WRITE-time
+            # schema first (always has its key fields), current
+            # schema second — never KeyError on a since-renamed or
+            # (historically) dropped field
+            wmap = {f["id"]: f["name"] for f in rec["_write_fields"]}
+            rec["_eq_cols"] = [
+                by_id.get(i, wmap.get(i, f"_fid_{i}"))
+                for i in rec["equality_ids"] or []
+            ]
     return out
+
+
+def _identity_values(rec: dict, ice_by_id: dict) -> list[tuple[str, object]]:
+    """(column, value) of each identity partition field of a file
+    record — materialized from the manifest, since Hive-layout files do
+    not store them — under the read schema's name of the field's source
+    (rename-proof); a dropped source is not materialized."""
+    return [
+        (ice_by_id[pf["source-id"]]["name"], rec["partition"].get(pf["name"]))
+        for pf in rec["_spec_fields"]
+        if pf["transform"] == "identity" and pf["source-id"] in ice_by_id
+    ]
+
+
+def _wanted(flt: dict, pfield: dict, source: dict | None) -> set | None:
+    """The values of partition field ``pfield`` that filter ``flt``
+    admits, or None when the filter cannot prune on that field (another
+    source column, a dropped source, or another transform granularity).
+    A value filter is mapped through the field's transform."""
+    if source is None or flt["source"] != source["name"]:
+        return None
+    if flt["kind"] == "value":
+        return {
+            _transform_py(pfield["transform"], x, source["type"])
+            for x in flt["values"]
+        }
+    if flt["transform"] == pfield["transform"]:
+        return flt["values"]
+    return None
 
 
 def read_iceberg_table(
@@ -2705,14 +2677,16 @@ def read_iceberg_table(
     snapshot_id: int | None = None,
     ref: str | None = None,
     partition_filter: dict[str, object] | None = None,
-    min_sequence_exclusive: int = 0,
     range_filter: dict[str, tuple] | None = None,
     null_filter: dict[str, str] | None = None,
-    _file_records: list[dict] | None = None,
 ) -> DataFrame:
     """Snapshot-isolated read: exactly the manifest-listed live files, with
     the table schema pinned from metadata (no parquet inference drift).
-    ``snapshot_id`` time-travels to any committed snapshot.
+    ``snapshot_id`` time-travels to any committed snapshot. The table
+    metadata is read ONCE, and one snapshot is pinned from it (the
+    current one by default): the schema, the data files and the delete
+    files all come from that read, so a commit racing the scan cannot
+    mix two snapshots.
 
     ``partition_filter`` keys are either a COLUMN NAME (value
     semantics: keep rows whose column equals one of the given values —
@@ -2743,8 +2717,6 @@ def read_iceberg_table(
     fields 110/109) — ``is_null`` skips files with zero nulls in the
     column, ``not_null`` skips files that are all-null. Same
     exactness-by-residual contract."""
-    from pyspark.sql import functions as F
-
     meta = current_metadata(location)
     if ref is not None:
         # named-ref read ("give me the tagged training corpus" / "read
@@ -2757,17 +2729,44 @@ def read_iceberg_table(
             if ref not in refs:
                 raise KeyError(f"no such ref {ref!r}")
             snapshot_id = refs[ref]["snapshot-id"]
-    if snapshot_id is not None:
-        # time travel reads the SNAPSHOT's schema (spec: each snapshot
-        # records its schema-id) — after add/rename/drop evolution, an
-        # old snapshot surfaces exactly the columns it was written
-        # under, not the current ones
-        snap = _find_snapshot(meta, snapshot_id)
-        ice_schema = _schema_by_id(
-            meta, snap.get("schema-id", meta["current-schema-id"])
-        )
-    else:
-        ice_schema = _schema_by_id(meta, meta["current-schema-id"])
+    return _scan(
+        spark, meta, snapshot_id,
+        partition_filter=partition_filter,
+        range_filter=range_filter,
+        null_filter=null_filter,
+    )
+
+
+def _scan(
+    spark: SparkSession,
+    meta: dict,
+    snapshot_id: int | None = None,
+    partition_filter: dict[str, object] | None = None,
+    range_filter: dict[str, tuple] | None = None,
+    null_filter: dict[str, str] | None = None,
+    records: list[dict] | None = None,
+    positions: bool = False,
+) -> DataFrame:
+    """The one scan builder (``read_iceberg_table`` documents the
+    filters). Everything comes from ``meta``: the snapshot
+    (``snapshot_id``, default current), the schema (the snapshot's when
+    time-travelling, else the current one), its live data files — or
+    ``records``, an incremental window — and its delete files.
+    ``positions=True`` adds each row's (file_path, pos) and applies no
+    delete: the rows a position delete can address."""
+    from pyspark.sql import functions as F
+
+    snap = _snapshot_or_current(meta, snapshot_id)
+    # time travel reads the SNAPSHOT's schema (spec: each snapshot
+    # records its schema-id) — after add/rename/drop evolution, an old
+    # snapshot surfaces exactly the columns it was written under, not
+    # the current ones
+    ice_schema = _schema_by_id(
+        meta,
+        snap.get("schema-id", meta["current-schema-id"])
+        if snapshot_id is not None
+        else meta["current-schema-id"],
+    )
     schema = _spark_schema(ice_schema)
     ice_by_name = {f["name"]: f for f in ice_schema["fields"]}
     ice_by_id = {f["id"]: f for f in ice_schema["fields"]}
@@ -2851,22 +2850,10 @@ def read_iceberg_table(
             return True
         for pfield in rec["_spec_fields"]:
             s = ice_by_id.get(pfield["source-id"])
-            if s is None:
-                continue
             pval = rec["partition"].get(pfield["name"])
             for flt in filters:
-                if flt["source"] != s["name"]:
-                    continue
-                if flt["kind"] == "value":
-                    want = {
-                        _transform_py(pfield["transform"], x, s["type"])
-                        for x in flt["values"]
-                    }
-                elif flt["transform"] == pfield["transform"]:
-                    want = flt["values"]
-                else:
-                    continue  # different transform granularity — no prune
-                if pval not in want:
+                want = _wanted(flt, pfield, s)
+                if want is not None and pval not in want:
                     return True
         return False
 
@@ -2903,16 +2890,8 @@ def read_iceberg_table(
             lo = _decode_bound(summ.get("lower_bound"), ptype)
             hi = _decode_bound(summ.get("upper_bound"), ptype)
             for flt in filters:
-                if flt["source"] != s["name"]:
-                    continue
-                if flt["kind"] == "value":
-                    want = {
-                        _transform_py(pfield["transform"], x, s["type"])
-                        for x in flt["values"]
-                    }
-                elif flt["transform"] == pfield["transform"]:
-                    want = flt["values"]
-                else:
+                want = _wanted(flt, pfield, s)
+                if want is None:
                     continue
                 possible = summ.get("contains_null", True) and None in want
                 non_null = [w for w in want if w is not None]
@@ -2924,52 +2903,33 @@ def read_iceberg_table(
                     return True
         return False
 
-    # incremental mode skips REPLACE snapshots' files entirely: a
-    # compaction inside the window rewrites ALREADY-SURFACED rows into
-    # files with fresh sequence numbers — surfacing them would re-emit
-    # the whole table as "new" (Iceberg's incremental append scan
-    # skips replace snapshots for exactly this reason; genuinely new
-    # rows always arrive via append/overwrite snapshots)
-    replace_seqs = (
-        {
-            int(sn["sequence-number"])
-            for sn in meta["snapshots"]
-            if sn.get("summary", {}).get("operation") == "replace"
-        }
-        if min_sequence_exclusive > 0
-        else set()
-    )
-
     groups: dict[tuple, list[str]] = {}
-    file_records = (
-        _file_records
-        if _file_records is not None
-        else live_data_files(location, snapshot_id, _skip_manifest)
-    )
-    for rec in file_records:
-        if rec["_seq"] <= min_sequence_exclusive:
-            continue  # incremental read: only files appended after
-        if rec["_seq"] in replace_seqs:
-            continue  # rewritten old rows, not new data
-        # identity partition values materialize under the TARGET name of
-        # their source field (rename-proof); a dropped source is simply
-        # not materialized
-        vals = []
-        for pfield in rec["_spec_fields"]:
-            if pfield["transform"] != "identity":
-                continue
-            s = ice_by_id.get(pfield["source-id"])
-            if s is not None:
-                vals.append((s["name"], rec["partition"].get(pfield["name"])))
+    if records is None:
+        records = _manifest_files(snap, 0, _skip_manifest)
+    for rec in records:
         if _pruned(rec):
             continue  # manifest-level prune
-        key = (tuple(vals), rec["_seq"], _write_map(rec))
+        key = (tuple(_identity_values(rec, ice_by_id)), rec["_seq"], _write_map(rec))
         groups.setdefault(key, []).append(rec["file_path"])
 
+    # positions mode: the columns of a position delete file
+    address = (
+        [T.StructField("file_path", T.StringType()), T.StructField("pos", T.LongType())]
+        if positions
+        else []
+    )
     if not groups:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], T.StructType(schema.fields + address))
 
-    deletes = live_delete_files(location, snapshot_id)
+    def _row_address(path_col: str, pos_col: str) -> list:
+        return [
+            F.regexp_replace(
+                F.col("_metadata.file_path"), _STRIP_SCHEME, ""
+            ).alias(path_col),
+            F.col("_metadata.row_index").alias(pos_col),
+        ]
+
+    deletes = [] if positions else _manifest_files(snap, 1)
     del_dfs = []
     for d in deletes:
         if d["content"] != 2:
@@ -3047,13 +3007,7 @@ def read_iceberg_table(
             # attach the scan's (file path, row index) and anti-join
             # each applicable position-delete set (path ≤-seq rule:
             # position deletes may target same-commit rows)
-            df = reader.select(
-                "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), _STRIP_SCHEME, ""
-                ).alias("_fp"),
-                F.col("_metadata.row_index").alias("_pos"),
-            )
+            df = reader.select("*", *_row_address("_fp", "_pos"))
             for pdf_del in pos_applicable:
                 df = df.join(
                     F.broadcast(
@@ -3068,7 +3022,9 @@ def read_iceberg_table(
             df = df.drop("_fp", "_pos")
         else:
             df = reader
-        df = df.select(*rename)
+        df = df.select(
+            *rename, *(_row_address("file_path", "pos") if positions else [])
+        )
         for c, v in vals:
             df = df.withColumn(c, F.lit(v).cast(by_name[c].dataType))
         for dseq, eq_cols, ddf in del_dfs:
@@ -3084,7 +3040,7 @@ def read_iceberg_table(
                     cond = term if cond is None else cond & term
                 df = df.join(F.broadcast(right), on=cond, how="left_anti")
         # select LAST: the anti joins move their key columns to the front
-        parts.append(df.select(*[f.name for f in schema.fields]))
+        parts.append(df.select(*[f.name for f in schema.fields + address]))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -3135,26 +3091,6 @@ def read_iceberg_table(
 def list_refs(location: str) -> dict:
     """{name: {"snapshot-id", "type"}} for every stored ref."""
     return dict(current_metadata(location).get("refs", {}))
-
-
-def _retry_metadata_update(location: str, mutate) -> object:
-    """Refresh → mutate → publish with retry-on-conflict: the ONE
-    implementation of the metadata-only commit loop (review r6 — four
-    hand-rolled copies had already drifted). ``mutate(meta)`` returns
-    (new_meta, result) — or raises to abort; it is re-invoked against
-    FRESH metadata after every lost race, so its decisions can never
-    be stale."""
-    while True:
-        meta = current_metadata(location)
-        new_meta, result = mutate(meta)
-        if new_meta is None:
-            return result  # nothing to do — commit nothing
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        try:
-            _publish_metadata(location, new_meta, meta["_version"] + 1)
-            return result
-        except CommitConflict:
-            continue
 
 
 def _set_ref(

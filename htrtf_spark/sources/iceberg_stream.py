@@ -174,8 +174,8 @@ class IcebergStreamReader(DataSourceStreamReader):
 
         from htrtf_spark.sources.iceberg import (
             _ancestors,
+            _manifest_files,
             current_metadata,
-            live_data_files,
         )
 
         meta = current_metadata(self.location)
@@ -210,9 +210,7 @@ class IcebergStreamReader(DataSourceStreamReader):
         if cur_seq == 0:
             # bootstrap: pin the current snapshot; split its live files
             boot = chain[0]
-            files = live_data_files(
-                self.location, snapshot_id=boot["snapshot-id"]
-            )
+            files = _manifest_files(boot, 0)
             n_files = len(files)
             ngrp = 1
             if self.max_files:
@@ -307,12 +305,11 @@ class IcebergStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         from htrtf_spark.sources.iceberg import (
-            _ancestors,
+            _appended_files,
+            _identity_values,
+            _manifest_files,
             _schema_by_id,
-            added_data_files,
             current_metadata,
-            live_data_files,
-            live_delete_files,
         )
 
         meta = current_metadata(self.location)
@@ -322,45 +319,28 @@ class IcebergStreamReader(DataSourceStreamReader):
         # before requesting a new offset) — track BOTH ends
         self._track(start)
         # PIN the window to table METADATA snapshots: each batch
-        # surfaces the files each APPEND snapshot in (lo, hi] itself
-        # added, read from that snapshot's OWN manifest list. Planning
-        # from the CURRENT live file set would let a compaction
+        # surfaces what each APPEND snapshot in (lo, hi] itself added
+        # (``_appended_files``, shared with read_iceberg_increment).
+        # Planning from the CURRENT live file set would let a compaction
         # committed between offset capture and planning (or before a
         # checkpoint replay) swap the file set: rewritten files carry a
         # NEW sequence (whole-table duplication) while the window's
         # original appends disappear from the live view (loss).
-        # REPLACE snapshots are skipped outright - rewritten old rows,
-        # not new data - and the window walks the upper snapshot's
-        # ANCESTOR chain, so appends rolled back between batches
-        # (abandoned branch, still in metadata with in-range sequence
-        # numbers) never surface (the Iceberg incremental-append rule).
 
-        def _snap_by_id(sid: int):
+        def _offset_snap(key: str, value: int):
             for sn in meta["snapshots"]:
-                if int(sn["snapshot-id"]) == sid:
+                if int(sn[key]) == value:
                     return sn
             raise RuntimeError(
-                f"offset snapshot id {sid} is no longer in "
-                f"{self.location!r} metadata (expired between offset "
-                "capture and planning?) - restart from a fresh "
-                "checkpoint to re-baseline"
-            )
-
-        def _snap_by_seq(seq: int):
-            for sn in meta["snapshots"]:
-                if int(sn["sequence-number"]) == seq:
-                    return sn
-            raise RuntimeError(
-                f"offset snapshot (sequence {seq}) is no longer in "
+                f"offset snapshot ({key} {value}) is no longer in "
                 f"{self.location!r} metadata (expired between offset "
                 "capture and planning?) - restart from a fresh "
                 "checkpoint to re-baseline"
             )
 
         def _boot_slice(boff: dict, g_lo: int, g_hi: int) -> list:
-            files = live_data_files(
-                self.location, snapshot_id=int(boff["boot_sid"])
-            )
+            boot = _offset_snap("snapshot-id", int(boff["boot_sid"]))
+            files = _manifest_files(boot, 0)
             bounds = _chunk_bounds(len(files), int(boff["ngrp"]))
             lo_i = bounds[g_lo][0] if g_lo < len(bounds) else len(files)
             hi_i = bounds[g_hi - 1][1] if g_hi >= 1 else 0
@@ -386,13 +366,13 @@ class IcebergStreamReader(DataSourceStreamReader):
             # this is a full-state load, same as the legacy lo=0 batch)
             g_lo = int(start["grp"]) if "boot_seq" in start else 0
             records = _boot_slice(end, g_lo, int(end["grp"]))
-            end_snap = _snap_by_id(int(end["boot_sid"]))
+            end_snap = _offset_snap("snapshot-id", int(end["boot_sid"]))
         else:
             hi = int(end.get("boot_seq", end["seq"]))
             if hi == 0:
                 end_snap, records = None, []
             else:
-                end_snap = _snap_by_seq(hi)
+                end_snap = _offset_snap("sequence-number", hi)
                 if "boot_seq" in start and int(start["grp"]) < int(
                     start["ngrp"]
                 ):
@@ -412,25 +392,9 @@ class IcebergStreamReader(DataSourceStreamReader):
                     # otherwise skip the replace snapshot and surface
                     # NOTHING. Exactly extract_increment_once's
                     # bootstrap semantics.
-                    records = live_data_files(
-                        self.location, snapshot_id=end_snap["snapshot-id"]
-                    )
+                    records = _manifest_files(end_snap, 0)
                 else:
-                    window = [
-                        sn
-                        for sn in sorted(
-                            _ancestors(meta, end_snap["snapshot-id"]),
-                            key=lambda x: x["sequence-number"],
-                        )
-                        if lo < int(sn["sequence-number"]) <= hi
-                        and sn.get("summary", {}).get("operation")
-                        != "replace"
-                    ]
-                    records = records + [
-                        r
-                        for sn in window
-                        for r in added_data_files(self.location, sn)
-                    ]
+                    records = records + _appended_files(meta, lo, end_snap)
         if end_snap is None:
             self._write_lag_metrics(start, end, [], meta)
             self._track(end)
@@ -442,21 +406,11 @@ class IcebergStreamReader(DataSourceStreamReader):
         ice_by_id = {f["id"]: f for f in ice_schema["fields"]}
 
         # deletes visible at the batch's upper snapshot
-        deletes = live_delete_files(
-            self.location, snapshot_id=end_snap["snapshot-id"]
-        )
+        deletes = _manifest_files(end_snap, 1)
         parts = []
         for rec in records:
             wmap = {f["id"]: f["name"] for f in rec["_write_fields"]}
-            part_vals = {}
-            for pfield in rec["_spec_fields"]:
-                if pfield["transform"] != "identity":
-                    continue
-                src = ice_by_id.get(pfield["source-id"])
-                if src is not None:
-                    part_vals[src["name"]] = rec["partition"].get(
-                        pfield["name"]
-                    )
+            part_vals = dict(_identity_values(rec, ice_by_id))
             # one entry per schema field IN SCHEMA ORDER — arrow batch
             # columns map to the declared schema BY POSITION, so
             # identity-partition columns must sit at their real slot,
@@ -508,7 +462,9 @@ class IcebergStreamReader(DataSourceStreamReader):
 
     # --------------------------------------------- executor-side read
     def read(self, partition):
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         if partition.file_path is None:
@@ -517,18 +473,13 @@ class IcebergStreamReader(DataSourceStreamReader):
 
         # position deletes first (row index is this file's read order)
         if partition.pos_deletes:
-            dead = set()
+            keep = np.ones(tbl.num_rows, dtype=bool)
             for _dseq, dpath in partition.pos_deletes:
                 dt = pq.read_table(dpath)
-                for fp, p in zip(
-                    dt.column("file_path").to_pylist(),
-                    dt.column("pos").to_pylist(),
-                ):
-                    if fp == partition.file_path:
-                        dead.add(p)
-            if dead:
-                keep = [i for i in range(tbl.num_rows) if i not in dead]
-                tbl = tbl.take(keep)
+                hit = dt.filter(pc.equal(dt["file_path"], partition.file_path))
+                pos = pc.drop_null(hit["pos"]).to_numpy()
+                keep[pos[(pos >= 0) & (pos < tbl.num_rows)]] = False
+            tbl = tbl.filter(pa.array(keep))
 
         # equality deletes: drop rows whose key tuple appears in a
         # strictly-newer delete file (NULL-safe: None tuples compare

@@ -45,9 +45,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: snapshot summary operations that retract already-emitted rows
-_RETRACTING_OPS = ("delete", "overwrite")
-
 
 def _latest_stream_offset(checkpoint_dir: str) -> dict | None:
     """The newest planned source offset in a Structured Streaming
@@ -99,7 +96,7 @@ def stream_needs_rebaseline(
     bound still defines the window, and the ancestry walk from the
     current head covers the rest.
     """
-    from htrtf_spark.sources.iceberg import _ancestors, current_metadata
+    from htrtf_spark.sources.iceberg import _ancestors, _retracts, current_metadata
 
     off = _latest_stream_offset(checkpoint_dir)
     if off is None:
@@ -133,19 +130,13 @@ def stream_needs_rebaseline(
     if on_upstream_delete:
         for s in chain:
             s_seq = int(s["sequence-number"])
-            if not (seq < s_seq <= head_seq):
-                continue
-            summ = s.get("summary", {})
-            op = summ.get("operation")
-            retracting = op in _RETRACTING_OPS or (
-                op == "replace" and summ.get("replace-kind") == "overwrite"
-            )
-            if retracting:
+            if seq < s_seq <= head_seq and _retracts(s):
                 return (
-                    f"retracting snapshot (operation={op}, sequence "
-                    f"{s_seq}) in the unconsumed window and "
-                    "on_upstream_delete is set — appended-only propagation "
-                    "would retain rows upstream deleted"
+                    "retracting snapshot (operation="
+                    f"{s['summary']['operation']}, sequence {s_seq}) in the "
+                    "unconsumed window and on_upstream_delete is set — "
+                    "appended-only propagation would retain rows upstream "
+                    "deleted"
                 )
     return None
 

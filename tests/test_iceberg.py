@@ -783,6 +783,144 @@ def test_create_properties_single_commit(spark, transcripts_df, tmp_path):
     assert meta["properties"]["stream.batch-id"] == "0"
 
 
+def _lose_race(monkeypatch, loc, racing_commit):
+    """Stage a lost race: capture the table metadata, let
+    ``racing_commit()`` land on top of it, then serve the captured
+    (stale) metadata from ``current_metadata`` until the first publish
+    attempt. That attempt conflicts; every later read is fresh."""
+    import copy
+
+    stale = I.current_metadata(loc)
+    racing_commit()
+    real_read, real_publish = I.current_metadata, I._publish_metadata
+    published = []
+
+    def read(location):
+        return copy.deepcopy(stale) if not published else real_read(location)
+
+    def publish(*args, **kwargs):
+        published.append(True)
+        return real_publish(*args, **kwargs)
+
+    monkeypatch.setattr(I, "current_metadata", read)
+    monkeypatch.setattr(I, "_publish_metadata", publish)
+
+
+def _current_fields(loc):
+    meta = I.current_metadata(loc)
+    return [
+        (f["id"], f["name"])
+        for f in I._schema_by_id(meta, meta["current-schema-id"])["fields"]
+    ]
+
+
+def test_racing_evolve_keeps_other_writers_column(
+    spark, transcripts_df, tmp_path, monkeypatch
+):
+    """A schema evolution that loses the race re-runs its checks on the
+    fresh schema: the winner's column is not dropped and its field id is
+    never handed to another column."""
+    import pyspark.sql.types as T
+
+    loc = str(tmp_path / "evrace")
+    I.write_iceberg_table(transcripts_df, loc)
+    base = list(transcripts_df.schema.fields)
+    col_c = T.StructField("c", T.StringType(), True)
+    col_d = T.StructField("d", T.LongType(), True)
+    _lose_race(
+        monkeypatch, loc,
+        lambda: I.evolve_iceberg_schema(loc, T.StructType(base + [col_c])),
+    )
+    with pytest.raises(ValueError, match=r"dropped columns \['c'\]"):
+        I.evolve_iceberg_schema(loc, T.StructType(base + [col_d]))
+    monkeypatch.undo()
+
+    assert _current_fields(loc)[-1] == (7, "c")
+    # the caller's retry against the fresh schema gets a fresh id
+    I.evolve_iceberg_schema(loc, T.StructType(base + [col_c, col_d]))
+    assert _current_fields(loc)[-2:] == [(7, "c"), (8, "d")]
+    meta = I.current_metadata(loc)
+    seen = {}
+    for s in meta["schemas"]:
+        for f in s["fields"]:
+            assert seen.setdefault(f["id"], (f["name"], f["type"])) == (
+                f["name"], f["type"]
+            )
+
+
+def test_racing_rename_of_other_column_survives(
+    spark, transcripts_df, tmp_path, monkeypatch
+):
+    """Two renames of different columns race: the loser renames on top
+    of the winner's schema, so both renames survive."""
+    loc = str(tmp_path / "rnrace")
+    I.write_iceberg_table(transcripts_df, loc)
+    _lose_race(
+        monkeypatch, loc, lambda: I.rename_iceberg_column(loc, "text", "body")
+    )
+    I.rename_iceberg_column(loc, "tool", "tool_name")
+    monkeypatch.undo()
+
+    names = [n for _id, n in _current_fields(loc)]
+    assert "body" in names and "tool_name" in names
+    assert "text" not in names and "tool" not in names
+    back = I.read_iceberg_table(spark, loc)
+    assert sorted(r["body"] for r in back.collect()) == sorted(
+        r["text"] for r in transcripts_df.collect()
+    )
+
+
+def test_drop_refuses_racing_equality_delete(
+    spark, transcripts_df, tmp_path, monkeypatch
+):
+    """A drop that loses the race to an equality delete keyed on the
+    same column re-runs its guard on the fresh metadata and refuses,
+    so the delete stays resolvable."""
+    loc = str(tmp_path / "droprace")
+    I.write_iceberg_table(transcripts_df, loc)
+    keys = spark.createDataFrame([("conv-a",)], "conv_id string")
+    _lose_race(
+        monkeypatch, loc, lambda: I.delete_iceberg_rows(keys, loc, ["conv_id"])
+    )
+    with pytest.raises(ValueError, match="live equality-delete file"):
+        I.drop_iceberg_column(loc, "conv_id")
+    monkeypatch.undo()
+
+    assert "conv_id" in [n for _id, n in _current_fields(loc)]
+    assert _collect(I.read_iceberg_table(spark, loc)) == _collect(
+        transcripts_df.filter("conv_id <> 'conv-a'")
+    )
+
+
+def test_one_commit_loop_per_kind():
+    """Structural guard on the commit protocol: only ``_commit`` and
+    ``_retry_metadata_update`` publish metadata, and only the three
+    retry loops catch CommitConflict — a hand-rolled loop elsewhere is
+    how a stale retry slips back in."""
+    import ast
+
+    tree = ast.parse(Path(I.__file__).read_text())
+    publishers, catchers = [], []
+    for stmt in tree.body:
+        owner = getattr(stmt, "name", "<module>")
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Call) and "_publish_metadata" in {
+                getattr(node.func, "id", None), getattr(node.func, "attr", None)
+            }:
+                publishers.append(owner)
+            if isinstance(node, ast.ExceptHandler) and node.type is not None:
+                names = {
+                    getattr(n, "id", None) or getattr(n, "attr", None)
+                    for n in ast.walk(node.type)
+                }
+                if "CommitConflict" in names:
+                    catchers.append(owner)
+    assert sorted(publishers) == ["_commit", "_retry_metadata_update"]
+    assert sorted(catchers) == [
+        "_commit_retrying", "_replace_retrying", "_retry_metadata_update"
+    ]
+
+
 # ------------------------------------- rename/drop evolution (field ids)
 
 
@@ -2460,3 +2598,27 @@ def test_wap_ingest_job(spark, tmp_path):
     )
     assert not res3["published"]
     assert res3["branch"] not in list_refs(loc)
+
+
+def test_scan_reads_metadata_once(spark, transcripts_df, tmp_path, monkeypatch):
+    """A scan pins its snapshot from ONE metadata read: schema, data
+    files and deletes cannot come from different snapshots when a
+    commit races the scan."""
+    loc = str(tmp_path / "onceread")
+    s1 = I.write_iceberg_table(transcripts_df, loc)
+    I.append_iceberg_table(transcripts_df, loc)
+    I.delete_iceberg_rows(
+        spark.createDataFrame([("conv-b",)], "conv_id string"), loc, ["conv_id"]
+    )
+    real = I.current_metadata
+    reads = []
+
+    def counting(location):
+        reads.append(location)
+        return real(location)
+
+    monkeypatch.setattr(I, "current_metadata", counting)
+    assert I.read_iceberg_table(spark, loc).count() == 4
+    assert len(reads) == 1
+    assert I.read_iceberg_increment(spark, loc, from_snapshot_id=s1).count() == 2
+    assert len(reads) == 2

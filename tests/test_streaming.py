@@ -1110,3 +1110,60 @@ def test_stream_extract_with_pii_redaction(spark, tmp_path):
     assert got["c2"]["extracted_text"] == "card <CC> pays"
     assert got["c2"]["n_cc"] == 1
     assert got["c3"]["n_redactions"] == 0
+
+
+def test_iceberg_streaming_source_position_deletes(spark, tmp_path):
+    """Position deletes under the stream source: a stream resumed after
+    the base snapshot surfaces exactly the rows read_iceberg_increment
+    returns for the same window, with rows deleted by
+    delete_iceberg_positions (at non-zero row indexes, in files of the
+    window and of the base snapshot) left out."""
+    from pyspark.sql import functions as F
+
+    from htrtf_spark.sources import iceberg as I
+    from htrtf_spark.sources import iceberg_stream
+
+    iceberg_stream.register(spark)
+    loc = str(tmp_path / "posdel_src")
+    schema = ("conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts string")
+
+    def mk(prefix, n):
+        rows = [(f"{prefix}-{i}", i, "user", f"{prefix}{i}", None,
+                 "2024-01-01 00:00:00") for i in range(n)]
+        return spark.createDataFrame(rows, schema).repartition(2).withColumn(
+            "ts", F.to_timestamp("ts")
+        )
+
+    base = I.write_iceberg_table(mk("a", 6), loc)
+    I.append_iceberg_table(mk("b", 12), loc)
+    pos = I.find_positions(
+        spark, loc, "text IN ('a3', 'b2', 'b5', 'b7', 'b11')"
+    )
+    assert pos.filter("pos > 0").count() > 0
+    I.delete_iceberg_positions(pos, loc)
+
+    out_dir = str(tmp_path / "posdel_out")
+    q = (
+        spark.readStream.format("htrtf_iceberg")
+        .option("location", loc)
+        .option("startingSequence", str(base))
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "posdel_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    want = rows(I.read_iceberg_increment(spark, loc, from_snapshot_id=base))
+    assert rows(spark.read.parquet(out_dir)) == want
+    assert sorted(r[3] for r in want) == sorted(
+        f"b{i}" for i in range(12) if i not in (2, 5, 7, 11)
+    )
