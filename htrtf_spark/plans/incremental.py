@@ -90,9 +90,9 @@ def extract_increment_once(
     from htrtf_spark.plans.pipeline import extract_turns
     from htrtf_spark.sources.iceberg import (
         ExpiredSnapshotError,
-        _ancestors,
         _find_snapshot,
         _retracts,
+        _window,
         append_iceberg_table,
         current_metadata,
         overwrite_iceberg_table,
@@ -154,14 +154,13 @@ def extract_increment_once(
         except KeyError:
             last_seq = None  # expired marker: the read below raises
         if last_seq is not None:
-            cur_seq = int(_find_snapshot(src_meta, cur)["sequence-number"])
-            for sn in _ancestors(src_meta, cur):
-                s_seq = int(sn["sequence-number"])
-                if last_seq < s_seq <= cur_seq and _retracts(sn):
+            for sn in _window(src_meta, last_seq, _find_snapshot(src_meta, cur)):
+                if _retracts(sn):
                     return _rebaseline(
                         cur,
                         "retracting snapshot (operation="
-                        f"{sn['summary']['operation']}, sequence {s_seq}) "
+                        f"{sn['summary']['operation']}, sequence "
+                        f"{sn['sequence-number']}) "
                         "in window and rebaseline_on_delete is set",
                     )
 

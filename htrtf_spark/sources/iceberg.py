@@ -113,6 +113,7 @@ import os
 import struct
 import time
 import uuid
+from typing import NamedTuple
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import DataFrame, SparkSession
@@ -1080,6 +1081,7 @@ def _commit(
     operation: str | None = None,
     summary_extra: dict[str, str] | None = None,
     branch: str | None = None,
+    set_default_spec: bool = True,
 ) -> int:
     """Write manifest + manifest list + next metadata version; returns the
     new snapshot id. Commit protocol mirrors HadoopCatalog: the metadata
@@ -1094,7 +1096,10 @@ def _commit(
     property. ``extra_manifests`` adds further (files, content, spec)
     manifests to the SAME snapshot — e.g. an atomic MERGE-style upsert
     commits its DELETES manifest and its DATA manifest together, so
-    readers can never observe the delete without the append."""
+    readers can never observe the delete without the append.
+    ``set_default_spec=False`` leaves the table's default spec where it
+    is: an append that asked for no spec must not undo a racing
+    writer's partition evolution."""
     meta_dir = _meta_dir(location)
     os.makedirs(meta_dir, exist_ok=True)
     os.makedirs(os.path.join(location, "data"), exist_ok=True)
@@ -1279,7 +1284,7 @@ def _commit(
                     [prev_meta["last-partition-id"]]
                     + [f["field-id"] for f in g_spec["fields"]]
                 )
-        if manifest_content == 0 and branch is None:
+        if manifest_content == 0 and branch is None and set_default_spec:
             # only MAIN data commits move the default write spec; a
             # delete commit's (possibly empty) spec must not change how
             # later appends are partitioned, and a BRANCH (audit)
@@ -1479,12 +1484,19 @@ def append_iceberg_table(
     ice_schema = _schema_by_id(meta, meta["current-schema-id"])
     _check_schema(df, ice_schema, "append")
 
+    spec = _resolve_commit_spec(meta, ice_schema, partition_by)
+
     def spec_fn(m: dict) -> dict:
+        # the files are partitioned under ``spec`` whatever a racing
+        # writer did since: the default spec stays that one, while a
+        # requested spec is re-resolved (a racer may have taken its id)
+        if partition_by is None:
+            return spec
         return _resolve_commit_spec(m, ice_schema, partition_by)
 
     files = _write_data_files(
         df, location, seq=meta["last-sequence-number"] + 1,
-        spec_fields=spec_fn(meta)["fields"], ice_schema=ice_schema,
+        spec_fields=spec["fields"], ice_schema=ice_schema,
     )
     # the distributed data write happens ONCE; only the driver-side
     # metadata commit retries on a racing writer (refresh + rebuild —
@@ -1492,6 +1504,7 @@ def append_iceberg_table(
     return _commit_retrying(
         location, ice_schema, files, meta, spec_fn,
         properties=properties, branch=branch,
+        set_default_spec=partition_by is not None,
     )
 
 
@@ -2374,26 +2387,36 @@ def _retracts(snapshot: dict) -> bool:
     )
 
 
-def _appended_files(meta: dict, from_seq: int, upper: dict) -> list[dict]:
-    """The incremental-append window: the data files each snapshot on
-    ``upper``'s ANCESTOR chain with ``from_seq < sequence <= upper's``
-    itself added, oldest snapshot first, read from that snapshot's OWN
-    manifest list. Selecting by sequence number alone would, after
-    rollback_to_snapshot, surface abandoned-branch appends that are not
-    in the table's live state. REPLACE snapshots (compaction, INSERT
-    OVERWRITE, rewrite_manifests) are skipped: they rewrite rows already
-    surfaced, and reading each append from its own list keeps the
-    appends a later compaction rewrote away."""
+def _window(meta: dict, from_seq: int, upper: dict) -> list[dict]:
+    """The snapshots on ``upper``'s ANCESTOR chain with ``from_seq <
+    sequence <= upper's``, oldest first: the one sequence-window walk
+    behind incremental reads, stream offsets and the retraction checks
+    of ticks and stream re-baseline. Selecting by sequence number alone
+    would, after rollback_to_snapshot, include abandoned-branch
+    snapshots that are not in the table's live state."""
     to_seq = int(upper["sequence-number"])
-    window = sorted(
-        _ancestors(meta, upper["snapshot-id"]),
-        key=lambda x: x["sequence-number"],
+    return sorted(
+        (
+            sn
+            for sn in _ancestors(meta, upper["snapshot-id"])
+            if from_seq < int(sn["sequence-number"]) <= to_seq
+        ),
+        key=lambda sn: int(sn["sequence-number"]),
     )
+
+
+def _appended_files(meta: dict, from_seq: int, upper: dict) -> list[dict]:
+    """The incremental-append window: the data files each snapshot of
+    ``_window(meta, from_seq, upper)`` itself added, oldest snapshot
+    first, read from that snapshot's OWN manifest list. REPLACE
+    snapshots (compaction, INSERT OVERWRITE, rewrite_manifests) are
+    skipped: they rewrite rows already surfaced, and reading each append
+    from its own list keeps the appends a later compaction rewrote
+    away."""
     return [
         rec
-        for sn in window
-        if from_seq < int(sn["sequence-number"]) <= to_seq
-        and sn.get("summary", {}).get("operation") != "replace"
+        for sn in _window(meta, from_seq, upper)
+        if sn.get("summary", {}).get("operation") != "replace"
         for rec in _manifest_files(sn, 0, added_only=True)
     ]
 
@@ -2642,16 +2665,76 @@ def live_delete_files(location: str, snapshot_id: int | None = None) -> list[dic
     return out
 
 
-def _identity_values(rec: dict, ice_by_id: dict) -> list[tuple[str, object]]:
-    """(column, value) of each identity partition field of a file
-    record — materialized from the manifest, since Hive-layout files do
-    not store them — under the read schema's name of the field's source
-    (rename-proof); a dropped source is not materialized."""
-    return [
-        (ice_by_id[pf["source-id"]]["name"], rec["partition"].get(pf["name"]))
-        for pf in rec["_spec_fields"]
-        if pf["transform"] == "identity" and pf["source-id"] in ice_by_id
-    ]
+class _ReadPlan(NamedTuple):
+    """How one data file is read. Hashable: files with equal plans share
+    one parquet relation. ``constants`` are the (column, value) pairs of
+    its identity partition columns, from the manifest (Hive-layout files
+    do not store them), under the read schema's name of each field's
+    source (rename-proof; a dropped source is left out). ``columns`` maps
+    every schema column, in schema order, to (target name, write-time
+    name or None); None reads as typed nulls (the file predates the
+    column). ``eq_deletes`` holds (path, ((delete-file column, target
+    column), ...)) per equality-delete file that applies, and
+    ``pos_deletes`` the paths of the position-delete files that apply."""
+
+    constants: tuple
+    columns: tuple
+    eq_deletes: tuple
+    pos_deletes: tuple
+
+
+def _read_plans(
+    records: list[dict], ice_schema: dict, deletes: list[dict]
+) -> list[_ReadPlan]:
+    """The read plan of each data-file record under ``ice_schema``,
+    given the delete-file records visible to the read: the one place
+    both Iceberg readers (``_scan`` and the stream source) decide how a
+    file is read. Columns and equality keys resolve by FIELD ID (the
+    Iceberg column-resolution rule): a file written before a rename
+    stores the old name. Which deletes apply is the spec's rule: an
+    equality delete hits data files with a STRICTLY smaller sequence
+    number, a position delete those with a smaller or equal one (it may
+    target rows of its own commit)."""
+    ice_by_id = {f["id"]: f for f in ice_schema["fields"]}
+    eq, pos = [], []
+    for d in deletes:
+        if d["content"] == 1:
+            pos.append((d["_seq"], d["file_path"]))
+            continue
+        wmap = {f["id"]: f["name"] for f in d["_write_fields"]}
+        keys = []
+        for fid in d["equality_ids"] or []:
+            tgt = ice_by_id.get(fid)
+            if tgt is None:
+                raise ValueError(
+                    f"equality delete on field id {fid} which is not in "
+                    "the read schema (column dropped?)"
+                )
+            keys.append((wmap.get(fid, tgt["name"]), tgt["name"]))
+        eq.append((d["_seq"], (d["file_path"], tuple(keys))))
+    plans = []
+    for rec in records:
+        wmap = {f["id"]: f["name"] for f in rec["_write_fields"]}
+        seq = rec["_seq"]
+        plans.append(
+            _ReadPlan(
+                tuple(
+                    (
+                        ice_by_id[pf["source-id"]]["name"],
+                        rec["partition"].get(pf["name"]),
+                    )
+                    for pf in rec["_spec_fields"]
+                    if pf["transform"] == "identity"
+                    and pf["source-id"] in ice_by_id
+                ),
+                tuple(
+                    (f["name"], wmap.get(f["id"])) for f in ice_schema["fields"]
+                ),
+                tuple(e for dseq, e in eq if dseq > seq),
+                tuple(p for dseq, p in pos if dseq >= seq),
+            )
+        )
+    return plans
 
 
 def _wanted(flt: dict, pfield: dict, source: dict | None) -> set | None:
@@ -2751,9 +2834,12 @@ def _scan(
     filters). Everything comes from ``meta``: the snapshot
     (``snapshot_id``, default current), the schema (the snapshot's when
     time-travelling, else the current one), its live data files — or
-    ``records``, an incremental window — and its delete files.
-    ``positions=True`` adds each row's (file_path, pos) and applies no
-    delete: the rows a position delete can address."""
+    ``records``, an incremental window — and its delete files. Files
+    are grouped by their ``_read_plans`` plan, not by snapshot: each
+    group is one parquet relation, so a window of appends with no
+    delete between them reads as one relation. ``positions=True`` adds
+    each row's (file_path, pos) and applies no delete: the rows a
+    position delete can address."""
     from pyspark.sql import functions as F
 
     snap = _snapshot_or_current(meta, snapshot_id)
@@ -2857,19 +2943,6 @@ def _scan(
                     return True
         return False
 
-    # group live files by (identity partition tuple, sequence number,
-    # write-schema column mapping) — the seq matters because equality
-    # deletes apply only to data files with a strictly smaller sequence
-    # number; the write mapping matters because files written before a
-    # rename store the OLD column name and must be resolved by FIELD ID
-    # (the Iceberg column-resolution rule), so they get their own
-    # schema-pinned reader; prune by the filter
-    target_ids = [f["id"] for f in ice_schema["fields"]]
-
-    def _write_map(rec: dict) -> tuple:
-        by_fid = {f["id"]: f["name"] for f in rec["_write_fields"]}
-        return tuple((fid, by_fid.get(fid)) for fid in target_ids)
-
     specs_by_id = {s["spec-id"]: s for s in meta["partition-specs"]}
 
     def _skip_manifest(m: dict) -> bool:
@@ -2903,14 +2976,15 @@ def _scan(
                     return True
         return False
 
-    groups: dict[tuple, list[str]] = {}
     if records is None:
         records = _manifest_files(snap, 0, _skip_manifest)
-    for rec in records:
-        if _pruned(rec):
-            continue  # manifest-level prune
-        key = (tuple(_identity_values(rec, ice_by_id)), rec["_seq"], _write_map(rec))
-        groups.setdefault(key, []).append(rec["file_path"])
+    records = [rec for rec in records if not _pruned(rec)]
+    deletes = [] if positions else _manifest_files(snap, 1)
+    # one relation per read plan: files that read alike, with the same
+    # deletes applying, share a relation whatever their snapshot
+    groups: dict[_ReadPlan, list[str]] = {}
+    for rec, plan in zip(records, _read_plans(records, ice_schema, deletes)):
+        groups.setdefault(plan, []).append(rec["file_path"])
 
     # positions mode: the columns of a position delete file
     address = (
@@ -2929,116 +3003,83 @@ def _scan(
             F.col("_metadata.row_index").alias(pos_col),
         ]
 
-    deletes = [] if positions else _manifest_files(snap, 1)
-    del_dfs = []
-    for d in deletes:
-        if d["content"] != 2:
-            continue
-        # equality delete files are resolved by field id too: the
-        # parquet columns carry the names current AT DELETE TIME
-        wmap = {f["id"]: f["name"] for f in d["_write_fields"]}
-        eq_cols, read_fields, sel = [], [], []
-        for fid in d["equality_ids"] or []:
-            tgt = ice_by_id.get(fid)
-            if tgt is None:
-                raise ValueError(
-                    f"equality delete on field id {fid} which is not in "
-                    "the read schema (column dropped?)"
-                )
-            wname = wmap.get(fid, tgt["name"])
-            read_fields.append(
-                T.StructField(wname, _ICE_TO_SPARK[tgt["type"]], True)
-            )
-            sel.append(F.col(wname).alias(tgt["name"]))
-            eq_cols.append(tgt["name"])
-        del_dfs.append(
-            (
-                d["_seq"],
-                eq_cols,
-                spark.read.schema(T.StructType(read_fields))
-                .parquet(d["file_path"])
-                .select(*sel),
-            )
-        )
-    pos_dfs = [
-        (
-            d["_seq"],
-            spark.read.schema("file_path string, pos long").parquet(
-                d["file_path"]
-            ),
-        )
-        for d in deletes
-        if d["content"] == 1
-    ]
-
-    parts = []
     by_name = {f.name: f for f in schema.fields}
+    # one DataFrame per delete file, shared by every group it applies
+    # to; equality keys are read under their delete-time names and
+    # surfaced under the target names
+    pos_dfs = {
+        path: spark.read.schema("file_path string, pos long")
+        .parquet(path)
+        .select(F.col("file_path").alias("_fp"), F.col("pos").alias("_pos"))
+        for path in {p for plan in groups for p in plan.pos_deletes}
+    }
+    eq_dfs = {
+        path: spark.read.schema(
+            T.StructType(
+                [T.StructField(dc, by_name[tc].dataType, True) for dc, tc in keys]
+            )
+        )
+        .parquet(path)
+        .select(*[F.col(dc).alias(tc) for dc, tc in keys])
+        for path, keys in {e for plan in groups for e in plan.eq_deletes}
+    }
+
     # None partition values (__HIVE_DEFAULT_PARTITION__) sort first —
     # plain tuple sort would TypeError comparing None with str/int
-    def _group_key(item):
-        (vals, seq, wkey), _paths = item
+    def _group_order(item):
+        plan, _paths = item
         return (
-            tuple((c, v is not None, "" if v is None else str(v)) for c, v in vals),
-            seq,
-            tuple((fid, w or "") for fid, w in wkey),
+            tuple(
+                (c, v is not None, "" if v is None else str(v))
+                for c, v in plan.constants
+            ),
+            tuple((t, w or "") for t, w in plan.columns),
+            plan.eq_deletes,
+            plan.pos_deletes,
         )
 
-    for (vals, seq, wkey), paths in sorted(groups.items(), key=_group_key):
-        part_cols = [c for c, _v in vals]
-        wmap = dict(wkey)
+    parts = []
+    for plan, paths in sorted(groups.items(), key=_group_order):
+        consts = dict(plan.constants)
         # field-id column resolution: read each column under its
         # WRITE-time name, surface it under the target name; columns the
         # file predates (or whose id the file never had) become NULL
         read_fields, rename = [], []
-        for ice_f, sp_f in zip(ice_schema["fields"], schema.fields):
-            if sp_f.name in part_cols:
+        for (target, wname), sp_f in zip(plan.columns, schema.fields):
+            if target in consts:
                 continue  # materialized from manifest metadata below
-            wname = wmap.get(ice_f["id"])
             if wname is None:
-                rename.append(F.lit(None).cast(sp_f.dataType).alias(sp_f.name))
+                rename.append(F.lit(None).cast(sp_f.dataType).alias(target))
             else:
-                read_fields.append(
-                    T.StructField(wname, sp_f.dataType, True)
-                )
-                rename.append(F.col(wname).alias(sp_f.name))
-        reader = spark.read.schema(T.StructType(read_fields)).parquet(*paths)
-        pos_applicable = [p for ds, p in pos_dfs if ds >= seq]
-        if pos_applicable:
+                read_fields.append(T.StructField(wname, sp_f.dataType, True))
+                rename.append(F.col(wname).alias(target))
+        df = spark.read.schema(T.StructType(read_fields)).parquet(*paths)
+        if plan.pos_deletes:
             # attach the scan's (file path, row index) and anti-join
-            # each applicable position-delete set (path ≤-seq rule:
-            # position deletes may target same-commit rows)
-            df = reader.select("*", *_row_address("_fp", "_pos"))
-            for pdf_del in pos_applicable:
+            # each applicable position-delete set
+            df = df.select("*", *_row_address("_fp", "_pos"))
+            for path in plan.pos_deletes:
                 df = df.join(
-                    F.broadcast(
-                        pdf_del.select(
-                            F.col("file_path").alias("_fp"),
-                            F.col("pos").alias("_pos"),
-                        )
-                    ),
-                    on=["_fp", "_pos"],
+                    F.broadcast(pos_dfs[path]), on=["_fp", "_pos"],
                     how="left_anti",
                 )
             df = df.drop("_fp", "_pos")
-        else:
-            df = reader
         df = df.select(
             *rename, *(_row_address("file_path", "pos") if positions else [])
         )
-        for c, v in vals:
+        for c, v in plan.constants:
             df = df.withColumn(c, F.lit(v).cast(by_name[c].dataType))
-        for dseq, eq_cols, ddf in del_dfs:
-            if dseq > seq:  # strict: later deletes hit earlier data
-                # NULL-SAFE equality per the spec: a null delete key
-                # deletes rows where the column IS NULL (plain equi-join
-                # anti would never match NULL = NULL)
-                right = ddf
-                cond = None
-                for c in eq_cols:
-                    right = right.withColumnRenamed(c, f"__d_{c}")
-                    term = F.col(c).eqNullSafe(F.col(f"__d_{c}"))
-                    cond = term if cond is None else cond & term
-                df = df.join(F.broadcast(right), on=cond, how="left_anti")
+        for path, keys in plan.eq_deletes:
+            # NULL-SAFE equality per the spec: a null delete key deletes
+            # rows where the column IS NULL (plain equi-join anti would
+            # never match NULL = NULL)
+            right = eq_dfs[path]
+            cond = None
+            for _dc, c in keys:
+                right = right.withColumnRenamed(c, f"__d_{c}")
+                term = F.col(c).eqNullSafe(F.col(f"__d_{c}"))
+                cond = term if cond is None else cond & term
+            df = df.join(F.broadcast(right), on=cond, how="left_anti")
         # select LAST: the anti joins move their key columns to the front
         parts.append(df.select(*[f.name for f in schema.fields + address]))
     out = parts[0]

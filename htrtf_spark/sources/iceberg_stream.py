@@ -19,13 +19,14 @@ yield Arrow RecordBatches (no per-row Python).
 Semantics (append-stream contract):
 - rows are surfaced once, at the snapshot that appended them;
 - delete files visible at the batch's upper snapshot ARE applied to
-  the batch's own files (equality deletes: strictly-newer-sequence
-  rule; position deletes: ≥-sequence rule) — matching
-  ``read_iceberg_increment``;
+  the batch's own files, and columns resolve by field id. Each file's
+  plan (its columns, identity constants and the deletes that apply)
+  comes from ``iceberg._read_plans``, the helper behind the batch scan,
+  and is applied in the batch scan's order, so a batch holds the rows
+  ``read_iceberg_increment`` returns for its window by construction;
 - deletes of rows emitted by EARLIER batches are not retracted
   (streams are append-only; run compaction + a batch re-read for
-  retractions), and column renames are handled by field-id resolution
-  exactly like the batch reader.
+  retractions).
 
 Batch-mode ``spark.read.format("htrtf_iceberg")`` is intentionally NOT
 implemented — ``read_iceberg_table`` is the batch path (full delete
@@ -42,21 +43,12 @@ from pyspark.sql.datasource import (
 
 
 class _FilePartition(InputPartition):
-    def __init__(
-        self,
-        file_path: str,
-        seq: int,
-        col_map: list,          # [(write_name|None, target_name, ice_type)]
-        part_vals: list,        # [(target_name, value)] identity partitions
-        eq_deletes: list,       # [(dseq, [(delete_col, data_col)], path)]
-        pos_deletes: list,      # [(dseq, path)]
-    ):
+    def __init__(self, file_path: str | None, plan: tuple, types: tuple):
         self.file_path = file_path
-        self.seq = seq
-        self.col_map = col_map
-        self.part_vals = part_vals
-        self.eq_deletes = eq_deletes
-        self.pos_deletes = pos_deletes
+        # the file's iceberg._ReadPlan as a plain tuple, so that the
+        # executor unpickles it without importing the iceberg module
+        self.plan = tuple(plan)
+        self.types = types  # Iceberg type of each schema column, in order
 
 
 def _off_key(off: dict) -> tuple:
@@ -147,13 +139,6 @@ class IcebergStreamReader(DataSourceStreamReader):
                 )
             self._pos = {"seq": int(start_seq)}
 
-    def _dbg(self, msg: str) -> None:
-        import os
-        f = os.environ.get("HTRTF_STREAM_DEBUG")
-        if f:
-            with open(f, "a") as fh:
-                fh.write(f"pid={os.getpid()} {msg}\n")
-
     def _track(self, off: dict) -> None:
         if self._pos is None or _off_key(off) > _off_key(self._pos):
             self._pos = dict(off)
@@ -166,7 +151,6 @@ class IcebergStreamReader(DataSourceStreamReader):
         # Spark may probe initialOffset anyway)
         off = dict(self._pos) if self._pos is not None else {"seq": 0}
         self._track(off)
-        self._dbg(f"initialOffset -> {off}")
         return off
 
     def latestOffset(self) -> dict:
@@ -175,11 +159,11 @@ class IcebergStreamReader(DataSourceStreamReader):
         from htrtf_spark.sources.iceberg import (
             _ancestors,
             _manifest_files,
+            _window,
             current_metadata,
         )
 
         meta = current_metadata(self.location)
-        self._dbg(f"latestOffset pos={self._pos} mf={self.max_files} ms={self.max_snapshots}")
         chain = _ancestors(meta, meta.get("current-snapshot-id"))
         if not chain:
             return {"seq": 0}
@@ -240,13 +224,8 @@ class IcebergStreamReader(DataSourceStreamReader):
         # append advance along the live branch, capped; replace
         # snapshots surface no rows (skipped in planning) so sliding
         # over them is free and never counts against the caps
-        cands = [
-            sn
-            for sn in sorted(chain, key=lambda x: x["sequence-number"])
-            if cur_seq < int(sn["sequence-number"]) <= head_seq
-        ]
         last, files_acc, bytes_acc, snaps_acc = cur_seq, 0, 0, 0
-        for sn in cands:
+        for sn in _window(meta, cur_seq, chain[0]):
             if sn.get("summary", {}).get("operation") == "replace":
                 last = int(sn["sequence-number"])
                 continue
@@ -306,14 +285,13 @@ class IcebergStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         from htrtf_spark.sources.iceberg import (
             _appended_files,
-            _identity_values,
             _manifest_files,
+            _read_plans,
             _schema_by_id,
             current_metadata,
         )
 
         meta = current_metadata(self.location)
-        self._dbg(f"partitions({start}, {end})")
         # a replanned checkpoint batch is how a restarted reader learns
         # its position (the engine replays the last offset-log entry
         # before requesting a new offset) — track BOTH ends
@@ -398,57 +376,20 @@ class IcebergStreamReader(DataSourceStreamReader):
         if end_snap is None:
             self._write_lag_metrics(start, end, [], meta)
             self._track(end)
-            return [_FilePartition(None, 0, [], [], [], [])]
+            return [_FilePartition(None, (), ())]
 
         ice_schema = _schema_by_id(
             meta, end_snap.get("schema-id", meta["current-schema-id"])
         )
-        ice_by_id = {f["id"]: f for f in ice_schema["fields"]}
-
+        types = tuple(f["type"] for f in ice_schema["fields"])
         # deletes visible at the batch's upper snapshot
-        deletes = _manifest_files(end_snap, 1)
-        parts = []
-        for rec in records:
-            wmap = {f["id"]: f["name"] for f in rec["_write_fields"]}
-            part_vals = dict(_identity_values(rec, ice_by_id))
-            # one entry per schema field IN SCHEMA ORDER — arrow batch
-            # columns map to the declared schema BY POSITION, so
-            # identity-partition columns must sit at their real slot,
-            # not be appended at the end
-            col_map = []
-            for f in ice_schema["fields"]:
-                if f["name"] in part_vals:
-                    col_map.append(
-                        ("\x00const", f["name"], f["type"], part_vals[f["name"]])
-                    )
-                else:
-                    col_map.append(
-                        (wmap.get(f["id"]), f["name"], f["type"], None)
-                    )
-            eq, pos = [], []
-            for d in deletes:
-                if d["content"] == 2 and d["_seq"] > rec["_seq"]:
-                    dmap = {f["id"]: f["name"] for f in d["_write_fields"]}
-                    # each key column needs BOTH write-time names:
-                    # the DELETE file's and THIS DATA file's (renames
-                    # between commits make them differ; field id is
-                    # the join key, exactly the batch reader's rule)
-                    cols = [
-                        (dmap.get(fid, ice_by_id[fid]["name"]),
-                         wmap.get(fid))
-                        for fid in d["equality_ids"] or []
-                        if fid in ice_by_id
-                    ]
-                    eq.append((d["_seq"], cols, d["file_path"]))
-                elif d["content"] == 1 and d["_seq"] >= rec["_seq"]:
-                    pos.append((d["_seq"], d["file_path"]))
-            parts.append(
-                _FilePartition(
-                    rec["file_path"], rec["_seq"], col_map, part_vals, eq, pos
-                )
-            )
+        plans = _read_plans(records, ice_schema, _manifest_files(end_snap, 1))
+        parts = [
+            _FilePartition(rec["file_path"], plan, types)
+            for rec, plan in zip(records, plans)
+        ]
         if not parts:  # Spark requires ≥1 partition per batch
-            parts = [_FilePartition(None, 0, [], [], [], [])]
+            parts = [_FilePartition(None, (), ())]
         self._write_lag_metrics(start, end, records, meta)
         self._track(end)
         return parts
@@ -457,11 +398,13 @@ class IcebergStreamReader(DataSourceStreamReader):
         # offsets live in the query checkpoint; tracking the committed
         # position lets the FIRST latestOffset after a restart advance
         # capped from it instead of falling back to the uncapped head
-        self._dbg(f"commit({end})")
         self._track(end)
 
     # --------------------------------------------- executor-side read
     def read(self, partition):
+        """The file's rows under its plan, in the batch scan's order:
+        position deletes by row index, then field-id column resolution,
+        then equality deletes on the resolved columns."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -469,56 +412,60 @@ class IcebergStreamReader(DataSourceStreamReader):
 
         if partition.file_path is None:
             return iter(())
+        constants, columns, eq_deletes, pos_deletes = partition.plan
         tbl = pq.read_table(partition.file_path)
 
         # position deletes first (row index is this file's read order)
-        if partition.pos_deletes:
+        if pos_deletes:
             keep = np.ones(tbl.num_rows, dtype=bool)
-            for _dseq, dpath in partition.pos_deletes:
+            for dpath in pos_deletes:
                 dt = pq.read_table(dpath)
                 hit = dt.filter(pc.equal(dt["file_path"], partition.file_path))
                 pos = pc.drop_null(hit["pos"]).to_numpy()
                 keep[pos[(pos >= 0) & (pos < tbl.num_rows)]] = False
             tbl = tbl.filter(pa.array(keep))
 
-        # equality deletes: drop rows whose key tuple appears in a
-        # strictly-newer delete file (NULL-safe: None tuples compare
-        # equal in python, matching the spec's null-key semantics)
-        for _dseq, cols, dpath in partition.eq_deletes:
-            if not cols or tbl.num_rows == 0:
-                continue
-            dt = pq.read_table(dpath)
-            del_names = [dc for dc, _fc in cols]
-            if any(dc not in dt.column_names for dc in del_names):
-                continue
-            keys = set(
-                zip(*[dt.column(dc).to_pylist() for dc in del_names])
-            )
-            file_cols = []
-            ok = True
-            for _dc, fc in cols:
-                if fc is None or fc not in tbl.column_names:
-                    ok = False  # file predates the column: no match
-                    break
-                file_cols.append(tbl.column(fc).to_pylist())
-            if not ok:
-                continue
-            mask = [t not in keys for t in zip(*file_cols)]
-            tbl = tbl.filter(pa.array(mask))
-
-        # field-id column resolution; identity partition columns are
-        # materialized as TYPED constants at their schema position
-        arrays, names = [], []
-        for wname, tname, ice_t, const in partition.col_map:
+        # field-id column resolution: a column the file predates reads
+        # as typed nulls, an identity partition column as a typed
+        # constant at its schema position
+        consts = dict(constants)
+        arrays = {}
+        for (tname, wname), ice_t in zip(columns, partition.types):
             at = _ICE_TO_ARROW(ice_t)
-            if wname == "\x00const":
-                arrays.append(pa.array([const] * tbl.num_rows, type=at))
+            if tname in consts:
+                arrays[tname] = pa.repeat(
+                    pa.scalar(consts[tname], type=at), tbl.num_rows
+                )
             elif wname is not None and wname in tbl.column_names:
-                arrays.append(tbl.column(wname))
+                arrays[tname] = tbl.column(wname)
             else:
-                arrays.append(pa.nulls(tbl.num_rows, type=at))
-            names.append(tname)
-        out = pa.table(dict(zip(names, arrays)))
+                arrays[tname] = pa.nulls(tbl.num_rows, type=at)
+        out = pa.table(arrays)
+
+        # equality deletes last, by target name and NULL-safe (a null
+        # key deletes rows whose column is null): each key column of
+        # file and delete rows is dictionary-encoded jointly, nulls
+        # included, and the per-column codes fold into one row code
+        for dpath, keys in eq_deletes:
+            n = out.num_rows
+            if n == 0:
+                break
+            dt = pq.read_table(dpath, columns=[dc for dc, _tc in keys])
+            code = np.zeros(n + dt.num_rows, dtype=np.int64)
+            for dc, tc in keys:
+                col = out.column(tc)
+                both = pa.chunked_array(
+                    col.chunks + dt.column(dc).cast(col.type).chunks,
+                    type=col.type,
+                )
+                enc = pc.dictionary_encode(both, null_encoding="encode")
+                idx = np.concatenate(
+                    [c.indices.to_numpy(zero_copy_only=False) for c in enc.chunks]
+                ).astype(np.int64)
+                code = np.unique(
+                    code * (int(idx.max()) + 1) + idx, return_inverse=True
+                )[1].astype(np.int64)
+            out = out.filter(pa.array(~np.isin(code[:n], code[n:])))
         return iter(out.to_batches())
 
 

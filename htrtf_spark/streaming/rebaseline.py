@@ -96,7 +96,12 @@ def stream_needs_rebaseline(
     bound still defines the window, and the ancestry walk from the
     current head covers the rest.
     """
-    from htrtf_spark.sources.iceberg import _ancestors, _retracts, current_metadata
+    from htrtf_spark.sources.iceberg import (
+        _ancestors,
+        _retracts,
+        _window,
+        current_metadata,
+    )
 
     off = _latest_stream_offset(checkpoint_dir)
     if off is None:
@@ -128,12 +133,12 @@ def stream_needs_rebaseline(
                 "— the pinned file groups no longer describe the table"
             )
     if on_upstream_delete:
-        for s in chain:
-            s_seq = int(s["sequence-number"])
-            if seq < s_seq <= head_seq and _retracts(s):
+        for s in _window(meta, seq, chain[0]):
+            if _retracts(s):
                 return (
                     "retracting snapshot (operation="
-                    f"{s['summary']['operation']}, sequence {s_seq}) in the "
+                    f"{s['summary']['operation']}, sequence "
+                    f"{s['sequence-number']}) in the "
                     "unconsumed window and on_upstream_delete is set — "
                     "appended-only propagation would retain rows upstream "
                     "deleted"

@@ -892,6 +892,33 @@ def test_drop_refuses_racing_equality_delete(
     )
 
 
+def test_append_after_racing_partition_evolution(
+    spark, transcripts_df, tmp_path, monkeypatch
+):
+    """An append with no partition_by that loses the race to a
+    partition-evolving append commits under the spec its files were
+    written under, and the winner's spec stays the table default."""
+    loc = str(tmp_path / "specrace")
+    I.write_iceberg_table(transcripts_df, loc)
+    _lose_race(
+        monkeypatch, loc,
+        lambda: I.append_iceberg_table(
+            transcripts_df, loc, partition_by=["role"]
+        ),
+    )
+    I.append_iceberg_table(transcripts_df, loc)
+    monkeypatch.undo()
+
+    meta = I.current_metadata(loc)
+    specs = {sp["spec-id"]: sp for sp in meta["partition-specs"]}
+    assert [f["name"] for f in specs[meta["default-spec-id"]]["fields"]] == [
+        "role"
+    ]
+    assert _collect(I.read_iceberg_table(spark, loc)) == sorted(
+        _collect(transcripts_df) * 3
+    )
+
+
 def test_one_commit_loop_per_kind():
     """Structural guard on the commit protocol: only ``_commit`` and
     ``_retry_metadata_update`` publish metadata, and only the three
@@ -919,6 +946,47 @@ def test_one_commit_loop_per_kind():
     assert sorted(catchers) == [
         "_commit_retrying", "_replace_retrying", "_retry_metadata_update"
     ]
+
+
+def test_one_read_plan_for_both_readers():
+    """Structural guard on how a data file is read: only
+    ``_read_plans`` reads a file record's sequence number to decide
+    which deletes apply (``files_df`` only reports it), so the batch
+    scan and the stream source cannot disagree; and the stream's
+    executor-side read builds no per-row Python lists."""
+    import ast
+
+    from htrtf_spark.sources import iceberg_stream
+
+    readers, plan_compares = [], 0
+    for mod in (I, iceberg_stream):
+        tree = ast.parse(Path(mod.__file__).read_text())
+        for stmt in tree.body:
+            owner = getattr(stmt, "name", "<module>")
+            for node in ast.walk(stmt):
+                if (
+                    isinstance(node, ast.Subscript)
+                    and isinstance(node.ctx, ast.Load)
+                    and getattr(node.slice, "value", None) == "_seq"
+                ):
+                    readers.append(owner)
+                if owner == "_read_plans" and isinstance(node, ast.Compare):
+                    plan_compares += sum(
+                        isinstance(op, (ast.Gt, ast.GtE, ast.Lt, ast.LtE))
+                        for op in node.ops
+                    )
+        if mod is iceberg_stream:
+            reader = next(
+                n for n in ast.walk(tree)
+                if isinstance(n, ast.FunctionDef) and n.name == "read"
+            )
+            calls = {
+                getattr(n.func, "attr", None)
+                for n in ast.walk(reader) if isinstance(n, ast.Call)
+            }
+            assert "to_pylist" not in calls
+    assert sorted(set(readers)) == ["_read_plans", "files_df"]
+    assert plan_compares == 2  # equality (>) and position (>=) deletes
 
 
 # ------------------------------------- rename/drop evolution (field ids)
@@ -2622,3 +2690,59 @@ def test_scan_reads_metadata_once(spark, transcripts_df, tmp_path, monkeypatch):
     assert len(reads) == 1
     assert I.read_iceberg_increment(spark, loc, from_snapshot_id=s1).count() == 2
     assert len(reads) == 2
+
+
+def _data_relations(df) -> int:
+    """Parquet relations over the (k, v) data files in the analyzed
+    plan; an equality-delete relation reads only the key column."""
+    import re
+
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return len(re.findall(r"Relation \[k#\d+,v#\d+\]", plan))
+
+
+def test_scan_groups_files_by_read_plan(spark, tmp_path):
+    """Files that read alike, with the same deletes applying, share one
+    parquet relation whatever snapshot added them; an equality delete
+    between two appends splits the files it applies to from the later
+    ones. Rows equal the union of one scan per file."""
+
+    def batch(tag):
+        rows = [(f"{tag}{i}", i) for i in range(3)] + [("dup", 9)]
+        return spark.createDataFrame(rows, "k string, v int").repartition(2)
+
+    def per_file(loc):
+        meta = I.current_metadata(loc)
+        snap = I._snapshot_or_current(meta)
+        scans = [
+            I._scan(spark, meta, records=[rec])
+            for rec in I._manifest_files(snap, 0)
+        ]
+        out = scans[0]
+        for df in scans[1:]:
+            out = out.unionByName(df)
+        return _collect(out)
+
+    plain = str(tmp_path / "plain")
+    I.write_iceberg_table(batch("w"), plain)
+    for tag in ("a", "b", "c"):
+        I.append_iceberg_table(batch(tag), plain)
+    got = I.read_iceberg_table(spark, plain)
+    assert _data_relations(got) == 1
+    assert _collect(got) == per_file(plain)
+    assert len(_collect(got)) == 16
+
+    deleted = str(tmp_path / "deleted")
+    I.write_iceberg_table(batch("w"), deleted)
+    I.append_iceberg_table(batch("a"), deleted)
+    I.append_iceberg_table(batch("b"), deleted)
+    I.delete_iceberg_rows(
+        spark.createDataFrame([("dup",)], "k string"), deleted, ["k"]
+    )
+    I.append_iceberg_table(batch("c"), deleted)
+    got = I.read_iceberg_table(spark, deleted)
+    assert _data_relations(got) == 2
+    assert _collect(got) == per_file(deleted)
+    # the delete hits the three batches before it, not the one after
+    assert [r for r in _collect(got) if r[0] == "dup"] == [("dup", 9)]
+    assert len(_collect(got)) == 13

@@ -5,6 +5,7 @@ counts."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from htrtf_spark import oracle, synth
 from htrtf_spark.schema import TRANSCRIPTS_SCHEMA
@@ -1167,3 +1168,66 @@ def test_iceberg_streaming_source_position_deletes(spark, tmp_path):
     assert sorted(r[3] for r in want) == sorted(
         f"b{i}" for i in range(12) if i not in (2, 5, 7, 11)
     )
+
+
+@pytest.mark.parametrize(
+    "key_cols, keys, partition_by, want",
+    [
+        (["c"], [(None,)], None, []),
+        (["k", "c"], [("b0", None)], None, [("b1", 2, None)]),
+        (["k"], [("b0",)], ["k"], [("b1", 2, None)]),
+    ],
+    ids=["null_key", "two_col_key_one_null", "identity_partition_key"],
+)
+def test_iceberg_streaming_source_equality_deletes_match_batch(
+    spark, tmp_path, key_cols, keys, partition_by, want
+):
+    """Equality deletes are matched on the resolved columns, as in the
+    batch scan: a file that predates column c reads it as NULL, which a
+    NULL delete key matches, and an identity partition column (not
+    stored in the file) matches its manifest value. The stream surfaces
+    exactly the rows read_iceberg_increment returns."""
+    import pyspark.sql.types as T
+
+    from htrtf_spark.sources import iceberg as I
+    from htrtf_spark.sources import iceberg_stream
+
+    iceberg_stream.register(spark)
+    loc = str(tmp_path / "eqnull_src")
+    base = I.write_iceberg_table(
+        spark.createDataFrame([("a0", 0)], "k string, v int"), loc,
+        partition_by=partition_by,
+    )
+    I.append_iceberg_table(
+        spark.createDataFrame([("b0", 1), ("b1", 2)], "k string, v int"), loc
+    )
+    cur = I.current_metadata(loc)
+    fields = I._spark_schema(I._schema_by_id(cur, cur["current-schema-id"]))
+    I.evolve_iceberg_schema(
+        loc, T.StructType(fields.fields + [T.StructField("c", T.StringType())])
+    )
+    key_schema = ", ".join(f"{c} string" for c in key_cols)
+    I.delete_iceberg_rows(
+        spark.createDataFrame(keys, key_schema), loc, key_cols
+    )
+
+    out_dir = str(tmp_path / "eqnull_out")
+    q = (
+        spark.readStream.format("htrtf_iceberg")
+        .option("location", loc)
+        .option("startingSequence", str(base))
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "eqnull_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("k", "v", "c").collect())
+
+    assert rows(I.read_iceberg_increment(spark, loc, base)) == want
+    got = spark.read.schema("k string, v int, c string").parquet(out_dir)
+    assert rows(got) == want
