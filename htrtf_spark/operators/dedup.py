@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from htrtf_spark.operators.textstats import tokens
+
 DEFAULT_NGRAM = 3
 DEFAULT_MINHASHES = 8
 DEFAULT_BAND_WIDTH = 2
@@ -62,10 +64,6 @@ def release_caches() -> int:
         except Exception:  # session already stopped — nothing to free
             pass
     return n
-
-
-def tokens(text_col: str) -> F.Column:
-    return F.filter(F.split(text_col, " "), lambda x: x != F.lit(""))
 
 
 def word_ngrams(text_col: str, n: int = DEFAULT_NGRAM) -> F.Column:

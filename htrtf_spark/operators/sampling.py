@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from htrtf_spark.operators.dedup import portable_token_hash
+from htrtf_spark.operators.textstats import token_count
 
 
 def sample_bucket_bp(key_col, seed: int = 42) -> F.Column:
@@ -119,13 +120,7 @@ def pack_documents(
     # default: whitespace tokens; pass token_expr (a Column, e.g.
     # operators.bpe.bpe_token_count(text_col)) to budget in REAL
     # tokenizer units instead
-    toks = (
-        token_expr
-        if token_expr is not None
-        else F.size(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-        )
-    )
+    toks = token_expr if token_expr is not None else token_count(text_col)
     bucket = F.pmod(
         portable_token_hash(F.col(id_col).cast("string")), n_buckets
     ).cast("int")

@@ -220,12 +220,12 @@ def _dot(a, b):
     )
 
 
-def _norm(a):
+def norm(a):
     return F.sqrt(_dot(a, a))
 
 
 def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return _dot(a, b) / (norm(a) * norm(b))
 
 
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:

@@ -1,6 +1,12 @@
-"""Text-analysis column builders (JVM-side, codegen'd — zero Python):
-token counting, quality scoring, language-ID heuristic, rolling-hash
-fingerprinting. The driver-gate wrappers live in queries/textops.py.
+"""Text-analysis column builders (JVM-side, codegen'd — zero Python).
+This module is the one implementation of the text primitives every
+gate, operator and job calls: the canonical clean (``clean_text``, run
+by gates q18 and q64; ``fingerprint``, q22), the token split
+(``tokens``), the stopword list and the quality rule (``stop_count``,
+``keeps_quality``: q77, q101 and jobs/build_training_set.py), lang-ID
+(``langid_pred``, q21), plus token counting, quality scoring and
+rolling-hash fingerprinting. The gate wrappers live in
+queries/textops.py and queries/textops2.py.
 """
 
 from __future__ import annotations
@@ -12,19 +18,46 @@ from htrtf_spark import charset as cs
 
 STOPWORDS = ["the", "a", "and", "of", "for", "with", "over"]
 
-_NEG = cs.CHARSET_FILTER_PATTERN
-
 
 def clean_text(col) -> F.Column:
     """Charset projection + whitespace canonicalization (the SQL-
-    expressible core of the extraction spec) as a JVM expression."""
+    expressible core of the extraction spec, ``oracle._finish``) as a
+    JVM expression. Whitespace is the spec's explicit class, not Java's
+    ``\\s``, which misses U+0085, U+001C..U+001F and the Unicode spaces."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.regexp_replace(c, _NEG, ""), r"\s+", " "))
+    return F.trim(
+        F.regexp_replace(
+            F.regexp_replace(c, cs.CHARSET_FILTER_PATTERN, ""), cs.WS_RUN_PATTERN, " "
+        )
+    )
+
+
+def tokens(col) -> F.Column:
+    """The space-split token array (empty pieces dropped)."""
+    return F.filter(F.split(col, " "), lambda x: x != F.lit(""))
 
 
 def token_count(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.filter(F.split(c, " "), lambda x: x != F.lit("")))
+    return F.size(tokens(col))
+
+
+def stop_count(col) -> F.Column:
+    """Number of tokens that are STOPWORDS."""
+    return F.size(F.filter(tokens(col), lambda x: x.isin(*STOPWORDS)))
+
+
+def stop_ratio_bp(n_stop, n_tokens) -> F.Column:
+    """ROUND(n_stop * 10^4 / n_tokens) as BIGINT; NULL when n_tokens is 0."""
+    return F.round(n_stop * 10000.0 / n_tokens).cast("long")
+
+
+def keeps_quality(n_tokens, n_stop, min_tokens: int, max_stop_ratio_bp: int) -> F.Column:
+    """The training-set quality rule over token and stopword counts. A
+    token-less row has a NULL ratio, so it is dropped even at
+    ``min_tokens=0``."""
+    return (n_tokens >= min_tokens) & (
+        stop_ratio_bp(n_stop, n_tokens) <= max_stop_ratio_bp
+    )
 
 
 def bpe_ish_token_count(col) -> F.Column:
@@ -38,21 +71,12 @@ def bpe_ish_token_count(col) -> F.Column:
     return F.size(F.filter(pieces, lambda x: x != F.lit("")))
 
 
-def stopword_ratio_bp(col) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.filter(F.split(c, " "), lambda x: x != F.lit(""))
-    n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
-    return F.round(n_stop * F.lit(10000.0) / F.greatest(F.size(toks), F.lit(1))).cast(
-        "long"
-    )
-
-
 def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document quality feature table (length / punct / stopword /
     type-token ratios — the boilerplate-ish quality heuristics a
     training-data pipeline filters on)."""
     c = F.col(text_col)
-    toks = F.filter(F.split(c, " "), lambda x: x != F.lit(""))
+    toks = tokens(c)
     n_tok = F.size(toks)
     n_chars = F.length(c)
     n_alnum = F.length(F.regexp_replace(c, r"[^A-Za-z0-9]", ""))
@@ -68,7 +92,8 @@ def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.round(n_punct * F.lit(10000.0) / F.greatest(n_chars, F.lit(1)))
         .cast("long")
         .alias("punct_ratio_bp"),
-        stopword_ratio_bp(text_col).alias("stop_ratio_bp"),
+        # 0, not NULL, for a token-less document
+        stop_ratio_bp(stop_count(c), F.greatest(n_tok, F.lit(1))).alias("stop_ratio_bp"),
         F.round(
             F.length(c) * F.lit(100.0) / F.greatest(n_tok, F.lit(1))
         ).cast("long").alias("avg_token_len_cp"),
@@ -94,8 +119,6 @@ def text_density_bp(col) -> F.Column:
     the classic boilerplate heuristic (low density = chrome/markup-heavy;
     the north star's text-density counterpart of link density). JVM-only
     expression; NULL raw or empty raw yields NULL."""
-    from htrtf_spark import charset as cs
-
     stripped = F.trim(
         F.regexp_replace(
             F.regexp_replace(col, cs.TAG_STRIP_PATTERN, " "), cs.WS_RUN_PATTERN, " "
@@ -118,7 +141,7 @@ def rolling_fingerprints(
     """Rolling window fingerprints: md5 per token window (the
     'document fingerprinting' primitive for partial-overlap detection).
     Returns (id, win_idx, fp)."""
-    toks = F.filter(F.split(text_col, " "), lambda x: x != F.lit(""))
+    toks = tokens(text_col)
     # zero-token docs emit NO windows: md5('') rows would make every
     # empty doc "overlap" every other one
     df = df.filter(F.size(toks) > 0)
@@ -164,7 +187,7 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ratio. One narrow projection — JVM higher-order functions, no
     shuffle, no Python; composes with ``stratified_sample`` to drop
     high-repetition strata the way the Gopher rules do."""
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
+    w = tokens(text_col)
 
     def top_ratio(arr):
         # max count of any value / size — via sort + adjacent run-length
@@ -339,9 +362,7 @@ def tfidf_topk_terms(
     if n_docs is not None and int(n_docs) < 1:
         raise ValueError(f"n_docs must be >= 1, got {n_docs}")
     n = int(n_docs) if n_docs is not None else df.count()
-    toks = F.filter(
-        F.split(F.col(text_col), " "), lambda x: x != F.lit("")
-    )
+    toks = tokens(text_col)
     tf = (
         df.select(F.col(id_col).alias("id"), F.explode(toks).alias("term"))
         .groupBy("id", "term")

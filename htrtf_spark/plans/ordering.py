@@ -5,10 +5,9 @@ stable (conv_id, turn_idx) ordering, and long conversations must not
 create straggler tasks. The reference's analog of the skew problem is
 very wide images, solved by width chunking
 (/root/reference/Modules/layers.py:345-369); ours is conversation-salted
-hash repartitioning: each conversation is spread over at most
-``salt_factor`` partitions, so a 10^6-turn whale becomes ``salt_factor``
-bounded tasks instead of one straggler, while small conversations stay
-collocated.
+hash repartitioning: each conversation is spread over at most 8
+partitions, so a 10^6-turn whale becomes 8 bounded tasks instead of one
+straggler, while small conversations stay collocated.
 
 Ordering NEVER comes from partition/file iteration order (the reference's
 shuffle_set, /root/reference/Modules/utils.py:264-307, shows order is an
@@ -35,16 +34,15 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     plan stays shuffle-free where the data is already parallel — the
     condition adapts to the input, not to a local constant.
 
-    Probe caveat: ``df.rdd`` under AQE may materialize upstream shuffle
-    stages eagerly when the input plan already contains an exchange or
-    an unpopulated cache. Call sites therefore pass scan-rooted frames
-    or frames whose materialization is imminent anyway (e.g. a
-    persisted extraction consumed in the same job); the except guard
-    below covers inputs where the probe is unsupported entirely
-    (streaming plans)."""
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    The guard never runs a job. Its split probe, ``df.rdd``, would make
+    AQE run every query stage below the plan's root, so it only probes a
+    plan without one: an input whose physical plan holds an exchange
+    (its partitioning is already set) or a cached relation is returned
+    unchanged. A streaming plan, which cannot be probed, is too."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
     try:
+        if _has_query_stage(df._jdf.queryExecution().executedPlan()):
+            return df
         nparts = df.rdd.getNumPartitions()
     except Exception:
         return df
@@ -53,13 +51,29 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     return df.repartition(cores, *[F.col(c) for c in key_cols])
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int, salt_factor: int = 8
-) -> DataFrame:
-    """Hash-repartition on (conv_id, salt) where salt ∈ [0, salt_factor)
-    is derived deterministically from turn_idx — stateless per-row stages
+def _has_query_stage(plan) -> bool:
+    """True when physical ``plan`` holds an exchange or a cached-relation
+    scan: the nodes AQE runs as separate jobs before the plan's RDD
+    exists."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.endswith("Exchange") or name == "InMemoryTableScan":
+            return True
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Hash-repartition on (conv_id, salt) where salt ∈ [0, 8) is derived
+    deterministically from turn_idx — stateless per-row stages
     downstream see balanced partitions even with whale conversations."""
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_factor))
+    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(8))
     return df.repartition(num_partitions, F.col("conv_id"), salt)
 
 

@@ -32,7 +32,6 @@ from htrtf_spark.schema import check_input_schema
 def extract_turns(
     df: DataFrame,
     num_partitions: int | None = None,
-    salt_factor: int = 8,
     check_schema: bool = True,
 ) -> DataFrame:
     """Run main-content extraction over a transcripts DataFrame.
@@ -52,7 +51,7 @@ def extract_turns(
     if num_partitions:
         from htrtf_spark.plans.ordering import salted_repartition
 
-        cols = salted_repartition(cols, num_partitions, salt_factor)
+        cols = salted_repartition(cols, num_partitions)
     return cols.mapInArrow(extract_map_in_arrow, schema=EXTRACTED_DDL)
 
 
@@ -84,13 +83,13 @@ def ordered_extract(df: DataFrame, check_schema: bool = True) -> DataFrame:
     return with_turn_rank(extract_turns(df, check_schema=check_schema))
 
 
-def conversation_stats(extracted: DataFrame, salt_factor: int = 16) -> DataFrame:
+def conversation_stats(extracted: DataFrame) -> DataFrame:
     """Per-conversation rollup via two-phase salted aggregation: partial
     agg on (conv_id, salt) bounds any whale conversation's contribution to
     one task per salt, then a tiny final agg merges salts — the groupBy
     analog of the reference's width chunking
     (/root/reference/Modules/layers.py:345-369)."""
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_factor))
+    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(16))  # 16 salts per conv
     partial = (
         extracted.groupBy("conv_id", salt.alias("_salt"))
         .agg(

@@ -10,6 +10,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from htrtf_spark.operators import dedup as D
+from htrtf_spark.operators.textstats import tokens
 from htrtf_spark.queries.util import t
 
 N_MINHASH = D.DEFAULT_MINHASHES
@@ -220,8 +221,9 @@ def q57_minhash_estimate(spark, sf_dir):
 
     docs = t(spark, sf_dir, "documents")
     # sig feeds the 4 band projections inside lsh_candidates plus both
-    # join sides below — cache or the signature aggregation runs ~6x
-    sig = D.minhash_signatures(docs, "doc_id", "text").cache()
+    # join sides below — cache or the signature aggregation runs ~6x;
+    # registered so release_caches() frees it
+    sig = D._register_cache(D.minhash_signatures(docs, "doc_id", "text").cache())
     cand = D.lsh_candidates(sig)
     sa = sig.select(F.col("id").alias("id_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_MINHASH)])
     sb = sig.select(F.col("id").alias("id_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_MINHASH)])
@@ -602,13 +604,7 @@ def q93_benchmark_contamination(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     bench = d.filter("doc_id % 40 = 0").select(
         F.col("doc_id").alias("bench_id"),
-        F.array_join(
-            F.slice(
-                F.filter(F.split("text", " "), lambda x: x != F.lit("")),
-                1, 12,
-            ),
-            " ",
-        ).alias("text"),
+        F.array_join(F.slice(tokens("text"), 1, 12), " ").alias("text"),
     )
     out = D.benchmark_contamination(
         d, bench, id_col="doc_id", text_col="text",

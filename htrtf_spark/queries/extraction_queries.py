@@ -896,13 +896,12 @@ QUERIES["q91_streaming_source_extract"] = (
 
 def q92_layout_segmentation(spark, sf_dir):
     from htrtf_spark.operators.layout import assemble_documents
+    from htrtf_spark.operators.textstats import tokens
 
     d = t(spark, sf_dir, "documents")
     words = d.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda x: x != F.lit(""))
-        ).alias("i", "w"),
+        F.posexplode(tokens("text")).alias("i", "w"),
     )
     blocks = words.select(
         "doc_id",

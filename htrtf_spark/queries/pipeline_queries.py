@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from htrtf_spark import charset as cs
+from htrtf_spark.operators.textstats import tokens
 from htrtf_spark.plans.pipeline import conversation_stats, extract_turns, ordered_extract
 from htrtf_spark.queries.util import t
 from htrtf_spark.sources.transcripts import events_as_transcripts
@@ -47,9 +48,7 @@ _KEYWORDS = ["spark", "window", "vector", "shuffle"]
 def q48_keyword_spotting(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     kw = spark.createDataFrame([(k,) for k in _KEYWORDS], "word string")
-    words = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
+    words = d.select("doc_id", F.explode(tokens("text")).alias("word"))
     return (
         words.join(F.broadcast(kw), "word")
         .groupBy("doc_id", "word")
@@ -73,7 +72,7 @@ GROUP BY doc_id, word
 def q49_conversation_stats_salted(spark, sf_dir):
     tr = events_as_transcripts(spark, sf_dir)
     ex = extract_turns(tr)
-    return conversation_stats(ex, salt_factor=16).orderBy("conv_id")
+    return conversation_stats(ex).orderBy("conv_id")
 
 
 _Q49_SQL = f"""

@@ -153,12 +153,10 @@ SELECT user_id, last_nonclick_event_id FROM (
 
 
 def q55_term_df_topk(spark, sf_dir):
+    from htrtf_spark.operators.textstats import tokens
+
     d = t(spark, sf_dir, "documents")
-    words = d.select(
-        F.explode(
-            F.array_distinct(F.filter(F.split("text", " "), lambda x: x != F.lit("")))
-        ).alias("word")
-    )
+    words = d.select(F.explode(F.array_distinct(tokens("text"))).alias("word"))
     counts = words.groupBy("word").agg(F.count("*").alias("doc_freq"))
     # top-20 of a web-scale vocabulary must never be a global window sort
     # (10^8 terms through one task): orderBy+limit compiles to

@@ -94,16 +94,10 @@ FROM x GROUP BY COALESCE(et, '<none>') ORDER BY et_filled
 
 
 def q64_corpus_cer(spark, sf_dir):
-    from htrtf_spark import charset as cs
+    from htrtf_spark.operators.textstats import clean_text
 
     d = t(spark, sf_dir, "documents")
-    clean = F.trim(
-        F.regexp_replace(
-            F.regexp_replace("text", cs.CHARSET_FILTER_PATTERN, ""),
-            cs.WS_RUN_PATTERN,
-            " ",
-        )
-    )
+    clean = clean_text("text")
     # DuckDB levenshtein counts BYTES while Spark counts CHARACTERS, so
     # the distance is computed on an ASCII-folded form (every non-ASCII
     # char -> '?') where bytes == chars in both engines.
@@ -120,8 +114,6 @@ def q64_corpus_cer(spark, sf_dir):
 
 
 def _q64_sql() -> str:
-    from htrtf_spark import charset as cs
-
     from htrtf_spark.queries.util import clean_sql
 
     clean = clean_sql("text")

@@ -2,21 +2,15 @@
 cleanup, token stats, quality scoring, language-ID heuristic, document
 fingerprinting (the training-data-pipeline ops; also the SQL-expressible
 half of the extraction semantics — charset projection P3 + whitespace
-canonicalization F4/F5 of SURVEY.md §2)."""
+canonicalization F4/F5 of SURVEY.md §2). Each gate runs the
+operators/textstats.py primitive its DuckDB SQL restates."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from htrtf_spark import charset as cs
+from htrtf_spark.operators import textstats as TS
 from htrtf_spark.queries.util import clean_sql, bp, t
-
-# The exact charset-projection regex of the extraction spec, embedded in
-# both engines (Java regex + RE2 agree on this escaped char class).
-_NEG = cs.CHARSET_FILTER_PATTERN
-_NEG_SQL = _NEG.replace("'", "''")
-
-_STOPWORDS = ["the", "a", "and", "of", "for", "with", "over"]
 
 # --------------------------------------------------------------------- q18
 
@@ -25,9 +19,7 @@ def q18_charset_clean(spark, sf_dir):
     """Charset projection + whitespace canonicalization, JVM-side
     (codegen'd regexp_replace — no Python)."""
     d = t(spark, sf_dir, "documents")
-    clean = F.trim(
-        F.regexp_replace(F.regexp_replace("text", _NEG, ""), cs.WS_RUN_PATTERN, " ")
-    )
+    clean = TS.clean_text("text")
     return d.select("doc_id", clean.alias("clean_text"), F.length(clean).alias("n_chars_clean"))
 
 
@@ -43,7 +35,7 @@ FROM documents
 
 def q19_token_stats(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
+    toks = TS.tokens("text")
     return d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -67,9 +59,8 @@ FROM documents
 
 def q20_quality_score(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    word = F.explode(F.split("text", " ")).alias("word")
-    ex = d.select("doc_id", word).filter(F.col("word") != "")
-    stop = F.sum(F.col("word").isin(*_STOPWORDS).cast("long"))
+    ex = d.select("doc_id", F.explode(TS.tokens("text")).alias("word"))
+    stop = F.sum(F.col("word").isin(*TS.STOPWORDS).cast("long"))
     return (
         ex.groupBy("doc_id")
         .agg(
@@ -87,7 +78,7 @@ def q20_quality_score(spark, sf_dir):
     )
 
 
-_q20_stoplist = ", ".join(f"'{w}'" for w in _STOPWORDS)
+_q20_stoplist = ", ".join(f"'{w}'" for w in TS.STOPWORDS)
 _Q20_SQL = f"""
 WITH ex AS (
   SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word
@@ -111,14 +102,7 @@ FROM agg
 
 def q21_langid(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    pred = (
-        F.when(padded.contains(" the ") | padded.contains(" a "), "en")
-        .when(padded.contains(" der ") | padded.contains(" und "), "de")
-        .when(padded.contains(" le ") | padded.contains(" et "), "fr")
-        .otherwise("unknown")
-    )
-    return d.select("doc_id", "lang", pred.alias("lang_pred"))
+    return d.select("doc_id", "lang", TS.langid_pred("text").alias("lang_pred"))
 
 
 _Q21_SQL = """
@@ -140,10 +124,7 @@ FROM documents
 
 def q22_fingerprint(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    clean = F.trim(
-        F.regexp_replace(F.regexp_replace("text", _NEG, ""), cs.WS_RUN_PATTERN, " ")
-    )
-    return d.select("doc_id", F.md5(clean).alias("fingerprint"))
+    return d.select("doc_id", TS.fingerprint("text").alias("fingerprint"))
 
 
 _Q22_SQL = f"""
@@ -160,8 +141,7 @@ FROM documents
 def q23_distinct_vocab(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
+        d.select(F.explode(TS.tokens("text")).alias("word"))
         .distinct()
         .orderBy("word")
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from htrtf_spark.operators import textstats as TS
 from htrtf_spark.queries.util import clean_sql, t
 
 # thresholds chosen so the gate EXERCISES the filter on the driver
@@ -58,25 +59,16 @@ def _quality_dedup(cleaned, extra_cols: tuple = ()):
     training_corpus and training_corpus_stripped and could drift).
     ``extra_cols`` are audit-count columns carried through verbatim
     and emitted as BIGINT before ``fp``."""
-    from htrtf_spark.queries.textops import _STOPWORDS
-
-    toks = F.filter(F.split("clean_text", " "), lambda x: x != F.lit(""))
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
+    n_tokens, n_stop = F.col("n_tokens"), F.col("n_stop")
     quality = cleaned.select(
         "_id",
         "clean_text",
         *extra_cols,
-        F.size(toks).alias("n_tokens"),
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).alias(
-            "n_stop"
-        ),
+        TS.token_count("clean_text").alias("n_tokens"),
+        TS.stop_count("clean_text").alias("n_stop"),
     )
     kept = quality.filter(
-        (F.col("n_tokens") >= MIN_TOKENS)
-        & (
-            F.round(F.col("n_stop") * 10000.0 / F.col("n_tokens")).cast("long")
-            <= MAX_STOP_RATIO_BP
-        )
+        TS.keeps_quality(n_tokens, n_stop, MIN_TOKENS, MAX_STOP_RATIO_BP)
     )
     fp = F.md5("clean_text")
     w = Window.partitionBy(fp)
@@ -87,9 +79,7 @@ def _quality_dedup(cleaned, extra_cols: tuple = ()):
         .select(
             F.col("_id").alias("doc_id"),
             "n_tokens",
-            F.round(F.col("n_stop") * 10000.0 / F.col("n_tokens"))
-            .cast("long")
-            .alias("stop_ratio_bp"),
+            TS.stop_ratio_bp(n_stop, n_tokens).alias("stop_ratio_bp"),
             *[F.col(c).cast("long").alias(c) for c in extra_cols],
             "fp",
         )
@@ -121,7 +111,7 @@ _STRIP_L = 50  # same knob as q96/q97 (queries/dedup.py _SUBSTR_L)
 
 def training_corpus_stripped(
     docs, id_col: str = "doc_id", text_col: str = "text",
-    min_len: int = _STRIP_L, persist: bool = True,
+    min_len: int = _STRIP_L,
 ):
     """documents(id, text) → extraction → strip repeated substrings →
     quality filter → keep-first dedup. Output adds ``removed_chars``
@@ -129,28 +119,24 @@ def training_corpus_stripped(
 
     Plan shape: the extraction is narrow but feeds MULTIPLE consumers
     — the substring operator's heavy-gram detection pass, its window
-    chain, and the strip join — so by default the extracted corpus is
-    persisted (MEMORY_AND_DISK, registered with the dedup cache
-    registry for release_caches()) instead of re-running the
-    extraction stage once per consumer (review r6; the memory notes'
-    recompute-heavy-narrow-transform antipattern). At warehouse scale
-    the production form materializes extraction to a table first
-    (jobs/build_training_set.py) and ``persist=False`` composes over
-    that; quality is a narrow projection over the stripped text; dedup
-    is one fingerprint-window shuffle."""
+    chain, and the strip join — so the extracted corpus is persisted
+    (MEMORY_AND_DISK, registered with the dedup cache registry for
+    release_caches()) instead of re-running the extraction stage once
+    per consumer. At warehouse scale the production form materializes
+    extraction to a table first (jobs/build_training_set.py); quality
+    is a narrow projection over the stripped text; dedup is one
+    fingerprint-window shuffle."""
+    from pyspark import StorageLevel
+
     from htrtf_spark.operators.dedup import _register_cache
     from htrtf_spark.operators.substr_dedup import (
         repeated_substring_spans,
         strip_repeated_spans,
     )
 
-    cleaned = _extract_clean(docs, id_col, text_col)
-    if persist:
-        from pyspark import StorageLevel
-
-        cleaned = _register_cache(
-            cleaned.persist(StorageLevel.MEMORY_AND_DISK)
-        )
+    cleaned = _register_cache(
+        _extract_clean(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     spans = repeated_substring_spans(
         cleaned, "_id", "clean_text", min_len=min_len
     )
@@ -164,9 +150,8 @@ def q101_training_corpus_stripped(spark, sf_dir):
 
 def _q101_sql() -> str:
     from htrtf_spark.queries.dedup import substr_spans_cte, substr_strip_cte
-    from htrtf_spark.queries.textops import _STOPWORDS
 
-    stoplist = ", ".join(f"'{w}'" for w in _STOPWORDS)
+    stoplist = ", ".join(f"'{w}'" for w in TS.STOPWORDS)
     return f"""
 WITH cleaned AS (
   SELECT doc_id, clean_text FROM (
@@ -211,9 +196,7 @@ FROM ranked WHERE doc_id = keep
 
 
 def _q77_sql() -> str:
-    from htrtf_spark.queries.textops import _STOPWORDS
-
-    stoplist = ", ".join(f"'{w}'" for w in _STOPWORDS)
+    stoplist = ", ".join(f"'{w}'" for w in TS.STOPWORDS)
     return f"""
 WITH cleaned AS (
   SELECT doc_id, {clean_sql("text")} AS clean_text FROM documents

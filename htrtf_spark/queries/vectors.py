@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from htrtf_spark.operators.simsearch import cosine, norm
 from htrtf_spark.queries.util import t
 
 TOPK = 10
@@ -24,14 +25,6 @@ def _vec(spark, sf_dir):
     return e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"), "label")
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _cos_bp(a, b):
-    cos = _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-    return F.round(cos * 10000).cast("long")
-
 # --------------------------------------------------------------------- q28
 # Brute-force cosine top-k vs a fixed query vector (vec_id = 0).
 
@@ -42,7 +35,10 @@ def q28_cosine_topk(spark, sf_dir):
     scored = (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .select("vec_id", _cos_bp(F.col("v"), F.col("qv")).alias("sim_bp"))
+        .select(
+            "vec_id",
+            F.round(cosine(F.col("v"), F.col("qv")) * 10000).cast("long").alias("sim_bp"),
+        )
     )
     return scored.orderBy(F.desc("sim_bp"), F.asc("vec_id")).limit(TOPK)
 
@@ -96,7 +92,7 @@ WHERE a.vec_id < b.vec_id
 
 def q30_label_vector_stats(spark, sf_dir):
     e = _vec(spark, sf_dir)
-    norm_bp = F.round(F.sqrt(_dot(F.col("v"), F.col("v"))) * 10000).cast("long")
+    norm_bp = F.round(norm(F.col("v")) * 10000).cast("long")
     return (
         e.groupBy("label")
         .agg(F.count("*").alias("n"), F.sum(norm_bp).alias("sum_norm_bp"))

@@ -48,8 +48,8 @@ def build_training_set(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from htrtf_spark.operators.textstats import keeps_quality, stop_count, token_count
     from htrtf_spark.plans.pipeline import extract_turns
-    from htrtf_spark.queries.textops import _STOPWORDS
     from htrtf_spark.sources.iceberg import table_exists, write_iceberg_table
 
     if sample_rates_bp and mixture_tau is not None:
@@ -80,24 +80,18 @@ def build_training_set(
     # extraction stage just to count
     n_turns = transcripts.count()
 
-    toks = F.filter(F.split("extracted_text", " "), lambda x: x != F.lit(""))
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
     quality = extracted.filter(F.col("reject_reason").isNull()).select(
         "conv_id",
         "turn_idx",
         "role",
         "mode",
         "extracted_text",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).alias(
-            "n_stop"
-        ),
+        token_count("extracted_text").alias("n_tokens"),
+        stop_count("extracted_text").alias("n_stop"),
     )
     kept = quality.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (
-            F.round(F.col("n_stop") * 10000.0 / F.col("n_tokens")).cast("long")
-            <= max_stop_ratio_bp
+        keeps_quality(
+            F.col("n_tokens"), F.col("n_stop"), min_tokens, max_stop_ratio_bp
         )
     )
     if max_link_density_bp is not None:

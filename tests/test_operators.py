@@ -177,6 +177,96 @@ def test_rolling_fingerprints(spark, docs):
     assert a == b
 
 
+def test_clean_text_is_the_oracle_finish_on_unicode_whitespace(spark):
+    """textstats.clean_text is the JVM form of the extraction spec's
+    charset projection + whitespace canonicalization (oracle._finish),
+    and fingerprint is the md5 of it — on every whitespace class Java's
+    \\s misses as well as the ASCII ones."""
+    import hashlib
+
+    from htrtf_spark import oracle
+
+    probes = [
+        "a\u00a0b", "a\u001cb", "a\u0085b", "a\u2028b", "a\u3000b",
+        " \t\u3000 mixed \u0085\u00a0\u2028 run\u001c\u001f ",
+        "\u3000\u2028leading and trailing\u0085\u00a0",
+        "x\r\n\x0by  z", "plain text", "",
+    ]
+    df = spark.createDataFrame(list(enumerate(probes)), "i int, s string")
+    rows = df.select(
+        "i",
+        textstats.clean_text("s").alias("clean"),
+        textstats.fingerprint("s").alias("fp"),
+    ).collect()
+    assert len(rows) == len(probes)
+    for r in rows:
+        want = oracle._finish(probes[r["i"]])
+        assert r["clean"] == want, (probes[r["i"]], r["clean"], want)
+        assert r["fp"] == hashlib.md5(want.encode("utf-8")).hexdigest()
+
+
+def test_one_home_per_text_primitive():
+    """Structural guard: under htrtf_spark/ and jobs/, the space-split
+    token filter, a stopword list literal and a JVM regexp_replace on the
+    charset-projection pattern are spelled only in operators/textstats.py;
+    queries/vectors.py defines no dot product of its own; jobs/ import
+    nothing from htrtf_spark.queries (a gate module)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(textstats.__file__).resolve().parents[2]
+    stop = set(textstats.STOPWORDS)
+
+    def _name(node):
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    def _f_call(node, fn):
+        f = node.func
+        return isinstance(f, ast.Attribute) and f.attr == fn and _name(f.value) == "F"
+
+    found = []
+    files = sorted((root / "htrtf_spark").rglob("*.py")) + sorted((root / "jobs").rglob("*.py"))
+    for path in files:
+        tree = ast.parse(path.read_text())
+        # names bound to the pattern itself (e.g. _NEG = cs.CHARSET_FILTER_PATTERN)
+        pattern = {"CHARSET_FILTER_PATTERN"} | {
+            tgt.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign) and _name(node.value) == "CHARSET_FILTER_PATTERN"
+            for tgt in node.targets
+            if isinstance(tgt, ast.Name)
+        }
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _f_call(node, "split"):
+                sep = node.args[1] if len(node.args) > 1 else None
+                if isinstance(sep, ast.Constant) and sep.value == " ":
+                    found.append(("token split", rel))
+            if isinstance(node, ast.Call) and _f_call(node, "regexp_replace"):
+                if any(_name(a) in pattern for a in node.args):
+                    found.append(("charset clean", rel))
+            if isinstance(node, (ast.List, ast.Tuple, ast.Set)):
+                words = {e.value for e in node.elts if isinstance(e, ast.Constant)}
+                if len(words & stop) >= 3:
+                    found.append(("stopword list", rel))
+            if rel.startswith("jobs/") and isinstance(node, (ast.Import, ast.ImportFrom)):
+                mods = [node.module or ""] if isinstance(node, ast.ImportFrom) else [
+                    a.name for a in node.names
+                ]
+                if any(m.startswith("htrtf_spark.queries") for m in mods):
+                    found.append(("gate import", rel))
+            if rel == "htrtf_spark/queries/vectors.py":
+                if isinstance(node, ast.FunctionDef) and "dot" in node.name:
+                    found.append(("dot product", rel))
+                if isinstance(node, ast.Call) and _f_call(node, "zip_with"):
+                    found.append(("dot product", rel))
+    assert sorted(set(found)) == [
+        ("charset clean", "htrtf_spark/operators/textstats.py"),
+        ("stopword list", "htrtf_spark/operators/textstats.py"),
+        ("token split", "htrtf_spark/operators/textstats.py"),
+    ]
+
+
 def test_multimodal_plumbing(spark):
     media = multimodal.synth_media(spark, n=30, seed=1)
     feats = multimodal.extract_features(media, fake=True).collect()

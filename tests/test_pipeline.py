@@ -26,7 +26,7 @@ def test_pipeline_byte_exact_vs_oracle(spark):
     golden = _sorted_pdf(oracle.extract_frame(src_pdf))
 
     df = spark.createDataFrame(src_pdf, schema=TRANSCRIPTS_SCHEMA)
-    out = extract_turns(df, num_partitions=8, salt_factor=4)
+    out = extract_turns(df, num_partitions=8)
     got = _sorted_pdf(out.toPandas())
 
     assert len(got) == len(golden) == len(src_pdf)  # nothing silently dropped
@@ -46,12 +46,12 @@ def test_pipeline_byte_exact_vs_oracle(spark):
 
 
 def test_partitioning_invariance(spark):
-    """Output is identical whatever the parallelism/salting — ordering comes
-    from keys, never from partition layout."""
+    """Output is identical whatever the parallelism — ordering comes from
+    keys, never from partition layout."""
     src_pdf = synth.synth_pandas(n_convs=20, seed=7)
     df = spark.createDataFrame(src_pdf, schema=TRANSCRIPTS_SCHEMA)
-    a = _sorted_pdf(extract_turns(df, num_partitions=2, salt_factor=1).toPandas())
-    b = _sorted_pdf(extract_turns(df, num_partitions=16, salt_factor=8).toPandas())
+    a = _sorted_pdf(extract_turns(df, num_partitions=2).toPandas())
+    b = _sorted_pdf(extract_turns(df, num_partitions=16).toPandas())
     pd.testing.assert_frame_equal(a, b)
 
 

@@ -216,7 +216,11 @@ def test_q103_top_domains_local_topk(spark):
 def test_fan_out_fires_only_on_underparallel_scans(spark):
     """fan_out repartitions a single-split input to defaultParallelism
     and is a structural no-op (same plan object) on an input that is
-    already at least as parallel as the session."""
+    already at least as parallel as the session. It decides from the
+    physical plan: an input that already holds an exchange (here an
+    aggregation) comes back unchanged, and no job is run to probe it."""
+    from pyspark.sql import functions as F
+
     from htrtf_spark.plans.ordering import fan_out
 
     cores = spark.sparkContext.defaultParallelism
@@ -226,6 +230,32 @@ def test_fan_out_fires_only_on_underparallel_scans(spark):
     assert fanned.rdd.getNumPartitions() == cores
     parallel = spark.range(1000).repartition(cores)
     assert fan_out(parallel, "id") is parallel  # no exchange added
+
+    sc = spark.sparkContext
+    agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    sc.setJobGroup("fan_out_staged", "fan_out on an aggregated frame")
+    try:
+        assert fan_out(agg, "k") is agg
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("fan_out_staged")) == []
+
+
+def test_q57_releases_its_signature_cache(spark):
+    """q57 caches its signature table through the dedup cache registry,
+    so release_caches() after the action leaves no persisted RDD behind."""
+    from htrtf_spark.operators.dedup import release_caches
+    from htrtf_spark.queries.dedup import q57_minhash_estimate
+
+    def persisted():  # ids only shrink by themselves (GC'd RDDs are cleaned)
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    q57_minhash_estimate(spark, SF_DIR).count()
+    made = persisted() - before
+    assert made  # the signature table was cached
+    release_caches()
+    assert not made & persisted()
 
 
 def test_redact_pii_masks_regex_chain_once(spark):
