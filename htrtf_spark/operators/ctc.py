@@ -204,14 +204,3 @@ def greedy_decode_logits(logprobs: np.ndarray) -> str:
     """Greedy path decode over [T, C]: argmax per frame → collapse."""
     ids = np.argmax(np.asarray(logprobs, dtype=np.float64), axis=1)
     return greedy_decode(ids)
-
-
-def decode_ids_map_in_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage over an array<int> column named ``ids``."""
-    for pdf in batches:
-        decoded = [greedy_decode(np.asarray(v)) for v in pdf["ids"]]
-        out = pdf.drop(columns=["ids"]).copy()
-        out["decoded"] = decoded
-        yield out

@@ -48,10 +48,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_join(
     spark: SparkSession, left_table: str, right_table: str, key: str
 ) -> DataFrame:

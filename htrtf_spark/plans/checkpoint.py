@@ -216,6 +216,8 @@ def run_extraction_checkpointed(
     staged = extracted.withColumn("_bucket", _bucket_col(n_buckets)).repartitionById(
         n_buckets, "_bucket"
     )
+    # Spark's writer, not the Iceberg layer's task-side pyarrow writer:
+    # staging goes through Hadoop FileSystem, so out_dir may be HDFS/s3a
     staged.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
     pass_wall_ms = max(int((time.monotonic() - t0) * 1000), 1)
 

@@ -12,6 +12,14 @@ appended data (the streaming sink's exactly-once trick): a crash
 between extract and commit replays the tick idempotently, and a crash
 after the commit is a recorded no-op.
 
+Decode, then write, in one pass: every write here (tick, first load,
+rebaseline) hands the extraction kernel to the Iceberg writer
+(``EXTRACT_KERNEL``), so each task runs the kernel and writes its
+parquet file in one Python function. The extracted rows never return
+to the JVM, and no Spark writer runs. The tasks return their files'
+records, and the driver makes ONE metadata commit per tick: data,
+processed-snapshot marker and the tick's metrics together.
+
 Contract: append-only ingest. Rows DELETED from already-processed
 source snapshots are not propagated (no CDC before/after images);
 deletes visible at the processed snapshot do apply to the new window.
@@ -31,10 +39,10 @@ TICK_METRICS_PROP = "htrtf.tick.last-metrics"
 def tick_metrics(dest_loc: str) -> dict | None:
     """The last tick's persisted throughput metrics (rows, wall_sec,
     rows_per_sec, processed_snapshot), or None if no tick has recorded
-    them yet. Written via a follow-up property commit AFTER the data
-    commit — the exactly-once MARKER is atomic with the data; metrics
-    are observability and may lag one tick after a crash (documented
-    tradeoff, same as native engines' metrics reporters)."""
+    them yet. They ride the tick's data commit, so they are atomic with
+    the data and the processed-snapshot marker and never lag a tick.
+    ``wall_sec`` runs from the tick's start until its files are
+    written, just before the commit."""
     from htrtf_spark.sources.iceberg import current_metadata
 
     props = current_metadata(dest_loc).get("properties", {})
@@ -42,22 +50,28 @@ def tick_metrics(dest_loc: str) -> dict | None:
     return json.loads(raw) if raw else None
 
 
-def _record_metrics(dest_loc: str, processed: int, rows: int, wall: float) -> None:
-    from htrtf_spark.sources.iceberg import set_table_properties
+def _tick_properties(processed: int, t0: float, tick: dict):
+    """The tick commit's properties, as a function of the written files'
+    records (``sources.iceberg._resolve_properties``): the
+    processed-snapshot marker and the tick's metrics. Also leaves the
+    row count in ``tick["rows"]`` for the caller."""
 
-    set_table_properties(
-        dest_loc,
-        {
-            TICK_METRICS_PROP: json.dumps(
-                {
-                    "processed_snapshot": processed,
-                    "rows": rows,
-                    "wall_sec": round(wall, 3),
-                    "rows_per_sec": round(rows / wall, 1) if wall > 0 else None,
-                }
-            )
-        },
-    )
+    def properties(files: list[dict]) -> dict[str, str]:
+        rows = sum(f["record_count"] for f in files)
+        wall = time.monotonic() - t0
+        tick["rows"] = rows
+        metrics = {
+            "processed_snapshot": processed,
+            "rows": rows,
+            "wall_sec": round(wall, 3),
+            "rows_per_sec": round(rows / wall, 1) if wall > 0 else None,
+        }
+        return {
+            SOURCE_SNAPSHOT_PROP: str(processed),
+            TICK_METRICS_PROP: json.dumps(metrics),
+        }
+
+    return properties
 
 
 def extract_increment_once(
@@ -87,7 +101,7 @@ def extract_increment_once(
     append-propagating — strict consistency for consumers that must
     not retain upstream-deleted rows. Compaction / rewrite-manifests
     replace snapshots never trigger it."""
-    from htrtf_spark.plans.pipeline import extract_turns
+    from htrtf_spark.plans.pipeline import EXTRACT_KERNEL, extraction_input
     from htrtf_spark.sources.iceberg import (
         ExpiredSnapshotError,
         _find_snapshot,
@@ -103,18 +117,18 @@ def extract_increment_once(
     )
 
     def _rebaseline(cur: int, reason: str) -> dict:
-        t0r = time.monotonic()
-        out = extract_turns(
-            read_iceberg_table(spark, source_loc, snapshot_id=cur)
-        )
+        tick: dict = {}
         overwrite_iceberg_table(
-            out, dest_loc, properties={SOURCE_SNAPSHOT_PROP: str(cur)}
+            extraction_input(
+                read_iceberg_table(spark, source_loc, snapshot_id=cur)
+            ),
+            dest_loc,
+            properties=_tick_properties(cur, time.monotonic(), tick),
+            kernel=EXTRACT_KERNEL,
         )
-        rows = _committed_added_records(dest_loc)
-        _record_metrics(dest_loc, cur, rows, time.monotonic() - t0r)
         return {
             "processed_snapshot": cur,
-            "rows": rows,
+            "rows": tick["rows"],
             "noop": False,
             "rebaselined": reason,
         }
@@ -122,19 +136,20 @@ def extract_increment_once(
     src_meta = current_metadata(source_loc)
     cur = src_meta["current-snapshot-id"]
     t0 = time.monotonic()
+    tick: dict = {}
 
     if not table_exists(dest_loc):
         # first tick: full load of the pinned current snapshot; the
         # processed-snapshot marker rides the CREATE commit itself
-        out = extract_turns(
-            read_iceberg_table(spark, source_loc, snapshot_id=cur)
-        )
         write_iceberg_table(
-            out, dest_loc, properties={SOURCE_SNAPSHOT_PROP: str(cur)}
+            extraction_input(
+                read_iceberg_table(spark, source_loc, snapshot_id=cur)
+            ),
+            dest_loc,
+            properties=_tick_properties(cur, t0, tick),
+            kernel=EXTRACT_KERNEL,
         )
-        rows = _committed_added_records(dest_loc)
-        _record_metrics(dest_loc, cur, rows, time.monotonic() - t0)
-        return {"processed_snapshot": cur, "rows": rows, "noop": False}
+        return {"processed_snapshot": cur, "rows": tick["rows"], "noop": False}
 
     props = current_metadata(dest_loc).get("properties", {})
     if SOURCE_SNAPSHOT_PROP not in props:
@@ -174,26 +189,10 @@ def extract_increment_once(
         if not auto_rebaseline:
             raise
         return _rebaseline(cur, str(exc))
-    out = extract_turns(inc)
     append_iceberg_table(
-        out, dest_loc, properties={SOURCE_SNAPSHOT_PROP: str(cur)}
+        extraction_input(inc),
+        dest_loc,
+        properties=_tick_properties(cur, t0, tick),
+        kernel=EXTRACT_KERNEL,
     )
-    # report rows from the committed snapshot's summary — out.count()
-    # here would re-run the whole incremental read + extraction a
-    # second time per tick (pure cost; the commit already counted)
-    rows = _committed_added_records(dest_loc)
-    _record_metrics(dest_loc, cur, rows, time.monotonic() - t0)
-    return {"processed_snapshot": cur, "rows": rows, "noop": False}
-
-
-def _committed_added_records(dest_loc: str) -> int:
-    """added-records of the destination's current (just-committed)
-    snapshot — free metadata, no recompute of the lazy extraction."""
-    from htrtf_spark.sources.iceberg import current_metadata
-
-    meta = current_metadata(dest_loc)
-    cur = meta["current-snapshot-id"]
-    for s in meta["snapshots"]:
-        if s["snapshot-id"] == cur:
-            return int(s.get("summary", {}).get("added-records", 0))
-    return 0
+    return {"processed_snapshot": cur, "rows": tick["rows"], "noop": False}

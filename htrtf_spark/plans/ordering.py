@@ -100,12 +100,6 @@ def with_turn_rank(df: DataFrame, col_name: str = "rn") -> DataFrame:
     return df.withColumn(col_name, F.row_number().over(w))
 
 
-def stable_sorted(df: DataFrame) -> DataFrame:
-    """Globally stable presentation order (range shuffle; use only when a
-    totally-ordered materialization is required)."""
-    return df.orderBy("conv_id", "turn_idx", "role", *_content_tiebreak(df))
-
-
 def exact_ntile(
     df: DataFrame,
     n: int,

@@ -29,6 +29,21 @@ from htrtf_spark.operators.extraction import EXTRACTED_DDL, extract_map_in_arrow
 from htrtf_spark.schema import check_input_schema
 
 
+# the extraction kernel in the (batch function, DDL) form that
+# ``mapInArrow`` and the Iceberg write entry points take
+EXTRACT_KERNEL = (extract_map_in_arrow, EXTRACTED_DDL)
+
+
+def extraction_input(df: DataFrame, check_schema: bool = True) -> DataFrame:
+    """The four transcript columns the extraction kernel reads. Hand it
+    with ``EXTRACT_KERNEL`` to an Iceberg write entry point to extract
+    inside the writing tasks: ``extract_turns`` without the trip back
+    to the JVM."""
+    if check_schema:
+        check_input_schema(df)
+    return df.select("conv_id", "turn_idx", "role", "text")
+
+
 def extract_turns(
     df: DataFrame,
     num_partitions: int | None = None,
@@ -45,14 +60,12 @@ def extract_turns(
     + rejected-with-reason; nothing silently dropped — the audit-counter
     invariant, /root/reference/Projects/IAM_lines/create_IAM_lines_dataset.py:57-65).
     """
-    if check_schema:
-        check_input_schema(df)
-    cols = df.select("conv_id", "turn_idx", "role", "text")
+    cols = extraction_input(df, check_schema)
     if num_partitions:
         from htrtf_spark.plans.ordering import salted_repartition
 
         cols = salted_repartition(cols, num_partitions)
-    return cols.mapInArrow(extract_map_in_arrow, schema=EXTRACTED_DDL)
+    return cols.mapInArrow(*EXTRACT_KERNEL)
 
 
 def extract_turns_with_spans(

@@ -24,9 +24,15 @@ look-alike:
   predicate pushdown still happen in the parquet scan; snapshot isolation
   comes from the manifest file list.
 
-Data files are parquet written by Spark itself (one directory per
-commit), so the write path stays distributed; only the metadata commit
-is driver-side — which is true of Iceberg everywhere.
+Data files are written by the tasks that hold the rows, Iceberg's own
+writer protocol: each ``mapInArrow`` task streams its Arrow batches to
+parquet with pyarrow (one directory per commit, one file per task and
+partition value) and returns each file's data_file record, stats taken
+from the footer it wrote. The driver collects the records and makes
+the metadata commit. A caller may hand the write a batch kernel (the
+extraction kernel, say) that runs in the same task, so decode and
+write are one Python pass and the rows never return to the JVM. No
+Spark writer and no Hadoop FileSystem is involved.
 
 Commit protocol (the spec's optimistic concurrency): a commit builds
 metadata version N+1 from version N and publishes it with a
@@ -44,9 +50,10 @@ Scans read the metadata once: ``_scan`` pins one snapshot and takes
 the schema, the data files and the delete files from that one read.
 
 Identity partitioning + partition evolution: ``partition_by`` columns
-write Hive-layout data files (Spark ``partitionBy`` — the write stays
-distributed), the per-file partition tuple is recorded in the manifest
-entry (spec-typed Avro record, field-ids 1000+), each manifest carries
+cluster the rows by partition value (the write stays distributed), each
+task writes one file per partition value it holds, without the
+partition columns, and the per-file partition tuple is recorded in the
+manifest entry (spec-typed Avro record, field-ids 1000+), each manifest carries
 its own partition-spec, and an append may introduce a NEW spec
 (evolution) — old manifests keep their old spec, exactly the Iceberg
 model. Reads prune DATA FILES BY MANIFEST PARTITION VALUES before any
@@ -107,9 +114,12 @@ load.
 from __future__ import annotations
 
 import datetime
+import functools
 import glob
+import itertools
 import json
 import os
+import pickle
 import struct
 import time
 import uuid
@@ -769,17 +779,6 @@ def _make_spec(ice_schema: dict, partition_by: list[str], spec_id: int) -> dict:
     return {"spec-id": spec_id, "fields": fields}
 
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _parse_part_value(raw: str, ice_type: str):
-    from urllib.parse import unquote
-
-    if raw == _HIVE_NULL:
-        return None
-    return int(raw) if ice_type in ("int", "long") else unquote(raw)
-
-
 # ------------------------------------------------ column statistics
 # Single-value binary serialization (spec "Appendix D") for the
 # lower_bounds / upper_bounds maps of data_file manifest entries —
@@ -889,9 +888,9 @@ def _truncate_upper(v: str) -> str | None:
     return None
 
 
-def _file_column_bounds(pf, ice_schema: dict) -> tuple[list[dict], list[dict]]:
+def _file_column_bounds(md, ice_schema: dict) -> tuple[list[dict], list[dict]]:
     """Per-column lower/upper bounds of one parquet file, from its footer
-    row-group statistics (no data page is read). Returned in the spec's
+    ``md`` (row-group statistics; no data page is read). Returned in the spec's
     Avro map representation: k/v record arrays keyed by FIELD ID.
     Parquet writers may truncate binary stats (Spark: 64 bytes, with
     proper max-side increment), which still satisfies the bounds
@@ -900,7 +899,6 @@ def _file_column_bounds(pf, ice_schema: dict) -> tuple[list[dict], list[dict]]:
     mins: dict[int, object] = {}
     maxs: dict[int, object] = {}
     typ: dict[int, str] = {}
-    md = pf.metadata
     for rg in range(md.num_row_groups):
         row_group = md.row_group(rg)
         for ci in range(row_group.num_columns):
@@ -947,13 +945,12 @@ def _file_column_bounds(pf, ice_schema: dict) -> tuple[list[dict], list[dict]]:
     return lower, upper
 
 
-def _file_column_counts(pf, ice_schema: dict) -> tuple[list[dict], list[dict]]:
+def _file_column_counts(md, ice_schema: dict) -> tuple[list[dict], list[dict]]:
     """Per-column value counts (incl. nulls — flat schema, so the row
-    count) and null counts of one parquet file, from footer row-group
-    statistics. A row group without a null_count blinds that column."""
+    count) and null counts of one parquet file, from its footer ``md``
+    (row-group statistics). A row group without a null_count blinds that column."""
     by_name = {f["name"]: f for f in ice_schema["fields"]}
     nulls: dict[int, int] = {}
-    md = pf.metadata
     for rg in range(md.num_row_groups):
         row_group = md.row_group(rg)
         for ci in range(row_group.num_columns):
@@ -984,88 +981,161 @@ def _write_data_files(
     seq: int,
     spec_fields: list[dict] | None = None,
     ice_schema: dict | None = None,
+    kernel: tuple | None = None,
 ) -> list[dict]:
-    """Distributed parquet write for one commit; returns data_file records
-    (path, record_count from the parquet footer, size, partition tuple).
-    Partitioned commits use Spark's Hive-layout ``partitionBy`` (still
-    fully distributed) and parse each file's partition values from its
-    path into the manifest entry."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
+    """Write one commit's data files from the tasks that hold the rows
+    and return their data_file records (``_write_files``): no Spark
+    writer runs, and the driver reads no file. The file of a failed or
+    speculative task attempt is in no returned record, so it is an
+    unreferenced orphan (``remove_orphan_files``).
 
+    ``kernel`` is a ``(batch function, DDL)`` pair in ``mapInArrow``
+    form. The rows written are then what it yields for ``df``'s
+    batches, and it runs inside the writing task: its rows never return
+    to the JVM, and no second Python stage starts.
+
+    Partitioned commits cluster rows by partition value
+    (Iceberg's write.distribution-mode=hash; without it every task
+    writes a file into every partition, the classic small-files
+    pitfall) and sort each task's rows by it, so a task writes each of
+    its partition values into one file. Transform partition values are
+    derived as columns first. Identity partition columns and the
+    derived columns are manifest metadata and are not stored in the
+    files; a transform's SOURCE column stays, exactly the spec's
+    layout. A partitioned commit runs ``kernel`` before the shuffle, as
+    a stage of its own."""
+    spec_fields = spec_fields or []
+    part_cols = [pf["name"] for pf in spec_fields]
+    if part_cols:
+        if kernel is not None:
+            df, kernel = df.mapInArrow(*kernel), None
+        by_id = {f["id"]: f for f in ice_schema["fields"]}
+        for pf in spec_fields:
+            if pf["transform"] != "identity":
+                s = by_id[pf["source-id"]]
+                df = df.withColumn(
+                    pf["name"],
+                    _transform_column(pf["transform"], s["name"], s["type"]),
+                )
+        df = df.repartition(*part_cols).sortWithinPartitions(*part_cols)
+    stored = [
+        f for f in _rows_schema(df, kernel).fields if f.name not in part_cols
+    ]
     commit_dir = os.path.join(
         location, "data", f"commit-{seq:05d}-{uuid.uuid4().hex[:8]}"
     )
-    spec_fields = spec_fields or []
-    by_id = (
-        {f["id"]: f for f in ice_schema["fields"]} if ice_schema else {}
+    return _write_files(
+        df, commit_dir, T.StructType(stored), part_cols, ice_schema,
+        kernel=kernel,
     )
-    part_cols = [pf["name"] for pf in spec_fields]
-    out_df = df
-    for pf in spec_fields:
-        if pf["transform"] != "identity":
-            # derive the transform partition column; Spark's partitionBy
-            # then drops it from the files (it is manifest metadata),
-            # while the SOURCE column stays in the data — exactly the
-            # spec's layout for non-identity transforms
-            s = by_id[pf["source-id"]]
-            out_df = out_df.withColumn(
-                pf["name"],
-                _transform_column(pf["transform"], s["name"], s["type"]),
-            )
-    if part_cols:
-        # hash distribution (Iceberg's write.distribution-mode=hash):
-        # cluster rows by partition value BEFORE partitionBy, else every
-        # task writes a file into every partition — tasks × partitions
-        # small files, the classic scale pitfall. AQE coalesces the
-        # shuffle; one file per partition per final task.
-        out_df = out_df.repartition(*[F.col(c) for c in part_cols])
-        out_df.write.mode("error").partitionBy(*part_cols).parquet(commit_dir)
-        pattern = os.path.join(commit_dir, *["*"] * len(part_cols), "*.parquet")
-    else:
-        out_df.write.mode("error").parquet(commit_dir)
-        pattern = os.path.join(commit_dir, "*.parquet")
-    types = (
-        {pf["name"]: _partition_value_type(pf, ice_schema) for pf in spec_fields}
-        if ice_schema
-        else {}
+
+
+def _rows_schema(df: DataFrame, kernel: tuple | None) -> T.StructType:
+    """Schema of the rows a write stores: ``df``'s, or its kernel's."""
+    return T.DataType.fromDDL(kernel[1]) if kernel else df.schema
+
+
+def _write_files(
+    df: DataFrame,
+    out_dir: str,
+    stored: T.StructType,
+    part_cols: list[str],
+    ice_schema: dict | None,
+    kernel: tuple | None = None,
+    content: int = 0,
+    equality_ids: list[int] | None = None,
+) -> list[dict]:
+    """Stream ``df``'s rows to parquet under ``out_dir`` with pyarrow,
+    one ``mapInArrow`` task per input partition (``_write_task``), and
+    collect the data_file records the tasks return, sorted by path.
+    An empty input writes no file."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    task = functools.partial(
+        _write_task,
+        out_dir=os.path.abspath(out_dir),
+        schema=to_arrow_schema(stored),
+        part_cols=part_cols,
+        ice_schema=ice_schema,
+        fn=kernel[0] if kernel else None,
+        content=content,
+        equality_ids=equality_ids,
     )
-    entries = []
-    for p in sorted(glob.glob(pattern)):
-        partition: dict = {}
-        if part_cols:
-            rel = os.path.relpath(p, commit_dir).split(os.sep)[:-1]
-            for col, seg in zip(part_cols, rel):
-                name, _, raw = seg.partition("=")
-                if name != col:
-                    raise ValueError(
-                        f"unexpected partition path segment {seg!r} "
-                        f"(expected column {col!r})"
-                    )
-                partition[col] = _parse_part_value(raw, types[col])
-        pf = pq.ParquetFile(p)
+    rows = df.mapInArrow(task, "data_file binary").collect()
+    return sorted(
+        (pickle.loads(r.data_file) for r in rows), key=lambda r: r["file_path"]
+    )
+
+
+def _write_task(batches, out_dir, schema, part_cols, ice_schema, fn, content,
+                equality_ids):
+    """One task of ``_write_files``: run ``fn`` (if any) over the
+    task's batches and write each run of rows with equal partition
+    values to its own parquet file. Names carry the task attempt, so a
+    retried or speculative attempt never overwrites another's file.
+    Yields one pickled data_file record per file, whose counts and
+    bounds come from the footer the writer just wrote."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    stem = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
+    runs = itertools.groupby(
+        _partition_runs(fn(batches) if fn else batches, part_cols),
+        key=lambda run: run[0],
+    )
+    for i, (key, pieces) in enumerate(runs):
+        os.makedirs(out_dir, exist_ok=True)
+        path = os.path.join(out_dir, f"{stem}-{i:05d}.parquet")
+        footer: list = []
+        with pq.ParquetWriter(path, schema, metadata_collector=footer) as w:
+            for _key, rows in pieces:
+                rows = rows.select(schema.names)
+                if rows.schema != schema:
+                    rows = rows.cast(schema)
+                w.write_batch(rows)
+        md = footer[0]
         lower, upper = (
-            _file_column_bounds(pf, ice_schema) if ice_schema else ([], [])
+            _file_column_bounds(md, ice_schema) if ice_schema else ([], [])
         )
-        vals_c, nulls_c = (
-            _file_column_counts(pf, ice_schema) if ice_schema else ([], [])
+        values, nulls = (
+            _file_column_counts(md, ice_schema) if ice_schema else ([], [])
         )
-        entries.append(
-            {
-                "content": 0,  # DATA
-                "file_path": os.path.abspath(p),
-                "file_format": "PARQUET",
-                "partition": partition,
-                "record_count": pf.metadata.num_rows,
-                "file_size_in_bytes": os.path.getsize(p),
-                "equality_ids": None,
-                "lower_bounds": lower or None,
-                "upper_bounds": upper or None,
-                "value_counts": vals_c or None,
-                "null_value_counts": nulls_c or None,
-            }
+        record = {
+            "content": content,
+            "file_path": path,
+            "file_format": "PARQUET",
+            "partition": dict(zip(part_cols, key)),
+            "record_count": md.num_rows,
+            "file_size_in_bytes": os.path.getsize(path),
+            "equality_ids": equality_ids,
+            "lower_bounds": lower or None,
+            "upper_bounds": upper or None,
+            "value_counts": values or None,
+            "null_value_counts": nulls or None,
+        }
+        yield pa.RecordBatch.from_pydict(
+            {"data_file": [pickle.dumps(record)]},
+            schema=pa.schema([("data_file", pa.binary())]),
         )
-    return entries
+
+
+def _partition_runs(batches, cols: list[str]):
+    """(partition tuple, rows) for each run of consecutive rows that
+    agree on ``cols``; unpartitioned, each non-empty batch is one run."""
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        if not cols:
+            yield (), batch
+            continue
+        keys = list(zip(*(batch.column(c).to_pylist() for c in cols)))
+        start = 0
+        for i in range(1, len(keys) + 1):
+            if i == len(keys) or keys[i] != keys[start]:
+                yield keys[start], batch.slice(start, i - start)
+                start = i
 
 
 def _commit(
@@ -1345,7 +1415,8 @@ def _replace_retrying(
     rows,
     partition_by: list[str] | None,
     kind: str,
-    properties: dict[str, str] | None = None,
+    properties=None,
+    kernel: tuple | None = None,
 ) -> int:
     """Commit a replace snapshot (its manifest list carries only the new
     files) of ``rows(meta, ice_schema)``, written under the current
@@ -1360,21 +1431,32 @@ def _replace_retrying(
         spec = _resolve_commit_spec(meta, ice_schema, partition_by)
         files = _write_data_files(
             df, location, seq=meta["last-sequence-number"] + 1,
-            spec_fields=spec["fields"], ice_schema=ice_schema,
+            spec_fields=spec["fields"], ice_schema=ice_schema, kernel=kernel,
         )
         try:
             return _commit(
                 location, ice_schema, files, prev_meta=meta, spec=spec,
-                carry_prior_manifests=False, properties=properties,
+                carry_prior_manifests=False,
+                properties=_resolve_properties(properties, files),
                 operation="replace", summary_extra={"replace-kind": kind},
             )
         except CommitConflict:
             continue
 
 
-def _check_schema(df: DataFrame, ice_schema: dict, op: str) -> None:
-    """``df`` must carry the table schema's names and types (nullability
-    aside) — the precondition of every write into an existing table."""
+def _resolve_properties(properties, files: list[dict]) -> dict | None:
+    """A write's commit properties: ``properties`` itself, or, when it is
+    callable, what it returns for the written files' data_file records.
+    The callable form runs after the files are written and before the
+    commit, so properties that describe the commit's own data (a tick's
+    row count and wall time) ride the same atomic commit."""
+    return properties(files) if callable(properties) else properties
+
+
+def _check_schema(schema: T.StructType, ice_schema: dict, op: str) -> None:
+    """The written rows' ``schema`` must carry the table schema's names
+    and types (nullability aside) — the precondition of every write into
+    an existing table."""
 
     def nullable(fields):
         return T.StructType(
@@ -1382,7 +1464,7 @@ def _check_schema(df: DataFrame, ice_schema: dict, op: str) -> None:
         )
 
     want = nullable(_spark_schema(ice_schema).fields)
-    got = nullable(df.schema.fields)
+    got = nullable(schema.fields)
     if got != want:
         raise ValueError(
             f"{op} schema mismatch: table={want.simpleString()} "
@@ -1416,16 +1498,23 @@ def write_iceberg_table(
     df: DataFrame,
     location: str,
     partition_by: list[str] | None = None,
-    properties: dict[str, str] | None = None,
+    properties=None,
+    kernel: tuple | None = None,
 ) -> int:
     """Create an Iceberg v2 table at ``location`` from ``df`` (snapshot 1),
-    optionally identity-partitioned. Fails if the table already exists."""
+    optionally identity-partitioned. Fails if the table already exists.
+    ``kernel`` — a ``(batch function, DDL)`` pair, as ``mapInArrow``
+    takes — writes what it yields for ``df`` instead of ``df``, run in
+    the writing tasks (``_write_data_files``). ``properties`` is a dict,
+    or a function of the written data_file records
+    (``_resolve_properties``)."""
     if table_exists(location):
         raise FileExistsError(f"Iceberg table already exists at {location}")
-    ice_schema = _iceberg_schema(df.schema)
+    ice_schema = _iceberg_schema(_rows_schema(df, kernel))
     spec = _make_spec(ice_schema, partition_by or [], spec_id=0)
     files = _write_data_files(
-        df, location, seq=1, spec_fields=spec["fields"], ice_schema=ice_schema
+        df, location, seq=1, spec_fields=spec["fields"],
+        ice_schema=ice_schema, kernel=kernel,
     )
     # properties ride the initial commit itself — a second metadata
     # commit here would open a crash window in which the data snapshot
@@ -1433,7 +1522,7 @@ def write_iceberg_table(
     # batch-id marker → replayed batch appended twice)
     return _commit(
         location, ice_schema, files, prev_meta=None, spec=spec,
-        properties=properties,
+        properties=_resolve_properties(properties, files),
     )
 
 
@@ -1454,8 +1543,9 @@ def append_iceberg_table(
     df: DataFrame,
     location: str,
     partition_by: list[str] | None = None,
-    properties: dict[str, str] | None = None,
+    properties=None,
     branch: str | None = None,
+    kernel: tuple | None = None,
 ) -> int:
     """Append ``df`` as a new snapshot; schema must match the table's.
     ``partition_by=None`` keeps the table's current default spec; a
@@ -1468,7 +1558,8 @@ def append_iceberg_table(
     ref advances — the write-audit-publish WRITE step; main readers
     observe nothing until ``fast_forward``. ``properties`` are
     table-wide (not branch-scoped) and therefore rejected on branch
-    appends — they would be visible before publish."""
+    appends — they would be visible before publish. ``kernel`` and a
+    callable ``properties`` work as in ``write_iceberg_table``."""
     meta = current_metadata(location)
     if branch is not None:
         # fail BEFORE the distributed data write: a typo'd or dropped
@@ -1482,7 +1573,7 @@ def append_iceberg_table(
                 "the branch is published; set them at fast_forward time"
             )
     ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-    _check_schema(df, ice_schema, "append")
+    _check_schema(_rows_schema(df, kernel), ice_schema, "append")
 
     spec = _resolve_commit_spec(meta, ice_schema, partition_by)
 
@@ -1496,14 +1587,14 @@ def append_iceberg_table(
 
     files = _write_data_files(
         df, location, seq=meta["last-sequence-number"] + 1,
-        spec_fields=spec["fields"], ice_schema=ice_schema,
+        spec_fields=spec["fields"], ice_schema=ice_schema, kernel=kernel,
     )
     # the distributed data write happens ONCE; only the driver-side
     # metadata commit retries on a racing writer (refresh + rebuild —
     # properties still ride the same atomic commit as the data)
     return _commit_retrying(
         location, ice_schema, files, meta, spec_fn,
-        properties=properties, branch=branch,
+        properties=_resolve_properties(properties, files), branch=branch,
         set_default_spec=partition_by is not None,
     )
 
@@ -1690,30 +1781,19 @@ def _write_equality_delete_files(
 def _write_delete_files(
     rows: DataFrame, location: str, meta: dict, equality_ids: list[int] | None
 ) -> list[dict]:
-    """Distributed write of the distinct ``rows`` as one commit's delete
+    """Task-side write of the distinct ``rows`` as one commit's delete
     files; returns their data_file records: EQUALITY_DELETES (content=2)
     keyed on ``equality_ids``, or POSITION_DELETES (content=1) when
     ``equality_ids`` is None."""
-    import pyarrow.parquet as pq
-
     prefix = "posdelete" if equality_ids is None else "delete"
     seq = meta["last-sequence-number"] + 1
     del_dir = os.path.join(
         location, "data", f"{prefix}-{seq:05d}-{uuid.uuid4().hex[:8]}"
     )
-    rows.distinct().write.mode("error").parquet(del_dir)
-    return [
-        {
-            "content": 1 if equality_ids is None else 2,
-            "file_path": os.path.abspath(p),
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": pq.ParquetFile(p).metadata.num_rows,
-            "file_size_in_bytes": os.path.getsize(p),
-            "equality_ids": equality_ids,
-        }
-        for p in sorted(glob.glob(os.path.join(del_dir, "*.parquet")))
-    ]
+    return _write_files(
+        rows.distinct(), del_dir, rows.schema, [], None,
+        content=1 if equality_ids is None else 2, equality_ids=equality_ids,
+    )
 
 
 def delete_iceberg_positions(pos_df: DataFrame, location: str) -> int:
@@ -1771,7 +1851,7 @@ def upsert_iceberg_table(
     Returns the snapshot id."""
     meta = current_metadata(location)
     ice_schema = _schema_by_id(meta, meta["current-schema-id"])
-    _check_schema(df, ice_schema, "upsert")
+    _check_schema(df.schema, ice_schema, "upsert")
     del_entries = _write_equality_delete_files(
         df.select(*key_cols), location, meta, ice_schema, key_cols
     )
@@ -1794,7 +1874,8 @@ def overwrite_iceberg_table(
     df: DataFrame,
     location: str,
     partition_by: list[str] | None = None,
-    properties: dict[str, str] | None = None,
+    properties=None,
+    kernel: tuple | None = None,
 ) -> int:
     """INSERT OVERWRITE: replace the table's visible rows with ``df``
     in ONE snapshot (operation replace — the manifest list carries only
@@ -1804,14 +1885,16 @@ def overwrite_iceberg_table(
     metadata, so nothing committed in between is silently erased —
     though its EFFECT is then overwritten, which is what OVERWRITE
     means. The schema is validated on every attempt, against the
-    schema the attempt writes under."""
+    schema the attempt writes under. ``kernel`` and a callable
+    ``properties`` work as in ``write_iceberg_table``."""
 
     def rows(_meta: dict, ice_schema: dict) -> DataFrame:
-        _check_schema(df, ice_schema, "overwrite")
+        _check_schema(_rows_schema(df, kernel), ice_schema, "overwrite")
         return df
 
     return _replace_retrying(
-        location, rows, partition_by, "overwrite", properties=properties
+        location, rows, partition_by, "overwrite", properties=properties,
+        kernel=kernel,
     )
 
 
@@ -2250,9 +2333,12 @@ def remove_orphan_files(
     location: str, grace_seconds: float = 86400.0
 ) -> list[str]:
     """Delete files under the table location referenced by NO snapshot
-    (Iceberg's remove-orphan-files maintenance): a write that crashed
-    between its distributed data write and its metadata commit leaves
-    whole commit-/delete- directories on disk forever otherwise. Only
+    (Iceberg's remove-orphan-files maintenance). Data files are written
+    in the tasks, before the driver commits their records, so a write
+    that failed or crashed before its metadata commit leaves its files
+    behind, and so does a failed or speculative task attempt of a write
+    that succeeded: its file is in no record the driver committed.
+    Without this they stay on disk forever. Only
     files older than ``grace_seconds`` are removed — a racing in-flight
     commit's files are younger than any sane grace period (the same
     default-3-day contract as the native procedure; tests pass 0).
@@ -2272,17 +2358,7 @@ def remove_orphan_files(
         for dirpath, _dirs, files in os.walk(root):
             for f in files:
                 p = os.path.abspath(os.path.join(dirpath, f))
-                if p in referenced:
-                    continue
-                if f in ("_SUCCESS",) or f.startswith("."):
-                    # writer sidecars live next to referenced files;
-                    # only reap them when their whole dir is orphaned
-                    if any(
-                        os.path.abspath(os.path.join(dirpath, g)) in referenced
-                        for g in os.listdir(dirpath)
-                    ):
-                        continue
-                if os.path.getmtime(p) > cutoff:
+                if p in referenced or os.path.getmtime(p) > cutoff:
                     continue
                 os.remove(p)
                 removed.append(p)
@@ -3024,7 +3100,7 @@ def _scan(
         for path, keys in {e for plan in groups for e in plan.eq_deletes}
     }
 
-    # None partition values (__HIVE_DEFAULT_PARTITION__) sort first —
+    # None (NULL) partition values sort first —
     # plain tuple sort would TypeError comparing None with str/int
     def _group_order(item):
         plan, _paths = item

@@ -37,10 +37,19 @@ def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     return spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(input_dir)
 
 
+# the stream's extraction kernel in (batch function, DDL) form: what
+# ``mapInArrow`` and the Iceberg write entry points take
+STREAM_KERNEL = (_extract_keep_ts, EXTRACTED_TS_DDL)
+
+
+def stream_input(stream_df: DataFrame) -> DataFrame:
+    """The columns ``STREAM_KERNEL`` reads."""
+    return stream_df.select("conv_id", "turn_idx", "role", "text", "ts")
+
+
 def stream_extract(stream_df: DataFrame) -> DataFrame:
     """Unbounded extraction: identical semantics to the batch stage."""
-    cols = stream_df.select("conv_id", "turn_idx", "role", "text", "ts")
-    return cols.mapInArrow(_extract_keep_ts, schema=EXTRACTED_TS_DDL)
+    return stream_input(stream_df).mapInArrow(*STREAM_KERNEL)
 
 
 def stream_metrics(
@@ -88,6 +97,7 @@ _BATCH_PROP = "streaming.last-batch-id"
 def stream_to_iceberg(
     df: DataFrame, location: str, checkpoint_dir: str,
     query_name: str = "to_iceberg", available_now: bool = False,
+    kernel: tuple | None = None,
 ):
     """EXACTLY-ONCE streaming sink into an Iceberg v2 table: each
     micro-batch appends under ``foreachBatch``, recording its batch id
@@ -95,7 +105,11 @@ def stream_to_iceberg(
     Structured Streaming replays the last possibly-uncommitted batch;
     the property guard detects an id that already committed and skips
     it — append-idempotence across failures, the standard
-    streaming-lakehouse pattern. Returns the started StreamingQuery."""
+    streaming-lakehouse pattern. Returns the started StreamingQuery.
+
+    ``kernel`` (e.g. ``STREAM_KERNEL`` over ``stream_input``) runs in
+    the sink's writing tasks, so each task decodes and writes in one
+    Python stage; without it ``df``'s rows are written as they are."""
     from htrtf_spark.sources.iceberg import (
         append_iceberg_table,
         current_metadata,
@@ -108,7 +122,8 @@ def stream_to_iceberg(
             # table born from this stream: the create IS batch_id's
             # commit, property stamped in the same breath
             write_iceberg_table(
-                batch_df, location, properties={_BATCH_PROP: str(batch_id)}
+                batch_df, location, properties={_BATCH_PROP: str(batch_id)},
+                kernel=kernel,
             )
             return
         meta = current_metadata(location)
@@ -118,7 +133,8 @@ def stream_to_iceberg(
         if batch_id <= last:
             return  # replayed batch that already committed — skip
         append_iceberg_table(
-            batch_df, location, properties={_BATCH_PROP: str(batch_id)}
+            batch_df, location, properties={_BATCH_PROP: str(batch_id)},
+            kernel=kernel,
         )
 
     w = (

@@ -166,11 +166,11 @@ def rebaseline_stream_extraction(
 ) -> dict:
     """Atomically re-baseline the streaming extraction: one
     ``overwrite`` commit replaces the destination with the extraction
-    of the source's CURRENT snapshot (same Arrow stage and schema as
-    the stream — ts column carried through) and resets the sink's
-    exactly-once batch marker in that SAME commit, so the fresh
-    query's batch 0 is accepted. The old checkpoint is retired, not
-    deleted. Returns::
+    of the source's CURRENT snapshot (the stream's own kernel and
+    schema — ts column carried through — run in the writing tasks) and
+    resets the sink's exactly-once batch marker in that SAME commit, so
+    the fresh query's batch 0 is accepted. The old checkpoint is
+    retired, not deleted. Returns::
 
         {"pinned_snapshot": ..., "starting_sequence": ...,
          "rows": ..., "retired_checkpoint": ...}
@@ -191,22 +191,26 @@ def rebaseline_stream_extraction(
         table_exists,
         write_iceberg_table,
     )
-    from htrtf_spark.streaming.extract_stream import _BATCH_PROP, stream_extract
+    from htrtf_spark.streaming.extract_stream import (
+        _BATCH_PROP,
+        STREAM_KERNEL,
+        stream_input,
+    )
 
     meta = current_metadata(source_loc)
     cur = meta["current-snapshot-id"]
     cur_seq = int(_find_snapshot(meta, cur)["sequence-number"])
-    # stream_extract is a plain select + mapInArrow — bound to a batch
-    # DataFrame it runs the IDENTICAL stage the stream runs, so the
-    # rebaselined rows are byte-identical to what streaming emits
-    out = stream_extract(
-        read_iceberg_table(spark, source_loc, snapshot_id=cur)
-    )
+    # the stream's own kernel, run inside the writing tasks over the
+    # batch read of the pinned snapshot: the rebaselined rows are
+    # byte-identical to what streaming emits
+    src = stream_input(read_iceberg_table(spark, source_loc, snapshot_id=cur))
     props = {_BATCH_PROP: "-1"}  # fresh query's batch 0 must commit
     if table_exists(dest_loc):
-        overwrite_iceberg_table(out, dest_loc, properties=props)
+        overwrite_iceberg_table(
+            src, dest_loc, properties=props, kernel=STREAM_KERNEL
+        )
     else:
-        write_iceberg_table(out, dest_loc, properties=props)
+        write_iceberg_table(src, dest_loc, properties=props, kernel=STREAM_KERNEL)
     retired = _retire_checkpoint(checkpoint_dir)
     dmeta = current_metadata(dest_loc)
     dsnap = _find_snapshot(dmeta, dmeta["current-snapshot-id"])

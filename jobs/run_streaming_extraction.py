@@ -3,7 +3,8 @@ Structured Streaming query — the north-star pipeline in streaming form.
 
 source:  readStream.format("htrtf_iceberg")  (snapshot-sequence
          offsets; each micro-batch = exactly the newly appended files)
-stages:  the same vectorized Arrow extraction as the batch path
+stages:  the same vectorized Arrow extraction as the batch path, run
+         inside the sink's writing tasks (one Python stage per task)
 sink:    exactly-once Iceberg appends (batch-id property committed
          atomically with the data)
 
@@ -42,7 +43,8 @@ def build_query(spark, source_loc: str, dest_loc: str, checkpoint: str,
     ``lag_metrics_dir`` records per-batch files/bytes/sequence-lag."""
     from htrtf_spark.sources import iceberg_stream
     from htrtf_spark.streaming.extract_stream import (
-        stream_extract,
+        STREAM_KERNEL,
+        stream_input,
         stream_to_iceberg,
     )
 
@@ -68,10 +70,12 @@ def build_query(spark, source_loc: str, dest_loc: str, checkpoint: str,
         # just materialized it into dest) instead of bootstrapping
         reader = reader.option("startingSequence", str(starting_sequence))
     src = reader.load()
+    # the sink runs the kernel in its writing tasks: one Python stage
+    # per task decodes and writes
     return stream_to_iceberg(
-        stream_extract(src), dest_loc, checkpoint,
+        stream_input(src), dest_loc, checkpoint,
         query_name="iceberg_to_iceberg_extraction",
-        available_now=available_now,
+        available_now=available_now, kernel=STREAM_KERNEL,
     )
 
 

@@ -2746,3 +2746,141 @@ def test_scan_groups_files_by_read_plan(spark, tmp_path):
     # the delete hits the three batches before it, not the one after
     assert [r for r in _collect(got) if r[0] == "dup"] == [("dup", 9)]
     assert len(_collect(got)) == 13
+
+
+def _rows_sha256(df) -> str:
+    import hashlib
+
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+@pytest.fixture()
+def typed_df(spark):
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("s", T.StringType()),
+        T.StructField("i", T.IntegerType(), False),
+        T.StructField("l", T.LongType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("dt", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("b", T.BinaryType()),
+        T.StructField("n", T.StringType()),
+    ])
+    rows = [
+        (
+            None if k % 7 == 0 else f"key-{k % 5}",
+            k,
+            None if k % 6 == 0 else k * 1_000_003 - 40_000_000,
+            None if k % 9 == 0 else k * 0.25 - 3.0,
+            dt.date(2024, 1, 1) + dt.timedelta(days=k % 4),
+            None if k % 8 == 0 else dt.datetime(2024, 1, 1, k % 24, k % 60),
+            bytes([k % 256, 7]),
+            None if k % 2 else f"nullable {k}",
+        )
+        for k in range(60)
+    ]
+    return spark.createDataFrame(rows, schema).repartition(3)
+
+
+@pytest.mark.parametrize(
+    "partition_by",
+    [None, ["s"], ["bucket(4, l)"], ["day(ts)"], ["truncate(5, s)"]],
+)
+def test_task_writer_records_match_spark_written_footers(
+    spark, typed_df, tmp_path, partition_by
+):
+    """The task-side writer's data_file records carry what the footer
+    of a Spark-written parquet file of the same rows gives: counts and
+    bounds per column, for every column type and under identity,
+    bucket, day and truncate specs with a NULL partition value. The
+    rows read back are sha256-equal to the written ones."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    loc = str(tmp_path / "typed")
+    I.write_iceberg_table(typed_df, loc, partition_by=partition_by)
+    meta = I.current_metadata(loc)
+    ice_schema = I._schema_by_id(meta, meta["current-schema-id"])
+    records = I.live_data_files(loc)
+    assert sum(r["record_count"] for r in records) == 60
+    if partition_by:
+        field = meta["partition-specs"][0]["fields"][0]["name"]
+        values = [r["partition"][field] for r in records]
+        assert None in values  # the NULL partition has its own file
+        assert len(values) == len(set(values))  # one file per value
+    for n, rec in enumerate(records):
+        spark_dir = str(tmp_path / f"spark-{n}")
+        spark.read.parquet(rec["file_path"]).coalesce(1).write.parquet(spark_dir)
+        (path,) = glob.glob(os.path.join(spark_dir, "*.parquet"))
+        md = pq.read_metadata(path)
+        lower, upper = I._file_column_bounds(md, ice_schema)
+        values, nulls = I._file_column_counts(md, ice_schema)
+        assert rec["record_count"] == md.num_rows
+        assert rec["value_counts"] == values
+        assert (rec["null_value_counts"] or []) == nulls
+        assert (rec["lower_bounds"] or []) == lower
+        assert (rec["upper_bounds"] or []) == upper
+    got = I.read_iceberg_table(spark, loc).select(*typed_df.columns)
+    assert _rows_sha256(got) == _rows_sha256(typed_df)
+
+
+def test_failed_task_write_commits_nothing_and_leaves_orphans(
+    spark, typed_df, tmp_path
+):
+    """One task's batch function raises: the write raises, the table's
+    metadata version and current snapshot stay as they were, and the
+    files the other tasks wrote are unreferenced orphans that
+    remove_orphan_files reaps."""
+    import time
+
+    loc = str(tmp_path / "failing")
+    I.write_iceberg_table(typed_df, loc)
+    before = I.current_metadata(loc)
+    referenced = {r["file_path"] for r in I.live_data_files(loc)}
+    poisoned = typed_df.withColumn(
+        "n", F.when(F.col("i") == 13, F.lit("poison")).otherwise(F.col("n"))
+    )
+
+    def fail_on_poison(batches):
+        for batch in batches:
+            if "poison" in batch.column("n").to_pylist():
+                time.sleep(1.0)  # the other tasks write their files first
+                raise RuntimeError("poisoned batch")
+            yield batch
+
+    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in typed_df.schema)
+    with pytest.raises(Exception, match="poisoned batch"):
+        I.append_iceberg_table(poisoned, loc, kernel=(fail_on_poison, ddl))
+    after = I.current_metadata(loc)
+    assert after["_version"] == before["_version"]
+    assert after["current-snapshot-id"] == before["current-snapshot-id"]
+
+    def data_files():
+        return {
+            os.path.join(d, f)
+            for d, _dirs, fs in os.walk(os.path.join(loc, "data"))
+            for f in fs
+        }
+
+    orphans = data_files() - referenced
+    assert orphans  # the tasks that did not fail wrote their files
+    removed = set(I.remove_orphan_files(loc, grace_seconds=0))
+    assert orphans <= removed
+    assert data_files() == referenced
+    assert _rows_sha256(I.read_iceberg_table(spark, loc)) == _rows_sha256(typed_df)
+
+
+def test_empty_write_commits_no_data_file(spark, typed_df, tmp_path):
+    """An empty input commits a snapshot with no data file (no empty
+    parquet file is written) and reads back empty."""
+    loc = str(tmp_path / "empty")
+    I.write_iceberg_table(typed_df.limit(0), loc)
+    assert I.live_data_files(loc) == []
+    assert not os.listdir(os.path.join(loc, "data"))
+    assert I.read_iceberg_table(spark, loc).count() == 0

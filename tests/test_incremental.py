@@ -5,11 +5,14 @@ are not propagated (append-only ingest contract)."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from htrtf_spark.plans.incremental import (
     SOURCE_SNAPSHOT_PROP,
+    TICK_METRICS_PROP,
     extract_increment_once,
 )
 from htrtf_spark.sources import iceberg as I
@@ -223,6 +226,67 @@ def test_tick_metrics_persisted(spark, tmp_path, src_table):
 
     r2 = extract_increment_once(spark, src, dest)  # noop
     assert r2["noop"] and tick_metrics(dest) == m1
+
+
+def test_tick_is_one_metadata_commit(spark, tmp_path, src_table):
+    """Data, processed-snapshot marker and tick metrics ride one commit:
+    the first load creates metadata version 1 and a non-noop tick
+    advances the version by exactly 1, its metrics already current."""
+    src, df = src_table
+    dest = str(tmp_path / "dest_v")
+    extract_increment_once(spark, src, dest)
+    assert I.current_metadata(dest)["_version"] == 1
+    I.append_iceberg_table(
+        df.withColumn("conv_id", F.concat(F.lit("v2-"), "conv_id")), src
+    )
+    r = extract_increment_once(spark, src, dest)
+    meta = I.current_metadata(dest)
+    assert meta["_version"] == 2
+    metrics = json.loads(meta["properties"][TICK_METRICS_PROP])
+    assert metrics["rows"] == r["rows"] == 3
+    assert metrics["processed_snapshot"] == r["processed_snapshot"]
+    assert meta["properties"][SOURCE_SNAPSHOT_PROP] == str(r["processed_snapshot"])
+
+
+def test_one_python_stage_per_extracting_write(
+    spark, tmp_path, src_table, monkeypatch
+):
+    """The first load, a tick, a rebaseline and a stream rebaseline
+    each make exactly one ``mapInArrow`` call: the extraction kernel
+    runs inside the writer's Python function, not as a stage chained
+    before it."""
+    from htrtf_spark.streaming.rebaseline import rebaseline_stream_extraction
+
+    src, df = src_table
+    dest = str(tmp_path / "dest_p")
+    cls = type(df)
+    calls = []
+    original = cls.mapInArrow
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInArrow", counting)
+
+    extract_increment_once(spark, src, dest)  # first load
+    assert len(calls) == 1
+    I.append_iceberg_table(
+        df.withColumn("conv_id", F.concat(F.lit("p2-"), "conv_id")), src
+    )
+    calls.clear()
+    assert not extract_increment_once(spark, src, dest)["noop"]  # tick
+    assert len(calls) == 1
+    I.delete_iceberg_rows(df.filter("conv_id = 'conv-a'"), src, ["conv_id"])
+    calls.clear()
+    r = extract_increment_once(spark, src, dest, rebaseline_on_delete=True)
+    assert "rebaselined" in r
+    assert len(calls) == 1
+    calls.clear()
+    rebaseline_stream_extraction(
+        spark, src, str(tmp_path / "stream_dest"), str(tmp_path / "ckpt")
+    )
+    assert len(calls) == 1
 
 
 def test_index_maintenance_dedupes_replayed_rows(spark, tmp_path):
