@@ -1,46 +1,99 @@
 """Similarity search over an embedding column (array<float/double>).
 
-- ``brute_force_topk``: exact cosine top-k (the correctness baseline;
-  one broadcast of the query + a narrow scan + top-k — no shuffle until
-  the final k-row sort).
-- ``lsh_topk``: random-hyperplane LSH buckets; only candidates sharing
-  a bucket with the query are scored (the sub-linear scale path — at
-  10^9 vectors the bucket join prunes the scan by ~2^bits/bands).
-- ``ivf_topk``: IVF-style coarse quantizer — deterministic centroid
-  sample, assign via best-centroid join, probe the query's nearest
-  ``nprobe`` cells.
+Single-query search; the query is a one-row DataFrame holding its vector
+in the corpus's vector column:
 
-All dot products are JVM-side (zip_with + aggregate, whole-stage
-codegen'd) — no Python in the scoring path. Hyperplanes are generated
-deterministically from a seed so results are reproducible cluster-wide.
+- ``brute_force_topk``: exact cosine top-k (the correctness baseline).
+- ``lsh_topk``: random-hyperplane LSH; only the query's bucket is
+  scored (at 10^9 vectors that prunes the scan by ~2^bits).
+- ``ivf_topk``: IVF coarse quantizer; only the ``nprobe`` cells nearest
+  the query are scored.
+
+Block scoring: ``block_matmul_topk`` (a batch of queries),
+``block_matmul_near_pairs`` (exact all-pairs above a threshold) and
+``semantic_dedup_flags`` (SemDeDup within centroid cells) score Arrow
+batches with one numpy kernel, ``_sim_bp`` (BLAS over bounded row
+slices), under mapInArrow/applyInArrow. The single-query scans and the
+cell assignment (``assign_cells``) score in the JVM (``cosine``:
+zip_with + aggregate).
+
+Every input a plan needs (query vectors, centroids, the block count) is
+gathered inside the plan as a broadcast one-row frame, so building a
+plan runs no Spark job and writes nothing.
+
+Float parity: both scorers divide the raw float64 dot product by the
+norm product and round half up to basis points, the association order
+of the DuckDB oracle (``list_dot_product / (sqrt .. * sqrt ..)``). BLAS
+sums in another order than a left fold, which differs only at ~1e-15
+relative, far below the 1e-4 quantum. Hyperplanes are generated
+deterministically from a seed, so results are reproducible.
 """
 
 from __future__ import annotations
 
-import glob
 import math
-import os
-import tempfile
-import uuid
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Arrow rows streamed per side chunk in the exact all-pairs block
-# product: 250k × 64-dim float64 ≈ 128 MB per task while scoring,
-# independent of total corpus size.
-DEFAULT_SIDE_CHUNK_ROWS = 250_000
+#: Rows per hash block in ``block_matmul_near_pairs``: the corpus is
+#: cut into ceil(n / BLOCK_ROWS) blocks, and each pair of blocks is
+#: scored by one task.
+BLOCK_ROWS = 20_000
+#: Entries of one scoring temporary (a slice of left rows against all
+#: right rows): 2^20 float64 = 8 MB, whatever the block or batch size.
+SLICE_ENTRIES = 1 << 20
+
+
+def _base(vecs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return vecs.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+
+
+def _matrix(col) -> np.ndarray:
+    """An Arrow list<double> column of equal-length vectors as a 2-D
+    float64 array (no copy when the column has no nulls)."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.reshape(len(col), len(flat) // max(len(col), 1))
+
+
+def _ids(col) -> np.ndarray:
+    return col.to_numpy().astype(np.int64, copy=False)
+
+
+def _sim_bp(a: np.ndarray, b: np.ndarray, max_entries: int):
+    """Cosine of every row of ``a`` against every row of ``b`` in basis
+    points, rounded half up (away from zero, as F.round and DuckDB's
+    ROUND), NaN where either vector is zero. Yields ``(lo, bp)`` per
+    slice ``a[lo:lo + len(bp)]``; a slice holds at most
+    ``max(max_entries, len(b))`` entries, and at most three such arrays
+    are alive at once."""
+    na = np.sqrt(np.einsum("ij,ij->i", a, a))
+    nb = np.sqrt(np.einsum("ij,ij->i", b, b))
+    step = max(1, max_entries // max(len(b), 1))
+    for lo in range(0, len(a), step):
+        x = a[lo:lo + step] @ b.T
+        with np.errstate(invalid="ignore", divide="ignore"):
+            x /= np.outer(na[lo:lo + step], nb)
+        x *= 10000.0
+        bp = np.abs(x)
+        bp += 0.5
+        np.floor(bp, out=bp)
+        yield lo, np.copysign(bp, x, out=bp)
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Distributed top-k with a dense rank, never a global sort of the
+    """Distributed top-k with a dense rank, never a sort of the whole
     scored set: ``orderBy(...).limit(k)`` compiles to
     TakeOrderedAndProject (per-partition local top-k, driver merge of
     partitions × k rows), and the rank window then runs over exactly k
     rows. Total order (desc sim_bp, asc id) is tie-broken, so the result
-    is identical to a global row_number window."""
-    from pyspark.sql import Window
-
+    is identical to one row_number window over all rows."""
     top = scored.orderBy(F.desc("sim_bp"), F.asc("id")).limit(k)
     w = Window.orderBy(F.desc("sim_bp"), F.asc("id"))
     return top.withColumn("rank", F.row_number().over(w))
@@ -52,98 +105,69 @@ def block_matmul_near_pairs(
     vec_col: str,
     min_sim_bp: int,
     id_out: tuple[str, str] = ("id_a", "id_b"),
-    side_chunk_rows: int = DEFAULT_SIDE_CHUNK_ROWS,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
-    """Exact all-pairs cosine near neighbors above a basis-point threshold,
-    as a chunked block matrix product: each Arrow batch of rows computes
-    ``row_block @ side_chunk.T`` via BLAS, and only pairs with
-    ``id_a < id_b`` and ``sim_bp >= min_sim_bp`` are emitted. No shuffle,
-    no per-row Python — narrow mapInPandas passes only.
+    """Exact all-pairs cosine near neighbors above a basis-point
+    threshold: (id_a, id_b, sim_bp) with ``id_a < id_b``.
 
-    This is the distributed block-nested-loop shape for exact scoring:
-    work is O(n^2 / executors) with each task touching its row block once
-    per side chunk. The side matrix is MATERIALIZED ONCE by a distributed
-    parquet write (no driver collect, no broadcast pinning every chunk for
-    the job's lifetime); each task then STREAMS it back in
-    ``side_chunk_rows``-row Arrow chunks and scores row_block @ chunk.T.
-    Peak memory per task is one input batch + one side chunk
-    (dim × side_chunk_rows × 8 bytes), independent of corpus size, and
-    the driver never holds vector data at all. The side scan count grows
-    as (input batches × n / side_chunk_rows) — past a few chunks the
-    sub-linear paths (``lsh_topk`` / ``ivf_topk``, recall-checked against
-    this operator) are the right tool.
+    Rows are hashed by id into B = ceil(n / BLOCK_ROWS) blocks (n from a
+    broadcast count row, so B is decided when the plan runs). Each row
+    is sent to the B block pairs it takes part in, and one
+    ``groupBy(pair).applyInArrow`` task scores each pair of blocks as
+    BLAS row slices (``_sim_bp``). Work is O(n^2 / executors); each
+    vector is shuffled B times, so past a few blocks the sub-linear
+    paths (``lsh_topk`` / ``ivf_topk``) are the right tool.
 
-    ``scratch_dir``: where the side matrix is staged. Defaults to a local
-    tempdir (correct for local[*] and tests); on a multi-node cluster
-    pass a shared-filesystem path (HDFS/S3), as with any spill-to-storage
-    operator.
-
-    Float parity: raw float64 dot products divided by the norm product,
-    rounded half-up to basis points — the same association order as the
-    DuckDB oracle (``list_dot_product / (sqrt .. * sqrt ..)``); BLAS
-    summation order differs from a left fold only at ~1e-15 relative,
-    far below the 1e-4 bp quantum.
+    Peak memory per task: the pair's rows (two blocks of ~n/B <=
+    BLOCK_ROWS rows) held up to three times (the Arrow table, its
+    combined copy when it arrives in several batches, and the float64
+    block matrices), <= 3 × 2 × BLOCK_ROWS × dim × 8 bytes (61 MB at
+    dim 64), plus three slice temporaries of SLICE_ENTRIES float64 (24 MB) and
+    their boolean masks, plus the pairs the task emits. Only the
+    emitted pairs grow with the corpus.
     """
-    import numpy as np
-    import pandas as pd
-
-    base = vecs.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    base = _base(vecs, id_col, vec_col)
     id_a, id_b = id_out
-    out_schema = f"{id_a} long, {id_b} long, sim_bp long"
-
-    side_dir = os.path.join(
-        scratch_dir or tempfile.mkdtemp(prefix="htrtf_blockmm_"),
-        f"side-{uuid.uuid4().hex[:8]}",
+    n = F.broadcast(base.agg(F.count("*").alias("n")))
+    n_blocks = F.greatest(F.ceil(F.col("n") / BLOCK_ROWS), F.lit(1))
+    blocked = base.crossJoin(n).select(
+        "id", "v", F.pmod(F.xxhash64("id"), n_blocks).alias("blk"),
+        F.sequence(F.lit(0).cast("long"), n_blocks - 1).alias("others"),
     )
-    base.write.parquet(side_dir)
-    side_files = tuple(sorted(glob.glob(os.path.join(side_dir, "*.parquet"))))
+    pairs = blocked.select(
+        "id", "v", "blk",
+        F.explode(
+            F.transform(
+                "others",
+                lambda j: F.struct(
+                    F.least("blk", j).alias("lo"), F.greatest("blk", j).alias("hi")
+                ),
+            )
+        ).alias("pair"),
+    ).select("id", "v", "blk", "pair.lo", "pair.hi")
+    max_entries = SLICE_ENTRIES
 
-    def gen(batches):
-        import pyarrow.parquet as pq
+    def score(key, t):
+        lo, hi = key[0].as_py(), key[1].as_py()
+        ids, v = _ids(t.column("id")), _matrix(t.column("v"))
+        left = t.column("blk").to_numpy() == lo
+        right = left if lo == hi else ~left
+        ids_a, ids_b = ids[left], ids[right]
+        out = [np.empty((3, 0), np.int64)]
+        for s, bp in _sim_bp(v[left], v[right], max_entries):
+            keep = bp >= min_sim_bp
+            if lo == hi:
+                keep &= ids_b[None, :] > ids_a[s:s + len(bp), None]
+            i, j = np.nonzero(keep)
+            x, y = ids_a[s + i], ids_b[j]
+            out.append(
+                np.stack([np.minimum(x, y), np.maximum(x, y), bp[i, j].astype(np.int64)])
+            )
+        out = np.concatenate(out, axis=1)
+        return pa.table({id_a: out[0], id_b: out[1], "sim_bp": out[2]})
 
-        for pin in batches:
-            if not len(pin):
-                continue
-            a = np.stack(pin["v"].to_numpy()).astype(np.float64)
-            na = np.sqrt(np.einsum("ij,ij->i", a, a))
-            a_ids = pin["id"].to_numpy()
-            for path in side_files:
-                pf = pq.ParquetFile(path)
-                for rb in pf.iter_batches(batch_size=side_chunk_rows):
-                    side = rb.to_pandas()
-                    ids_b = side["id"].to_numpy()
-                    # pair needs id_a < id_b: skip chunks entirely below
-                    # this input block's id range
-                    if int(ids_b.max()) <= int(a_ids.min()):
-                        continue
-                    m_b = np.stack(side["v"].to_numpy()).astype(np.float64)
-                    n_b = np.sqrt(np.einsum("ij,ij->i", m_b, m_b))
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        sims = (a @ m_b.T) / np.outer(na, n_b)
-                        x = sims * 10000.0
-                        # HALF_UP = half away from zero (matches F.round
-                        # / DuckDB ROUND); plain floor(x+.5) would differ
-                        # at negative .5; NaN propagates either branch
-                        bp = np.where(
-                            x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-                        )
-                    mask = (ids_b[None, :] > a_ids[:, None]) & (
-                        bp >= float(min_sim_bp)
-                    )
-                    ai, bj = np.nonzero(mask)
-                    if len(ai):
-                        yield pd.DataFrame(
-                            {
-                                id_a: a_ids[ai],
-                                id_b: ids_b[bj],
-                                "sim_bp": bp[ai, bj].astype(np.int64),
-                            }
-                        )
-
-    return base.mapInPandas(gen, schema=out_schema)
+    return pairs.groupBy("lo", "hi").applyInArrow(
+        score, f"{id_a} long, {id_b} long, sim_bp long"
+    )
 
 
 def block_matmul_topk(
@@ -155,63 +179,55 @@ def block_matmul_topk(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k for a BATCH of query vectors at once:
-    (qid, id, sim_bp, rank). The query matrix (tiny) is broadcast; each
-    Arrow batch of corpus rows computes ``block @ queries.T`` via BLAS
-    and emits only its LOCAL top-k per query (two-phase top-k: the
-    shuffle carries ≤ queries × k rows per task, never the corpus), then
-    one window rank merges the candidates. This is the scale shape for
-    "score a query set against 10^9 vectors" — corpus-side work is one
-    narrow pass, shuffle volume is independent of corpus size.
+    (qid, id, sim_bp, rank). The query rows are aggregated into one
+    broadcast row crossJoined onto the corpus; each Arrow batch of
+    corpus rows is scored against the queries with ``_sim_bp`` and
+    emits only its LOCAL top-k per query and row slice (two-phase top-k:
+    the shuffle carries <= queries × k rows per slice, never the
+    corpus), then one window rank merges the candidates. Corpus-side
+    work is one narrow pass; shuffle volume is independent of corpus
+    size.
     """
-    import numpy as np
-    import pandas as pd
-
-    base = vecs.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    base = _base(vecs, id_col, vec_col)
+    queries = base.filter(F.col("id").isin([int(q) for q in query_ids])).agg(
+        F.array_sort(F.collect_list(F.struct("id", "v"))).alias("q")
     )
-    qpdf = base.filter(F.col("id").isin([int(q) for q in query_ids])).orderBy("id").toPandas()
-    q_ids = qpdf["id"].to_numpy()
-    qm = np.stack(qpdf["v"].to_numpy()).astype(np.float64)
-    qn = np.sqrt(np.einsum("ij,ij->i", qm, qm))
-    bvar = vecs.sparkSession.sparkContext.broadcast((q_ids, qm, qn))
+    scan = base.crossJoin(F.broadcast(queries)).select(
+        "id", "v", F.col("q.id").alias("qid"), F.col("q.v").alias("qv")
+    )
+    max_entries = SLICE_ENTRIES
 
     def gen(batches):
-        q_ids_b, qm_b, qn_b = bvar.value
-        qt = np.ascontiguousarray(qm_b.T)
-        for pin in batches:
-            if not len(pin):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            a = np.stack(pin["v"].to_numpy()).astype(np.float64)
-            na = np.sqrt(np.einsum("ij,ij->i", a, a))
-            ids = pin["id"].to_numpy()
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sims = (a @ qt) / np.outer(na, qn_b)
-                x = sims * 10000.0
-                bp = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5))
-            for j, qid in enumerate(q_ids_b):
-                col = bp[:, j]
-                ok = np.isfinite(col)
-                if exclude_self:
-                    ok &= ids != qid
-                cand_ids, cand_bp = ids[ok], col[ok]
-                # local top-k under the same total order as the final
-                # window ((-sim_bp, id)) — global top-k ⊆ union of locals
-                order = np.lexsort((cand_ids, -cand_bp))[:k]
-                yield pd.DataFrame(
-                    {
-                        "qid": np.full(len(order), qid, dtype=np.int64),
-                        "id": cand_ids[order],
-                        "sim_bp": cand_bp[order].astype(np.int64),
-                    }
-                )
+            q_ids = _ids(batch.column("qid").slice(0, 1).flatten())
+            if not len(q_ids):
+                continue
+            qm = _matrix(batch.column("qv").slice(0, 1).flatten())
+            ids, a = _ids(batch.column("id")), _matrix(batch.column("v"))
+            for s, bp in _sim_bp(a, qm, max_entries):
+                sid = ids[s:s + len(bp)]
+                for j, qid in enumerate(q_ids):
+                    col = bp[:, j]
+                    ok = np.isfinite(col)
+                    if exclude_self:
+                        ok &= sid != qid
+                    cand_ids, cand_bp = sid[ok], col[ok]
+                    # local top-k under the same total order as the final
+                    # window ((-sim_bp, id)): the top-k ⊆ union of locals
+                    order = np.lexsort((cand_ids, -cand_bp))[:k]
+                    yield pa.RecordBatch.from_pydict(
+                        {
+                            "qid": np.full(len(order), qid, dtype=np.int64),
+                            "id": cand_ids[order],
+                            "sim_bp": cand_bp[order].astype(np.int64),
+                        }
+                    )
 
-    from pyspark.sql import Window
-
-    cand = base.mapInPandas(gen, schema="qid long, id long, sim_bp long")
+    cand = scan.mapInArrow(gen, "qid long, id long, sim_bp long")
     w = Window.partitionBy("qid").orderBy(F.desc("sim_bp"), F.asc("id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    )
+    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _dot(a, b):
@@ -226,6 +242,35 @@ def norm(a):
 
 def cosine(a, b):
     return _dot(a, b) / (norm(a) * norm(b))
+
+
+def _sim_bp_col(a, b):
+    return F.round(cosine(a, b) * 10000).cast("long").alias("sim_bp")
+
+
+def centroid_row(centroids: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The centroid vectors as one broadcast row, ``cents``
+    (array<array<double>>): cell i is the i-th centroid by id."""
+    return F.broadcast(
+        _base(centroids, id_col, vec_col)
+        .agg(F.array_sort(F.collect_list(F.struct("id", "v"))).alias("c"))
+        .select(F.col("c.v").alias("cents"))
+    )
+
+
+def assign_cells(v, cents):
+    """Cell of vector ``v``: the index of its max-cosine centroid in the
+    array ``cents``, ties to the lowest cell (as array_position's first
+    max). One transform over the centroid array, each cosine evaluated
+    once: the max of (cosine, -cell) structs."""
+    best = F.array_max(
+        F.transform(cents, lambda c, i: F.struct(cosine(v, c).alias("s"), (-i).alias("ni")))
+    )
+    return (-best["ni"]).cast("int")
+
+
+def _query_row(query: DataFrame, vec_col: str) -> DataFrame:
+    return F.broadcast(query.select(F.col(vec_col).cast("array<double>").alias("qv")))
 
 
 def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
@@ -249,154 +294,122 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def _bucket_expr(vec_col, planes: list[list[float]]):
-    """Sign-bit bucket id from inlined hyperplane literals (JVM-side)."""
-    acc = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(vec_col, lit) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        acc = acc.bitwiseXOR(F.shiftleft(bit, j))
-    return acc
+def _bucket_expr(v, planes):
+    """Sign-bit bucket id (JVM-side): bit j is set when v · planes[j] >= 0."""
+    bits = F.transform(
+        planes, lambda p: F.when(_dot(v, p) >= 0, 1).otherwise(0).cast("long")
+    )
+    return F.aggregate(F.reverse(bits), F.lit(0).cast("long"), lambda acc, b: acc * 2 + b)
 
 
 def brute_force_topk(
-    vecs: DataFrame, id_col: str, vec_col: str, query: list[float], k: int = 10
+    vecs: DataFrame, id_col: str, vec_col: str, query: DataFrame, k: int = 10
 ) -> DataFrame:
-    """Exact cosine top-k vs a literal query vector: (id, sim_bp, rank)."""
-    q = F.array(*[F.lit(float(x)) for x in query])
-    scored = vecs.select(
-        F.col(id_col).alias("id"),
-        F.round(cosine(F.col(vec_col).cast("array<double>"), q) * 10000)
-        .cast("long")
-        .alias("sim_bp"),
-    )
-    return _ranked_topk(scored, k)
+    """Exact cosine top-k vs the one-row ``query``: (id, sim_bp, rank)."""
+    scored = _base(vecs, id_col, vec_col).crossJoin(_query_row(query, vec_col))
+    return _ranked_topk(scored.select("id", _sim_bp_col("v", "qv")), k)
 
 
 def lsh_topk(
     vecs: DataFrame,
     id_col: str,
     vec_col: str,
-    query: list[float],
+    query: DataFrame,
     k: int = 10,
     bits: int = 8,
     seed: int = 42,
 ) -> DataFrame:
-    """ANN top-k: score only vectors in the query's hyperplane bucket.
-    Recall < 1 by construction; tested against brute force for overlap."""
-    dim = len(query)
-    planes = _hyperplanes(dim, bits, seed)
-    v = F.col(vec_col).cast("array<double>")
-    bucketed = vecs.select(F.col(id_col).alias("id"), v.alias("v"),
-                           _bucket_expr(v, planes).alias("bucket"))
-    # query bucket computed driver-side with the same arithmetic
-    qbucket = 0
-    for j, plane in enumerate(planes):
-        dot = sum(float(a) * float(b) for a, b in zip(query, plane))
-        if dot >= 0:
-            qbucket |= 1 << j
-    q = F.array(*[F.lit(float(x)) for x in query])
-    cand = bucketed.filter(F.col("bucket") == qbucket)
-    scored = cand.select(
-        "id", F.round(cosine(F.col("v"), q) * 10000).cast("long").alias("sim_bp")
+    """ANN top-k: score only vectors in the one-row ``query``'s
+    hyperplane bucket. Recall < 1 by construction; tested against brute
+    force for overlap. The hyperplanes take the query's dimension, so
+    they are made on the query row (one Python call per query)."""
+    planes = F.udf(lambda dim: _hyperplanes(dim, bits, seed), "array<array<double>>")
+    q = _query_row(query, vec_col).select("qv", planes(F.size("qv")).alias("planes"))
+    q = F.broadcast(q.select("qv", "planes", _bucket_expr("qv", "planes").alias("qb")))
+    cand = _base(vecs, id_col, vec_col).crossJoin(q).filter(
+        _bucket_expr("v", "planes") == F.col("qb")
     )
-    return _ranked_topk(scored, k)
+    return _ranked_topk(cand.select("id", _sim_bp_col("v", "qv")), k)
 
 
 def ivf_topk(
     vecs: DataFrame,
     id_col: str,
     vec_col: str,
-    query: list[float],
+    query: DataFrame,
     k: int = 10,
     n_cells: int = 16,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF coarse-quantizer ANN: centroids = deterministic id-ordered
-    sample; assignment + probing by cosine to centroid.
+    """IVF coarse-quantizer ANN for the one-row ``query``: the centroids
+    are the first ``n_cells`` vectors by id, every vector is assigned
+    to its max-cosine centroid, and only the ``nprobe`` cells nearest
+    the query (ties to the lower cell) are scored.
 
-    The centroid list is tiny → broadcast; assignment is a narrow map;
-    only ``nprobe`` cells are scanned for the query.
-    """
-    v = F.col(vec_col).cast("array<double>")
-    base = vecs.select(F.col(id_col).alias("id"), v.alias("v"))
-    cents = [
-        (i, [float(x) for x in row["v"]])
-        for i, row in enumerate(base.orderBy("id").limit(n_cells).collect())
-    ]
-    # assign each vector to its max-cosine centroid: one flat
-    # transform-over-centroid-array + array_position argmax (a chained
-    # when-ladder here makes the Catalyst tree exponential — measured)
-    cent_arr = F.array(*[F.array(*[F.lit(x) for x in cvec]) for _, cvec in cents])
-    sims = F.transform(cent_arr, lambda c: cosine(F.col("v"), c))
-    cell = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-    assigned = base.select("id", "v", cell.alias("cell"))
-    # probe cells: nprobe centroids nearest to the query (driver-side)
-    def cos_py(a, b):
-        da = math.sqrt(sum(x * x for x in a))
-        db = math.sqrt(sum(x * x for x in b))
-        return sum(x * y for x, y in zip(a, b)) / (da * db)
-
-    probe = sorted(cents, key=lambda c: -cos_py(query, c[1]))[:nprobe]
-    probe_ids = [c[0] for c in probe]
-    q = F.array(*[F.lit(float(x)) for x in query])
-    scored = assigned.filter(F.col("cell").isin(probe_ids)).select(
-        "id", F.round(cosine(F.col("v"), q) * 10000).cast("long").alias("sim_bp")
+    The centroids, the query and the probe set (the centroids sorted by
+    (-cosine to the query, cell)) ride one broadcast row; assignment and
+    probing are one narrow filter."""
+    base = _base(vecs, id_col, vec_col)
+    row = centroid_row(base.orderBy("id").limit(n_cells), "id", "v").crossJoin(
+        _query_row(query, vec_col)
     )
-    return _ranked_topk(scored, k)
+    nearest = F.array_sort(
+        F.transform(
+            "cents",
+            lambda c, i: F.struct((-cosine(F.col("qv"), c)).alias("d"), i.alias("cell")),
+        )
+    )
+    row = row.select("cents", "qv", F.slice(nearest, 1, nprobe)["cell"].alias("probe"))
+    scored = base.crossJoin(F.broadcast(row)).filter(
+        F.array_contains("probe", assign_cells(F.col("v"), F.col("cents")))
+    )
+    return _ranked_topk(scored.select("id", _sim_bp_col("v", "qv")), k)
 
 
 def semantic_dedup_flags(
-    df,
+    df: DataFrame,
     id_col: str,
     vec_col: str,
-    centroids: list[list[float]],
+    centroids: DataFrame,
     sim_threshold_bp: int = 9500,
-) -> "DataFrame":
+) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings, then within each cluster
     flag a document as a semantic duplicate iff a LOWER-id document in
     the same cluster has cosine similarity ≥ the threshold —
     deterministic keep-first, the same tie rule as exact dedup.
 
-    Returns (id, cell, sem_dup, keep) for every input vector.
+    ``centroids`` holds the centroid vectors in ``id_col``/``vec_col``;
+    cell i is the i-th by id. Returns (id, cell, sem_dup, keep) for
+    every input vector.
 
-    Scale shape: assignment is a narrow broadcast-centroid transform
-    (no shuffle); the duplicate test is a per-cell self-join — O(cell
-    size²) pairs — so ``len(centroids)`` must scale with the corpus
-    (SemDeDup's own design: more, smaller clusters at larger N; the
-    paper uses k ~ 10^4-10^5 at web scale). Cosines are rounded to
-    basis points so the keep decision is engine-portable."""
-    cent_arr = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
-    v = F.col(vec_col).cast("array<double>")
-    sims = F.transform(cent_arr, lambda c: cosine(v, c))
-    cell = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-    assigned = df.select(
-        F.col(id_col).alias("id"), v.alias("v"), cell.alias("cell")
-    )
-    a, b = assigned.alias("a"), assigned.alias("b")
-    sim_bp = F.round(
-        cosine(F.col("a.v"), F.col("b.v")) * 10000
-    ).cast("long")
-    dups = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("b.id") < F.col("a.id")),
+    Scale shape: assignment is a narrow broadcast-centroid transform;
+    each cell is then one ``groupBy(cell).applyInArrow`` group scored
+    against itself in BLAS row slices, O(cell size²) per cell, so the
+    number of centroids must scale with the corpus (SemDeDup's own
+    design: more, smaller clusters at larger N; the paper uses k ~
+    10^4-10^5 at web scale). Cosines are rounded to basis points so the
+    keep decision is engine-portable."""
+    assigned = _base(df, id_col, vec_col).crossJoin(
+        centroid_row(centroids, id_col, vec_col)
+    ).select("id", "v", assign_cells(F.col("v"), F.col("cents")).alias("cell"))
+    max_entries = SLICE_ENTRIES
+
+    def flag(t):
+        ids, v = _ids(t.column("id")), _matrix(t.column("v"))
+        dup = np.zeros(len(ids), dtype=bool)
+        for s, bp in _sim_bp(v, v, max_entries):
+            lower = ids[None, :] < ids[s:s + len(bp), None]
+            dup[s:s + len(bp)] = ((bp >= sim_threshold_bp) & lower).any(axis=1)
+        return pa.table(
+            {
+                "id": ids,
+                "cell": t.column("cell"),
+                "sem_dup": dup.astype(np.int32),
+                "keep": (~dup).astype(np.int32),
+            }
         )
-        .select(F.col("a.id").alias("id"), sim_bp.alias("sim_bp"))
-        .filter(F.col("sim_bp") >= sim_threshold_bp)
-        .select("id")
-        .distinct()
-        .withColumn("sem_dup", F.lit(1))
+
+    return assigned.groupBy("cell").applyInArrow(
+        flag, "id long, cell int, sem_dup int, keep int"
     )
-    out = assigned.join(dups, "id", "left").select(
-        "id",
-        "cell",
-        F.coalesce("sem_dup", F.lit(0)).alias("sem_dup"),
-    )
-    return out.withColumn("keep", (F.col("sem_dup") == 0).cast("int"))

@@ -184,10 +184,10 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     All ratios are FLOOR'd integer basis points (exact long arithmetic,
     engine-portable — no double rounding); docs
     with no words (or < 2 words / no lines) report 0 for the affected
-    ratio. One narrow projection — JVM higher-order functions, no
+    ratio. Narrow projections only — JVM higher-order functions, no
     shuffle, no Python; composes with ``stratified_sample`` to drop
     high-repetition strata the way the Gopher rules do."""
-    w = tokens(text_col)
+    w, bigrams, lines = F.col("w"), F.col("bigrams"), F.col("lines")
 
     def top_ratio(arr):
         # max count of any value / size — via sort + adjacent run-length
@@ -214,24 +214,33 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.size(arr) > 0, _bp_div(runs, F.size(arr))
         ).otherwise(F.lit(0).cast("long"))
 
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(w) - 2),
-            lambda i: F.concat_ws(" ", F.element_at(w, i + 1), F.element_at(w, i + 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-    lines = F.filter(
-        F.split(F.col(text_col), "\n"), lambda x: x != F.lit("")
+    # tokens, then bigrams, are projected as columns before use: inlined,
+    # the split would run again for every bigram and every reference
+    words = df.select(
+        F.col(id_col).alias("id"),
+        tokens(text_col).alias("w"),
+        F.filter(
+            F.split(F.col(text_col), "\n"), lambda x: x != F.lit("")
+        ).alias("lines"),
     )
+    with_bigrams = words.select(
+        "id", "w", "lines",
+        F.when(
+            F.size(w) >= 2,
+            F.transform(
+                F.sequence(F.lit(0), F.size(w) - 2),
+                lambda i: F.concat_ws(" ", F.element_at(w, i + 1), F.element_at(w, i + 2)),
+            ),
+        ).otherwise(F.array().cast("array<string>")).alias("bigrams"),
+    )
+
     dup_lines = F.size(lines) - F.size(F.array_distinct(lines))
     dup_frac = F.when(
         F.size(lines) > 0, _bp_div(dup_lines, F.size(lines))
     ).otherwise(F.lit(0).cast("long"))
 
-    return df.select(
-        F.col(id_col).alias("id"),
+    return with_bigrams.select(
+        "id",
         F.size(w).cast("long").alias("n_words"),
         top_ratio(w).alias("top_word_ratio_bp"),
         top_ratio(bigrams).alias("top_bigram_ratio_bp"),

@@ -195,18 +195,17 @@ _DIM = 64
 
 
 def q56_kmeans_step(spark, sf_dir):
-    from htrtf_spark.operators.simsearch import cosine
+    from htrtf_spark.operators.simsearch import assign_cells, centroid_row
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    e = t(spark, sf_dir, "embeddings")
+    seeds = centroid_row(e.orderBy("vec_id").limit(_KM_CELLS), "vec_id", "embedding")
+    # the cell is projected BEFORE the posexplode, so the centroid
+    # cosines run once per vector, not once per dimension
+    v = F.col("embedding").cast("array<double>")
+    cells = e.crossJoin(seeds).select(
+        assign_cells(v, F.col("cents")).alias("cell"), v.alias("v")
     )
-    cents_rows = e.orderBy("vec_id").limit(_KM_CELLS).collect()
-    cent_arr = F.array(
-        *[F.array(*[F.lit(float(x)) for x in r["v"]]) for r in cents_rows]
-    )
-    sims = F.transform(cent_arr, lambda c: cosine(F.col("v"), c))
-    cell = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-    assigned = e.select(cell.alias("cell"), F.posexplode("v").alias("dim0", "x"))
+    assigned = cells.select("cell", F.posexplode("v").alias("dim0", "x"))
     return (
         assigned.groupBy("cell", (F.col("dim0") + 1).alias("dim"))
         .agg(F.round(F.avg("x") * 10000).cast("long").alias("mean_bp"))

@@ -13,7 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from htrtf_spark.operators.simsearch import cosine, norm
+from htrtf_spark.operators.simsearch import (
+    block_matmul_near_pairs,
+    brute_force_topk,
+    norm,
+)
 from htrtf_spark.queries.util import t
 
 TOPK = 10
@@ -31,16 +35,11 @@ def _vec(spark, sf_dir):
 
 def q28_cosine_topk(spark, sf_dir):
     e = _vec(spark, sf_dir)
-    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    scored = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("v"), F.col("qv")) * 10000).cast("long").alias("sim_bp"),
-        )
+    top = brute_force_topk(
+        e.filter(F.col("vec_id") != 0), "vec_id", "v", e.filter(F.col("vec_id") == 0),
+        k=TOPK,
     )
-    return scored.orderBy(F.desc("sim_bp"), F.asc("vec_id")).limit(TOPK)
+    return top.select(F.col("id").alias("vec_id"), "sim_bp")
 
 
 _Q28_SQL = f"""
@@ -63,11 +62,9 @@ LIMIT {TOPK}
 
 
 def q29_near_pairs(spark, sf_dir):
-    # block matrix product (broadcast id-sorted matrix, BLAS per Arrow
-    # batch) — ~20x the crossJoin + zip_with/aggregate formulation, and
-    # the shape that survives scale-up (O(n^2/executors), no shuffle)
-    from htrtf_spark.operators.simsearch import block_matmul_near_pairs
-
+    # exact all pairs, BLAS per pair of hash blocks (one applyInArrow
+    # group each): O(n^2/executors), with per-task memory bounded by
+    # simsearch.BLOCK_ROWS, not by the corpus
     e = t(spark, sf_dir, "embeddings")
     return block_matmul_near_pairs(e, "vec_id", "embedding", min_sim_bp=NEAR_BP)
 

@@ -11,8 +11,6 @@ Recall-vs-brute-force is additionally tested in tests/test_operators.py.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from htrtf_spark.operators import multimodal, simsearch
 from htrtf_spark.operators.simsearch import _hyperplanes
 from htrtf_spark.queries.util import t
@@ -37,16 +35,10 @@ def _sim_bp(a: str, b: str) -> str:
     return f"CAST(ROUND(10000 * {_cos(a, b)}) AS BIGINT)"
 
 
-def _query_vec(spark, sf_dir):
-    e = t(spark, sf_dir, "embeddings")
-    row = e.filter("vec_id = 0").collect()[0]
-    return [float(x) for x in row["embedding"]]
-
-
 def q40_lsh_ann_topk(spark, sf_dir):
-    q = _query_vec(spark, sf_dir)
+    e = t(spark, sf_dir, "embeddings")
     return simsearch.lsh_topk(
-        t(spark, sf_dir, "embeddings"), "vec_id", "embedding", q,
+        e, "vec_id", "embedding", e.filter("vec_id = 0"),
         k=_K, bits=_LSH_BITS, seed=_LSH_SEED,
     )
 
@@ -80,9 +72,9 @@ QUALIFY "rank" <= {_K}
 
 
 def q41_ivf_ann_topk(spark, sf_dir):
-    q = _query_vec(spark, sf_dir)
+    e = t(spark, sf_dir, "embeddings")
     return simsearch.ivf_topk(
-        t(spark, sf_dir, "embeddings"), "vec_id", "embedding", q,
+        e, "vec_id", "embedding", e.filter("vec_id = 0"),
         k=_K, n_cells=_IVF_CELLS, nprobe=_IVF_NPROBE,
     )
 
@@ -164,7 +156,7 @@ FROM px
 # --------------------------------------------------------------------- q58
 # Batch multi-query exact top-k: 5 query vectors scored against the
 # whole corpus in one narrow BLAS pass with two-phase top-k (shuffle
-# volume ≤ queries × k per task, independent of corpus size).
+# volume ≤ queries × k per row slice, independent of corpus size).
 
 _BATCH_Q_IDS = [0, 1, 2, 3, 4]
 _BATCH_K = 3
@@ -205,8 +197,8 @@ QUERIES = {
 # --------------------------------------------------------------------- q94
 # SemDeDup-style semantic dedup (round 4; Abbas et al. 2023): assign
 # every embedding to its max-cosine centroid (first 8 vectors by id —
-# the q56 convention; ties broken to the lowest cell, matching
-# array_position's first-max), then flag a vector as a semantic dup iff
+# the q56 convention; ties broken to the lowest cell, as the oracle's
+# ORDER BY ..., cell), then flag a vector as a semantic dup iff
 # a LOWER-id same-cell vector has cosine >= 0.40 (keep-first). The
 # oracle recomputes assignment AND the pairwise keep rule; ~20 dup
 # pairs exist at both gate scales, so the dup path is exercised.
@@ -216,18 +208,11 @@ _Q94_THR_BP = 4000
 
 
 def q94_semantic_dedup(spark, sf_dir):
-    from htrtf_spark.operators.simsearch import semantic_dedup_flags
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = [
-        [float(x) for x in r["v"]]
-        for r in e.orderBy("vec_id").limit(_Q94_CELLS).collect()
-    ]
+    e = t(spark, sf_dir, "embeddings")
+    cents = e.orderBy("vec_id").limit(_Q94_CELLS)
     return (
-        semantic_dedup_flags(
-            e, "vec_id", "v", cents, sim_threshold_bp=_Q94_THR_BP
+        simsearch.semantic_dedup_flags(
+            e, "vec_id", "embedding", cents, sim_threshold_bp=_Q94_THR_BP
         )
         .withColumnRenamed("id", "vec_id")
         .orderBy("vec_id")

@@ -127,7 +127,7 @@ def vecs(spark):
 
 
 def test_brute_force_topk(spark, vecs):
-    q = [float(x) for x in vecs.filter("vec_id = 0").collect()[0]["embedding"]]
+    q = vecs.filter("vec_id = 0")
     top = simsearch.brute_force_topk(vecs, "vec_id", "embedding", q, k=5).collect()
     assert top[0]["id"] == 0 and top[0]["sim_bp"] == 10000  # self
     assert top[1]["id"] == 1  # planted near-dup
@@ -135,7 +135,7 @@ def test_brute_force_topk(spark, vecs):
 
 
 def test_lsh_topk_overlaps_bruteforce(spark, vecs):
-    q = [float(x) for x in vecs.filter("vec_id = 0").collect()[0]["embedding"]]
+    q = vecs.filter("vec_id = 0")
     exact = [r["id"] for r in simsearch.brute_force_topk(vecs, "vec_id", "embedding", q, k=5).collect()]
     approx = [r["id"] for r in simsearch.lsh_topk(vecs, "vec_id", "embedding", q, k=5, bits=4).collect()]
     # the query itself and its planted near-dup land in the query's bucket
@@ -144,7 +144,7 @@ def test_lsh_topk_overlaps_bruteforce(spark, vecs):
 
 
 def test_ivf_topk(spark, vecs):
-    q = [float(x) for x in vecs.filter("vec_id = 0").collect()[0]["embedding"]]
+    q = vecs.filter("vec_id = 0")
     res = simsearch.ivf_topk(vecs, "vec_id", "embedding", q, k=5, n_cells=8, nprobe=8)
     ids = [r["id"] for r in res.collect()]
     assert ids[0] == 0  # probing all cells == exact
@@ -473,27 +473,190 @@ def test_block_matmul_topk_exact_across_partitions(spark):
         assert have == want, qid
 
 
-def test_block_matmul_near_pairs_chunked_exact(spark):
-    """Chunked side collection (≥3 chunks forced) is byte-identical to a
-    single-chunk run — chunks partition the id_b space so the union is
-    exact and duplicate-free."""
+def test_block_matmul_near_pairs_blocked_exact(spark, monkeypatch):
+    """Scored as 3 hash blocks, one left row per slice, the near pairs
+    equal the single-block rows: the block pairs partition the pair
+    space, so the union is exact and duplicate-free."""
     import random
 
     rng = random.Random(99)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(42)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def run(chunk):
+    def run():
         return sorted(
             (r["id_a"], r["id_b"], r["sim_bp"])
             for r in simsearch.block_matmul_near_pairs(
-                vecs, "vec_id", "embedding", min_sim_bp=0, side_chunk_rows=chunk
+                vecs, "vec_id", "embedding", min_sim_bp=0
             ).collect()
         )
 
-    single = run(10_000)
-    chunked = run(15)  # 42 ids → 3 chunks
-    assert chunked == single and len(single) > 0
+    single = run()
+    monkeypatch.setattr(simsearch, "BLOCK_ROWS", 15)  # 42 ids → 3 blocks
+    monkeypatch.setattr(simsearch, "SLICE_ENTRIES", 1)  # 1 row per slice
+    blocked = run()
+    assert blocked == single and len(single) > 0
+
+
+def test_simsearch_plans_build_without_jobs(spark, vecs):
+    """Building a similarity-search plan launches no Spark job: query
+    vectors, centroids and the near-pairs block count are gathered
+    inside the plan, and nothing is collected or written while it is
+    built."""
+    sc = spark.sparkContext
+    q = vecs.filter("vec_id = 0")
+    builders = {
+        "brute_force_topk": lambda: simsearch.brute_force_topk(
+            vecs, "vec_id", "embedding", q
+        ),
+        "lsh_topk": lambda: simsearch.lsh_topk(vecs, "vec_id", "embedding", q),
+        "ivf_topk": lambda: simsearch.ivf_topk(vecs, "vec_id", "embedding", q),
+        "block_matmul_topk": lambda: simsearch.block_matmul_topk(
+            vecs, "vec_id", "embedding", query_ids=[0, 1]
+        ),
+        "block_matmul_near_pairs": lambda: simsearch.block_matmul_near_pairs(
+            vecs, "vec_id", "embedding", min_sim_bp=5000
+        ),
+        "semantic_dedup_flags": lambda: simsearch.semantic_dedup_flags(
+            vecs, "vec_id", "embedding", vecs.filter("vec_id < 4")
+        ),
+    }
+    launched = {}
+    try:
+        for name, build in builders.items():
+            group = f"simsearch-build-{len(launched)}"
+            sc.setJobGroup(group, name)
+            build()
+            launched[name] = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert launched == {name: [] for name in builders}
+
+
+def test_cell_ties_go_to_the_lower_cell(spark):
+    """A vector equidistant from two centroids is assigned the lower
+    cell, and a query equidistant from two centroids probes the lower
+    cell (ivf_topk with nprobe=1)."""
+    from pyspark.sql import functions as F
+
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [2.0, 0.1]),
+            (3, [0.1, 2.0]), (4, [1.0, 1.0])]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = simsearch.centroid_row(vecs.filter("vec_id < 2"), "vec_id", "embedding")
+    cell = simsearch.assign_cells(F.col("embedding"), F.col("cents"))
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in vecs.crossJoin(cents).select("vec_id", cell.alias("cell")).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 0, 3: 1, 4: 0}
+    q = spark.createDataFrame([([1.0, 1.0],)], "embedding array<double>")
+    top = simsearch.ivf_topk(vecs, "vec_id", "embedding", q, n_cells=2, nprobe=1)
+    assert sorted(r["id"] for r in top.collect()) == [0, 2, 4]
+
+
+@pytest.fixture(scope="module")
+def sf_dir(tmp_path_factory):
+    """A tiny scale-factor directory: the embeddings and documents
+    tables that the vector gates and q95 read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("sf")
+    emb = np.random.RandomState(11).randn(60, 8).astype(np.float32)
+    emb[5] = emb[3]  # an exact duplicate: q29 and q94 have a hit
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(60), pa.int64()),
+            "embedding": pa.array([list(map(float, r)) for r in emb],
+                                  pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(60)], pa.int32()),
+        }),
+        d / "embeddings.parquet",
+    )
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(4), pa.int64()),
+            "text": ["a a a b", "x y x y", "l1\nl2\nl1", ""],
+        }),
+        d / "documents.parquet",
+    )
+    return str(d)
+
+
+def test_near_pairs_gate_leaves_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """q29 stages nothing on disk: no htrtf_blockmm_* directory is left
+    in the temp directory after it runs."""
+    import tempfile
+
+    from htrtf_spark.queries.vectors import q29_near_pairs
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert q29_near_pairs(spark, sf_dir).count() > 0
+    assert list(tmp_path.glob("htrtf_blockmm_*")) == []
+
+
+def _per_element_faults(plan) -> list[str]:
+    """Optimized-plan shapes that evaluate a per-row expression once per
+    array element: a higher-order function in a Project directly above
+    a Generate, and a lambda body that re-splits a column."""
+
+    def lambda_bodies(s):
+        start = s.find("lambdafunction(")
+        while start >= 0:
+            depth = 0
+            for end in range(start + len("lambdafunction"), len(s)):
+                depth += {"(": 1, ")": -1}.get(s[end], 0)
+                if depth == 0:
+                    break
+            yield s[start:end + 1]
+            start = s.find("lambdafunction(", start + 1)
+
+    faults = []
+
+    def walk(node):
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        exprs = node.expressions().toString()
+        if (
+            node.nodeName() == "Project"
+            and "lambdafunction(" in exprs
+            and any(k.nodeName() == "Generate" for k in kids)
+        ):
+            faults.append("higher-order function above Generate")
+        if any("split(" in b or "regexp_" in b for b in lambda_bodies(exprs)):
+            faults.append(f"lambda re-splits a column in {node.nodeName()}")
+        for k in kids:
+            walk(k)
+
+    walk(plan)
+    return faults
+
+
+def test_hot_expressions_run_once_per_row(spark, vecs, docs, sf_dir):
+    """q56's cell and q95's tokens and bigrams are projected once per
+    row, never re-evaluated per array element; the guard itself flags
+    both shapes."""
+    from pyspark.sql import functions as F
+
+    from htrtf_spark.queries.relational3 import q56_kmeans_step
+    from htrtf_spark.queries.textops2 import q95_repetition_stats
+
+    def faults(df):
+        return _per_element_faults(df._jdf.queryExecution().optimizedPlan())
+
+    for gate in (q56_kmeans_step, q95_repetition_stats):
+        assert faults(gate(spark, sf_dir)) == [], gate.__name__
+    v = F.col("embedding")
+    hof_above_generate = vecs.select(
+        F.array_max(F.transform(v, lambda x: x * 2)).alias("m"), F.posexplode(v)
+    )
+    resplit = docs.select(
+        F.transform(
+            F.sequence(F.lit(1), F.lit(3)),
+            lambda i: F.element_at(F.split("text", " "), i),
+        )
+    )
+    assert faults(hof_above_generate) == ["higher-order function above Generate"]
+    assert faults(resplit) == ["lambda re-splits a column in Project"]
 
 
 def test_ann_topk_two_phase_plans(spark, vecs):
@@ -502,7 +665,7 @@ def test_ann_topk_two_phase_plans(spark, vecs):
     partitions×k rows) — never a global single-partition window sort of
     the scored set. The only Window in the plan runs over exactly k rows
     (above the GlobalLimit)."""
-    q = [float(x) for x in vecs.filter("vec_id = 0").collect()[0]["embedding"]]
+    q = vecs.filter("vec_id = 0")
     for fn, kw in [
         (simsearch.brute_force_topk, {}),
         (simsearch.lsh_topk, {"bits": 4}),
@@ -1183,7 +1346,7 @@ def test_semantic_dedup_flags(spark):
     base[11] = base[2] * 0.999           # another near-dup of 2
     rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    cents = [[float(x) for x in base[i]] for i in range(4)]
+    cents = df.filter("vec_id < 4")
     got = {
         r["id"]: (r["cell"], r["sem_dup"], r["keep"])
         for r in semantic_dedup_flags(

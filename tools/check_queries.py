@@ -1,7 +1,18 @@
 """Local mirror of the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() on DuckDB over the same sf dir,
 compare row count, column names, and an order-insensitive value
-comparison. Usage: python tools/check_queries.py [sf_dir] [name_filter]
+comparison.
+
+Usage: python tools/check_queries.py [--profile] [sf_dir] [name_filter]
+
+``name_filter`` keeps the gates whose name contains it; a comma-separated
+list keeps those matching any entry, run in the list's order.
+
+``--profile`` checks nothing against DuckDB: it runs each gate cold
+(``clearCache()`` and the dedup caches released first), builds it and
+runs it to a noop sink, and prints its cold wall seconds (build plus
+run), build seconds, and the Spark jobs launched while building and
+while running, read from job groups.
 """
 
 from __future__ import annotations
@@ -9,6 +20,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from datetime import date, datetime
@@ -51,9 +63,34 @@ def compare(spark_df, duck_rows, duck_cols):
     return True, f"{len(s_set)} rows"
 
 
+def profile(spark, name, fn, sf_dir):
+    """(cold wall s, build s, jobs at build, jobs at run) of one gate."""
+    from htrtf_spark.operators.dedup import release_caches
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    release_caches()
+    try:
+        sc.setJobGroup(f"build-{name}", name)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        sc.setJobGroup(f"run-{name}", name)
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup
+    return t2 - t0, t1 - t0, len(jobs(f"build-{name}")), len(jobs(f"run-{name}"))
+
+
 def main():
+    profiling = "--profile" in sys.argv
+    if profiling:
+        sys.argv.remove("--profile")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
+    filters = name_filter.split(",")
 
     from htrtf_spark.queries import registry
     from htrtf_spark.session import get_spark
@@ -69,8 +106,16 @@ def main():
         )
 
     failures = []
-    for name, (fn, sql) in sorted(registry().items()):
-        if name_filter and name_filter not in name:
+    gates = sorted(registry().items())
+    # gates run in filter order, so a profile can warm the session first
+    picked = [g for f in filters for g in gates if f in g[0]]
+    for name, (fn, sql) in dict(picked).items():
+        if profiling:
+            cold, build, jobs_build, jobs_run = profile(spark, name, fn, sf_dir)
+            print(
+                f"  {name}: cold {cold:.3f} s  build {build:.3f} s  "
+                f"jobs build {jobs_build} run {jobs_run}"
+            )
             continue
         try:
             df = fn(spark, sf_dir)
@@ -92,6 +137,9 @@ def main():
             print(f"  {name}: ERROR {str(exc)[:300]}")
             failures.append((name, str(exc)[:300]))
 
+    if profiling:
+        spark.stop()
+        return
     print()
     if failures:
         print(f"{len(failures)} FAILURES:")
