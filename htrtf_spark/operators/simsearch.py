@@ -39,8 +39,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Rows per hash block in ``block_matmul_near_pairs``: the corpus is
-#: cut into ceil(n / BLOCK_ROWS) blocks, and each pair of blocks is
-#: scored by one task.
+#: cut into at least ceil(n / BLOCK_ROWS) blocks, and each pair of
+#: blocks is scored by one task.
 BLOCK_ROWS = 20_000
 #: Entries of one scoring temporary (a slice of left rows against all
 #: right rows): 2^20 float64 = 8 MB, whatever the block or batch size.
@@ -109,10 +109,14 @@ def block_matmul_near_pairs(
     """Exact all-pairs cosine near neighbors above a basis-point
     threshold: (id_a, id_b, sim_bp) with ``id_a < id_b``.
 
-    Rows are hashed by id into B = ceil(n / BLOCK_ROWS) blocks (n from a
-    broadcast count row, so B is decided when the plan runs). Each row
-    is sent to the B block pairs it takes part in, and one
-    ``groupBy(pair).applyInArrow`` task scores each pair of blocks as
+    Rows are hashed by id into B blocks: the larger of
+    ceil(n / BLOCK_ROWS) (n from a broadcast count row, so decided when
+    the plan runs) and the least B_min whose B_min(B_min+1)/2 block
+    pairs fill every core (``defaultParallelism``, read on the driver).
+    Each row is sent to the B block pairs it takes part in; the pairs
+    go by id to B_min(B_min+1)/2 tasks, which adaptive execution cannot
+    coalesce into one when the corpus is small, and a
+    ``groupBy(pair).applyInArrow`` group scores each pair of blocks as
     BLAS row slices (``_sim_bp``). Work is O(n^2 / executors); each
     vector is shuffled B times, so past a few blocks the sub-linear
     paths (``lsh_topk`` / ``ivf_topk``) are the right tool.
@@ -127,8 +131,12 @@ def block_matmul_near_pairs(
     """
     base = _base(vecs, id_col, vec_col)
     id_a, id_b = id_out
+    cores = vecs.sparkSession.sparkContext.defaultParallelism
+    min_blocks = 1
+    while min_blocks * (min_blocks + 1) // 2 < cores:
+        min_blocks += 1
     n = F.broadcast(base.agg(F.count("*").alias("n")))
-    n_blocks = F.greatest(F.ceil(F.col("n") / BLOCK_ROWS), F.lit(1))
+    n_blocks = F.greatest(F.ceil(F.col("n") / BLOCK_ROWS), F.lit(min_blocks))
     blocked = base.crossJoin(n).select(
         "id", "v", F.pmod(F.xxhash64("id"), n_blocks).alias("blk"),
         F.sequence(F.lit(0).cast("long"), n_blocks - 1).alias("others"),
@@ -143,11 +151,14 @@ def block_matmul_near_pairs(
                 ),
             )
         ).alias("pair"),
-    ).select("id", "v", "blk", "pair.lo", "pair.hi")
+    ).select(
+        "id", "v", "blk", "pair.lo", "pair.hi",
+        F.expr("int(pair.hi * (pair.hi + 1) div 2 + pair.lo)").alias("pid"),
+    )
     max_entries = SLICE_ENTRIES
 
     def score(key, t):
-        lo, hi = key[0].as_py(), key[1].as_py()
+        lo, hi = key[1].as_py(), key[2].as_py()
         ids, v = _ids(t.column("id")), _matrix(t.column("v"))
         left = t.column("blk").to_numpy() == lo
         right = left if lo == hi else ~left
@@ -165,7 +176,8 @@ def block_matmul_near_pairs(
         out = np.concatenate(out, axis=1)
         return pa.table({id_a: out[0], id_b: out[1], "sim_bp": out[2]})
 
-    return pairs.groupBy("lo", "hi").applyInArrow(
+    tasks = min_blocks * (min_blocks + 1) // 2
+    return pairs.repartitionById(tasks, "pid").groupBy("pid", "lo", "hi").applyInArrow(
         score, f"{id_a} long, {id_b} long, sim_bp long"
     )
 

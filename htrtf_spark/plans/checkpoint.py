@@ -9,17 +9,18 @@ Design: work splits into ``n_buckets`` deterministic buckets by
 ``pmod(xxhash64(conv_id), n_buckets)`` — a conversation never straddles
 buckets, so each bucket's output is independent and idempotent. A run is:
 
-  1. ONE extraction pass over the pending buckets only, written
-     ``partitionBy(_bucket)`` into ``<out>/_staging/`` by exactly one
-     write task per bucket (the input is scanned once per resume
-     attempt, never once per bucket — at 100 TB a per-bucket rescan
-     would read n_buckets x corpus);
-  2. per pending bucket, an atomic COMMIT: FileSystem.rename of the
-     staged directory to ``<out>/data/bucket=<b>/`` followed by the
-     manifest row publish (write-temp-rename, so a crash can never leave
-     a half manifest — SURVEY.md §7.4 risk 5). The lineage counts come
-     from the staged files' parquet footers (row counts and the
-     ``reject_reason`` null counts), so the commit runs no Spark job.
+  1. ONE Python pass over the pending buckets' raw turns (scanned once
+     per resume attempt, never once per bucket). The turns are shuffled
+     by id so that staging task p holds bucket p mod n_buckets only,
+     k = ceil(defaultParallelism / n_buckets) tasks per bucket. Each
+     task runs the extraction kernel and streams the rows to one parquet
+     file in ``<out>/_staging/_bucket=<b>/``; the extracted rows never
+     return to the JVM. It returns its file's lineage counts from the
+     footer it just wrote (rows and the ``reject_reason`` null count).
+  2. per pending bucket, an atomic COMMIT on the driver, with no Spark
+     job: a move of the staged directory to ``<out>/data/bucket=<b>/``
+     followed by the manifest row publish (a dot-tmp file, then a move,
+     so a crash can never leave a half manifest — SURVEY.md §7.4 risk 5).
 
 Resume = list manifest, recompute only missing buckets. A kill during
 staging commits nothing (the staging dir is discarded on restart); a
@@ -30,26 +31,31 @@ different bucket count against a partial manifest is REFUSED — the two
 partitionings are incompatible and mixing them would silently duplicate
 and drop conversations.
 
-All filesystem operations, footer reads included, go through one Hadoop
-FileSystem handle per run for ``out_dir``'s scheme (local, HDFS, s3a,
-...), so the same job works under ``spark-submit --master <cluster>``
-with a remote --output; only ``prune_checkpoints`` is a local-filesystem
-utility.
+All file access, the tasks' writes included, goes through one
+``pyarrow.fs`` filesystem resolved from ``out_dir``: a local path,
+``file://``, or another scheme pyarrow.fs opens (``hdfs://`` needs
+libhdfs; ``s3://`` and ``gs://`` need a pyarrow built with them).
+Hadoop-only schemes such as ``s3a://`` are refused before any Spark
+job. ``prune_checkpoints`` is a local-filesystem utility.
 """
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 import time
 from datetime import datetime, timezone
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from htrtf_spark.plans.pipeline import extract_turns
+from htrtf_spark.plans.pipeline import EXTRACT_KERNEL, extraction_input
+from htrtf_spark.sources.iceberg import write_task_files
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
@@ -67,60 +73,52 @@ class KilledForTest(RuntimeError):
 
 
 # ---------------------------------------------------------------- FS layer
-def _hadoop_fs(spark: SparkSession, path: str):
-    """The FileSystem of ``path``'s scheme and the Hadoop ``Path`` class.
-    Resolve them once per run: a ``spark._jvm.<class>`` lookup makes a
-    py4j round trip per package segment (2-4 ms, ~10x a FS call)."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
+def _filesystem(out_dir: str) -> tuple[pafs.FileSystem, str]:
+    """``out_dir``'s pyarrow filesystem and its path on it. Refuses a
+    scheme that pyarrow.fs cannot open."""
+    scheme = urlparse(out_dir).scheme
+    if not scheme:
+        return pafs.LocalFileSystem(), os.path.abspath(out_dir)
+    try:
+        fs, path = pafs.FileSystem.from_uri(out_dir)
+    except (pa.ArrowException, OSError) as e:
+        raise ValueError(
+            f"checkpoint output {out_dir!r}: pyarrow.fs cannot open scheme "
+            f"{scheme!r} ({e}); use a local path or file, hdfs, s3 or gs"
+        ) from e
+    return fs, path.rstrip("/")
 
 
-def _names(fs, jpath) -> set[str]:
-    if not fs.exists(jpath):
-        return set()
-    return {st.getPath().getName() for st in fs.listStatus(jpath)}
+def _names(fs: pafs.FileSystem, path: str, recursive: bool = False) -> dict:
+    """{name: path} of the entries under ``path`` (none if missing)."""
+    sel = pafs.FileSelector(path, allow_not_found=True, recursive=recursive)
+    return {i.base_name: i.path for i in fs.get_file_info(sel)}
 
 
-def _staged_counts(fs, Path, staging: str) -> dict[int, tuple[int, int]]:
-    """Per staged bucket, (rows, rejected rows) from its parquet footers:
-    row-group ``num_rows`` and the ``reject_reason`` null count. Raises
-    if a footer lacks that null count."""
-    counts = {}
-    # hidden names (".crc" checksums, "_SUCCESS" markers) are not data
-    for st in fs.globStatus(Path(os.path.join(staging, "_bucket=*", "[!._]*"))):
-        path, size = st.getPath(), st.getLen()
-        stream = fs.open(path)
-        try:
-            stream.seek(size - 8)
-            tail = stream.readNBytes(8)  # footer length + "PAR1"
-            n = int.from_bytes(tail[:4], "little")
-            stream.seek(size - 8 - n)
-            footer = stream.readNBytes(n)
-        finally:
-            stream.close()
-        md = pq.read_metadata(pa.BufferReader(b"PAR1" + footer + tail))
-        b = int(path.getParent().getName()[len("_bucket=") :])
-        rows, rejected = counts.get(b, (0, 0))
-        col = md.schema.names.index("reject_reason")
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            stats = rg.column(col).statistics
-            if stats is None or not stats.has_null_count:
-                raise ValueError(f"{path}: no reject_reason null count")
-            rows += rg.num_rows
-            rejected += rg.num_rows - stats.null_count
-        counts[b] = (rows, rejected)
-    return counts
+def _rmtree(fs: pafs.FileSystem, path: str) -> None:
+    if fs.get_file_info(path).type != pafs.FileType.NotFound:
+        fs.delete_dir(path)
+
+
+def _footer_counts(md: pq.FileMetaData, path: str) -> tuple[int, int]:
+    """(rows, rejected rows) from a parquet footer's row-group counts
+    and ``reject_reason`` null counts; raises if one lacks the latter."""
+    col = md.schema.names.index("reject_reason")
+    rows = rejected = 0
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        stats = rg.column(col).statistics
+        if stats is None or not stats.has_null_count:
+            raise ValueError(f"{path}: no reject_reason null count")
+        rows += rg.num_rows
+        rejected += rg.num_rows - stats.null_count
+    return rows, rejected
 
 
 # ---------------------------------------------------------------- manifest
-def completed_buckets(out_dir: str, spark: SparkSession | None = None) -> set[int]:
-    spark = spark or SparkSession.getActiveSession()
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    if spark is None:  # no session: local-filesystem fallback
-        return _completed(os.listdir(mdir) if os.path.isdir(mdir) else [])
-    fs, Path = _hadoop_fs(spark, mdir)
-    return _completed(_names(fs, Path(mdir)))
+def completed_buckets(out_dir: str) -> set[int]:
+    fs, root = _filesystem(out_dir)
+    return _completed(_names(fs, f"{root}/{MANIFEST_DIR}"))
 
 
 def _completed(names) -> set[int]:
@@ -131,32 +129,19 @@ def _completed(names) -> set[int]:
     }
 
 
-def _publish_manifest_row(fs, Path, mdir: str, row: dict) -> None:
-    """Atomic publish into the existing manifest dir ``mdir`` through its
-    FileSystem: local temp parquet → copyFromLocalFile to a dot-tmp name
-    → rename to final."""
+def _publish_manifest_row(fs: pafs.FileSystem, mdir: str, row: dict) -> None:
+    """Atomic publish into the existing manifest dir ``mdir``: write a
+    dot-tmp file, then move it onto the final name."""
     name = f"bucket-{row['bucket']:05d}.parquet"
-    jfinal = Path(os.path.join(mdir, name))
-    jtmp = Path(os.path.join(mdir, "." + name + ".tmp"))
-    with tempfile.NamedTemporaryFile(suffix=".parquet", delete=False) as f:
-        local = f.name
-    try:
-        pq.write_table(pa.Table.from_pylist([row]), local)
-        fs.copyFromLocalFile(True, True, Path("file:" + local), jtmp)
-        fs.delete(jfinal, False)  # no-op unless a stale final exists
-        if not fs.rename(jtmp, jfinal):
-            raise IOError(f"rename failed: {jtmp} -> {jfinal}")
-    finally:
-        if os.path.exists(local):
-            os.unlink(local)
+    tmp = f"{mdir}/.{name}.tmp"
+    pq.write_table(pa.Table.from_pylist([row]), tmp, filesystem=fs)
+    fs.move(tmp, f"{mdir}/{name}")
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    mdir = os.path.join(out_dir, MANIFEST_DIR)
-    fs, Path = _hadoop_fs(spark, mdir)
-    if not fs.exists(Path(mdir)):
+    if not completed_buckets(out_dir):
         return spark.createDataFrame([], _MANIFEST_SCHEMA)
-    return spark.read.parquet(os.path.join(mdir, "*.parquet"))
+    return spark.read.parquet(os.path.join(out_dir, MANIFEST_DIR, "*.parquet"))
 
 
 # ---------------------------------------------------------------- the job
@@ -169,7 +154,6 @@ def run_extraction_checkpointed(
     transcripts: DataFrame,
     out_dir: str,
     n_buckets: int = 16,
-    num_partitions: int | None = None,
     fail_after_buckets: int | None = None,
 ) -> list[int]:
     """Run (or resume) the extraction job.
@@ -180,15 +164,12 @@ def run_extraction_checkpointed(
     different ``n_buckets``. ``fail_after_buckets`` injects a crash in
     the commit loop for the resume test.
     """
-    fs, Path = _hadoop_fs(spark, out_dir)
-    staging, data, mdir = (
-        os.path.join(out_dir, d) for d in (STAGING_DIR, DATA_DIR, MANIFEST_DIR)
-    )
-    done = _completed(_names(fs, Path(mdir)))
+    fs, root = _filesystem(out_dir)
+    staging, data, mdir = (f"{root}/{d}" for d in (STAGING_DIR, DATA_DIR, MANIFEST_DIR))
+    done = _completed(_names(fs, mdir))
     if done:
-        rows = spark.read.parquet(os.path.join(mdir, "*.parquet")).select("n_buckets")
-        seen = {r["n_buckets"] for r in rows.distinct().collect()}
-        if seen and seen != {n_buckets}:
+        seen = set(pq.read_table(mdir, columns=["n_buckets"], filesystem=fs)[0].to_pylist())
+        if seen != {n_buckets}:
             raise ValueError(
                 f"manifest at {out_dir} was written with n_buckets={sorted(seen)}; "
                 f"resuming with n_buckets={n_buckets} would mix two incompatible "
@@ -199,68 +180,86 @@ def run_extraction_checkpointed(
     if not pending:
         return []
 
-    fs.delete(Path(staging), True)  # discard any half-staged previous attempt
+    _rmtree(fs, staging)  # discard any half-staged previous attempt
 
-    src = transcripts.withColumn("_bucket", _bucket_col(n_buckets))
+    src = extraction_input(transcripts).withColumn("_bucket", _bucket_col(n_buckets))
     if len(pending) < n_buckets:
         src = src.filter(F.col("_bucket").isin(pending))
+    # Task p holds bucket p mod n_buckets only, split over k salted tasks
+    # so the kernel never runs on fewer tasks than cores. By id, not by
+    # hash: murmur3 would leave some tasks empty and give others two
+    # buckets.
+    k = -(-spark.sparkContext.defaultParallelism // n_buckets)
+    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(k)).cast("int")
+    frame = src.repartitionById(n_buckets * k, F.col("_bucket") + n_buckets * salt)
     t0 = time.monotonic()
-    extracted = extract_turns(src.drop("_bucket"), num_partitions=num_partitions)
-    # the bucket id is a pure function of conv_id — recomputable on the
-    # extracted rows, so extraction itself stays a narrow 4-column stage.
-    # One shuffle on the (smaller) extracted rows sends bucket b to write
-    # task b before the partitioned write: without it, partitionBy emits
-    # input_tasks x n_buckets files (4k even at bench scale, unbounded at
-    # cluster scale). By id, not by hash: murmur3 would leave some tasks
-    # empty and give others two buckets.
-    staged = extracted.withColumn("_bucket", _bucket_col(n_buckets)).repartitionById(
-        n_buckets, "_bucket"
-    )
-    # Spark's writer, not the Iceberg layer's task-side pyarrow writer:
-    # staging goes through Hadoop FileSystem, so out_dir may be HDFS/s3a
-    staged.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+    staged = _stage(frame, fs, staging, n_buckets)
     pass_wall_ms = max(int((time.monotonic() - t0) * 1000), 1)
 
-    # lineage counts from the footers of what was actually staged
-    # (validates the write) — no second pass over the rows
-    stats = _staged_counts(fs, Path, staging)
+    stats: dict[int, tuple[int, int]] = {}
+    for r in staged:
+        n, rej = stats.get(r["bucket"], (0, 0))
+        stats[r["bucket"]] = (n + r["rows"], rej + r["rejected"])
+    # a failed or speculative task attempt's file is in no record
+    kept = {r["file"] for r in staged}
+    for name, path in _names(fs, staging, recursive=True).items():
+        if name.endswith(".parquet") and name not in kept:
+            fs.delete_file(path)
     total_rows = sum(n for n, _ in stats.values()) or 1
 
-    fs.mkdirs(Path(data))
-    fs.mkdirs(Path(mdir))
-    # one listing, not an exists() per bucket: the loop below only adds
-    # the data dirs of buckets it has already passed
-    in_data = _names(fs, Path(data))
+    fs.create_dir(data)
+    fs.create_dir(mdir)
+    in_data = _names(fs, data)
     ran: list[int] = []
     for b in pending:
         if b in stats:
-            jdata = Path(os.path.join(data, f"bucket={b}"))
+            dst = f"{data}/bucket={b}"
             if f"bucket={b}" in in_data:
-                fs.delete(jdata, True)  # partial dir from a crashed commit
-            if not fs.rename(Path(os.path.join(staging, f"_bucket={b}")), jdata):
-                raise IOError(f"rename failed: bucket {b} -> {jdata}")
+                fs.delete_dir(dst)  # partial dir from a crashed commit
+            fs.move(f"{staging}/_bucket={b}", dst)
         n, rej = stats.get(b, (0, 0))
         # wall is attributed to buckets proportionally to their rows (the
         # pass is shared); turns_per_sec is therefore the pass aggregate
         share_ms = max(int(pass_wall_ms * n / total_rows), 1)
-        _publish_manifest_row(
-            fs, Path, mdir,
-            {
-                "bucket": b,
-                "n_buckets": n_buckets,
-                "rows_in": n,  # 1:1 in/out incl. rejects
-                "rows_out": n - rej,
-                "rows_rejected": rej,
-                "wall_ms": share_ms,
-                "turns_per_sec": float(n) / (share_ms / 1000.0),
-                "finished_at": datetime.now(timezone.utc).isoformat(),
-            },
-        )
+        _publish_manifest_row(fs, mdir, {
+            "bucket": b, "n_buckets": n_buckets,
+            # 1:1 in/out incl. rejects
+            "rows_in": n, "rows_out": n - rej, "rows_rejected": rej,
+            "wall_ms": share_ms, "turns_per_sec": float(n) / (share_ms / 1000.0),
+            "finished_at": datetime.now(timezone.utc).isoformat(),
+        })
         ran.append(b)
         if fail_after_buckets is not None and len(ran) >= fail_after_buckets:
             raise KilledForTest(f"injected failure after {len(ran)} buckets")
-    fs.delete(Path(staging), True)
+    _rmtree(fs, staging)
     return ran
+
+
+def _stage(frame: DataFrame, fs, staging: str, n_buckets: int) -> list:
+    """The run's one Spark job: every task of ``frame`` runs
+    ``_stage_task``. Returns their (bucket, file, rows, rejected) rows."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fn, ddl = EXTRACT_KERNEL
+    schema = to_arrow_schema(T.DataType.fromDDL(ddl))
+    task = functools.partial(_stage_task, fn=fn, schema=schema, fs=fs,
+                             staging=staging, n_buckets=n_buckets)
+    return frame.mapInArrow(task, "bucket long, file string, rows long, rejected long").collect()
+
+
+def _stage_task(batches, fn, schema, fs, staging, n_buckets):
+    """One staging task: bucket ``partitionId mod n_buckets``'s rows,
+    run through ``fn`` and written under ``_staging/_bucket=<b>/``."""
+    from pyspark import TaskContext
+
+    b = TaskContext.get().partitionId() % n_buckets
+    out = f"{staging}/_bucket={b}"
+    for _key, path, md, _size in write_task_files(fn(batches), out, schema, [], fs):
+        rows, rejected = _footer_counts(md, path)
+        name = path.rsplit("/", 1)[-1]
+        yield pa.RecordBatch.from_pylist(
+            [{"bucket": b, "file": name, "rows": rows, "rejected": rejected}]
+        )
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

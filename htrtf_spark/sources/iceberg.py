@@ -1070,32 +1070,13 @@ def _write_files(
 def _write_task(batches, out_dir, schema, part_cols, ice_schema, fn, content,
                 equality_ids):
     """One task of ``_write_files``: run ``fn`` (if any) over the
-    task's batches and write each run of rows with equal partition
-    values to its own parquet file. Names carry the task attempt, so a
-    retried or speculative attempt never overwrites another's file.
-    Yields one pickled data_file record per file, whose counts and
-    bounds come from the footer the writer just wrote."""
+    task's batches and write them with ``write_task_files``. Yields one
+    pickled data_file record per file, whose counts and bounds come
+    from the footer the writer just wrote."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark import TaskContext
 
-    ctx = TaskContext.get()
-    stem = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
-    runs = itertools.groupby(
-        _partition_runs(fn(batches) if fn else batches, part_cols),
-        key=lambda run: run[0],
-    )
-    for i, (key, pieces) in enumerate(runs):
-        os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, f"{stem}-{i:05d}.parquet")
-        footer: list = []
-        with pq.ParquetWriter(path, schema, metadata_collector=footer) as w:
-            for _key, rows in pieces:
-                rows = rows.select(schema.names)
-                if rows.schema != schema:
-                    rows = rows.cast(schema)
-                w.write_batch(rows)
-        md = footer[0]
+    files = write_task_files(fn(batches) if fn else batches, out_dir, schema, part_cols)
+    for key, path, md, size in files:
         lower, upper = (
             _file_column_bounds(md, ice_schema) if ice_schema else ([], [])
         )
@@ -1108,7 +1089,7 @@ def _write_task(batches, out_dir, schema, part_cols, ice_schema, fn, content,
             "file_format": "PARQUET",
             "partition": dict(zip(part_cols, key)),
             "record_count": md.num_rows,
-            "file_size_in_bytes": os.path.getsize(path),
+            "file_size_in_bytes": size,
             "equality_ids": equality_ids,
             "lower_bounds": lower or None,
             "upper_bounds": upper or None,
@@ -1121,21 +1102,66 @@ def _write_task(batches, out_dir, schema, part_cols, ice_schema, fn, content,
         )
 
 
+def write_task_files(batches, out_dir, schema, part_cols, filesystem=None):
+    """The task-side parquet writer: stream a task's Arrow ``batches``
+    to parquet files under ``out_dir``, one file per run of rows with
+    equal ``part_cols`` values (one file in all when unpartitioned).
+    Names carry the task attempt, so a retried or speculative attempt
+    never overwrites another's file. ``filesystem`` is a
+    ``pyarrow.fs`` filesystem (default local) that ``out_dir`` is a
+    path of. Yields ``(partition tuple, path, footer metadata, size)``
+    per file once it is closed."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+    from pyspark import TaskContext
+
+    fs = filesystem or pafs.LocalFileSystem()
+    ctx = TaskContext.get()
+    stem = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
+    runs = itertools.groupby(
+        _partition_runs(batches, part_cols), key=lambda run: run[0]
+    )
+    for i, (key, pieces) in enumerate(runs):
+        fs.create_dir(out_dir, recursive=True)
+        path = f"{out_dir}/{stem}-{i:05d}.parquet"
+        footer: list = []
+        with fs.open_output_stream(path) as sink:
+            with pq.ParquetWriter(sink, schema, metadata_collector=footer) as w:
+                for _key, rows in pieces:
+                    rows = rows.select(schema.names)
+                    if rows.schema != schema:
+                        rows = rows.cast(schema)
+                    w.write_batch(rows)
+            size = sink.tell()
+        yield key, path, footer[0], size
+
+
 def _partition_runs(batches, cols: list[str]):
     """(partition tuple, rows) for each run of consecutive rows that
-    agree on ``cols``; unpartitioned, each non-empty batch is one run."""
+    agree on ``cols``; unpartitioned, each non-empty batch is one run.
+    Run boundaries come from an Arrow comparison of adjacent keys in
+    which two NULLs are equal; only each run's first key becomes Python
+    values."""
+    import numpy as np
+    import pyarrow.compute as pc
+
     for batch in batches:
-        if not batch.num_rows:
+        n = batch.num_rows
+        if not n:
             continue
         if not cols:
             yield (), batch
             continue
-        keys = list(zip(*(batch.column(c).to_pylist() for c in cols)))
-        start = 0
-        for i in range(1, len(keys) + 1):
-            if i == len(keys) or keys[i] != keys[start]:
-                yield keys[start], batch.slice(start, i - start)
-                start = i
+        changed = np.zeros(n - 1, dtype=bool)
+        for c in cols:
+            prev, cur = batch.column(c).slice(0, n - 1), batch.column(c).slice(1)
+            both_null = pc.and_(pc.is_null(prev), pc.is_null(cur))
+            same = pc.or_(pc.fill_null(pc.equal(prev, cur), False), both_null)
+            changed |= pc.invert(same).to_numpy(zero_copy_only=False)
+        bounds = [0, *(np.flatnonzero(changed) + 1).tolist(), n]
+        for start, end in zip(bounds, bounds[1:]):
+            key = tuple(batch.column(c)[start].as_py() for c in cols)
+            yield key, batch.slice(start, end - start)
 
 
 def _commit(

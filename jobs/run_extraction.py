@@ -24,12 +24,14 @@ def main(argv: list[str] | None = None) -> int:
     src.add_argument("--input-orc", help="transcripts ORC path")
     src.add_argument("--input-csv", help="transcripts CSV path (RFC-4180 quoting)")
     src.add_argument("--iceberg-table", help="Iceberg table name (catalog.db.tbl)")
-    p.add_argument("--output", required=True, help="output dir (data/ + _manifest/)")
+    p.add_argument("--output", required=True,
+                   help="output dir (data/ + _manifest/): a local path or a "
+                        "URI that pyarrow.fs opens (file://, hdfs:// with "
+                        "libhdfs, s3://, gs://); the extraction tasks write "
+                        "it directly, one Python pass per bucket. "
+                        "Hadoop-only schemes such as s3a:// are refused "
+                        "before any Spark job")
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--repartition", type=int, default=None,
-                   help="optional salted repartition width (only for "
-                        "unsplittable/skewed sources; healthy parquet "
-                        "inputs should leave this unset)")
     p.add_argument("--day-range", default=None, metavar="FROM:TO",
                    help="Iceberg input only: inclusive ISO date range, "
                         "e.g. 2024-01-01:2024-01-07 — files outside the "
@@ -56,6 +58,9 @@ def main(argv: list[str] | None = None) -> int:
         read_transcripts_parquet,
     )
 
+    # resolves the output's filesystem first: an unsupported scheme is
+    # refused before the input is read
+    already = len(completed_buckets(args.output))
     if args.iceberg_table:
         pf = None
         if args.day_range:
@@ -86,11 +91,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         df = read_transcripts_parquet(spark, args.input)
 
-    already = len(completed_buckets(args.output, spark))
-    ran = run_extraction_checkpointed(
-        spark, df, args.output, n_buckets=args.buckets,
-        num_partitions=args.repartition,
-    )
+    ran = run_extraction_checkpointed(spark, df, args.output, n_buckets=args.buckets)
     print(json.dumps({
         "output": args.output,
         "buckets_total": args.buckets,

@@ -104,51 +104,54 @@ def test_manifest_counts_match_output(spark, tmp_path):
     assert man == {b: got.get(b, (0, 0)) for b in range(N_BUCKETS)}
 
 
-def _record_staging_write(monkeypatch, spark):
-    """Wrap the parquet writer: remember the staged DataFrame, and run
-    everything after the staging write under job group "after-staging"."""
-    from pyspark.sql.readwriter import DataFrameWriter
+def _record_staging(monkeypatch, spark):
+    """Wrap the staging job: remember the staged frame, run the job
+    under job group "staging" and everything after it under
+    "after-staging"."""
+    real, staged = ckpt._stage, []
 
-    real, staged = DataFrameWriter.parquet, []
+    def stage(frame, *args):
+        spark.sparkContext.setJobGroup("staging", "checkpoint staging")
+        out = real(frame, *args)
+        staged.append(frame)
+        spark.sparkContext.setJobGroup("after-staging", "checkpoint commit")
+        return out
 
-    def parquet(self, path, *args, **kwargs):
-        real(self, path, *args, **kwargs)
-        if path.endswith(ckpt.STAGING_DIR):
-            staged.append(self._df)
-            spark.sparkContext.setJobGroup("after-staging", "checkpoint commit")
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(ckpt, "_stage", stage)
     return staged
+
+
+def _jobs(spark, group: str) -> list[int]:
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 def test_commit_launches_no_spark_job(spark, tmp_path, monkeypatch):
     """A fresh run's commit (counts, renames, manifest) is metadata-only:
-    no Spark job starts after the staging write returns."""
+    no Spark job starts after the staging job returns."""
     df = spark.createDataFrame(
         synth.synth_pandas(n_convs=10, seed=2), schema=TRANSCRIPTS_SCHEMA
     )
-    sc = spark.sparkContext
-    staged = _record_staging_write(monkeypatch, spark)
+    staged = _record_staging(monkeypatch, spark)
     try:
         ckpt.run_extraction_checkpointed(
             spark, df, str(tmp_path / "ck5"), n_buckets=N_BUCKETS
         )
-        after = list(sc.statusTracker().getJobIdsForGroup("after-staging"))
+        after = _jobs(spark, "after-staging")
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
     assert len(staged) == 1
     assert after == []
 
 
 def test_one_write_task_per_bucket(spark, tmp_path, monkeypatch):
-    """Write task b holds exactly bucket b: no task is empty while
-    another writes two buckets."""
+    """Staging task p holds bucket p mod n_buckets only: no task writes
+    two buckets."""
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         synth.synth_pandas(n_convs=20, seed=4), schema=TRANSCRIPTS_SCHEMA
     )
-    staged = _record_staging_write(monkeypatch, spark)
+    staged = _record_staging(monkeypatch, spark)
     ckpt.run_extraction_checkpointed(
         spark, df, str(tmp_path / "ck6"), n_buckets=N_BUCKETS
     )
@@ -161,26 +164,104 @@ def test_one_write_task_per_bucket(spark, tmp_path, monkeypatch):
         .collect()
     }
     assert len(pairs) > 1
-    assert all(p == b for p, b in pairs)
+    assert all(p % N_BUCKETS == b for p, b in pairs)
 
 
-def test_footer_without_null_count_raises(spark, tmp_path):
+def test_few_buckets_stage_on_every_core(spark, tmp_path, monkeypatch):
+    """With fewer buckets than cores each bucket is split over several
+    staging tasks: n_buckets=2 on local[4] stages on at least 4 tasks,
+    each writing a file, and the output rows equal extract_turns."""
+    df = spark.createDataFrame(
+        synth.synth_pandas(n_convs=20, seed=6), schema=TRANSCRIPTS_SCHEMA
+    )
+    cores = spark.sparkContext.defaultParallelism
+    assert cores == 4
+    staged = _record_staging(monkeypatch, spark)
+    out = tmp_path / "ck7"
+    ckpt.run_extraction_checkpointed(spark, df, str(out), n_buckets=2)
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    (frame,) = staged
+    assert frame.rdd.getNumPartitions() >= cores
+    assert len(list((out / ckpt.DATA_DIR).glob("bucket=*/*.parquet"))) >= cores
+    got = _sorted(ckpt.read_output(spark, str(out)).drop("bucket").toPandas())
+    pd.testing.assert_frame_equal(_sorted(extract_turns(df).toPandas()), got)
+
+
+def test_resume_launches_only_the_staging_job(spark, tmp_path, monkeypatch):
+    """Resuming a partial manifest reads the manifest's bucket count
+    without Spark: the staging job is the only one the resume starts."""
+    df = spark.createDataFrame(
+        synth.synth_pandas(n_convs=12, seed=8), schema=TRANSCRIPTS_SCHEMA
+    )
+    out_dir = str(tmp_path / "ck8")
+    with pytest.raises(ckpt.KilledForTest):
+        ckpt.run_extraction_checkpointed(
+            spark, df, out_dir, n_buckets=N_BUCKETS, fail_after_buckets=2
+        )
+    staged = _record_staging(monkeypatch, spark)
+    spark.sparkContext.setJobGroup("before-staging", "checkpoint resume")
+    try:
+        ran = ckpt.run_extraction_checkpointed(spark, df, out_dir, n_buckets=N_BUCKETS)
+        jobs = {g: _jobs(spark, g) for g in ("before-staging", "staging", "after-staging")}
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert len(staged) == 1 and len(ran) == N_BUCKETS - 2
+    assert jobs["before-staging"] == [] and jobs["after-staging"] == []
+    assert jobs["staging"]
+
+
+def test_hadoop_only_scheme_refused_before_any_job(spark):
+    """An output pyarrow.fs cannot open (s3a://) is refused with an
+    error naming the scheme, before any Spark job."""
+    df = spark.createDataFrame(
+        synth.synth_pandas(n_convs=2, seed=1), schema=TRANSCRIPTS_SCHEMA
+    )
+    spark.sparkContext.setJobGroup("s3a-output", "checkpoint to s3a")
+    try:
+        with pytest.raises(ValueError, match="'s3a'"):
+            ckpt.run_extraction_checkpointed(spark, df, "s3a://bucket/out", n_buckets=2)
+        jobs = _jobs(spark, "s3a-output")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+def test_unrecorded_staged_file_is_not_committed(spark, tmp_path, monkeypatch):
+    """A staged file that no task returned (a failed or speculative task
+    attempt's) is deleted before the bucket moves, never committed."""
+    real = ckpt._stage
+
+    def stage(frame, fs, staging, n_buckets):
+        out = real(frame, fs, staging, n_buckets)
+        orphan = Path(staging, "_bucket=0", "part-00000-999999-00000.parquet")
+        orphan.parent.mkdir(parents=True, exist_ok=True)
+        orphan.write_bytes(b"PAR1 half-written")
+        return out
+
+    monkeypatch.setattr(ckpt, "_stage", stage)
+    src_pdf = synth.synth_pandas(n_convs=10, seed=9)
+    df = spark.createDataFrame(src_pdf, schema=TRANSCRIPTS_SCHEMA)
+    out = tmp_path / "ck9"
+    ckpt.run_extraction_checkpointed(spark, df, str(out), n_buckets=N_BUCKETS)
+    assert not list(out.glob("data/*/part-00000-999999-*"))
+    assert ckpt.read_output(spark, str(out)).count() == len(src_pdf)
+
+
+def test_footer_without_null_count_raises(tmp_path):
     """A staged file whose footer has no reject_reason null count makes
-    the count fail; it is never guessed or recounted by a scan."""
+    the staging task's count fail; it is never guessed or recounted by
+    a scan."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    bucket_dir = tmp_path / ckpt.STAGING_DIR / "_bucket=0"
-    bucket_dir.mkdir(parents=True)
+    path = tmp_path / "part-00000.parquet"
     table = pa.table({"conv_id": ["a", "b"], "reject_reason": [None, "empty"]})
-    pq.write_table(table, bucket_dir / "part-00000.parquet", write_statistics=False)
-    staging = str(tmp_path / ckpt.STAGING_DIR)
-    fs, HPath = ckpt._hadoop_fs(spark, staging)
+    pq.write_table(table, path, write_statistics=False)
     with pytest.raises(ValueError, match="reject_reason null count"):
-        ckpt._staged_counts(fs, HPath, staging)
+        ckpt._footer_counts(pq.read_metadata(path), str(path))
 
-    pq.write_table(table, bucket_dir / "part-00000.parquet")
-    assert ckpt._staged_counts(fs, HPath, staging) == {0: (2, 1)}
+    pq.write_table(table, path)
+    assert ckpt._footer_counts(pq.read_metadata(path), str(path)) == (2, 1)
 
 
 def test_resume_refuses_bucket_count_change(spark, tmp_path):

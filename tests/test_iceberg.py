@@ -211,7 +211,7 @@ def test_checkpointed_job_over_iceberg(spark, tmp_path):
         ckpt.run_extraction_checkpointed(
             spark, src, out_dir, n_buckets=4, fail_after_buckets=1
         )
-    done_after_kill = ckpt.completed_buckets(out_dir, spark)
+    done_after_kill = ckpt.completed_buckets(out_dir)
     assert 0 < len(done_after_kill) < 4
     ran = ckpt.run_extraction_checkpointed(spark, src, out_dir, n_buckets=4)
     assert len(ran) == 4 - len(done_after_kill)
@@ -2828,6 +2828,49 @@ def test_task_writer_records_match_spark_written_footers(
         assert (rec["upper_bounds"] or []) == upper
     got = I.read_iceberg_table(spark, loc).select(*typed_df.columns)
     assert _rows_sha256(got) == _rows_sha256(typed_df)
+
+
+def test_partition_runs_treat_nulls_as_equal():
+    """Run boundaries fall where any key column changes, NULL to value
+    and value to NULL included, and two adjacent NULLs are one key."""
+    import pyarrow as pa
+
+    batch = pa.record_batch({
+        "a": [None, None, "x", "x", None, "x", "x"],
+        "b": [1, 1, 1, None, None, None, None],
+        "v": list(range(7)),
+    })
+    runs = [
+        (key, rows.column("v").to_pylist())
+        for key, rows in I._partition_runs([batch], ["a", "b"])
+    ]
+    assert runs == [
+        ((None, 1), [0, 1]), (("x", 1), [2]), (("x", None), [3]),
+        ((None, None), [4]), (("x", None), [5, 6]),
+    ]
+
+
+def test_partitioned_write_with_null_partition_values(spark, tmp_path):
+    """Two identity partition columns with NULLs: one file per distinct
+    key, NULL keys included, each holding exactly its rows."""
+    rows = [
+        (None if k % 3 == 0 else f"r{k % 2}", None if k % 4 == 0 else k % 2, k)
+        for k in range(40)
+    ]
+    df = spark.createDataFrame(rows, "a string, b int, v int").repartition(3)
+    loc = str(tmp_path / "nullparts")
+    I.write_iceberg_table(df, loc, partition_by=["a", "b"])
+    got = {}
+    for rec in I.live_data_files(loc):
+        key = (rec["partition"]["a"], rec["partition"]["b"])
+        assert key not in got  # one file per key
+        got[key] = rec["record_count"]
+    want = {}
+    for a, b, _v in rows:
+        want[(a, b)] = want.get((a, b), 0) + 1
+    assert got == want and (None, None) in got
+    back = I.read_iceberg_table(spark, loc).select("a", "b", "v")
+    assert _rows_sha256(back) == _rows_sha256(df)
 
 
 def test_failed_task_write_commits_nothing_and_leaves_orphans(

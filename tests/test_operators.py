@@ -498,6 +498,30 @@ def test_block_matmul_near_pairs_blocked_exact(spark, monkeypatch):
     assert blocked == single and len(single) > 0
 
 
+def test_block_matmul_near_pairs_uses_every_core(spark):
+    """A corpus far below BLOCK_ROWS still scores on at least
+    defaultParallelism block-pair tasks, and its pairs equal the
+    single-block result."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(7)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(60)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    near = simsearch.block_matmul_near_pairs(
+        vecs.coalesce(1), "vec_id", "embedding", min_sim_bp=-10000
+    )
+    got = near.select("*", F.spark_partition_id().alias("p")).collect()
+    assert len({r["p"] for r in got}) >= spark.sparkContext.defaultParallelism
+
+    v = np.array([vec for _i, vec in rows])
+    ((_lo, bp),) = simsearch._sim_bp(v, v, v.size * len(v))  # one block
+    i, j = np.triu_indices(len(rows), k=1)
+    single = sorted(zip(i.tolist(), j.tolist(), bp[i, j].astype(np.int64).tolist()))
+    assert sorted((r["id_a"], r["id_b"], r["sim_bp"]) for r in got) == single
+
+
 def test_simsearch_plans_build_without_jobs(spark, vecs):
     """Building a similarity-search plan launches no Spark job: query
     vectors, centroids and the near-pairs block count are gathered
