@@ -1,5 +1,6 @@
-"""Data-augmentation operator family (SURVEY §2.10, D1–D8): per-row
-randomized image maps as ONE seeded Arrow ``mapInPandas`` stage.
+"""Data-augmentation operator family (SURVEY §2.10, D1–D8): randomized
+image maps run as ONE seeded per-row function over the media stage
+(``multimodal.map_images``).
 
 Reference: /root/reference/Modules/DataAugmentation.py (D1 scale :11-43,
 D2 shear :45-74, D3 rotate :76-101, D4 translate :103-128, D5 dilate
@@ -30,13 +31,10 @@ DataAugmentation.py:191); the border fill 0 is therefore background.
 
 from __future__ import annotations
 
-import zlib
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from htrtf_spark.operators.multimodal import map_images
 
 
 # --------------------------------------------------------------- geometry
@@ -252,51 +250,24 @@ AUGMENT_DDL = (
 )
 
 
-def augment_map_in_pandas(seed: int = 0, prob: float = 0.5,
-                          pack_h: int = 64, pack_w: int = 64):
-    """One Arrow stage: PNG decode → invert (255-x, the reference
-    driver's convention) → D7 distort with a per-row seeded RNG → D8 pack
-    → re-encode. Emits integer ink mass before/after for lineage, and
-    the packed augmented image as PNG bytes."""
-    from htrtf_spark.operators.png_io import decode_png, encode_png, to_gray
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "height", "width", "pack_h", "pack_w",
-                "ink_in", "ink_out", "payload")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    img = to_gray(decode_png(raw))
-                except (ValueError, OSError, zlib.error):
-                    continue
-                inv = (255 - img).astype(np.uint8)
-                rs = _row_rng(seed, int(mid))
-                aug = distort(inv, rs, prob)
-                h, w = aug.shape
-                aug_c = aug[: min(h, pack_h), : min(w, pack_w)]
-                packed = pack_images([aug_c], pack_h, pack_w)[0]
-                out["media_id"].append(int(mid))
-                out["height"].append(img.shape[0])
-                out["width"].append(img.shape[1])
-                out["pack_h"].append(pack_h)
-                out["pack_w"].append(pack_w)
-                out["ink_in"].append(int(inv.sum()))
-                out["ink_out"].append(int(packed.sum()))
-                out["payload"].append(bytearray(encode_png(packed)))
-            yield pd.DataFrame(out)
-
-    return stage
-
-
 def augment_images(media: DataFrame, seed: int = 0, prob: float = 0.5,
                    pack_h: int = 64, pack_w: int = 64) -> DataFrame:
-    """D1–D8 over the media table's image rows. Narrow (no shuffle):
-    scan → mapInPandas; per-row determinism makes retries idempotent."""
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        augment_map_in_pandas(seed, prob, pack_h, pack_w), schema=AUGMENT_DDL
-    )
+    """D1–D8 over the media table's image rows, narrow (no shuffle):
+    PNG decode → invert (255-x, the reference driver's convention) → D7
+    distort with a per-row seeded RNG → D8 pack → re-encode. Emits
+    integer ink mass before/after for lineage, and the packed augmented
+    image as PNG bytes; per-row determinism makes retries idempotent."""
+    from htrtf_spark.operators.png_io import encode_png, to_gray
+
+    def augment(row: dict, decoded: np.ndarray) -> tuple:
+        img = to_gray(decoded)
+        inv = (255 - img).astype(np.uint8)
+        aug = distort(inv, _row_rng(seed, row["media_id"]), prob)
+        packed = pack_images([aug[:pack_h, :pack_w]], pack_h, pack_w)[0]
+        return (row["media_id"], *img.shape, pack_h, pack_w, int(inv.sum()),
+                int(packed.sum()), encode_png(packed))
+
+    return map_images(media, augment, AUGMENT_DDL)
 
 
 DETERMINISTIC_AUG_DDL = (
@@ -305,41 +276,21 @@ DETERMINISTIC_AUG_DDL = (
 )
 
 
-def deterministic_augment_map_in_pandas(ty: int = 2, tx: int = 3):
+def deterministic_augment(media: DataFrame, ty: int = 2, tx: int = 3) -> DataFrame:
     """Oracle-checkable augmentation path: integer translate by (ty, tx)
     then full-3×3 dilate on the inverted image, all in exact integer
     arithmetic — every output value recomputable from closed-form pixels
     by an external SQL engine. The randomized path shares every
     primitive with this one (same warp/morph code, p=1 and fixed
     draws), so a hash match here certifies the machinery."""
-    from htrtf_spark.operators.png_io import decode_png, to_gray
+    from htrtf_spark.operators.png_io import to_gray
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "height", "width", "ink_shifted", "ink_dilated")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    img = to_gray(decode_png(raw))
-                except (ValueError, OSError, zlib.error):
-                    continue
-                inv = (255 - img).astype(np.uint8)
-                mat = np.array([[1.0, 0.0, float(tx)], [0.0, 1.0, float(ty)]])
-                shifted = affine_warp(inv, mat, interp="nearest")
-                dil = _morph(shifted, np.ones((3, 3), dtype=bool), "max")
-                out["media_id"].append(int(mid))
-                out["height"].append(img.shape[0])
-                out["width"].append(img.shape[1])
-                out["ink_shifted"].append(int(shifted.sum()))
-                out["ink_dilated"].append(int(dil.sum()))
-            yield pd.DataFrame(out)
+    mat = np.array([[1.0, 0.0, float(tx)], [0.0, 1.0, float(ty)]])
 
-    return stage
+    def augment(row: dict, decoded: np.ndarray) -> tuple:
+        img = to_gray(decoded)
+        shifted = affine_warp((255 - img).astype(np.uint8), mat, interp="nearest")
+        dil = _morph(shifted, np.ones((3, 3), dtype=bool), "max")
+        return row["media_id"], *img.shape, int(shifted.sum()), int(dil.sum())
 
-
-def deterministic_augment(media: DataFrame, ty: int = 2, tx: int = 3) -> DataFrame:
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        deterministic_augment_map_in_pandas(ty, tx),
-        schema=DETERMINISTIC_AUG_DDL,
-    )
+    return map_images(media, augment, DETERMINISTIC_AUG_DDL)

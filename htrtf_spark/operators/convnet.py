@@ -20,13 +20,8 @@ evalFLAG path.
 
 from __future__ import annotations
 
-import zlib
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # (filters per conv layer, pool after layer?) — Structure_006.py:53-80
 CONV_SPEC = [(16, True), (32, True), (48, True), (64, False), (80, False)]
@@ -249,60 +244,36 @@ CONV_FEATURES_DDL = (
 )
 
 
-def featurize_conv_map_in_pandas(bc_params, spec=None):
-    """Arrow stage: PNG decode → (255-x)/255 normalize → conv stack with
-    BROADCAST weights → per-channel mean feature vector. ``box_sum`` is
-    an exact-integer probe through the SAME conv code: an all-ones
-    3×3 kernel over the raw inverted uint8 image — every value integer,
-    recomputable externally, so the conv arithmetic itself is gated."""
-    from htrtf_spark.operators.png_io import decode_png, normalize, to_gray
-
-    ones_k = np.ones((3, 3, 1, 1), dtype=np.float32)
-    zero_b = np.zeros(1, dtype=np.float32)
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        params = bc_params.value
-        validate_params(params, spec)
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "height", "width", "out_h", "out_w",
-                "seq_len_out", "box_sum", "feat")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    dec = decode_png(raw)
-                except (ValueError, OSError, zlib.error):
-                    continue
-                img = normalize(dec)
-                h, w = img.shape
-                fmap, oh, ow = conv_stack(img, params, spec)
-                feat = fmap.mean(axis=(0, 1)).astype(np.float32)
-                # fold RGB before the integer probe (decode_png can
-                # return [H, W, 3]); grey passes through unchanged
-                inv = (255.0 - to_gray(dec).astype(np.float64))[:, :, None]
-                box = conv2d_same(inv, ones_k, zero_b)
-                out["media_id"].append(int(mid))
-                out["height"].append(h)
-                out["width"].append(w)
-                out["out_h"].append(oh)
-                out["out_w"].append(ow)
-                out["seq_len_out"].append(out_dims(h, w, spec)[1])
-                out["box_sum"].append(int(round(box.sum())))
-                out["feat"].append([float(x) for x in feat])
-            yield pd.DataFrame(out)
-
-    return stage
-
-
 def featurize_conv(
     media: DataFrame, params_path: str, spec=None
 ) -> DataFrame:
-    """S7+T1+T2 end to end: load external params once, broadcast, run
-    the conv featurizer over the image rows. Narrow — no shuffle."""
+    """S7+T1+T2 end to end, narrow (no shuffle): load external params
+    once, validate, broadcast, then per image row PNG decode →
+    (255-x)/255 normalize → conv stack with the BROADCAST weights →
+    per-channel mean feature vector. ``box_sum`` is an exact-integer
+    probe through the SAME conv code: an all-ones 3×3 kernel over the
+    raw inverted uint8 image — every value integer, recomputable
+    externally, so the conv arithmetic itself is gated."""
+    from htrtf_spark.operators.multimodal import map_images
+    from htrtf_spark.operators.png_io import normalize, to_gray
+
     spark = media.sparkSession
     params = load_params(spark, params_path)
     validate_params(params, spec)
     bc = spark.sparkContext.broadcast(params)
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        featurize_conv_map_in_pandas(bc, spec), schema=CONV_FEATURES_DDL
-    )
+    ones_k = np.ones((3, 3, 1, 1), dtype=np.float32)
+    zero_b = np.zeros(1, dtype=np.float32)
+
+    def featurize(row: dict, decoded: np.ndarray) -> tuple:
+        img = normalize(decoded)
+        h, w = img.shape
+        fmap, oh, ow = conv_stack(img, bc.value, spec)
+        # fold RGB before the integer probe (decode_png can return
+        # [H, W, 3]); grey passes through unchanged
+        inv = (255.0 - to_gray(decoded).astype(np.float64))[:, :, None]
+        box = conv2d_same(inv, ones_k, zero_b)
+        feat = fmap.mean(axis=(0, 1)).astype(np.float32).tolist()
+        return (row["media_id"], h, w, oh, ow, out_dims(h, w, spec)[1],
+                int(round(box.sum())), feat)
+
+    return map_images(media, featurize, CONV_FEATURES_DDL)

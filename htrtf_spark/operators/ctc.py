@@ -3,10 +3,12 @@ SURVEY.md §2.9; reference: ctc_beam_search_decoder at
 /root/reference/Projects/IAM_lines/Structure_006/Structure_006.py:142-143,
 sparse→dense + id→char map at /root/reference/Modules/tasks.py:175-178).
 
-Vectorized with numpy inside Arrow batches. The frame expansion
-(`encode_frames`) inserts a blank between every character's repeat-run so
-greedy decode is an exact inverse on canonical text — the roundtrip
-identity is the oracle for the decode operator.
+Vectorized with numpy inside Arrow batches; the text roundtrip runs as
+one batch kernel over the extraction stage's ``ctc_collapse`` and
+``finish``. The frame expansion (`encode_frames`) inserts a blank
+between every character's repeat-run so greedy decode is an exact
+inverse on canonical text — the roundtrip identity is the oracle for
+the decode operator.
 """
 
 from __future__ import annotations
@@ -14,9 +16,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from htrtf_spark import charset as cs
+from htrtf_spark.operators.extraction import ctc_collapse, finish
 
 _CHAR_ARR = np.array(list(cs.CHARSET) + [""])  # BLANK_ID maps to ''
 _C2I = cs.char_to_id()
@@ -42,33 +46,47 @@ def encode_frames(text: str, repeats: int = 2) -> np.ndarray:
     return np.asarray(ids, dtype=np.int64)
 
 
+def collapse_ids(ids: np.ndarray, blank: int) -> np.ndarray:
+    """Greedy CTC label collapse: merge repeats, then drop blanks."""
+    ids = np.asarray(ids, dtype=np.int64)
+    keep = np.ones(ids.shape, dtype=bool)
+    np.not_equal(ids[1:], ids[:-1], out=keep[1:])
+    keep &= ids != blank
+    return ids[keep]
+
+
+def _label_text(ids: np.ndarray, char_arr: np.ndarray) -> str:
+    """Label ids → text: map to chars (the blank maps to ''), word-sep
+    to space, whitespace canon (tasks.py:176-178)."""
+    chars = char_arr[np.clip(ids, 0, len(char_arr) - 1)]
+    return " ".join("".join(chars).replace(cs.WORD_SEP, " ").split())
+
+
 def greedy_decode(ids: np.ndarray) -> str:
     """Vectorized greedy CTC: merge repeats → drop blanks → map to chars
     → word-sep to space → whitespace canon."""
-    ids = np.asarray(ids, dtype=np.int64)
-    if ids.size == 0:
-        return ""
-    keep = np.empty(ids.shape, dtype=bool)
-    keep[0] = True
-    np.not_equal(ids[1:], ids[:-1], out=keep[1:])
-    collapsed = ids[keep]
-    collapsed = collapsed[collapsed != cs.BLANK_ID]
-    chars = _CHAR_ARR[np.clip(collapsed, 0, cs.BLANK_ID)]
-    s = "".join(chars).replace(cs.WORD_SEP, " ")
-    return " ".join(s.split())
+    return _label_text(collapse_ids(ids, cs.BLANK_ID), _CHAR_ARR)
 
 
-def roundtrip_map_in_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage: (doc_id, text) → (doc_id, decoded) where decoded
+def greedy_roundtrip(text: pa.Array) -> pa.Array:
+    """``greedy_decode(encode_frames(t))`` for a whole text column: project
+    to the charset (whitespace kept, as ``finish`` folds every kind to
+    ' ' the way ``encode_frames`` does), expand each char ``c`` to the
+    frames ``cc_``, then the extraction kernel's own ``ctc_collapse``
+    and ``finish``. NULL stays NULL."""
+    projected = pc.replace_substring_regex(text, cs.CHARSET_FILTER_PATTERN, "")
+    frames = pc.replace_substring_regex(projected, "(?s)(.)", r"\1\1" + cs.BLANK_CHAR)
+    return finish(ctc_collapse(frames))
+
+
+def roundtrip_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow stage: (doc_id, text) → (doc_id, decoded) with decoded
     = greedy_decode(encode_frames(text)). Identity on canonical text."""
-    for pdf in batches:
-        decoded = [
-            None if t is None else greedy_decode(encode_frames(t))
-            for t in pdf["text"]
-        ]
-        yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "decoded": decoded})
+    for batch in batches:
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("doc_id"), greedy_roundtrip(batch.column("text"))],
+            names=["doc_id", "decoded"],
+        )
 
 
 def beam_decode(
@@ -152,13 +170,7 @@ def beam_decode(
     best = min(
         beams.items(), key=lambda kv: (-logsumexp2(kv[1][0], kv[1][1]), kv[0])
     )[0]
-    chars = (
-        char_arr[np.clip(np.asarray(best, dtype=np.int64), 0, len(char_arr) - 1)]
-        if best
-        else []
-    )
-    s = "".join(chars).replace(cs.WORD_SEP, " ")
-    return " ".join(s.split())
+    return _label_text(np.asarray(best, dtype=np.int64), char_arr)
 
 
 def synth_logprobs(text: str, seed: int, p_true: float = 0.9) -> np.ndarray:
@@ -182,22 +194,20 @@ def synth_logprobs(text: str, seed: int, p_true: float = 0.9) -> np.ndarray:
     return base
 
 
-def beam_decode_map_in_pandas(
-    batches: Iterator[pd.DataFrame], beam_width: int = 4
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage: (doc_id, text) → (doc_id, decoded) where
+def beam_decode_map_in_arrow(
+    batches: Iterator[pa.RecordBatch], beam_width: int = 4
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow stage: (doc_id, text) → (doc_id, decoded) where
     ``decoded = beam_decode(synth_logprobs(text, seed=doc_id))``. Runs the
-    real prefix beam search (Structure_006.py:142-143 parity) inside an
-    Arrow batch; on the synthesized peaked matrices the winner is exactly
-    the canonical cleaned text, which a SQL oracle restates."""
-    for pdf in batches:
-        decoded = [
-            "" if t is None else beam_decode(
-                synth_logprobs(t, seed=int(i)), beam_width=beam_width
-            )
-            for i, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "decoded": decoded})
+    real prefix beam search (Structure_006.py:142-143 parity) per row of
+    an Arrow batch; on the synthesized peaked matrices the winner is
+    exactly the canonical cleaned text, which a SQL oracle restates."""
+    for batch in batches:
+        ids, texts = batch.column("doc_id"), batch.column("text").to_pylist()
+        decoded = pa.array(
+            ["" if t is None else beam_decode(synth_logprobs(t, seed=i), beam_width)
+             for i, t in zip(ids.to_pylist(), texts)], pa.string())
+        yield pa.RecordBatch.from_arrays([ids, decoded], names=["doc_id", "decoded"])
 
 
 def greedy_decode_logits(logprobs: np.ndarray) -> str:

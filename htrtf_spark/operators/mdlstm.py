@@ -29,6 +29,8 @@ Reference (/root/reference/Modules/MDLSTM.py, layers.py):
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
 from htrtf_spark.operators.rnn import _sigmoid
@@ -182,56 +184,25 @@ MDLSTM_FEATURES_DDL = (
 )
 
 
-def mdlstm_features_map_in_pandas(bc_params, units: int, chunk: int = 0):
-    """Arrow stage: PNG decode → normalize → 4-direction MDLSTM sweep
-    (width-chunked when ``chunk`` > 0, T12) with broadcast weights.
-    ``act_sum_bp`` pins the float activations to an integer for
-    cross-run drift detection; numerics vs the raster recursion are
-    pytest-verified."""
-    import zlib
-
-    import pandas as pd
-
-    from htrtf_spark.operators.png_io import decode_png, normalize
-
-    def stage(batches):
-        params = bc_params.value
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "height", "width", "units", "act_sum_bp")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    dec = decode_png(raw)
-                except (ValueError, OSError, zlib.error):
-                    continue
-                img = normalize(dec)[:, :, None]
-                if chunk:
-                    feats = width_chunked(
-                        img, chunk, lambda x: mdlstm_4dir(x, params)
-                    )
-                else:
-                    feats = mdlstm_4dir(img, params)
-                out["media_id"].append(int(mid))
-                out["height"].append(img.shape[0])
-                out["width"].append(img.shape[1])
-                out["units"].append(units)
-                out["act_sum_bp"].append(int(round(float(feats.sum()) * 1e4)))
-            yield pd.DataFrame(out)
-
-    return stage
-
-
 def mdlstm_features(media, units: int = 8, seed: int = 11, chunk: int = 0):
-    """T10–T15 over the media table's image rows; narrow, broadcast
-    weights (same S7 shape as the conv stack)."""
-    from pyspark.sql import functions as F
+    """T10–T15 over the media table's image rows, narrow, with broadcast
+    weights (same S7 shape as the conv stack): per image row PNG decode
+    → normalize → 4-direction MDLSTM sweep (width-chunked when
+    ``chunk`` > 0, T12). ``act_sum_bp`` pins the float activations to an
+    integer for cross-run drift detection; numerics vs the raster
+    recursion are pytest-verified."""
+    from htrtf_spark.operators.multimodal import map_images
+    from htrtf_spark.operators.png_io import normalize
 
-    spark = media.sparkSession
-    bc = spark.sparkContext.broadcast(
+    bc = media.sparkSession.sparkContext.broadcast(
         synth_mdlstm_params(seed=seed, cin=1, units=units)
     )
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        mdlstm_features_map_in_pandas(bc, units, chunk),
-        schema=MDLSTM_FEATURES_DDL,
-    )
+
+    def features(row: dict, decoded: np.ndarray) -> tuple:
+        img = normalize(decoded)[:, :, None]
+        sweep = partial(mdlstm_4dir, params=bc.value)
+        feats = width_chunked(img, chunk, sweep) if chunk else sweep(img)
+        return (row["media_id"], *img.shape[:2], units,
+                int(round(float(feats.sum()) * 1e4)))
+
+    return map_images(media, features, MDLSTM_FEATURES_DDL)

@@ -1,5 +1,7 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed in Arrow-batched mapInPandas.
+columns with typed metadata, processed by ONE media stage (``map_media``:
+a per-row function over Arrow batches under ``mapInArrow``; ``map_images``
+adds the PNG decode).
 
 The IMAGE path is REAL end to end: payloads are PNG bytes decoded by the
 stdlib codec (htrtf_spark.operators.png_io), normalized with the
@@ -17,10 +19,10 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -119,45 +121,63 @@ def image_features(img: np.ndarray, grid: int = 4) -> np.ndarray:
     return out
 
 
-def featurize_map_in_pandas(fake: bool = True):
-    """Build the mapInPandas stage: binary payload → fixed-dim feature
-    vector + lineage columns. Arrow moves the binary column zero-copy;
-    the per-batch loop is numpy-only."""
+def map_media(media: DataFrame, fn: Callable[[dict], Iterable[tuple]],
+              ddl: str, kind: str | None = None) -> DataFrame:
+    """The one media stage: ``fn(row) → output rows`` (tuples in
+    ``ddl``'s column order) over the media rows of ``kind`` (all rows
+    when None), under ``mapInArrow``. Each output batch is built from
+    ``ddl``'s Arrow schema, so a batch whose rows yield nothing is still
+    a well-typed empty batch."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, norms, oks, sizes = [], [], [], []
-            for payload in pdf["payload"]:
-                raw = bytes(payload) if payload is not None else b""
-                sizes.append(len(raw))
-                try:
-                    f = decode_image(raw, fake=fake)
-                    if not fake:
-                        f = image_features(f)
-                    feats.append([float(x) for x in f])
-                    norms.append(int(round(float(np.linalg.norm(f)) * 10000)))
-                    oks.append(True)
-                except (ValueError, OSError, zlib.error):
-                    # a per-payload data failure (bad/unsupported bytes)
-                    feats.append(None)
-                    norms.append(None)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "kind": pdf["kind"].values,
-                    "n_bytes": pd.array(sizes, dtype="int32"),
-                    "feat": feats,
-                    "feat_norm_bp": pd.array(norms, dtype="Int64"),
-                    "decode_ok": oks,
-                }
-            )
+    row_type = pa.struct(to_arrow_schema(T.DataType.fromDDL(ddl)))
 
-    return stage
+    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [out for row in batch.to_pylist() for out in fn(row)]
+            yield pa.RecordBatch.from_struct_array(pa.array(rows, row_type))
+
+    if kind is not None:
+        media = media.filter(F.col("kind") == kind)
+    return media.mapInArrow(stage, ddl)
+
+
+def map_images(
+    media: DataFrame, fn: Callable[[dict, np.ndarray], tuple], ddl: str
+) -> DataFrame:
+    """``map_media`` over the image rows: each payload is PNG-decoded
+    once and ``fn(row, decoded)`` gives its one output row. A payload
+    that does not decode (bad or unsupported bytes, or NULL) yields no
+    row."""
+    from htrtf_spark.operators.png_io import decode_png
+
+    def on_image(row: dict) -> Iterable[tuple]:
+        try:
+            decoded = decode_png(row["payload"] or b"")
+        except (ValueError, OSError, zlib.error):
+            return ()
+        return (fn(row, decoded),)
+
+    return map_media(media, on_image, ddl, kind="image")
 
 
 def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    return media.mapInPandas(featurize_map_in_pandas(fake=fake), schema=FEATURES_DDL)
+    """Payload → fixed-dim feature vector + lineage columns, over every
+    media row; a payload that does not decode keeps its row with
+    ``decode_ok=false``."""
+
+    def featurize(row: dict) -> Iterable[tuple]:
+        raw = row["payload"] or b""
+        try:
+            f = decode_image(raw, fake=fake)
+            f = f if fake else image_features(f)
+        except (ValueError, OSError, zlib.error):
+            yield row["media_id"], row["kind"], len(raw), None, None, False
+            return
+        norm_bp = int(round(float(np.linalg.norm(f)) * 10000))
+        yield row["media_id"], row["kind"], len(raw), f.tolist(), norm_bp, True
+
+    return map_media(media, featurize, FEATURES_DDL)
 
 
 IMAGE_STATS_DDL = (
@@ -166,46 +186,24 @@ IMAGE_STATS_DDL = (
 )
 
 
-def image_stats_map_in_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Real-decode image statistics in EXACT INTEGER domain so an external
-    engine can recompute them bit-for-bit: per image, ``sum_inv`` is the
-    integer sum of (255 - pixel) — the unnormalized reference ink mass
-    (utils.py:184-186 before the /255) — and ``mean_inv_bp`` is
-    (10000 * sum_inv) // (255 * n_px): pure integer floor division, no
-    float rounding-mode hazard between engines.
-    Rows that fail to decode are dropped (the featurize stage carries the
-    decode_ok lineage)."""
-    for pdf in batches:
-        out = {k: [] for k in
-               ("media_id", "width", "height", "n_px", "sum_inv", "mean_inv_bp")}
-        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-            raw = bytes(payload) if payload is not None else b""
-            try:
-                from htrtf_spark.operators.png_io import decode_png, to_gray
-
-                img = to_gray(decode_png(raw))
-            except (ValueError, OSError, zlib.error):
-                continue
-            h, w = img.shape
-            s = int((255 - img).sum())
-            n_px = h * w
-            out["media_id"].append(int(mid))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_px"].append(n_px)
-            out["sum_inv"].append(s)
-            out["mean_inv_bp"].append((10000 * s) // (255 * n_px))
-        yield pd.DataFrame(out)
-
-
 def extract_image_stats(media: DataFrame) -> DataFrame:
     """(media_id, width, height, n_px, sum_inv, mean_inv_bp) for every
-    decodable image payload — the oracle surface for the REAL decode."""
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        image_stats_map_in_pandas, schema=IMAGE_STATS_DDL
-    )
+    decodable image payload — the oracle surface for the REAL decode —
+    in EXACT INTEGER domain so an external engine can recompute them
+    bit-for-bit: per image, ``sum_inv`` is the integer sum of
+    (255 - pixel) — the unnormalized reference ink mass
+    (utils.py:184-186 before the /255) — and ``mean_inv_bp`` is
+    (10000 * sum_inv) // (255 * n_px): pure integer floor division, no
+    float rounding-mode hazard between engines."""
+    from htrtf_spark.operators.png_io import to_gray
+
+    def stats(row: dict, decoded: np.ndarray) -> tuple:
+        img = to_gray(decoded)
+        h, w = img.shape
+        s = int((255 - img).sum())
+        return row["media_id"], w, h, h * w, s, (10000 * s) // (255 * h * w)
+
+    return map_images(media, stats, IMAGE_STATS_DDL)
 
 
 def media_size_stats(media: DataFrame) -> DataFrame:
@@ -229,56 +227,30 @@ FRAMES_DDL = (
     "media_id long, frame_idx int, frame_ts_ms long, feat_digest long"
 )
 
-_FPS_DEN = 1000  # frame stride expressed in integer ms — no float clock
-
-
-def sample_frames_map_in_pandas(stride_ms: int = 200, max_frames: int = 64):
-    """Video frame sampling as Arrow-stage plumbing (the task's
-    "frame-sample" op): one output row per sampled frame at timestamps
-    0, stride, 2·stride, … < duration (capped at ``max_frames`` —
-    uniform head sampling; a real decoder would seek those timestamps).
-    The decode itself is the documented stub (no video codec in this
-    container): ``feat_digest`` is a deterministic 48-bit digest of
-    (payload bytes, frame ts) standing in for the decoded frame's
-    feature hash, so downstream joins/dedup over frames are exercisable
-    end to end. Exact integer arithmetic throughout — the frame grid is
-    externally recomputable from duration_ms alone."""
-    import hashlib
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("media_id", "frame_idx", "frame_ts_ms", "feat_digest")}
-            for mid, payload, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                # a nullable int column with NULLs arrives as float64
-                # NaN through Arrow — pd.isna covers both None and NaN
-                if pd.isna(dur) or int(dur) <= 0:
-                    continue
-                n = min(-(-int(dur) // stride_ms), max_frames)
-                raw = bytes(payload) if payload is not None else b""
-                base = hashlib.sha256(raw).digest()
-                for i in range(n):
-                    ts = i * stride_ms
-                    d = hashlib.sha256(base + ts.to_bytes(8, "big")).digest()
-                    out["media_id"].append(int(mid))
-                    out["frame_idx"].append(i)
-                    out["frame_ts_ms"].append(ts)
-                    out["feat_digest"].append(
-                        int.from_bytes(d[:6], "big")
-                    )
-            yield pd.DataFrame(out)
-
-    return stage
-
-
 def sample_frames(media: DataFrame, stride_ms: int = 200,
                   max_frames: int = 64) -> DataFrame:
-    """Frame grid over the video rows; narrow (no shuffle)."""
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        sample_frames_map_in_pandas(stride_ms, max_frames), schema=FRAMES_DDL
-    )
+    """Video frame sampling over the video rows (the task's
+    "frame-sample" op; narrow, no shuffle): one output row per sampled
+    frame at timestamps 0, stride, 2·stride, … < duration (capped at
+    ``max_frames`` — uniform head sampling; a real decoder would seek
+    those timestamps). The decode itself is the documented stub (no
+    video codec in this container): ``feat_digest`` is a deterministic
+    48-bit digest of (payload bytes, frame ts) standing in for the
+    decoded frame's feature hash, so downstream joins/dedup over frames
+    are exercisable end to end. Exact integer arithmetic throughout —
+    the frame grid is externally recomputable from duration_ms alone."""
+
+    def frames(row: dict) -> Iterable[tuple]:
+        dur = row["duration_ms"]
+        if dur is None or dur <= 0:
+            return
+        base = hashlib.sha256(row["payload"] or b"").digest()
+        for i in range(min(-(-dur // stride_ms), max_frames)):
+            ts = i * stride_ms
+            d = hashlib.sha256(base + ts.to_bytes(8, "big")).digest()
+            yield row["media_id"], i, ts, int.from_bytes(d[:6], "big")
+
+    return map_media(media, frames, FRAMES_DDL, kind="video")
 
 
 # ------------------------------------------------------- audio framing
@@ -288,33 +260,20 @@ AUDIO_FRAMES_DDL = (
 )
 
 
-def audio_framing_map_in_pandas(win_ms: int = 25, hop_ms: int = 10):
-    """Audio analysis framing (the task's audio feature-extract
-    plumbing): the standard win/hop grid — n_frames =
-    1 + floor((duration − win) / hop) for duration ≥ win, else 0 —
+def audio_framing(media: DataFrame, win_ms: int = 25,
+                  hop_ms: int = 10) -> DataFrame:
+    """Audio analysis framing over the audio rows (the task's audio
+    feature-extract plumbing): the standard win/hop grid — n_frames =
+    1 + floor((duration − win) / hop) for duration ≥ win, else no row —
     with integer frame centers. The PCM decode is the documented stub;
     the grid arithmetic (what the Spark stage owns) is exact and
     externally recomputable from duration_ms."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "n_frames", "first_center_ms", "last_center_ms")}
-            for mid, dur in zip(pdf["media_id"], pdf["duration_ms"]):
-                if pd.isna(dur) or int(dur) < win_ms:
-                    continue
-                n = 1 + (int(dur) - win_ms) // hop_ms
-                out["media_id"].append(int(mid))
-                out["n_frames"].append(n)
-                out["first_center_ms"].append(win_ms // 2)
-                out["last_center_ms"].append((n - 1) * hop_ms + win_ms // 2)
-            yield pd.DataFrame(out)
+    def grid(row: dict) -> Iterable[tuple]:
+        dur = row["duration_ms"]
+        if dur is None or dur < win_ms:
+            return
+        n = 1 + (dur - win_ms) // hop_ms
+        yield row["media_id"], n, win_ms // 2, (n - 1) * hop_ms + win_ms // 2
 
-    return stage
-
-
-def audio_framing(media: DataFrame, win_ms: int = 25,
-                  hop_ms: int = 10) -> DataFrame:
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        audio_framing_map_in_pandas(win_ms, hop_ms), schema=AUDIO_FRAMES_DDL
-    )
+    return map_media(media, grid, AUDIO_FRAMES_DDL, kind="audio")

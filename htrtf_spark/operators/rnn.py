@@ -23,15 +23,10 @@ params table as the conv stack (operators/convnet.py, S7).
 
 from __future__ import annotations
 
-import zlib
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from htrtf_spark.operators import convnet
+from htrtf_spark.operators import convnet, ctc
 
 NUM_LSTM_LAYERS = 5  # Structure_006.py:87-115
 
@@ -174,53 +169,6 @@ NET_DECODE_DDL = (
 )
 
 
-def net_decode_map_in_pandas(
-    bc_params, charset: list[str], conv_spec=None, image_height: int = 40
-):
-    """Arrow stage: PNG decode → normalize → full net (T1–T5) → greedy
-    CTC collapse (T7/T8 reuse) → string. ``logit_sum_bp`` pins the float
-    path to an integer (sum of logits × 10⁴, rounded) for lineage and
-    cross-run drift detection."""
-    from htrtf_spark.operators.augment import _crop_or_pad_axis
-    from htrtf_spark.operators.png_io import decode_png, normalize
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        params = bc_params.value
-        blank = len(charset)
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "height", "width", "t_frames", "n_classes",
-                "decoded", "logit_sum_bp")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    dec = decode_png(raw)
-                except (ValueError, OSError, zlib.error):
-                    continue
-                orig_h, orig_w = dec.shape[:2]
-                # the T3 reshape needs ONE dataset-wide height (the
-                # reference rescales at dataset build, P8 + the
-                # check_valid_and_test_sets precondition); pad/crop here
-                # with paper (0 after normalize)
-                img = _crop_or_pad_axis(normalize(dec), image_height, 0)
-                logits = net_logits(img, params, conv_spec)
-                ids = logits.argmax(axis=1)
-                # CTC greedy collapse: drop repeats then blanks (T8)
-                keep = np.concatenate([[True], ids[1:] != ids[:-1]])
-                seq = ids[keep]
-                seq = seq[seq != blank]
-                out["media_id"].append(int(mid))
-                out["height"].append(orig_h)
-                out["width"].append(orig_w)
-                out["t_frames"].append(int(logits.shape[0]))
-                out["n_classes"].append(int(logits.shape[1]))
-                out["decoded"].append("".join(charset[i] for i in seq))
-                out["logit_sum_bp"].append(int(round(float(logits.sum()) * 1e4)))
-            yield pd.DataFrame(out)
-
-    return stage
-
-
 def net_decode(
     media: DataFrame,
     params_path: str,
@@ -229,11 +177,27 @@ def net_decode(
     image_height: int = 40,
 ) -> DataFrame:
     """The reference's whole eval pipeline (image → text) as one narrow
-    distributed stage with broadcast weights."""
+    distributed stage with broadcast weights: per image row PNG decode
+    → normalize → full net (T1–T5) → greedy CTC collapse (T7/T8 reuse)
+    → string. ``logit_sum_bp`` pins the float path to an integer (sum
+    of logits × 10⁴, rounded) for lineage and cross-run drift
+    detection."""
+    from htrtf_spark.operators.augment import _crop_or_pad_axis
+    from htrtf_spark.operators.multimodal import map_images
+    from htrtf_spark.operators.png_io import normalize
+
     spark = media.sparkSession
-    params = convnet.load_params(spark, params_path)
-    bc = spark.sparkContext.broadcast(params)
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        net_decode_map_in_pandas(bc, charset, conv_spec, image_height),
-        schema=NET_DECODE_DDL,
-    )
+    bc = spark.sparkContext.broadcast(convnet.load_params(spark, params_path))
+
+    def decode(row: dict, decoded: np.ndarray) -> tuple:
+        # the T3 reshape needs ONE dataset-wide height (the reference
+        # rescales at dataset build, P8 + the check_valid_and_test_sets
+        # precondition); pad/crop here with paper (0 after normalize)
+        img = _crop_or_pad_axis(normalize(decoded), image_height, 0)
+        logits = net_logits(img, bc.value, conv_spec)
+        seq = ctc.collapse_ids(logits.argmax(axis=1), len(charset))
+        return (row["media_id"], *decoded.shape[:2], *logits.shape,
+                "".join(charset[i] for i in seq),
+                int(round(float(logits.sum()) * 1e4)))
+
+    return map_images(media, decode, NET_DECODE_DDL)

@@ -1,5 +1,5 @@
 """Driver-gate queries that exercise the actual extraction engine — the
-Arrow/pandas stages themselves — cross-checked against DuckDB SQL that
+Arrow stages themselves — cross-checked against DuckDB SQL that
 re-states the spec independently. This is the strongest correctness
 evidence: the vectorized Python stage must agree with a pure-SQL
 restatement of the same semantics on real parquet inputs.
@@ -16,7 +16,11 @@ import os
 from pyspark.sql import functions as F
 
 from htrtf_spark import charset as cs
-from htrtf_spark.operators.ctc import CTC_DECODED_DDL, roundtrip_map_in_pandas
+from htrtf_spark.operators.ctc import (
+    CTC_DECODED_DDL,
+    beam_decode_map_in_arrow,
+    roundtrip_map_in_arrow,
+)
 from htrtf_spark.plans.pipeline import extract_turns, extraction_metrics
 from htrtf_spark.queries.util import t
 from htrtf_spark.sources.transcripts import events_as_transcripts
@@ -118,7 +122,7 @@ def q67_iceberg_extract(spark, sf_dir):
 
 def q33_ctc_roundtrip(spark, sf_dir):
     d = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(roundtrip_map_in_pandas, schema=CTC_DECODED_DDL)
+    return d.mapInArrow(roundtrip_map_in_arrow, CTC_DECODED_DDL)
 
 
 _Q33_SQL = f"""
@@ -134,7 +138,7 @@ FROM documents
 # Distributed CTC PREFIX BEAM SEARCH through the gate (q33 covers the
 # greedy path): per doc, a deterministic peaked [T,C] log-prob matrix is
 # synthesized from the text (seeded noise bounded below the argmax gap),
-# the real beam_decode runs inside mapInPandas, and the winner is exactly
+# the real beam_decode runs inside mapInArrow, and the winner is exactly
 # the canonical cleaned text — which the oracle restates in SQL (decode
 # folds whitespace AND the '|' word separator to a single space,
 # tasks.py:176-178 semantics). Beam search is O(T·beams·C) Python per
@@ -144,14 +148,12 @@ _BEAM_SNIP = 24
 
 
 def q66_beam_decode(spark, sf_dir):
-    from htrtf_spark.operators.ctc import CTC_DECODED_DDL, beam_decode_map_in_pandas
-
     d = (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)
         .select("doc_id", F.substring("text", 1, _BEAM_SNIP).alias("text"))
     )
-    return d.mapInPandas(beam_decode_map_in_pandas, schema=CTC_DECODED_DDL)
+    return d.mapInArrow(beam_decode_map_in_arrow, CTC_DECODED_DDL)
 
 
 _WS_PIPE_SQL = cs.WS_RUN_PATTERN.replace("]+", "|]+").replace("'", "''")

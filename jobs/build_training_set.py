@@ -208,16 +208,19 @@ def build_training_set(
             F.col("seq_id").alias("pack_seq"),
         )
         deduped = keyed.join(packed, "_pid").drop("_pid")
-    out = deduped.cache()
-    n_out = out.count()
-    from htrtf_spark.sources.iceberg import overwrite_iceberg_table
+    from htrtf_spark.sources.iceberg import current_metadata, overwrite_iceberg_table
 
-    if table_exists(output):
-        # consent was checked before any compute (top of function);
-        # the replace is ONE snapshot, history stays time-travelable
-        overwrite_iceberg_table(out, output, partition_by=partition_by)
-    else:
-        write_iceberg_table(out, output, partition_by=partition_by)
+    # consent to replace an existing table was checked before any compute
+    # (top of function); the replace is ONE snapshot, history stays
+    # time-travelable
+    write = overwrite_iceberg_table if table_exists(output) else write_iceberg_table
+    snapshot_id = write(deduped, output, partition_by=partition_by)
+    # count from the committed snapshot's summary — free metadata
+    n_out = next(
+        int(sn.get("summary", {}).get("added-records", 0))
+        for sn in current_metadata(output)["snapshots"]
+        if sn["snapshot-id"] == snapshot_id
+    )
     if mixture_summary is not None:
         # rate-table lineage ON the produced table (after the write so
         # the property lands on the new table state)
@@ -245,7 +248,6 @@ def build_training_set(
 
     with open(os.path.join(output, "_summary.json"), "w") as fh:
         json.dump(summary, fh, indent=2)
-    out.unpersist()
     return summary
 
 

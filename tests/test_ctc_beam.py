@@ -71,14 +71,35 @@ def test_beam_wordsep_and_canon():
 def test_roundtrip_whitespace_and_null():
     """Tabs/newlines encode as word boundaries (not dropped), and NULL
     text survives the roundtrip stage as NULL."""
-    import pandas as pd
+    import pyarrow as pa
 
-    from htrtf_spark.operators.ctc import encode_frames, greedy_decode, roundtrip_map_in_pandas
+    from htrtf_spark.operators.ctc import encode_frames, greedy_decode, roundtrip_map_in_arrow
 
     assert greedy_decode(encode_frames("line one\nline two\ttab")) == "line one line two tab"
-    pdf = pd.DataFrame({"doc_id": [1, 2], "text": [None, "ok"]})
-    out = pd.concat(list(roundtrip_map_in_pandas(iter([pdf]))))
-    assert out["decoded"].tolist() == [None, "ok"]
+    batch = pa.RecordBatch.from_pydict({"doc_id": [1, 2], "text": [None, "ok"]})
+    out = pa.Table.from_batches(list(roundtrip_map_in_arrow(iter([batch]))))
+    assert out["decoded"].to_pylist() == [None, "ok"]
+
+
+def test_greedy_roundtrip_matches_row_decode():
+    """The batch roundtrip kernel equals greedy_decode(encode_frames(t))
+    row by row, over charset chars, every whitespace kind, out-of-charset
+    chars and the blank sentinel itself."""
+    import random
+
+    import pyarrow as pa
+
+    from htrtf_spark import charset as cs
+    from htrtf_spark.operators.ctc import encode_frames, greedy_decode, greedy_roundtrip
+
+    rng = random.Random(3)
+    alphabet = list(cs.CHARSET) + list(cs.WS_CHARS) + ["é", "日", cs.BLANK_CHAR]
+    texts = [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 30)))
+        for _ in range(500)
+    ] + [None, "", "aa||bb"]
+    want = [None if t is None else greedy_decode(encode_frames(t)) for t in texts]
+    assert greedy_roundtrip(pa.array(texts)).to_pylist() == want
 
 
 def test_beam_decode_refuses_blank_id_without_alphabet():
@@ -112,11 +133,9 @@ def test_beam_decode_stage_matches_clean(spark):
     """The distributed beam-decode stage recovers the canonical cleaned
     text from the synthesized matrices (whitespace + out-of-charset
     projection identical to the extraction clean)."""
-    import pandas as pd
-
     from htrtf_spark.operators.ctc import (
         CTC_DECODED_DDL,
-        beam_decode_map_in_pandas,
+        beam_decode_map_in_arrow,
     )
 
     rows = [
@@ -128,8 +147,8 @@ def test_beam_decode_stage_matches_clean(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: r["decoded"]
-        for r in df.mapInPandas(
-            beam_decode_map_in_pandas, schema=CTC_DECODED_DDL
+        for r in df.mapInArrow(
+            beam_decode_map_in_arrow, CTC_DECODED_DDL
         ).collect()
     }
     import pyarrow as pa

@@ -797,6 +797,95 @@ def test_frame_ops_skip_null_durations(spark):
     assert multimodal.audio_framing(media).count() == 0
 
 
+def test_image_ops_skip_undecodable_only_batch(spark, tmp_path):
+    """Every image operator gives 0 rows (not a stage crash) on an input
+    whose only image rows do not decode: a corrupt payload and a NULL
+    one. The feature extractor keeps both rows with decode_ok=false."""
+    from htrtf_spark.operators import augment, convnet, mdlstm, rnn
+
+    media = spark.createDataFrame(
+        [(0, "image", bytearray(b"not a png"), 4, 4, None),
+         (1, "image", None, 4, 4, None)],
+        schema=multimodal.MEDIA_SCHEMA,
+    )
+    conv_dir, net_dir = str(tmp_path / "conv"), str(tmp_path / "net")
+    convnet.write_params(spark, convnet.synth_params(seed=5), conv_dir)
+    convnet.write_params(
+        spark, rnn.synth_net_params(seed=5, num_hidden=4, num_classes=4), net_dir
+    )
+    ops = {
+        "image_stats": multimodal.extract_image_stats(media),
+        "augment": augment.augment_images(media, seed=3),
+        "deterministic_augment": augment.deterministic_augment(media),
+        "conv": convnet.featurize_conv(media, conv_dir),
+        "net": rnn.net_decode(media, net_dir, list("abc")),
+        "mdlstm": mdlstm.mdlstm_features(media, units=2),
+    }
+    assert {name: df.count() for name, df in ops.items()} == dict.fromkeys(ops, 0)
+    for fake in (False, True):
+        rows = multimodal.extract_features(media, fake=fake).collect()
+        assert sorted((r["media_id"], r["decode_ok"]) for r in rows) == [
+            (0, fake), (1, fake)
+        ]
+
+
+def test_one_media_stage_and_one_ctc_collapse():
+    """Structural guard: the recognition operators (multimodal, augment,
+    convnet, rnn, mdlstm, ctc) import no pandas and call no mapInPandas;
+    under htrtf_spark/ only multimodal.map_images and
+    multimodal.decode_image call decode_png; the greedy repeat-merge
+    (``x[1:]`` against ``x[:-1]``) is spelled once in ctc.py and once in
+    extraction.ctc_collapse."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(textstats.__file__).resolve().parents[1]
+    recognition = {"multimodal", "augment", "convnet", "rnn", "mdlstm", "ctc"}
+
+    def _name(node):
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    def _repeat_merge(node):
+        if isinstance(node, ast.Compare):
+            parts = [node.left, *node.comparators]
+        elif isinstance(node, ast.Call):
+            parts = node.args
+        else:
+            return False
+        subs = {
+            (ast.unparse(p.value), ast.unparse(p.slice))
+            for p in parts
+            if isinstance(p, ast.Subscript)
+        }
+        return any((v, "1:") in subs and (v, ":-1") in subs for v, _ in subs)
+
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        mod = path.stem
+        for top in ast.parse(path.read_text()).body:
+            where = f"{mod}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if mod in recognition and path.parent.name == "operators":
+                    if isinstance(node, (ast.Import, ast.ImportFrom)):
+                        mods = [node.module or ""] if isinstance(node, ast.ImportFrom) else [
+                            a.name for a in node.names
+                        ]
+                        if any(m.split(".")[0] == "pandas" for m in mods):
+                            found.append(("pandas import", where))
+                    if isinstance(node, ast.Call) and _name(node.func) == "mapInPandas":
+                        found.append(("mapInPandas", where))
+                if isinstance(node, ast.Call) and _name(node.func) == "decode_png":
+                    found.append(("decode_png", where))
+                if _repeat_merge(node):
+                    found.append(("repeat merge", where))
+    assert sorted(found) == [
+        ("decode_png", "multimodal.decode_image"),
+        ("decode_png", "multimodal.map_images"),
+        ("repeat merge", "ctc.collapse_ids"),
+        ("repeat merge", "extraction.ctc_collapse"),
+    ]
+
+
 def test_connected_components(spark):
     """Min-label propagation: chains collapse to their min id, separate
     components stay separate, convergence needs diameter iterations."""

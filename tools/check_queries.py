@@ -3,7 +3,7 @@ entry on Spark and its oracle_sql() on DuckDB over the same sf dir,
 compare row count, column names, and an order-insensitive value
 comparison.
 
-Usage: python tools/check_queries.py [--profile] [sf_dir] [name_filter]
+Usage: python tools/check_queries.py [--profile | --hash] [sf_dir] [name_filter]
 
 ``name_filter`` keeps the gates whose name contains it; a comma-separated
 list keeps those matching any entry, run in the list's order.
@@ -12,11 +12,17 @@ list keeps those matching any entry, run in the list's order.
 (``clearCache()`` and the dedup caches released first), builds it and
 runs it to a noop sink, and prints its cold wall seconds (build plus
 run), build seconds, and the Spark jobs launched while building and
-while running, read from job groups.
+while running, read from job groups. A gate that raises prints
+``ERROR`` and the run goes on.
+
+``--hash`` checks nothing against DuckDB either: it prints each gate's
+row count and an order-insensitive sha256 of its rows (columns in name
+order, values through ``_norm``), so two checkouts compare with ``diff``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -63,6 +69,15 @@ def compare(spark_df, duck_rows, duck_cols):
     return True, f"{len(s_set)} rows"
 
 
+def row_hash(df):
+    """(row count, sha256) of ``df``'s rows, independent of row order."""
+    cols = sorted(df.columns)
+    rows = sorted(
+        "\x1f".join(_norm(v) for v in r) for r in df.select(*cols).collect()
+    )
+    return len(rows), hashlib.sha256("\x1e".join(rows).encode()).hexdigest()
+
+
 def profile(spark, name, fn, sf_dir):
     """(cold wall s, build s, jobs at build, jobs at run) of one gate."""
     from htrtf_spark.operators.dedup import release_caches
@@ -85,9 +100,8 @@ def profile(spark, name, fn, sf_dir):
 
 
 def main():
-    profiling = "--profile" in sys.argv
-    if profiling:
-        sys.argv.remove("--profile")
+    profiling, hashing = "--profile" in sys.argv, "--hash" in sys.argv
+    sys.argv = [a for a in sys.argv if a not in ("--profile", "--hash")]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
     filters = name_filter.split(",")
@@ -110,14 +124,18 @@ def main():
     # gates run in filter order, so a profile can warm the session first
     picked = [g for f in filters for g in gates if f in g[0]]
     for name, (fn, sql) in dict(picked).items():
-        if profiling:
-            cold, build, jobs_build, jobs_run = profile(spark, name, fn, sf_dir)
-            print(
-                f"  {name}: cold {cold:.3f} s  build {build:.3f} s  "
-                f"jobs build {jobs_build} run {jobs_run}"
-            )
-            continue
         try:
+            if profiling:
+                cold, build, jobs_build, jobs_run = profile(spark, name, fn, sf_dir)
+                print(
+                    f"  {name}: cold {cold:.3f} s  build {build:.3f} s  "
+                    f"jobs build {jobs_build} run {jobs_run}"
+                )
+                continue
+            if hashing:
+                n, digest = row_hash(fn(spark, sf_dir))
+                print(f"  {name}: {n} rows  sha256 {digest}")
+                continue
             df = fn(spark, sf_dir)
             if sql is None:
                 n = df.count()
@@ -137,9 +155,9 @@ def main():
             print(f"  {name}: ERROR {str(exc)[:300]}")
             failures.append((name, str(exc)[:300]))
 
-    if profiling:
+    if profiling or hashing:
         spark.stop()
-        return
+        sys.exit(1 if failures else 0)
     print()
     if failures:
         print(f"{len(failures)} FAILURES:")
